@@ -156,6 +156,8 @@ def main(argv=None) -> int:
         "SPARK_LOCAL_DIRS": os.path.join(tmp, "local"),
         "TMPDIR": os.path.join(tmp, "java"),
         "TZ": "UTC",
+        # no hsperfdata files: HotSpot writes them under /tmp, outside the checkout
+        "SPARK_LAUNCHER_OPTS": "-XX:-UsePerfData",
     }
     os.environ.update(env)
     time.tzset()
@@ -170,7 +172,7 @@ def main(argv=None) -> int:
         spark = get_spark(
             f"perfbench-{args.workload}",
             extra_conf={
-                "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={env['TMPDIR']}",
+                "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={env['TMPDIR']} -XX:-UsePerfData",
                 "spark.sql.warehouse.dir": os.path.join(tmp, "warehouse"),
                 "spark.ui.showConsoleProgress": "false",
             },
