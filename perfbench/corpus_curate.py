@@ -11,17 +11,24 @@ the engine's ``pin_latest`` caches are never released in between.
 
 from __future__ import annotations
 
+import os
 import time
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 import curate
 from common import Ctx, Op, Run, dir_bytes, median, timed_loop, warm_up
 
-#: nominal seconds of one shard (curate + publish) on a 4-core host;
-#: only turns ``--seconds`` into a fixed shard count, never a timer
+#: nominal seconds of one warm shard (curate + publish) on a 4-core
+#: host; only turns ``--seconds`` into a fixed shard count, never a timer
 NOMINAL_SHARD_S = 5.0
+#: ``warm`` shards run untimed before the timed ones: in a fresh JVM the
+#: first pass takes ~4x a warm one and the next few keep getting faster
+#: (JIT); timing that slope would time the JVM's warm-up, not the engine
 SIZES = {
-    "full": {"docs": 600, "vocab": 5000, "doc_words": 40, "builds": 3},
-    "tiny": {"docs": 100, "vocab": 2000, "doc_words": 40, "builds": 1},
+    "full": {"docs": 600, "vocab": 5000, "doc_words": 40, "builds": 3, "warm": 3},
+    "tiny": {"docs": 100, "vocab": 2000, "doc_words": 40, "builds": 1, "warm": 1},
 }
 
 
@@ -30,11 +37,12 @@ def n_shards(seconds: int) -> int:
 
 
 def make_inputs(seed: int, size: str, seconds: int) -> list[dict]:
-    """One crawl per shard (the last one feeds the warm-up); shard ``i``
-    is seeded from ``(seed, i)`` and its ids start at ``i * 10**6``."""
+    """One crawl per shard (the last ``warm`` ones feed the warm-up);
+    shard ``i`` is seeded from ``(seed, i)`` and its ids start at
+    ``i * 10**6``."""
     cfg = SIZES[size]
     shards = []
-    for i in range(n_shards(seconds) + 1):
+    for i in range(n_shards(seconds) + cfg["warm"]):
         c = curate.make_corpus(seed * 1000 + i, cfg["docs"], cfg["vocab"], cfg["doc_words"])
         off = i * 10**6
         c["rows"] = [(d + off, t, s) for d, t, s in c["rows"]]
@@ -46,12 +54,12 @@ def make_inputs(seed: int, size: str, seconds: int) -> list[dict]:
 
 
 def make_ops(seed: int, size: str, seconds: int) -> tuple[list[Op], list[Op]]:
-    warm_shard = n_shards(seconds)
-    warm = [Op("read", "curate", {"shard": warm_shard}), Op("write", "publish", {"shard": warm_shard})]
-    timed = []
-    for i in range(n_shards(seconds)):
-        timed += [Op("read", "curate", {"shard": i}), Op("write", "publish", {"shard": i})]
-    return warm, timed
+    def ops(shards):
+        return [op for i in shards for op in (Op("read", "curate", {"shard": i}),
+                                              Op("write", "publish", {"shard": i}))]
+
+    n = n_shards(seconds)
+    return ops(range(n, n + SIZES[size]["warm"])), ops(range(n))
 
 
 def _doc_bytes(row: tuple) -> int:
@@ -63,15 +71,18 @@ def _doc_bytes(row: tuple) -> int:
 def run(ctx: Ctx) -> Run:
     spark, tr, cfg = ctx.spark, ctx.tracer, SIZES[ctx.size]
 
-    # -- setup: every shard to parquet (built several times, median kept)
+    # -- setup: every shard to its own parquet directory, as a crawler
+    #    would deliver it (built several times, median kept)
     build_s = []
     for b in range(cfg["builds"]):
         t0 = time.perf_counter()
         shards = make_inputs(ctx.seed, ctx.size, ctx.seconds)
         src = f"{ctx.tmp}/curate{b}/shards"
-        spark.createDataFrame([(i, *r) for i, c in enumerate(shards) for r in c["rows"]],
-                              "shard int, doc_id long, text string, source string") \
-            .repartition(1).write.partitionBy("shard").parquet(src)
+        for i, c in enumerate(shards):
+            os.makedirs(f"{src}/shard={i}")
+            ids, texts, sources = zip(*c["rows"])
+            pq.write_table(pa.table({"doc_id": pa.array(ids, pa.int64()), "text": texts, "source": sources}),
+                           f"{src}/shard={i}/part-0.parquet")
         build_s.append(time.perf_counter() - t0)
     out = f"{ctx.tmp}/curated"
     warm, timed = make_ops(ctx.seed, ctx.size, ctx.seconds)

@@ -2,10 +2,11 @@
 
 ``hot`` is small and ``in_memory`` (the engine pins its snapshot);
 ``cold`` is larger and uses the default parquet layout. Each round of
-the seeded op list is one write followed by reads, most of them keyed
-``get`` on ``hot``. The writes cycle through set / increment / patch
-(on ``hot``, so each one invalidates its pin) and delete /
-shift_expired (on ``cold``); both stores compact on a fixed cadence.
+the seeded op list is two writes, each followed by half of the round's
+reads, most of them keyed ``get`` on ``hot``. The writes cycle through
+set / increment / patch (on ``hot``, so each one invalidates its pin)
+and delete / shift_expired (on ``cold``); both stores compact on a
+fixed cadence.
 
 Expected results come from a pure-Python replay of the same op list,
 computed before the timed phase: every read is compared as it returns,
@@ -21,17 +22,18 @@ from datetime import datetime, timedelta
 
 from common import Ctx, Op, Run, dir_bytes, median, run_query, timed_loop, warm_up
 
-#: nominal seconds of one round (one write + its reads) on a 4-core host;
-#: only turns ``--seconds`` into a fixed round count, never a timer
-NOMINAL_ROUND_S = 4.0
-#: one write per round; the order alternates swamps and is the same for
-#: every seed (seeds change keys and values, never the op structure)
+#: nominal seconds of one round (two writes + their reads) on a 4-core
+#: host; only turns ``--seconds`` into a fixed round count, never a timer
+NOMINAL_ROUND_S = 6.5
+#: the writes take turns through this cycle, two per round; the order
+#: alternates swamps and is the same for every seed (seeds change keys
+#: and values, never the op structure)
 WRITE_CYCLE = ("set", "delete", "increment", "shift_expired", "patch")
 SCHEMA = "key string, val long, grp int, body struct<n:bigint,tag:string>, expired_at timestamp"
 BASE_TS = datetime(2024, 1, 1)
 NOW = BASE_TS + timedelta(days=30)
 SIZES = {
-    "full": {"hot": 2000, "cold": 10000, "hot_gets": 15, "gbk_keys": 300, "batch": 4,
+    "full": {"hot": 2000, "cold": 10000, "hot_gets": 29, "gbk_keys": 300, "batch": 4,
              "shift": 3, "compact_every": 2, "builds": 3},
     "tiny": {"hot": 40, "cold": 120, "hot_gets": 2, "gbk_keys": 260, "batch": 2,
              "shift": 2, "compact_every": 2, "builds": 1},
@@ -53,7 +55,8 @@ def make_inputs(seed: int, size: str) -> dict:
     }
 
 
-def _reads(rnd: random.Random, cfg: dict, rnd_no: int) -> list[Op]:
+def _reads(rnd: random.Random, cfg: dict, rnd_no: int) -> tuple[list[Op], list[Op]]:
+    """One round's reads, as the halves that follow its two writes."""
     def keys(swamp, n):
         pre, width, total = ("h", 6, cfg["hot"]) if swamp == "hot" else ("c", 7, cfg["cold"])
         return [f"{pre}{rnd.randrange(total):0{width}d}" for _ in range(n)]
@@ -65,17 +68,21 @@ def _reads(rnd: random.Random, cfg: dict, rnd_no: int) -> list[Op]:
         return [Op("read", "get", {"swamp": "hot", "keys": keys("hot", cfg["batch"])}) for _ in range(n)]
 
     # fixed interleaving: the non-get reads are spread through the round
-    third = cfg["hot_gets"] // 3
-    return [
-        *hot_gets(third),
+    quarter = cfg["hot_gets"] // 4
+    first = [
+        *hot_gets(quarter),
         Op("read", "index_page", {"swamp": "hot", **filt()}),
         Op("read", "get", {"swamp": "cold", "keys": keys("cold", cfg["batch"])}),
-        *hot_gets(third),
+        *hot_gets(quarter),
+    ]
+    second = [
         Op("read", "count_matching", {"swamp": "hot", **filt()}),
+        *hot_gets(quarter),
         Op("read", "get_by_keys", {"swamp": "cold", "keys": keys("cold", cfg["gbk_keys"])}),
-        *hot_gets(cfg["hot_gets"] - 2 * third),
+        *hot_gets(cfg["hot_gets"] - 3 * quarter),
         Op("read", "index_page" if rnd_no % 2 else "count_matching", {"swamp": "cold", **filt()}),
     ]
+    return first, second
 
 
 def _write(rnd: random.Random, cfg: dict, cls: str, rnd_no: int) -> Op:
@@ -96,8 +103,9 @@ def _write(rnd: random.Random, cfg: dict, cls: str, rnd_no: int) -> Op:
 
 def make_ops(seed: int, size: str, seconds: int) -> tuple[list[Op], list[Op]]:
     """(warm-up ops, timed ops). Warm-up runs every op class once on both
-    swamps; the timed list is whole cycles of five rounds, one per write
-    class, so every run does the same kinds of work in the same order."""
+    swamps, then one full round of reads; the timed list is a fixed
+    number of rounds, so every run does the same kinds of work in the
+    same order."""
     cfg = SIZES[size]
     rnd = random.Random(f"kv-ops-{seed}")
     warm = [_write(rnd, cfg, c, 9000 + j) for j, c in enumerate(WRITE_CYCLE)]
@@ -109,17 +117,17 @@ def make_ops(seed: int, size: str, seconds: int) -> tuple[list[Op], list[Op]]:
             Op("read", "index_page", {"swamp": swamp, "grp": 1, "val": 50}),
             Op("read", "count_matching", {"swamp": swamp, "grp": 1, "val": 50}),
         ]
-    cycles = max(1, round(seconds / (NOMINAL_ROUND_S * len(WRITE_CYCLE))))
+    warm += [op for half in _reads(rnd, cfg, 9999) for op in half]
+    rounds = max(1, round(seconds / NOMINAL_ROUND_S))
     timed: list[Op] = []
-    writes = 0
-    for c in range(cycles):
-        for j, cls in enumerate(WRITE_CYCLE):
-            rnd_no = c * len(WRITE_CYCLE) + j
-            timed.append(_write(rnd, cfg, cls, rnd_no))
-            writes += 1
-            if writes % cfg["compact_every"] == 0:
+    for r in range(rounds):
+        halves = _reads(rnd, cfg, r)
+        for j, half in enumerate(halves):
+            w = 2 * r + j
+            timed.append(_write(rnd, cfg, WRITE_CYCLE[w % len(WRITE_CYCLE)], w))
+            if (w + 1) % cfg["compact_every"] == 0:
                 timed.append(Op("maint", "compact"))
-            timed += _reads(rnd, cfg, rnd_no)
+            timed += half
     return warm, timed
 
 
