@@ -317,8 +317,8 @@ def ann_topk_filtered_from_state(
     expression over the corpus."""
     from ..streaming.ann_stream import persisted_cells
     from ..streaming.search_stream import (
-        _resolve_centroids,
         committed_epochs,
+        resolve_centroids,
         state_stats,
     )
 
@@ -375,7 +375,7 @@ def ann_topk_filtered_from_state(
         raise ValueError(
             f"ann_topk_filtered_from_state: unknown strategy {chosen!r}"
         )
-    cents = _resolve_centroids(state_dir, centroids)
+    cents = resolve_centroids(state_dir, centroids)
     enc = base.withColumnRenamed("cell", "_cell")
     ranked = _postfilter_probe_loop(
         enc,

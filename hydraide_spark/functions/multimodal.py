@@ -283,21 +283,6 @@ def decode_media_meta(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, DECODED_META_SCHEMA)
 
 
-def _fake_features(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic stand-in for decode+featurize: byte length, first
-    byte, additive checksum mod 997. Engine-independent, so oracle-
-    checkable end to end through the mapInPandas plumbing. numpy sums
-    the bytes (uint8 view -> int64 sum): a pure-Python ``sum(bytes)``
-    was the measured hot loop of the whole Arrow stage (~50 MB of
-    corpus bytes at 1 byte per interpreter op)."""
-    import numpy as np
-
-    n = len(payload)
-    first = payload[0] if n else -1
-    checksum = int(np.frombuffer(payload, dtype=np.uint8).sum(dtype=np.int64)) % 997
-    return n, first, checksum
-
-
 def extract_features(media: DataFrame, fake: bool = False) -> DataFrame:
     """Decode + feature-extract over Arrow batches, zero-copy (r16,
     guide §4.2): a binary Arrow column is one contiguous data buffer

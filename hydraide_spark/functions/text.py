@@ -876,11 +876,6 @@ def _merge_pairs_expr(sym: Column, pairs: "list[tuple[str, str]]") -> Column:
     return folded.getField("out")
 
 
-def _merge_pair_expr(sym: Column, a: str, b: str) -> Column:
-    """Single-pair form of :func:`_merge_pairs_expr` (kept for tests)."""
-    return _merge_pairs_expr(sym, [(a, b)])
-
-
 def bpe_encode_token_counts(
     df: DataFrame,
     merges: "list[tuple[str, str, int]] | list[tuple[str, str]]",

@@ -228,10 +228,6 @@ def _lit_value(v: Any) -> Column:
     return F.lit(v)
 
 
-def _lit_array(vs: Sequence[Any]) -> Column:
-    return F.array(*[F.lit(v) for v in vs])
-
-
 def _scalar_op(col: Column, op: Op, value: Any, dtype: Optional[T.DataType]) -> Column:
     """One typed predicate on a resolved (non-wildcard) Column.
 

@@ -68,10 +68,6 @@ def _timestamp_columns(path: str) -> tuple[list[str], list[str]]:
         return [], []
 
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
-    return _timestamp_columns(path)[0]
-
-
 def epoch_us(df: DataFrame, col: str):
     """Microseconds since epoch for a timestamp column of EITHER type.
 

@@ -15,10 +15,11 @@ crash anywhere mid-batch leaves the WHOLE epoch — both modalities —
 invisible until the retry re-marks it (state_compact.committed_frontier
 is shared by every reader below).
 
-Maintenance is one call: :func:`compact_admission_state` folds all
-five tables and prunes stale markers against the union of live epochs
-(prune_stale_markers' all-tables default — pruning against one
-modality's tables alone would vanish epochs the other still holds).
+Maintenance is one call: :func:`compact_admission_state` folds every
+table and prunes stale markers against the union of live epochs
+(state_compact.compact_state scans every table dir — pruning against
+one modality's tables alone would vanish epochs the other still
+holds).
 
 Reference anchor: the reference has no media pipeline; this is the
 LLM-training capability layer (SURVEY.md §6) in the shape a crawl
@@ -35,11 +36,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .dedup_stream import ingested_pairs, make_ingest, neardup_lookup
 from .media_stream import make_media_ingest, media_neardup_lookup, media_pairs
 from .state_compact import (
-    compact_epochs,
-    compact_epochs_tiered,
-    compact_neardup_state,
-    prune_stale_markers,
+    Layout,
+    committed_frontier,
+    compact_state,
+    neardup_layouts,
     publish_epoch_marker,
+    read_committed,
 )
 
 MEDIA_HASHES_TABLE = "media_hashes"
@@ -294,22 +296,18 @@ def admission_exact_seen(
     filter has never seen a text for them, and a dropped row would
     leave the caller with no admission decision at all."""
     from ..functions.sketches import bloom_probe
-    from .media_stream import _epoch_read
-    from .state_compact import committed_frontier
 
     n_bits, k = _resolve_bloom_geometry(
         state_dir, exact_bloom_bits, exact_bloom_k
     )
     q = query_items.select(F.col(id_col), F.col(text_col))
-    words = _epoch_read(
+    words = read_committed(
         spark,
         os.path.join(state_dir, EXACT_BLOOM_TABLE),
-        "word long, bits long",
-        epochs=committed_frontier(state_dir),
+        "word long, bits long, epoch long",
+        committed_frontier(state_dir),
     )
     zero = F.lit(0).cast("int").alias("exact_seen")
-    if words is None:
-        return q.select(F.col(id_col), zero)
     has_text = F.col(text_col).isNotNull() & (F.length(text_col) > 0)
     textful = q.filter(has_text)
     merged = words.groupBy("word").agg(F.bit_or("bits").alias("bits"))
@@ -375,41 +373,29 @@ def admission_lookup(
     return text_hits, media_hits
 
 
+def _or_words(df: DataFrame) -> DataFrame:
+    """The exact-bloom fold step: collapse to one row per word (bit_or
+    is the merge — otherwise the base grows one word-frame per folded
+    epoch and the read-side OR pays for history forever). It runs at
+    BOTH fold levels (r14 ADVICE): minor folds would otherwise stack
+    one word-frame per folded epoch into every L1 run and the
+    read-side OR grows unbounded."""
+    return df.groupBy("word").agg(F.bit_or("bits").alias("bits"))
+
+
 def compact_admission_state(
     spark: SparkSession, state_dir: str, id_col: str = "doc_id", tiered: bool = False
 ) -> dict:
     """ONE maintenance call for the whole admission state: fold the
     three text tables (band/shingle bases hash-bucketed so probes keep
-    pruning) and the two media tables (flat — probes are chunk-key
-    block joins, see compact_media_state), then prune commit markers
-    against the union of ALL live tables. Returns {table: fold
-    result}."""
-    out = compact_neardup_state(spark, state_dir, id_col=id_col, tiered=tiered)
-    fold = compact_epochs_tiered if tiered else compact_epochs
-    out[MEDIA_PAIRS_TABLE] = fold(
-        spark, os.path.join(state_dir, MEDIA_PAIRS_TABLE)
-    )
-    out[MEDIA_HASHES_TABLE] = fold(
-        spark, os.path.join(state_dir, MEDIA_HASHES_TABLE)
-    )
-    # the exact-bloom base collapses to one row per word at fold time
-    # (bit_or is the merge — otherwise the base grows one word-frame
-    # per folded epoch and the read-side OR pays for history forever)
-    def _or_words(df: DataFrame) -> DataFrame:
-        return df.groupBy("word").agg(F.bit_or("bits").alias("bits"))
-
-    if tiered:
-        # the bit_or collapse must run at BOTH fold levels (r14 ADVICE):
-        # minor folds would otherwise stack one word-frame per folded
-        # epoch into every L1 run and the read-side OR grows unbounded
-        out[EXACT_BLOOM_TABLE] = compact_epochs_tiered(
-            spark,
-            os.path.join(state_dir, EXACT_BLOOM_TABLE),
-            augment=_or_words,
-        )
-    else:
-        out[EXACT_BLOOM_TABLE] = compact_epochs(
-            spark, os.path.join(state_dir, EXACT_BLOOM_TABLE), augment=_or_words
-        )
-    prune_stale_markers(state_dir)
-    return out
+    pruning), the two media tables (flat — probes are chunk-key block
+    joins, see state_compact.MEDIA_LAYOUTS) and the exact-bloom words
+    (bit_or-collapsed), then prune commit markers against the union of
+    ALL live tables. Returns {table: fold result}."""
+    layouts = {
+        **neardup_layouts(id_col),
+        MEDIA_PAIRS_TABLE: Layout(),
+        MEDIA_HASHES_TABLE: Layout(),
+        EXACT_BLOOM_TABLE: Layout(augment=_or_words),
+    }
+    return compact_state(spark, state_dir, layouts, tiered)

@@ -41,6 +41,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions.vector import ivf_cell_expr
 from ..query.filters import cosine_similarity
+from .state_compact import read_committed
 
 
 def make_ivf_ingest(
@@ -115,15 +116,10 @@ def persisted_cells(
     directory-level partition pruning (see
     search_stream.committed_epochs). Epochs a crashed compaction
     already folded into the base are excluded either way
-    (state_compact.pending_folded — read-only self-healing against
+    (state_compact.committed_filter — read-only self-healing against
     the duplicate-rows window between promote and cleanup)."""
-    from .search_stream import _epoch_filtered
-
     schema = f"{id_col} long, {vec_col} array<float>, epoch long, cell int"
-    path = os.path.join(state_dir, "cells")
-    if not os.path.exists(path):
-        return spark.createDataFrame([], schema).drop("epoch")
-    return _epoch_filtered(spark.read.schema(schema).parquet(path), epochs, path)
+    return read_committed(spark, os.path.join(state_dir, "cells"), schema, epochs)
 
 
 def ivf_query_persisted(

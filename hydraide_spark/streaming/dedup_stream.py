@@ -63,45 +63,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.dedup import band_bucket_array, minhash_signature_array, shingles
 from .state_compact import (
     adopt_unmarked_epochs,
-    band_bucket_expr,
     committed_frontier,
     migrate_flat_state,
-    pending_folded,
     publish_epoch_marker,
+    read_bucketed,
+    read_committed,
 )
 
 _TABLES = ("pairs", "bands", "shingles")
-
-
-def _probe_epoch_cond(path: str, epoch, epochs=None):
-    """The persisted-index probe filter: exclude the CURRENT epoch's
-    partition (a retried epoch must probe the same "old" index the
-    first attempt saw — regardless of whether its marker landed, since
-    a crash can fall between the marker write and the checkpoint
-    commit; ``epoch=None`` = read-only caller, nothing to exclude) AND
-    any epochs a crashed compaction already folded into the base but
-    did not clean up (their rows exist twice — base + epoch dir — until
-    the next compaction replays the cleanup; see
-    state_compact.pending_folded). coalesce(epoch, -1) keeps pre-r8
-    flat legacy rows (NULL epoch) in the probe.
-
-    ``epochs`` (r13): the committed-marker frontier — when given, only
-    NEGATIVE epochs (always-committed compaction artifacts) and listed
-    epochs pass, so an epoch whose tables landed but whose commit
-    marker didn't stays invisible until the retry re-marks it. ``None``
-    keeps the legacy read-everything behavior (pre-marker states)."""
-    e = F.coalesce(F.col("epoch"), F.lit(-1))
-    cond = F.lit(True) if epoch is None else e != F.lit(int(epoch))
-    if epochs is not None:
-        keep = [int(x) for x in epochs if int(x) >= 0]
-        fc = e < 0
-        if keep:
-            fc = fc | e.isin(keep)
-        cond = cond & fc
-    pend = sorted(pending_folded(path))
-    if pend:
-        cond = cond & ~e.isin(pend)
-    return cond
 
 
 def band_buckets(
@@ -154,53 +123,13 @@ def hashed_probe_frame(
     epochs=None,
 ):
     """A hash-bucketed state table restricted to what a delta probe can
-    possibly match — the read side of the bucketed-base layout
-    (state_compact.compact_hashed_epochs):
-
-    - Flat delta epoch dirs (everything the last compaction left live)
-      are read in full — their total size is bounded by the deltas
-      since that compaction, not the corpus.
-    - The bucket-partitioned base is PRUNED to the directories the
-      probe's own keys (``keys_df[key_col]``) hash into (``bkt IN
-      (touched)``, a literal list — directory-level pruning, never a
-      row scan of the base; the collect is bounded by n_buckets
-      ≤ 65536, never by the corpus). The pruned fraction is
-      ~min(1, probe_keys / n_buckets), and compaction scales n_buckets
-      with the corpus, so probe IO stays O(delta) as the index grows —
-      the fix for the O(index) band/shingle scans (r9 VERDICT,
-      BENCH_stream_scale minhash ingest b=0.10).
-
-    A pre-bucketing flat base (no ``_NBUCKETS`` manifest) is read in
-    full like a delta dir — legacy behavior until the next compaction
-    rewrites it. Returns None when no index exists yet. Own-epoch,
-    uncommitted (``epochs`` frontier) and folded-but-uncleaned epochs
-    are excluded (``_probe_epoch_cond``); the bucketed base is part of
-    every frontier. ``schema`` is the table's DATA schema (no
-    epoch/bkt columns)."""
-    from .state_compact import split_bucketed_table
-
-    nb, flat, base = split_bucketed_table(spark, table_dir, schema)
-    frames = []
-    if flat is not None:
-        frames.append(
-            flat.filter(_probe_epoch_cond(table_dir, epoch, epochs)).drop("epoch")
-        )
-    if base is not None:
-        touched = sorted(
-            r["b"]
-            for r in keys_df.select(
-                band_bucket_expr(F.col(key_col), nb).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        frames.append(base.filter(F.col("bkt").isin(touched)).drop("bkt"))
-    if not frames:
-        return None
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    possibly match: state_compact.read_bucketed with the base pruned to
+    the buckets ``keys_df[key_col]`` hash into, this ingest's own
+    ``epoch`` excluded (None for a read-only caller) and the ``epochs``
+    frontier applied. Returns None when no index exists yet."""
+    return read_bucketed(
+        spark, table_dir, schema, keys_df, key_col, epochs, own_epoch=epoch
+    )
 
 
 def bands_probe_frame(
@@ -602,18 +531,12 @@ def ingested_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     output-sized, not corpus-sized)."""
     schema = "id_a long, id_b long, inter int, union int"
     path = os.path.join(state_dir, "pairs")
-    if not os.path.exists(path):
-        return spark.createDataFrame([], schema)
     migrate_flat_state(path)  # pre-r8 flat layout → epoch=-1 base
-    from .search_stream import _epoch_filtered
-
     # committed-marker frontier (r13): an epoch whose pairs landed but
     # whose marker didn't (crash mid-batch) stays invisible until the
     # retry re-marks it; None = pre-marker legacy state, read all
-    return _epoch_filtered(
-        spark.read.schema(schema + ", epoch long").parquet(path),
-        committed_frontier(state_dir),
-        path,
+    return read_committed(
+        spark, path, schema + ", epoch long", committed_frontier(state_dir)
     ).distinct()
 
 

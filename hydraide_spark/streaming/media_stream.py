@@ -32,6 +32,7 @@ from .state_compact import (
     adopt_unmarked_epochs,
     committed_frontier,
     publish_epoch_marker,
+    read_committed,
 )
 
 HASH_SCHEMA = "media_id long, h long"
@@ -49,30 +50,6 @@ def _fingerprints(batch_df: DataFrame, kind: str, algo: str) -> DataFrame:
             "media_id", F.col("ahash").alias("h")
         )
     raise ValueError(f"media kind must be image|audio, got {kind!r}")
-
-
-def _epoch_read(
-    spark: SparkSession, path: str, schema: str, epoch=None, epochs=None
-) -> "DataFrame | None":
-    """All persisted epochs EXCEPT the given one (a retry may run
-    after its own partial write landed — and after its own marker, if
-    the crash fell between the marker and the checkpoint commit);
-    ``epoch=None`` reads every epoch. ``epochs`` is the committed-
-    marker frontier (r13): only negative (compaction) epochs and
-    listed epochs pass, so a half-written epoch stays invisible until
-    its retry re-marks it; ``None`` = pre-marker legacy state, read
-    all. Crashed-compaction duplicates are excluded either way
-    (search_stream._epoch_filtered's pending_folded handling)."""
-    if not os.path.isdir(path) or not any(
-        e.startswith("epoch=") for e in os.listdir(path)
-    ):
-        return None
-    from .search_stream import _epoch_filtered
-
-    df = spark.read.schema(schema + ", epoch long").parquet(path)
-    if epoch is not None:
-        df = df.filter(F.coalesce(F.col("epoch"), F.lit(-1)) != int(epoch))
-    return _epoch_filtered(df, epochs, path)
 
 
 def make_media_ingest(
@@ -111,8 +88,15 @@ def make_media_ingest(
             .filter(F.col("h").isNotNull())
             .persist()
         )
-        old = _epoch_read(spark, hashes_dir, HASH_SCHEMA, epoch, epochs=frontier)
-        all_sigs = sigs_new if old is None else sigs_new.unionByName(old)
+        # the persisted index at the committed frontier, minus this
+        # epoch (a retry may run after its own partial write landed —
+        # and after its own marker, if the crash fell between the
+        # marker and the checkpoint commit)
+        all_sigs = sigs_new.unionByName(
+            read_committed(
+                spark, hashes_dir, HASH_SCHEMA + ", epoch long", frontier, own_epoch=epoch
+            )
+        )
         pairs = hamming_block_pairs_delta(
             sigs_new,
             all_sigs,
@@ -175,15 +159,12 @@ def media_pairs(
     batch. DISTINCT on read collapses at-least-once re-delivery
     artifacts (a re-delivered item re-pairs identically; the hamming
     of a duplicate pair is the same integer)."""
-    df = _epoch_read(
+    return read_committed(
         spark,
         os.path.join(state_dir, pairs_table),
-        PAIR_SCHEMA,
-        epochs=committed_frontier(state_dir),
-    )
-    if df is None:
-        return spark.createDataFrame([], PAIR_SCHEMA)
-    return df.distinct()
+        PAIR_SCHEMA + ", epoch long",
+        committed_frontier(state_dir),
+    ).distinct()
 
 
 def media_neardup_lookup(
@@ -208,14 +189,12 @@ def media_neardup_lookup(
         .filter(F.col("h").isNotNull())
         .select(F.col("media_id").alias("query_id"), "h")
     )
-    idx = _epoch_read(
+    idx = read_committed(
         spark,
         os.path.join(state_dir, hashes_table),
-        HASH_SCHEMA,
-        epochs=committed_frontier(state_dir),
+        HASH_SCHEMA + ", epoch long",
+        committed_frontier(state_dir),
     )
-    if idx is None:
-        return spark.createDataFrame([], "query_id long, media_id long, hamming int")
     # reuse the delta join with disjoint id namespaces is fragile
     # (query ids may collide with indexed ids) — do the asymmetric
     # block join directly: query chunks probe index chunks.

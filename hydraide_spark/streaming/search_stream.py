@@ -35,12 +35,29 @@ state tables.
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.text import postings, token_count
+from .state_compact import (
+    BASE_EPOCH,
+    COMMITS_NAME,
+    IVF_LAYOUTS,
+    SEARCH_LAYOUTS,
+    Layout,
+    atomic_write_json,
+    committed_frontier,
+    compact_epochs,
+    compact_state,
+    list_epochs,
+    publish_epoch_marker,
+    read_bucketed,
+    read_committed,
+    replace_table,
+)
 
 
 def make_postings_ingest(
@@ -100,40 +117,6 @@ def run_postings_ingest_loop(
     )
 
 
-def _epoch_filtered(df: DataFrame, epochs, table_dir: str) -> DataFrame:
-    """Restrict a state read to a committed-epoch frontier. ``epochs``
-    is a literal list, so the filter is a partition-directory prune
-    (PartitionFilters on ``epoch``), not a row scan. ``None`` keeps the
-    old read-everything behavior.
-
-    NEGATIVE epochs — the compaction base (-1) and L1 run dirs
-    (-2, -3, …; ``state_compact.fold_to_l1``) — are always-committed
-    folds of committed epochs and are kept in EVERY frontier, so a
-    frontier recorded before a minor fold keeps resolving after it.
-
-    Either way, epochs a crashed compaction already folded into a
-    surviving target but did not clean up
-    (``state_compact.pending_folded``) are EXCLUDED: their rows live in
-    the target too, and reading both sides of the interrupted swap
-    would double-count them. Read-only self-healing — the next
-    compaction replays the cleanup."""
-    from .state_compact import pending_folded
-
-    pend = sorted(pending_folded(table_dir))
-    e = F.coalesce(F.col("epoch"), F.lit(-1))
-    if epochs is None:
-        if pend:
-            df = df.filter(~e.isin(pend))
-        return df.drop("epoch")
-    keep = [int(x) for x in epochs if int(x) >= 0 and int(x) not in pend]
-    cond = e < 0
-    if pend:
-        cond = cond & ~e.isin(pend)
-    if keep:
-        cond = cond | F.col("epoch").isin(keep)
-    return df.filter(cond).drop("epoch")
-
-
 def persisted_postings(
     spark: SparkSession,
     state_dir: str,
@@ -153,63 +136,27 @@ def persisted_postings(
     full. Frontier (``epochs``) and crashed-compaction
     (``pending_folded``) exclusions apply to the delta epochs either
     way; the base partition (-1) is part of every frontier."""
-    from .state_compact import (
-        BASE_EPOCH,
-        band_bucket_expr,
-        split_bucketed_table,
-    )
-
     schema = f"word string, {id_col} long, tf long"
-    path = os.path.join(state_dir, "postings")
-    empty = spark.createDataFrame([], schema)
     # layout-advisor history (r13): a words-pruned read is a probe
     # touching ~len(words) key-buckets; a full read is a scan
+    keys = None
     if words is not None:
-        _record_workload(state_dir, "postings", "probe", len(list(words)))
+        words = [str(w) for w in words]
+        _record_workload(state_dir, "postings", "probe", len(words))
+        keys = spark.createDataFrame([(w,) for w in words], "word string")
     else:
         _record_workload(state_dir, "postings", "scan")
-    nb, flat, base = split_bucketed_table(spark, path, schema)
-    if nb is None:
-        # no bucketed base: flat covers every epoch dir (or is None
-        # for a not-yet-created table)
-        if flat is None:
-            return empty
-        return _epoch_filtered(flat, epochs, path)
-    frames = []
-    if flat is not None:
-        frames.append(_epoch_filtered(flat, epochs, path))
-    want_base = epochs is None or BASE_EPOCH in {int(e) for e in epochs}
-    if base is not None and want_base:
-        if words is not None:
-            wdf = spark.createDataFrame(
-                [(str(w),) for w in words], "w string"
-            )
-            touched = sorted(
-                r["b"]
-                for r in wdf.select(
-                    band_bucket_expr(F.col("w"), nb).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-            base = base.filter(F.col("bkt").isin(touched))
-        frames.append(base.drop("bkt"))
-    if not frames:
-        return empty
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    out = read_bucketed(
+        spark, os.path.join(state_dir, "postings"), schema, keys, "word", epochs
+    )
+    return spark.createDataFrame([], schema) if out is None else out
 
 
 def persisted_doclen(
     spark: SparkSession, state_dir: str, id_col: str = "doc_id", epochs=None
 ) -> DataFrame:
     schema = f"{id_col} long, dl int, epoch long"
-    path = os.path.join(state_dir, "doclen")
-    if not os.path.exists(path):
-        return spark.createDataFrame([], schema).drop("epoch")
-    return _epoch_filtered(spark.read.schema(schema).parquet(path), epochs, path)
+    return read_committed(spark, os.path.join(state_dir, "doclen"), schema, epochs)
 
 
 def bm25_from_state(
@@ -335,14 +282,23 @@ _STATS_FILE = "_STATS"
 def _marker_stats(path: str) -> "dict | None":
     """Parse one commit marker's stats payload (r12: markers carry
     {'rows': N, 'dim': D}); pre-r12 markers are empty files -> None."""
-    import json
-
     try:
         with open(path) as fh:
             txt = fh.read().strip()
         return json.loads(txt) if txt else None
     except (OSError, ValueError):
         return None
+
+
+def _base_stats(state_dir: str):
+    """(base_rows, dim, absorbed epoch ids, found) of the ``_STATS``
+    base; zeros and ``found=False`` when there is none."""
+    try:
+        with open(os.path.join(state_dir, _STATS_FILE)) as fh:
+            st = json.load(fh)
+        return int(st.get("base_rows", 0)), st.get("dim"), set(st.get("absorbed", [])), True
+    except (OSError, ValueError):
+        return 0, None, set(), False
 
 
 def state_stats(state_dir: str) -> "dict | None":
@@ -359,49 +315,50 @@ def state_stats(state_dir: str) -> "dict | None":
     commit frontier). Returns ``{"rows": int, "dim": int | None}`` or
     None when the state predates r12 entirely (no stats anywhere) —
     callers fall back to one count."""
-    import json
-
-    base_rows, dim, absorbed, found = 0, None, set(), False
-    try:
-        with open(os.path.join(state_dir, _STATS_FILE)) as fh:
-            st = json.load(fh)
-        base_rows = int(st.get("base_rows", 0))
-        dim = st.get("dim")
-        absorbed = set(st.get("absorbed", []))
+    base_rows, dim, absorbed, found = _base_stats(state_dir)
+    commits = os.path.join(state_dir, COMMITS_NAME)
+    for ep in list_epochs(commits):
+        if ep in absorbed:
+            continue
+        ms = _marker_stats(os.path.join(commits, f"epoch={ep}"))
+        if ms is None:
+            # pre-r12 marker with no payload: rows unknown — the
+            # whole figure would undercount, so report no stats
+            return None if not found else {"rows": None, "dim": dim}
         found = True
-    except (OSError, ValueError):
-        pass
-    commits = os.path.join(state_dir, "_commits")
-    if os.path.isdir(commits):
-        for n in os.listdir(commits):
-            if not n.startswith("epoch="):
-                continue
-            ep = int(n.split("=", 1)[1])
-            if ep in absorbed:
-                continue
-            ms = _marker_stats(os.path.join(commits, n))
-            if ms is None:
-                # pre-r12 marker with no payload: rows unknown — the
-                # whole figure would undercount, so report no stats
-                return None if not found else {"rows": None, "dim": dim}
-            found = True
-            base_rows += int(ms.get("rows", 0))
-            if dim is None:
-                dim = ms.get("dim")
+        base_rows += int(ms.get("rows", 0))
+        if dim is None:
+            dim = ms.get("dim")
     return {"rows": base_rows, "dim": dim} if found else None
 
 
-def _write_base_stats(state_dir: str, base_rows: int, dim, absorbed) -> None:
-    import json
-
-    path = os.path.join(state_dir, _STATS_FILE)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"base_rows": int(base_rows), "dim": dim, "absorbed": sorted(absorbed)},
-            fh,
+def _absorb_marker_stats(state_dir: str, markers, stale) -> None:
+    """The unified state's pre-unlink prune step
+    (state_compact.compact_state ``absorb``): add the row stats of the
+    markers about to be pruned (``stale``) to the ``_STATS`` base BEFORE
+    they are unlinked (r12: markers carry per-epoch counts — the
+    router's count-free catalog). Idempotence across a crash between
+    the ``_STATS`` write and the unlink: absorbed ids stay listed until
+    their marker is confirmed gone, and an id already listed is never
+    re-added. The absorbed list stays bounded: ids whose markers no
+    longer exist (``markers`` is the pruner's snapshot) are dropped on
+    the next pass."""
+    base_rows, dim, absorbed, _found = _base_stats(state_dir)
+    dirty = False
+    for ep in stale:
+        if ep not in absorbed:
+            ms = _marker_stats(os.path.join(state_dir, COMMITS_NAME, f"epoch={ep}"))
+            base_rows += int(ms.get("rows", 0)) if ms else 0
+            if dim is None and ms:
+                dim = ms.get("dim")
+            absorbed.add(ep)
+            dirty = True
+    kept = absorbed & set(markers)
+    if dirty or kept != absorbed:
+        atomic_write_json(
+            os.path.join(state_dir, _STATS_FILE),
+            {"base_rows": int(base_rows), "dim": dim, "absorbed": sorted(kept)},
         )
-    os.replace(tmp, path)
 
 
 _WORKLOAD_FILE = "_WORKLOAD.json"  # legacy r13 snapshot — read-only now
@@ -421,8 +378,6 @@ def _record_workload(state_dir: str, table: str, kind: str, n_keys: int = 0) -> 
     rotates to ``.old`` at ~4 MB so it stays bounded; failures are
     swallowed (a read-only state dir must never break serving — the
     advisor just sees less history)."""
-    import json
-
     try:
         if not os.path.isdir(state_dir):
             return
@@ -444,8 +399,6 @@ def _workload_history(state_dir: str, table: str) -> dict:
     line (crash mid-append) is skipped, not fatal. probe_keys is
     capped at the most recent 1000 — the advisor needs the batch-size
     DISTRIBUTION, not an unbounded list."""
-    import json
-
     wl = {"probes": 0, "probe_keys": [], "scans": 0}
     try:
         with open(os.path.join(state_dir, _WORKLOAD_FILE)) as fh:
@@ -523,16 +476,9 @@ def advise_state_layout(state_dir: str, table: str = "postings") -> dict:
 
 
 def committed_epochs(state_dir: str) -> list[int]:
-    """The readable frontier: the compaction base (-1) plus every epoch
-    whose commit marker landed. One listdir — O(live epochs), and
-    compaction keeps that bounded."""
-    commits = os.path.join(state_dir, "_commits")
-    eps = [-1]
-    if os.path.isdir(commits):
-        for n in os.listdir(commits):
-            if n.startswith("epoch="):
-                eps.append(int(n.split("=", 1)[1]))
-    return sorted(eps)
+    """The readable frontier (state_compact.committed_frontier); a state
+    with no ``_commits`` dir yet reads the base alone, ``[-1]``."""
+    return committed_frontier(state_dir) or [BASE_EPOCH]
 
 
 def make_search_ingest(
@@ -567,7 +513,7 @@ def make_search_ingest(
     )
     from .ann_stream import make_ivf_ingest
 
-    centroids = _resolve_centroids(state_dir, centroids)
+    centroids = resolve_centroids(state_dir, centroids)
     if (
         pq_codebooks is not None
         or stored_pq_model(state_dir) is not None
@@ -583,7 +529,6 @@ def make_search_ingest(
     ivf_ingest = make_ivf_ingest(
         spark, state_dir, centroids, id_col=id_col, vec_col=vec_col
     )
-    commits_dir = os.path.join(state_dir, "_commits")
     codes_dir = os.path.join(state_dir, "codes")
     pq_dir = os.path.join(state_dir, "pqcodes")
     pq_dim = (
@@ -622,23 +567,15 @@ def make_search_ingest(
         # atomic publish, retry-overwritten with the epoch itself, and
         # the serve-time router reads them instead of counting the
         # corpus (state_stats). The count runs on the persisted batch.
-        import json
-
         n_rows = batch.count()
         vh = batch.select(vec_col).head()
         dim = len(vh[0]) if vh is not None and vh[0] is not None else None
         batch.unpersist()
-        os.makedirs(commits_dir, exist_ok=True)
         # marker LAST: one atomic write is the publish — readers never
         # see an epoch some of whose tables are missing
-        marker = os.path.join(commits_dir, f"epoch={int(epoch)}")
-        # tmp name must NOT start with "epoch=" — committed_epochs and
-        # state_stats list by that prefix and a crash-leftover tmp
-        # would parse as a bogus epoch
-        tmp = os.path.join(commits_dir, f".tmp-epoch-{int(epoch)}")
-        with open(tmp, "w") as fh:
-            json.dump({"rows": int(n_rows), "dim": dim}, fh)
-        os.replace(tmp, marker)
+        publish_epoch_marker(
+            state_dir, epoch, payload={"rows": int(n_rows), "dim": dim}
+        )
 
     return ingest
 
@@ -698,7 +635,7 @@ def hybrid_search_from_unified_state(
     from ..functions.retrieval import ranked_list, rrf_fuse
     from .ann_stream import ivf_query_persisted
 
-    centroids = _resolve_centroids(state_dir, centroids)
+    centroids = resolve_centroids(state_dir, centroids)
     eps = committed_epochs(state_dir)
     lex_scored = (
         bm25_from_state(spark, state_dir, query_words, id_col=id_col, epochs=eps)
@@ -725,124 +662,33 @@ def hybrid_search_from_unified_state(
     return rrf_fuse([lex, dense], id_col=id_col, k0=k0, topk=topk)
 
 
+#: the unified state's five tables: the search and IVF families' layouts
+#: plus the cell-partitioned int8 and PQ code tables
+_UNIFIED_LAYOUTS = {
+    **SEARCH_LAYOUTS,
+    **IVF_LAYOUTS,
+    "codes": Layout(partition_by=("cell",)),
+    "pqcodes": Layout(partition_by=("cell",)),
+}
+
+
 def compact_unified_search_state(
     spark: SparkSession, state_dir: str, tiered: bool = False
 ) -> dict:
-    """Compact all four unified-state tables (each folds its committed
+    """Compact all five unified-state tables (each folds its committed
     epochs into the epoch=-1 base, newest left for retries), then prune
     commit markers for epochs no table holds anymore — the folded rows
-    are covered by the always-committed base. Single-writer, same
-    contract as compact_epochs.
+    are covered by the always-committed base — absorbing the pruned
+    markers' row stats into ``_STATS`` first (:func:`state_stats`).
+    Single-writer, same contract as compact_epochs.
 
     ``tiered=True``: the O(delta) leveled maintenance tick — committed
     epochs fold into an L1 run; the full base rewrite happens only when
     L1 pressure crosses the fraction threshold
     (state_compact.compact_epochs_tiered; r10 VERDICT #2)."""
-    from .state_compact import (
-        compact_epochs,
-        compact_epochs_tiered,
-        compact_hashed_epochs,
+    return compact_state(
+        spark, state_dir, _UNIFIED_LAYOUTS, tiered, absorb=_absorb_marker_stats
     )
-
-    if tiered:
-        folded = {
-            "postings": compact_epochs_tiered(
-                spark, os.path.join(state_dir, "postings"), key_col="word"
-            ),
-            "doclen": compact_epochs_tiered(
-                spark, os.path.join(state_dir, "doclen")
-            ),
-            "cells": compact_epochs_tiered(
-                spark, os.path.join(state_dir, "cells"), partition_by=["cell"]
-            ),
-            "codes": compact_epochs_tiered(
-                spark, os.path.join(state_dir, "codes"), partition_by=["cell"]
-            ),
-            "pqcodes": compact_epochs_tiered(
-                spark, os.path.join(state_dir, "pqcodes"), partition_by=["cell"]
-            ),
-        }
-    else:
-        folded = {
-            # word-bucketed base: BM25 serving reads prune to the query
-            # words' directories (persisted_postings words=)
-            "postings": compact_hashed_epochs(
-                spark, os.path.join(state_dir, "postings"), "word"
-            ),
-            "doclen": compact_epochs(spark, os.path.join(state_dir, "doclen")),
-            "cells": compact_epochs(
-                spark, os.path.join(state_dir, "cells"), partition_by=["cell"]
-            ),
-            "codes": compact_epochs(
-                spark, os.path.join(state_dir, "codes"), partition_by=["cell"]
-            ),
-            "pqcodes": compact_epochs(
-                spark, os.path.join(state_dir, "pqcodes"), partition_by=["cell"]
-            ),
-        }
-    # marker snapshot BEFORE the live-epoch listing (r14 — the
-    # prune_stale_markers ordering fix): every ingest writes its table
-    # dirs before its marker, so a marker in the snapshot either still
-    # has dirs (the later listing keeps it) or was folded into the
-    # always-committed base (safe to prune). The old live-first order
-    # could prune a marker that landed between the two listings.
-    commits = os.path.join(state_dir, "_commits")
-    marker_snapshot = (
-        [n for n in os.listdir(commits) if n.startswith("epoch=")]
-        if os.path.isdir(commits)
-        else []
-    )
-    live: set[int] = set()
-    for t in ("postings", "doclen", "cells", "codes", "pqcodes"):
-        d = os.path.join(state_dir, t)
-        if os.path.isdir(d):
-            for n in os.listdir(d):
-                if n.startswith("epoch=") and n.split("=", 1)[1].lstrip("-").isdigit():
-                    live.add(int(n.split("=", 1)[1]))
-    if marker_snapshot:
-        import json
-
-        # absorb pruned markers' row stats into the _STATS base BEFORE
-        # unlinking (r12: markers carry per-epoch counts — the router's
-        # count-free catalog). Idempotence across a crash between the
-        # _STATS write and the unlink: absorbed ids stay listed until
-        # their marker is confirmed gone, and an id already listed is
-        # never re-added. The absorbed list stays bounded: ids whose
-        # markers no longer exist are dropped on the next pass.
-        base_rows, dim, absorbed = 0, None, set()
-        try:
-            with open(os.path.join(state_dir, _STATS_FILE)) as fh:
-                st = json.load(fh)
-            base_rows = int(st.get("base_rows", 0))
-            dim = st.get("dim")
-            absorbed = set(st.get("absorbed", []))
-        except (OSError, ValueError):
-            pass
-        to_remove = []
-        marker_eps = set()
-        stats_dirty = False
-        for n in marker_snapshot:
-            ep = int(n.split("=", 1)[1])
-            marker_eps.add(ep)
-            if ep in live:
-                continue
-            to_remove.append((ep, os.path.join(commits, n)))
-            if ep not in absorbed:
-                ms = _marker_stats(os.path.join(commits, n))
-                base_rows += int(ms.get("rows", 0)) if ms else 0
-                if dim is None and ms:
-                    dim = ms.get("dim")
-                absorbed.add(ep)
-                stats_dirty = True
-        pruned_absorbed = {e for e in absorbed if e in marker_eps}
-        if stats_dirty or pruned_absorbed != absorbed:
-            _write_base_stats(state_dir, base_rows, dim, pruned_absorbed | {e for e, _ in to_remove})
-        for _ep, path in to_remove:
-            try:
-                os.remove(path)
-            except FileNotFoundError:
-                pass  # a concurrent pruner got there first
-    return folded
 
 
 def ann_topk_auto_from_state(
@@ -937,7 +783,7 @@ def ann_topk_auto_from_state(
             out, query_id_col, id_col, "score", descending=True
         )
     elif chosen in ("int8", "ivf_int8"):
-        cents = _resolve_centroids(state_dir, centroids)
+        cents = resolve_centroids(state_dir, centroids)
         ranked = ivf_int8_from_state(
             spark,
             state_dir,
@@ -1056,10 +902,7 @@ def persisted_pqcodes(
     """The accumulated cell-partitioned PQ code index (id, cell,
     codes) — the 8-byte/vector IVFADC serving form."""
     schema = f"{id_col} long, codes array<int>, epoch long, cell int"
-    path = os.path.join(state_dir, "pqcodes")
-    if not os.path.exists(path):
-        return spark.createDataFrame([], schema).drop("epoch")
-    return _epoch_filtered(spark.read.schema(schema).parquet(path), epochs, path)
+    return read_committed(spark, os.path.join(state_dir, "pqcodes"), schema, epochs)
 
 
 def ivfadc_from_state(
@@ -1090,7 +933,7 @@ def ivfadc_from_state(
     interrupted rebuild of either refuses loudly."""
     from ..functions.vector import ivfadc_rank_codes
 
-    cents = _resolve_centroids(state_dir, centroids)
+    cents = resolve_centroids(state_dir, centroids)
     books = _resolve_pq_books(state_dir, codebooks)
     if epochs is None:
         epochs = committed_epochs(state_dir)
@@ -1126,10 +969,7 @@ def persisted_int8_codes(
 ) -> DataFrame:
     """The accumulated cell-partitioned int8 code index (id, cell, q)."""
     schema = f"{id_col} long, q array<int>, epoch long, cell int"
-    path = os.path.join(state_dir, "codes")
-    if not os.path.exists(path):
-        return spark.createDataFrame([], schema).drop("epoch")
-    return _epoch_filtered(spark.read.schema(schema).parquet(path), epochs, path)
+    return read_committed(spark, os.path.join(state_dir, "codes"), schema, epochs)
 
 
 def ivf_int8_from_state(
@@ -1160,7 +1000,7 @@ def ivf_int8_from_state(
     )
     from pyspark.sql.window import Window as W
 
-    centroids = _resolve_centroids(state_dir, centroids)
+    centroids = resolve_centroids(state_dir, centroids)
     if epochs is None:
         epochs = committed_epochs(state_dir)
     q = queries.select(
@@ -1220,20 +1060,15 @@ def store_ivf_model(state_dir: str, centroids) -> None:
     """Atomically persist the IVF centroid model the state's cells/codes
     are assigned under (tmp + rename; underscore name — invisible to
     every parquet read)."""
-    import json
-
-    path = os.path.join(state_dir, _MODEL_FILE)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump([[float(x) for x in c] for c in centroids], fh)
-    os.replace(tmp, path)
+    atomic_write_json(
+        os.path.join(state_dir, _MODEL_FILE),
+        [[float(x) for x in c] for c in centroids],
+    )
 
 
 def stored_ivf_model(state_dir: str):
     """The persisted centroid model, or None before the first
     :func:`store_ivf_model` / :func:`refresh_ivf_model`."""
-    import json
-
     try:
         with open(os.path.join(state_dir, _MODEL_FILE)) as fh:
             return json.load(fh)
@@ -1245,19 +1080,14 @@ def store_pq_model(state_dir: str, codebooks) -> None:
     """Atomically persist the PQ codebooks the state's ``pqcodes``
     table is encoded under (same contract as :func:`store_ivf_model`).
     Stored as ``[[ [code, [floats…]], …] per subspace]``."""
-    import json
+    atomic_write_json(os.path.join(state_dir, _PQMODEL_FILE), _pq_json(codebooks))
 
-    path = os.path.join(state_dir, _PQMODEL_FILE)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
-            [
-                [[int(code), [float(x) for x in vec]] for code, vec in book]
-                for book in codebooks
-            ],
-            fh,
-        )
-    os.replace(tmp, path)
+
+def _pq_json(codebooks) -> list:
+    return [
+        [[int(code), [float(x) for x in vec]] for code, vec in book]
+        for book in codebooks
+    ]
 
 
 def stored_pq_model(state_dir: str):
@@ -1265,8 +1095,6 @@ def stored_pq_model(state_dir: str):
     :func:`store_pq_model` / :func:`refresh_pq_model`. JSON round-trip
     yields ``[(code, vec), …]`` pairs as 2-lists — every consumer
     unpacks them positionally, so the shapes are interchangeable."""
-    import json
-
     try:
         with open(os.path.join(state_dir, _PQMODEL_FILE)) as fh:
             return json.load(fh)
@@ -1275,7 +1103,7 @@ def stored_pq_model(state_dir: str):
 
 
 def _resolve_pq_books(state_dir: str, codebooks):
-    """Same loud-refusal contract as :func:`_resolve_centroids`, for
+    """Same loud-refusal contract as :func:`resolve_centroids`, for
     the PQ layer: a half-rebuilt pqcodes table probed under either
     codebook silently collapses recall."""
     if os.path.exists(os.path.join(state_dir, _PQREBUILD_FILE)):
@@ -1296,7 +1124,7 @@ def _resolve_pq_books(state_dir: str, codebooks):
     return books
 
 
-def _resolve_centroids(state_dir: str, centroids):
+def resolve_centroids(state_dir: str, centroids):
     # an interrupted model rebuild leaves the cell-assigned tables in
     # an indeterminate mix of old- and new-model assignments; probing
     # them under EITHER model silently collapses recall, so serving
@@ -1337,7 +1165,7 @@ def refresh_ivf_model(
     tmp/manifest swap. Crash safety ACROSS the steps: the new centroids
     are journaled to ``_REBUILDING`` BEFORE any table is touched; while
     that marker exists, ingest and serving REFUSE loudly
-    (``_resolve_centroids`` — a half-rebuilt index probed under either
+    (``resolve_centroids`` — a half-rebuilt index probed under either
     model silently collapses recall, and loud beats silent), and
     re-running ``refresh_ivf_model`` RESUMES from the journaled
     centroids (each per-table swap is idempotent), finishes, persists
@@ -1354,9 +1182,6 @@ def refresh_ivf_model(
         ivf_cell_expr,
         train_ivf_centroids,
     )
-    from .state_compact import compact_epochs
-
-    import json
 
     marker = os.path.join(state_dir, _REBUILD_FILE)
     if os.path.exists(marker):
@@ -1381,10 +1206,7 @@ def refresh_ivf_model(
             ),
             n_centroids=k,
         )
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump([[float(x) for x in c] for c in cents], fh)
-        os.replace(tmp, marker)
+        atomic_write_json(marker, [[float(x) for x in c] for c in cents])
 
     def assign_frame():
         return persisted_cells_all(
@@ -1477,16 +1299,13 @@ def refresh_pq_model(
     the stored ``_MODEL``) — a PQ refresh never moves rows between
     cells, so probe routing is unchanged and only code payloads are
     rewritten."""
-    import json
-
     from ..functions.vector import (
         ivf_cell_expr,
         pq_codes_expr,
         train_pq_codebooks,
     )
-    from .state_compact import replace_table
 
-    cents = _resolve_centroids(state_dir, centroids)
+    cents = resolve_centroids(state_dir, centroids)
     marker = os.path.join(state_dir, _PQREBUILD_FILE)
     if os.path.exists(marker):
         with open(marker) as fh:
@@ -1510,16 +1329,7 @@ def refresh_pq_model(
             iters=iters,
             seed=seed,
         )
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                [
-                    [[int(c), [float(x) for x in v]] for c, v in book]
-                    for book in books
-                ],
-                fh,
-            )
-        os.replace(tmp, marker)
+        atomic_write_json(marker, _pq_json(books))
     dim = len(books) * len(books[0][0][1])
     src = persisted_cells_all(
         spark, state_dir, id_col=id_col, vec_col=vec_col

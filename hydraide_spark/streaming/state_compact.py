@@ -1,9 +1,26 @@
-"""Epoch compaction for streaming state tables — the maintenance op
-the epoch-keyed-overwrite sink pattern (streaming/dedup_stream.py,
-streaming/ann_stream.py) needs at scale: a long-running ingest leaves
-one directory per micro-batch, and a million tiny epoch dirs is the
-classic small-files problem (listing cost, open-per-file overhead,
-tiny row groups).
+"""The epoch-state protocol every streaming state family shares — the
+near-dup, media, IVF, search, unified-search and admission states
+(streaming/dedup_stream.py, media_stream.py, ann_stream.py,
+search_stream.py, admission_stream.py) all live by it, and this module
+is its only implementation:
+
+1. **Write**: each micro-batch writes its tables as epoch-keyed
+   overwrites (``table/epoch=N/``; a retry replaces its own partial
+   output).
+2. **Publish**: a multi-table state publishes the epoch with ONE
+   ``_commits/epoch=N`` marker written after every table
+   (:func:`publish_epoch_marker`; JSON via :func:`atomic_write_json`).
+3. **Read**: readers and probes see the committed frontier
+   (:func:`committed_frontier`) through one filter
+   (:func:`committed_filter` / :func:`read_committed`).
+4. **Fold**: maintenance folds epochs through one crash-safe swap
+   (``_swap``: tmp → manifest → move aside → promote → cleanup), entered
+   per family through one call (:func:`compact_state` over declared
+   :class:`Layout`\\ s), then prunes stale markers (one pruner).
+
+A long-running ingest leaves one directory per micro-batch, and a
+million tiny epoch dirs is the classic small-files problem (listing
+cost, open-per-file overhead, tiny row groups).
 
 ``compact_epochs`` folds every COMMITTED epoch into a single reserved
 base partition ``epoch=-1``:
@@ -26,15 +43,15 @@ base partition ``epoch=-1``:
   displaced old base (``_old_base``) are underscore-prefixed, so Spark
   partition discovery ignores them if a crash leaves them behind (a
   bare ``epoch=-1.old`` dir would mis-parse as a partition value).
-  ``compact_epochs`` self-recovers on entry: a complete ``_compacting``
-  (has ``_SUCCESS``) with no live base is swapped into place; an
+  Every swap user self-recovers on entry: a complete ``_compacting``
+  (has the fold manifest) with no live base is swapped into place; an
   incomplete one is rolled back to ``_old_base``. The swap order is
   write-tmp → move-base-aside → promote-tmp, so at every instant either
   the base or a recoverable copy exists.
 
 Readers (``ingested_pairs``, ``persisted_cells``, the ingest probes)
-are unchanged: they read the root with partition discovery and treat
-``epoch`` as opaque except for the ≠ current-epoch exclusion.
+read the root with partition discovery and treat ``epoch`` as opaque
+except for the frontier filter.
 
 **Tiered (leveled) compaction — r10 VERDICT #2.** ``compact_epochs``
 rewrites the ENTIRE base every fold; at 100 TB that is an O(full
@@ -57,10 +74,12 @@ dirs' directory depth — probes scan them like deltas, bounded by
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+from typing import Callable, NamedTuple
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 BASE_EPOCH = -1
 
@@ -68,6 +87,43 @@ _TMP_NAME = "_compacting"
 _TMP_L1 = "_compacting_l1"
 _OLD_NAME = "_old_base"
 _MANIFEST = "_FOLDED"
+COMMITS_NAME = "_commits"
+
+
+def list_epochs(d: str) -> "list[int]":
+    """Sorted ids of the ``epoch=N`` entries under ``d`` — a table's
+    epoch dirs (deltas, the base, L1 runs) or a state's commit markers;
+    ``[]`` when ``d`` does not exist. The one parser of the dir-name
+    convention: a value that is not an integer (the legacy
+    ``epoch=-1.old``) is skipped, never mis-parsed."""
+    if not os.path.isdir(d):
+        return []
+    out = []
+    for n in os.listdir(d):
+        if n.startswith("epoch="):
+            v = n.split("=", 1)[1]
+            if v.lstrip("-").isdigit():
+                out.append(int(v))
+    return sorted(out)
+
+
+def _epoch_dir(d: str, e: int) -> str:
+    return os.path.join(d, f"epoch={int(e)}")
+
+
+def atomic_write_json(path: str, payload=None) -> None:
+    """Write ``payload`` as JSON (``None`` = an empty file) to a tmp
+    sibling, then ``os.replace`` it over ``path``: a reader sees the
+    old file or the whole new one, never a torn write. The tmp name is
+    dot-prefixed, so it can never match the ``epoch=`` prefix the
+    listers parse (a crash-leftover marker tmp would otherwise read as
+    a bogus epoch) and Spark reads skip it."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".tmp-{name}")
+    with open(tmp, "w") as fh:
+        if payload is not None:
+            json.dump(payload, fh)
+    os.replace(tmp, path)
 
 
 def _is_complete(d: str) -> bool:
@@ -77,34 +133,19 @@ def _is_complete(d: str) -> bool:
     return os.path.isfile(os.path.join(d, _MANIFEST))
 
 
-def _finish_swap(table_dir: str, base: str) -> None:
+def _finish_swap(table_dir: str, target: str) -> None:
     """Post-promote cleanup, replayable: delete the epoch dirs listed
-    in the base's fold manifest, drop the displaced old base, then
+    in the target's fold manifest, drop the displaced old base, then
     remove the manifest (last — its presence is what marks the cleanup
     as still pending)."""
-    manifest = os.path.join(base, _MANIFEST)
+    manifest = os.path.join(target, _MANIFEST)
     with open(manifest) as fh:
         folded = [int(line) for line in fh.read().split() if line]
     for e in folded:
         if e != BASE_EPOCH:
-            shutil.rmtree(os.path.join(table_dir, f"epoch={e}"), ignore_errors=True)
+            shutil.rmtree(_epoch_dir(table_dir, e), ignore_errors=True)
     shutil.rmtree(os.path.join(table_dir, _OLD_NAME), ignore_errors=True)
     os.remove(manifest)
-
-
-def _special_dirs(table_dir: str) -> "list[tuple[int, str]]":
-    """(epoch, path) of every NEGATIVE epoch dir — the base (-1) plus
-    the L1 run dirs (-2, -3, …), the only places fold manifests live."""
-    out = []
-    if not os.path.isdir(table_dir):
-        return out
-    for d in os.listdir(table_dir):
-        if not d.startswith("epoch="):
-            continue
-        v = d.split("=", 1)[1]
-        if v.lstrip("-").isdigit() and int(v) < 0:
-            out.append((int(v), os.path.join(table_dir, d)))
-    return out
 
 
 def pending_folded(table_dir: str) -> "set[int]":
@@ -126,9 +167,11 @@ def pending_folded(table_dir: str) -> "set[int]":
     leaves each table individually consistent under its own pending
     set."""
     out: set[int] = set()
-    for e, d in _special_dirs(table_dir):
+    for e in list_epochs(table_dir):
+        if e >= 0:
+            continue  # only negative epochs are fold targets
         try:
-            with open(os.path.join(d, _MANIFEST)) as fh:
+            with open(os.path.join(_epoch_dir(table_dir, e), _MANIFEST)) as fh:
                 folded = {int(x) for x in fh.read().split() if x}
         except (OSError, ValueError):
             continue
@@ -136,6 +179,60 @@ def pending_folded(table_dir: str) -> "set[int]":
         out |= folded
     out.discard(BASE_EPOCH)
     return out
+
+
+def committed_filter(df: DataFrame, table_dir: str, epochs=None, own_epoch=None) -> DataFrame:
+    """The ONE frontier filter: restrict a state-table read (``df``
+    carries the ``epoch`` partition column) to what a reader may see,
+    and drop ``epoch``. The conditions are literal lists, so the
+    filter is a partition-directory prune (PartitionFilters on
+    ``epoch``), not a row scan. NULL epochs — pre-r8 flat legacy rows
+    — count as the base (``coalesce(epoch, -1)``).
+
+    - ``epochs``: the committed-marker frontier
+      (:func:`committed_frontier`). NEGATIVE epochs — the compaction
+      base (-1) and L1 run dirs (-2, -3, …; :func:`fold_to_l1`) — are
+      always-committed folds of committed epochs and are kept in EVERY
+      frontier, so a frontier recorded before a minor fold keeps
+      resolving after it; of the rest only listed epochs pass, so an
+      epoch whose tables landed but whose marker didn't stays invisible
+      until the retry re-marks it. ``None`` keeps the legacy
+      read-everything behavior (pre-marker states).
+    - Either way, epochs a crashed compaction already folded into a
+      surviving target but did not clean up (:func:`pending_folded`)
+      are EXCLUDED: their rows live in the target too, and reading both
+      sides of the interrupted swap would double-count them. Read-only
+      self-healing — the next compaction replays the cleanup.
+    - ``own_epoch``: an ingest's probe of its own state excludes the
+      epoch it is writing — a retried epoch must probe the same "old"
+      index the first attempt saw, whether or not its marker landed (a
+      crash can fall between the marker write and the checkpoint
+      commit). ``None`` = a read-only caller, nothing to exclude."""
+    e = F.coalesce(F.col("epoch"), F.lit(BASE_EPOCH))
+    if own_epoch is not None:
+        df = df.filter(e != F.lit(int(own_epoch)))
+    if epochs is not None:
+        keep = sorted({int(x) for x in epochs if int(x) >= 0})
+        df = df.filter((e < 0) | e.isin(keep) if keep else e < 0)
+    pend = sorted(pending_folded(table_dir))
+    if pend:
+        df = df.filter(~e.isin(pend))
+    return df.drop("epoch")
+
+
+def read_committed(
+    spark: SparkSession, table_dir: str, schema: str, epochs=None, own_epoch=None
+) -> DataFrame:
+    """:func:`committed_filter` over a whole table read. ``schema`` is
+    the table's read schema with its partition columns: the data
+    columns, ``epoch long``, and any inner partition column after it
+    (``cell int`` for the cell-partitioned tables). An empty frame of
+    the same columns before the table's first epoch lands."""
+    if not list_epochs(table_dir):
+        return spark.createDataFrame([], schema).drop("epoch")
+    return committed_filter(
+        spark.read.schema(schema).parquet(table_dir), table_dir, epochs, own_epoch
+    )
 
 
 def _recover(table_dir: str) -> None:
@@ -155,8 +252,8 @@ def _recover(table_dir: str) -> None:
     """
     tmp = os.path.join(table_dir, _TMP_NAME)
     old = os.path.join(table_dir, _OLD_NAME)
-    legacy_old = os.path.join(table_dir, f"epoch={BASE_EPOCH}.old")
-    base = os.path.join(table_dir, f"epoch={BASE_EPOCH}")
+    base = _epoch_dir(table_dir, BASE_EPOCH)
+    legacy_old = base + ".old"
     if not os.path.exists(base):
         if os.path.exists(tmp) and _is_complete(tmp):
             os.rename(tmp, base)
@@ -178,8 +275,7 @@ def _next_run_id(table_dir: str) -> int:
     epoch present (the base, -1, is always occupied conceptually, so
     the first run is -2). Restarts after a major fold deletes the
     runs."""
-    ids = [e for e, _ in _special_dirs(table_dir)]
-    return min(ids + [BASE_EPOCH]) - 1
+    return min([BASE_EPOCH, *list_epochs(table_dir)]) - 1
 
 
 def _recover_l1(table_dir: str) -> None:
@@ -198,11 +294,12 @@ def _recover_l1(table_dir: str) -> None:
     tmp = os.path.join(table_dir, _TMP_L1)
     if os.path.exists(tmp):
         if _is_complete(tmp):
-            os.rename(tmp, os.path.join(table_dir, f"epoch={_next_run_id(table_dir)}"))
+            os.rename(tmp, _epoch_dir(table_dir, _next_run_id(table_dir)))
         else:
             shutil.rmtree(tmp, ignore_errors=True)
-    for e, d in _special_dirs(table_dir):
-        if e != BASE_EPOCH and os.path.isfile(os.path.join(d, _MANIFEST)):
+    for e in list_epochs(table_dir):
+        d = _epoch_dir(table_dir, e)
+        if e < BASE_EPOCH and os.path.isfile(os.path.join(d, _MANIFEST)):
             _finish_swap(table_dir, d)
 
 
@@ -233,7 +330,7 @@ def migrate_flat_state(table_dir: str) -> int:
     ]
     if not flat:
         return 0
-    base = os.path.join(table_dir, f"epoch={BASE_EPOCH}")
+    base = _epoch_dir(table_dir, BASE_EPOCH)
     os.makedirs(base, exist_ok=True)
     for n in flat:
         # "legacy-" prefix: cannot collide with a part file an earlier
@@ -242,7 +339,64 @@ def migrate_flat_state(table_dir: str) -> int:
     return len(flat)
 
 
-COMMITS_NAME = "_commits"
+def _enter(table_dir: str) -> "list[int]":
+    """Every swap user's entry: heal an interrupted swap
+    (:func:`_recover`), move a pre-epoch flat layout into the base
+    (:func:`migrate_flat_state`), then list the live epochs."""
+    _recover(table_dir)
+    migrate_flat_state(table_dir)
+    return list_epochs(table_dir)
+
+
+def _swap(
+    table_dir: str,
+    src: DataFrame,
+    folded: "list[int]",
+    target: int,
+    partition_by=None,
+    n_files: "int | None" = None,
+    extra_manifest: "dict[str, str] | None" = None,
+) -> None:
+    """The ONE crash-safe table swap — the full fold, the L1 fold and
+    the table replace all write through it: ``src`` goes to a tmp dir,
+    the fold manifest (``folded``: the epoch dirs the new target
+    supersedes) lands after Spark's commit, an existing target is moved
+    aside (only the base ever exists — L1 run ids are fresh), the tmp
+    is promoted to ``epoch=<target>``, and the replayable cleanup
+    (:func:`_finish_swap`) deletes what the manifest lists. Every crash
+    window heals on the next entry (:func:`_recover` /
+    :func:`_recover_l1`), and :func:`pending_folded` keeps readers from
+    double-counting between promote and cleanup.
+
+    ``partition_by`` keeps an inner layout; otherwise ``n_files``
+    coalesces the output. ``extra_manifest`` files land in the tmp next
+    to the fold manifest (underscore names only — Spark reads skip
+    them), so layout metadata travels with the target through the
+    atomic swap."""
+    tmp = os.path.join(table_dir, _TMP_NAME if target == BASE_EPOCH else _TMP_L1)
+    if partition_by:
+        # repartition on the partition key first: otherwise every input
+        # task writes one file into every partition dir it holds rows
+        # for — tasks × dirs tiny files (measured: a 40k-row band base
+        # compacted into 2,560 16-row files). One shuffle, one file per
+        # dir.
+        writer = (
+            src.repartition(*[F.col(c) for c in partition_by])
+            .write.partitionBy(*partition_by)
+        )
+    else:
+        writer = (src if n_files is None else src.coalesce(n_files)).write
+    writer.mode("overwrite").parquet(tmp)
+    for name, body in (extra_manifest or {}).items():
+        with open(os.path.join(tmp, name), "w") as fh:
+            fh.write(body)
+    with open(os.path.join(tmp, _MANIFEST), "w") as fh:
+        fh.write("\n".join(str(e) for e in folded))
+    dst = _epoch_dir(table_dir, target)
+    if os.path.exists(dst):
+        os.rename(dst, os.path.join(table_dir, _OLD_NAME))
+    os.rename(tmp, dst)
+    _finish_swap(table_dir, dst)
 
 
 def publish_epoch_marker(state_dir: str, epoch: int, payload=None) -> None:
@@ -255,25 +409,18 @@ def publish_epoch_marker(state_dir: str, epoch: int, payload=None) -> None:
 
     ``payload``: optional JSON-serializable stats dict that rides
     inside the marker under the same atomic publish (the r12 pattern —
-    e.g. per-epoch row counts a router reads with zero Spark jobs).
-    The tmp name must NOT share the ``epoch=`` prefix the listers
-    match — a crash-leftover tmp would parse as a bogus epoch."""
-    import json
-
+    e.g. per-epoch row counts a router reads with zero Spark jobs)."""
     commits = os.path.join(state_dir, COMMITS_NAME)
     os.makedirs(commits, exist_ok=True)
-    tmp = os.path.join(commits, f".tmp-epoch-{int(epoch)}")
-    with open(tmp, "w") as fh:
-        if payload is not None:
-            json.dump(payload, fh)
-    os.replace(tmp, os.path.join(commits, f"epoch={int(epoch)}"))
+    atomic_write_json(_epoch_dir(commits, epoch), payload)
 
 
 def committed_frontier(state_dir: str) -> "list[int] | None":
     """The readable epoch frontier of a marker-published state:
     the always-committed negative compaction epochs are implied (every
     reader keeps them); the returned list is ``[-1]`` + every epoch
-    whose commit marker landed.
+    whose commit marker landed. One listdir — O(live epochs), and
+    compaction keeps that bounded.
 
     Returns ``None`` for a state that has never written markers (no
     ``_commits`` dir) — the pre-r13 dedup/media states published
@@ -284,11 +431,7 @@ def committed_frontier(state_dir: str) -> "list[int] | None":
     commits = os.path.join(state_dir, COMMITS_NAME)
     if not os.path.isdir(commits):
         return None
-    eps = [BASE_EPOCH]
-    for n in os.listdir(commits):
-        if n.startswith("epoch="):
-            eps.append(int(n.split("=", 1)[1]))
-    return sorted(eps)
+    return sorted([BASE_EPOCH, *list_epochs(commits)])
 
 
 def adopt_unmarked_epochs(state_dir: str, tables) -> "list[int]":
@@ -305,52 +448,37 @@ def adopt_unmarked_epochs(state_dir: str, tables) -> "list[int]":
     commits = os.path.join(state_dir, COMMITS_NAME)
     if os.path.isdir(commits):
         return []
-    eps: set[int] = set()
-    for t in tables:
-        d = os.path.join(state_dir, t)
-        if not os.path.isdir(d):
-            continue
-        for n in os.listdir(d):
-            if n.startswith("epoch="):
-                v = n.split("=", 1)[1]
-                if v.lstrip("-").isdigit() and int(v) >= 0:
-                    eps.add(int(v))
-    for e in sorted(eps):
+    eps = sorted(
+        {e for t in tables for e in list_epochs(os.path.join(state_dir, t)) if e >= 0}
+    )
+    for e in eps:
         publish_epoch_marker(state_dir, e)
     if not eps:
         # state exists but holds only flat/legacy or base rows: still
         # create the dir so the state is marker-published from now on
         os.makedirs(commits, exist_ok=True)
-    return sorted(eps)
+    return eps
 
 
-def prune_stale_markers(state_dir: str, tables=None) -> int:
-    """Drop commit markers for epochs no table holds anymore — their
-    rows were folded into the always-committed base by compaction, so
-    the frontier stays correct and the marker listing stays bounded by
-    live epochs. Returns the number of markers removed. (The unified
-    search state has its own pruner that also absorbs marker stats
-    payloads — search_stream.compact_unified_search_state.)
-
-    ``tables=None`` scans EVERY table dir under the state dir — the
-    safe default for shared multi-modality state dirs (r13 admission
-    state): a compactor that pruned against only ITS tables would drop
-    markers for epochs another modality's table still holds, vanishing
-    those rows from the frontier.
-
-    ORDER IS LOAD-BEARING (r14, found by the concurrent ingest-vs-
-    compactor stress test): the marker set is snapshotted BEFORE the
-    live-epoch listing. Every ingest writes its table dirs before its
-    marker, so any marker in the snapshot either still has its dirs
-    (seen by the later listing -> kept) or compaction already folded
-    them into the always-committed base (-> safe to prune). The old
-    tables-first order had a window where an ingest landed dirs +
-    marker between the two listings and its FRESH marker was pruned —
-    a committed epoch invisible until the next full fold."""
+def _prune_markers(state_dir: str, tables=None, absorb=None) -> int:
+    """The one marker pruner (see :func:`prune_stale_markers`).
+    ``absorb(state_dir, markers, stale)`` is a family's step run after
+    the live listing and BEFORE any unlink — the unified search state
+    folds the stale markers' row stats into its ``_STATS`` base there
+    (:func:`compact_state`'s ``absorb``)."""
     commits = os.path.join(state_dir, COMMITS_NAME)
     if not os.path.isdir(commits):
         return 0
-    marker_snapshot = [n for n in os.listdir(commits) if n.startswith("epoch=")]
+    # ORDER IS LOAD-BEARING (r14, found by the concurrent ingest-vs-
+    # compactor stress test): the marker set is snapshotted BEFORE the
+    # live-epoch listing. Every ingest writes its table dirs before its
+    # marker, so any marker in the snapshot either still has its dirs
+    # (seen by the later listing -> kept) or compaction already folded
+    # them into the always-committed base (-> safe to prune). The old
+    # tables-first order had a window where an ingest landed dirs +
+    # marker between the two listings and its FRESH marker was pruned —
+    # a committed epoch invisible until the next full fold.
+    markers = list_epochs(commits)
     if tables is None:
         tables = [
             n
@@ -358,23 +486,33 @@ def prune_stale_markers(state_dir: str, tables=None) -> int:
             if os.path.isdir(os.path.join(state_dir, n))
             and not n.startswith(("_", "."))
         ]
-    live: set[int] = set()
-    for t in tables:
-        d = os.path.join(state_dir, t)
-        if not os.path.isdir(d):
-            continue
-        for n in os.listdir(d):
-            if n.startswith("epoch=") and n.split("=", 1)[1].lstrip("-").isdigit():
-                live.add(int(n.split("=", 1)[1]))
+    live = {e for t in tables for e in list_epochs(os.path.join(state_dir, t))}
+    stale = [e for e in markers if e not in live]
+    if absorb is not None and markers:
+        absorb(state_dir, markers, stale)
     removed = 0
-    for n in marker_snapshot:
-        if int(n.split("=", 1)[1]) not in live:
-            try:
-                os.remove(os.path.join(commits, n))
-            except FileNotFoundError:
-                continue  # a concurrent pruner got there first
-            removed += 1
+    for e in stale:
+        try:
+            os.remove(_epoch_dir(commits, e))
+        except FileNotFoundError:
+            continue  # a concurrent pruner got there first
+        removed += 1
     return removed
+
+
+def prune_stale_markers(state_dir: str, tables=None) -> int:
+    """Drop commit markers for epochs no table holds anymore — their
+    rows were folded into the always-committed base by compaction, so
+    the frontier stays correct and the marker listing stays bounded by
+    live epochs. Returns the number of markers removed.
+
+    ``tables=None`` scans EVERY table dir under the state dir — the
+    safe default for shared multi-modality state dirs (r13 admission
+    state): a compactor that pruned against only ITS tables would drop
+    markers for epochs another modality's table still holds, vanishing
+    those rows from the frontier. The marker snapshot is taken before
+    the live-epoch listing (the r14 ordering, see ``_prune_markers``)."""
+    return _prune_markers(state_dir, tables)
 
 
 def compact_epochs(
@@ -398,13 +536,7 @@ def compact_epochs(
     ``_recover``)."""
     if not os.path.exists(table_dir):
         return 0
-    _recover(table_dir)
-    migrate_flat_state(table_dir)
-    epochs = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("epoch=") and d.split("=", 1)[1].lstrip("-").isdigit()
-    )
+    epochs = _enter(table_dir)
     if not epochs:
         return 0
     # the newest STREAM epoch is normally left alone — it may still be
@@ -438,44 +570,25 @@ def compact_epochs(
     if flat_fold:
         frames.append(
             spark.read.option("basePath", table_dir)
-            .parquet(*[os.path.join(table_dir, f"epoch={e}") for e in flat_fold])
+            .parquet(*[_epoch_dir(table_dir, e) for e in flat_fold])
             .drop("epoch")
         )
     if BASE_EPOCH in fold:
-        frames.append(
-            spark.read.parquet(os.path.join(table_dir, f"epoch={BASE_EPOCH}"))
-        )
+        frames.append(spark.read.parquet(_epoch_dir(table_dir, BASE_EPOCH)))
     src = frames[0]
     for f in frames[1:]:
         src = src.unionByName(f, allowMissingColumns=True)
     if augment is not None:
         src = augment(src)
-    tmp = os.path.join(table_dir, _TMP_NAME)
-    writer = src.coalesce(max(1, len(fold) // 8)).write.mode("overwrite")
-    if partition_by:
-        # repartition on the partition key first: otherwise every input
-        # task writes one file into every partition dir it holds rows
-        # for — tasks × dirs tiny files (measured: a 40k-row band base
-        # compacted into 2,560 16-row files). One shuffle, one file per
-        # dir.
-        writer = (
-            src.repartition(*[F.col(c) for c in partition_by])
-            .write.mode("overwrite")
-            .partitionBy(*partition_by)
-        )
-    writer.parquet(tmp)
-    for name, body in (extra_manifest or {}).items():
-        with open(os.path.join(tmp, name), "w") as fh:
-            fh.write(body)
-    with open(os.path.join(tmp, _MANIFEST), "w") as fh:
-        fh.write("\n".join(str(e) for e in fold))
-
-    base = os.path.join(table_dir, f"epoch={BASE_EPOCH}")
-    old = os.path.join(table_dir, _OLD_NAME)
-    if os.path.exists(base):
-        os.rename(base, old)
-    os.rename(tmp, base)
-    _finish_swap(table_dir, base)
+    _swap(
+        table_dir,
+        src,
+        fold,
+        BASE_EPOCH,
+        partition_by=partition_by,
+        n_files=max(1, len(fold) // 8),
+        extra_manifest=extra_manifest,
+    )
     return len(fold)
 
 
@@ -505,22 +618,13 @@ def fold_to_l1(
     L0 epochs folded."""
     if not os.path.exists(table_dir):
         return 0
-    _recover(table_dir)
-    migrate_flat_state(table_dir)
-    l0 = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("epoch=")
-        and d.split("=", 1)[1].isdigit()  # non-negative only
-    )
-    if not l0:
-        return 0
+    l0 = [e for e in _enter(table_dir) if e >= 0]
     fold = l0[:-1]  # newest stays — it may still be retried
-    if len(fold) < int(min_epochs):
+    if not fold or len(fold) < int(min_epochs):
         return 0
     src = (
         spark.read.option("basePath", table_dir)
-        .parquet(*[os.path.join(table_dir, f"epoch={e}") for e in fold])
+        .parquet(*[_epoch_dir(table_dir, e) for e in fold])
         .drop("epoch")
     )
     if augment is not None:
@@ -531,21 +635,14 @@ def fold_to_l1(
         # folded epoch, the unbounded read-side-OR growth the collapse
         # exists to prevent)
         src = augment(src)
-    tmp = os.path.join(table_dir, _TMP_L1)
-    if partition_by:
-        (
-            src.repartition(*[F.col(c) for c in partition_by])
-            .write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(tmp)
-        )
-    else:
-        src.coalesce(max(1, len(fold) // 8)).write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, _MANIFEST), "w") as fh:
-        fh.write("\n".join(str(e) for e in fold))
-    run = os.path.join(table_dir, f"epoch={_next_run_id(table_dir)}")
-    os.rename(tmp, run)
-    _finish_swap(table_dir, run)
+    _swap(
+        table_dir,
+        src,
+        fold,
+        _next_run_id(table_dir),
+        partition_by=partition_by,
+        n_files=max(1, len(fold) // 8),
+    )
     return len(fold)
 
 
@@ -559,37 +656,13 @@ def replace_table(
     derivation — the model-rebuild write (refresh_pq_model re-encodes
     every persisted vector under new codebooks; the old rows are not
     folded, they are superseded). Same crash-safe swap as
-    ``compact_epochs``: write tmp → manifest (listing every live epoch
-    dir, so the replayable cleanup deletes them) → move base aside →
-    promote → cleanup; a crash at any point is healed by ``_recover``
+    ``compact_epochs``, with a manifest listing every live epoch dir so
+    the replayable cleanup deletes them; a crash at any point is healed
     on the next entry, and ``pending_folded`` keeps readers from
     double-counting during the promote-to-cleanup window."""
     os.makedirs(table_dir, exist_ok=True)
-    _recover(table_dir)
-    migrate_flat_state(table_dir)
-    live = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("epoch=") and d.split("=", 1)[1].lstrip("-").isdigit()
-    )
-    tmp = os.path.join(table_dir, _TMP_NAME)
-    if partition_by:
-        (
-            src.repartition(*[F.col(c) for c in partition_by])
-            .write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(tmp)
-        )
-    else:
-        src.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, _MANIFEST), "w") as fh:
-        fh.write("\n".join(str(e) for e in live))
-    base = os.path.join(table_dir, f"epoch={BASE_EPOCH}")
-    old = os.path.join(table_dir, _OLD_NAME)
-    if os.path.exists(base):
-        os.rename(base, old)
-    os.rename(tmp, base)
-    _finish_swap(table_dir, base)
+    live = _enter(table_dir)
+    _swap(table_dir, src, live, BASE_EPOCH, partition_by=partition_by)
 
 
 def _dir_bytes(d: str) -> int:
@@ -610,11 +683,11 @@ def l1_pressure(table_dir: str) -> "tuple[int, int]":
     """(l1_bytes, base_bytes) — the major-fold trigger inputs."""
     l1 = 0
     base = 0
-    for e, d in _special_dirs(table_dir):
+    for e in list_epochs(table_dir):
         if e == BASE_EPOCH:
-            base = _dir_bytes(d)
-        else:
-            l1 += _dir_bytes(d)
+            base = _dir_bytes(_epoch_dir(table_dir, e))
+        elif e < BASE_EPOCH:
+            l1 += _dir_bytes(_epoch_dir(table_dir, e))
     return l1, base
 
 
@@ -696,9 +769,7 @@ def read_nbuckets(table_dir: str) -> "int | None":
     base is absent / pre-bucketing flat (probes then full-scan it, the
     legacy behavior)."""
     try:
-        with open(
-            os.path.join(table_dir, f"epoch={BASE_EPOCH}", _NBUCKETS_MANIFEST)
-        ) as fh:
+        with open(os.path.join(_epoch_dir(table_dir, BASE_EPOCH), _NBUCKETS_MANIFEST)) as fh:
             return int(fh.read().strip())
     except (OSError, ValueError):
         return None
@@ -719,20 +790,17 @@ def split_bucketed_table(spark: SparkSession, table_dir: str, schema: str):
       to ``bkt=`` subdirs) is exactly why the halves cannot share one
       read.
 
-    Callers apply their own epoch filters (frontier list vs own-epoch
-    exclusion) to ``flat_df`` and their own ``bkt IN`` prune to
-    ``base_df``. ``schema`` is the DATA schema (no epoch/bkt)."""
+    :func:`read_bucketed` applies :func:`committed_filter` to
+    ``flat_df`` and the ``bkt IN`` prune to ``base_df``. ``schema`` is
+    the DATA schema (no epoch/bkt)."""
     if not os.path.isdir(table_dir):
         return None, None, None
     nb = read_nbuckets(table_dir)
-    base_name = f"epoch={BASE_EPOCH}"
-    flat_dirs = [
-        os.path.join(table_dir, d)
-        for d in sorted(os.listdir(table_dir))
-        if d.startswith("epoch=")
-        and d.split("=", 1)[1].lstrip("-").isdigit()
-        and not (nb is not None and d == base_name)
-    ]
+    flat_dirs = sorted(
+        _epoch_dir(table_dir, e)
+        for e in list_epochs(table_dir)
+        if not (nb is not None and e == BASE_EPOCH)
+    )
     flat = None
     if flat_dirs:
         flat = (
@@ -741,7 +809,7 @@ def split_bucketed_table(spark: SparkSession, table_dir: str, schema: str):
             .parquet(*flat_dirs)
         )
     base = None
-    base_dir = os.path.join(table_dir, base_name)
+    base_dir = _epoch_dir(table_dir, BASE_EPOCH)
     if nb is not None and os.path.isdir(base_dir):
         base = (
             spark.read.schema(schema + ", bkt int")
@@ -749,6 +817,61 @@ def split_bucketed_table(spark: SparkSession, table_dir: str, schema: str):
             .parquet(base_dir)
         )
     return nb, flat, base
+
+
+def read_bucketed(
+    spark: SparkSession,
+    table_dir: str,
+    schema: str,
+    keys: "DataFrame | None" = None,
+    key_col: "str | None" = None,
+    epochs=None,
+    own_epoch=None,
+) -> "DataFrame | None":
+    """A (possibly) hash-bucketed state table at the committed frontier
+    — the read side of the bucketed-base layout
+    (:func:`compact_hashed_epochs`), shared by the near-dup probes and
+    the BM25 serving read:
+
+    - Flat epoch dirs (everything the last compaction left live) pass
+      :func:`committed_filter` (``epochs``, ``own_epoch``) and are read
+      in full — their total size is bounded by the deltas since that
+      compaction, not the corpus.
+    - The bucket-partitioned base is part of every frontier. With
+      ``keys`` it is PRUNED to the directories ``keys[key_col]`` hash
+      into (``bkt IN (touched)``, a literal list — directory-level
+      pruning, never a row scan of the base; the collect is bounded by
+      n_buckets ≤ 65536, never by the corpus). The pruned fraction is
+      ~min(1, keys / n_buckets), and compaction scales n_buckets with
+      the corpus, so probe IO stays O(delta) as the index grows — the
+      fix for the O(index) band/shingle scans (r9 VERDICT,
+      BENCH_stream_scale minhash ingest b=0.10). Callers still filter
+      rows: a bucket holds other keys too.
+
+    A pre-bucketing flat base (no ``_NBUCKETS`` manifest) is read in
+    full like a delta dir — legacy behavior until the next compaction
+    rewrites it. Returns None when the table holds no epoch dir yet.
+    ``schema`` is the table's DATA schema (no epoch/bkt columns)."""
+    nb, flat, base = split_bucketed_table(spark, table_dir, schema)
+    frames = []
+    if flat is not None:
+        frames.append(committed_filter(flat, table_dir, epochs, own_epoch))
+    if base is not None:
+        if keys is not None:
+            touched = sorted(
+                r["b"]
+                for r in keys.select(band_bucket_expr(F.col(key_col), nb).alias("b"))
+                .distinct()
+                .collect()
+            )
+            base = base.filter(F.col("bkt").isin(touched))
+        frames.append(base.drop("bkt"))
+    if not frames:
+        return None
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
 
 
 def compact_hashed_epochs(
@@ -770,25 +893,24 @@ def compact_hashed_epochs(
     the reference's bucket-index routing
     (app/server/gateway/bucket_planner.go:55-123)."""
     if n_buckets is None:
-        live = [
-            os.path.join(table_dir, d)
-            for d in (os.listdir(table_dir) if os.path.isdir(table_dir) else [])
-            if d.startswith("epoch=")
-        ]
+        live = list_epochs(table_dir)
         if not live:
             return 0
         # TWO count jobs, not one per epoch dir (a 500-batch backlog
         # would run 500 sequential jobs before folding starts): all
         # flat dirs share one partition-discovery pass; only the
         # bkt-partitioned base needs its own (mixed depth)
-        base_dir = os.path.join(table_dir, f"epoch={BASE_EPOCH}")
-        has_bucketed_base = read_nbuckets(table_dir) is not None
-        flat = [d for d in live if not (has_bucketed_base and d == base_dir)]
+        bucketed_base = read_nbuckets(table_dir) is not None
+        flat = [
+            _epoch_dir(table_dir, e)
+            for e in live
+            if not (bucketed_base and e == BASE_EPOCH)
+        ]
         rows = 0
         if flat:
             rows += spark.read.option("basePath", table_dir).parquet(*flat).count()
-        if has_bucketed_base and base_dir in live:
-            rows += spark.read.parquet(base_dir).count()
+        if bucketed_base and BASE_EPOCH in live:
+            rows += spark.read.parquet(_epoch_dir(table_dir, BASE_EPOCH)).count()
         n_buckets = min(
             _BAND_MAX_BUCKETS,
             max(_BAND_MIN_BUCKETS, 1 << max(0, rows // _BAND_ROWS_PER_BUCKET).bit_length()),
@@ -816,112 +938,122 @@ def compact_band_epochs(
     return compact_hashed_epochs(spark, table_dir, "bucket", n_buckets)
 
 
+class Layout(NamedTuple):
+    """How one state table folds, declared once per family and used by
+    both the full and the tiered entry. ``key_col``: a hash-bucketed
+    base (:func:`compact_hashed_epochs` — probes prune to their keys'
+    buckets); ``partition_by``: an inner layout the base and the L1 runs
+    keep (IVF ``cell``); ``augment``: a df→df step run at BOTH fold
+    levels (the bloom table's ``bit_or`` collapse). All unset: a flat
+    fold."""
+
+    key_col: "str | None" = None
+    partition_by: "tuple[str, ...] | None" = None
+    augment: "Callable[[DataFrame], DataFrame] | None" = None
+
+
+def compact_state(
+    spark: SparkSession,
+    state_dir: str,
+    layouts: "dict[str, Layout]",
+    tiered: bool = False,
+    absorb=None,
+) -> dict:
+    """The one compaction entry of every streaming state family: fold
+    each table under ``state_dir`` by its :class:`Layout`, then prune
+    the commit markers of epochs no table holds anymore (the folded rows
+    live in the always-committed base, so the frontier keeps
+    resolving; a state without markers prunes nothing). Returns
+    ``{table: result}``.
+
+    ``tiered=False`` runs the full fold (:func:`compact_epochs` /
+    :func:`compact_hashed_epochs`) and returns fold counts;
+    ``tiered=True`` runs the O(delta) leveled tick
+    (:func:`compact_epochs_tiered` — minor folds every call, the full
+    base rewrite only when L1 pressure warrants it) and returns its
+    per-table dicts. ``absorb`` is the family's pre-unlink prune step
+    (the unified search state's ``_STATS`` absorption); the family
+    wrappers fix it, they do not expose it."""
+    out = {}
+    for table, lay in layouts.items():
+        path = os.path.join(state_dir, table)
+        if tiered:
+            out[table] = compact_epochs_tiered(
+                spark, path, key_col=lay.key_col,
+                partition_by=lay.partition_by, augment=lay.augment,
+            )
+        elif lay.key_col is not None:
+            out[table] = compact_hashed_epochs(spark, path, lay.key_col)
+        else:
+            out[table] = compact_epochs(
+                spark, path, partition_by=lay.partition_by, augment=lay.augment
+            )
+    _prune_markers(state_dir, absorb=absorb)
+    return out
+
+
+def neardup_layouts(id_col: str = "doc_id") -> "dict[str, Layout]":
+    """The near-dup tables: pairs fold flat (output-sized, read whole);
+    the band index is bucketed by the LSH bucket string (probes prune
+    to the delta's buckets); the shingle table by doc id (the verify
+    join prunes to the candidate partner ids' buckets — the OTHER
+    O(index) read the r9 stream stress surfaced)."""
+    return {
+        "pairs": Layout(),
+        "bands": Layout(key_col="bucket"),
+        "shingles": Layout(key_col=id_col),
+    }
+
+
+#: The media near-dup tables fold FLAT: the fingerprint index is
+#: 16 bytes/item and every probe is a blocked equi-join on the
+#: hash-chunk key (not a point read by media_id), so a hash-bucketed
+#: base would add a shuffle at fold time and prune nothing at probe
+#: time; ``pairs/`` is output-sized and read whole.
+MEDIA_LAYOUTS = {"pairs": Layout(), "hashes": Layout()}
+
+#: The IVF cell index keeps its cell partitioning (the probe's
+#: partition pruning must keep working on the base and the L1 runs).
+IVF_LAYOUTS = {"cells": Layout(partition_by=("cell",))}
+
+#: The search index: the postings base is WORD-hash-bucketed so a BM25
+#: serving read prunes to the query words' directories
+#: (persisted_postings ``words=``); doclen stays flat — corpus stats
+#: (N, avgdl) need every row anyway.
+SEARCH_LAYOUTS = {"postings": Layout(key_col="word"), "doclen": Layout()}
+
+
 def compact_neardup_state(
     spark: SparkSession, state_dir: str, id_col: str = "doc_id", tiered: bool = False
 ) -> dict:
-    """Compact all three near-dup ingest tables. The band index is
-    bucketed by the LSH bucket string (probes prune to the delta's
-    buckets); the shingle table is bucketed by doc id (the verify join
-    prunes to the candidate partner ids' buckets — the OTHER O(index)
-    read the r9 stream stress surfaced). Returns
-    {table: folded_epochs}.
-
-    ``tiered=True`` routes every table through
-    :func:`compact_epochs_tiered` — the maintenance tick for a
-    long-running ingest: minor folds cost O(delta), and the full base
-    rewrite runs only when L1 pressure warrants it. Returns the tiered
-    per-table dicts instead of fold counts.
-
-    Commit markers for fully-folded epochs are pruned afterwards
-    (:func:`prune_stale_markers`) — the folded rows live in the
-    always-committed base, so the frontier keeps resolving."""
-    if tiered:
-        out = {
-            "pairs": compact_epochs_tiered(spark, os.path.join(state_dir, "pairs")),
-            "bands": compact_epochs_tiered(
-                spark, os.path.join(state_dir, "bands"), key_col="bucket"
-            ),
-            "shingles": compact_epochs_tiered(
-                spark, os.path.join(state_dir, "shingles"), key_col=id_col
-            ),
-        }
-    else:
-        out = {
-            "pairs": compact_epochs(spark, os.path.join(state_dir, "pairs")),
-            "bands": compact_band_epochs(spark, os.path.join(state_dir, "bands")),
-            "shingles": compact_hashed_epochs(
-                spark, os.path.join(state_dir, "shingles"), id_col
-            ),
-        }
-    prune_stale_markers(state_dir)
-    return out
+    """Compact all three near-dup ingest tables (:func:`neardup_layouts`)
+    and prune stale commit markers (:func:`compact_state`). Returns
+    {table: folded_epochs}, or the tiered per-table dicts with
+    ``tiered=True`` — the maintenance tick for a long-running ingest."""
+    return compact_state(spark, state_dir, neardup_layouts(id_col), tiered)
 
 
 def compact_media_state(
     spark: SparkSession, state_dir: str, tiered: bool = False
 ) -> dict:
     """Compact the media near-dup ingest state (streaming/
-    media_stream.py). Both tables fold FLAT: the fingerprint index is
-    16 bytes/item and every probe is a blocked equi-join on the
-    hash-chunk key (not a point read by media_id), so a hash-bucketed
-    base would add a shuffle at fold time and prune nothing at probe
-    time; ``pairs/`` is output-sized and read whole. Stale commit
-    markers pruned after (:func:`prune_stale_markers`)."""
-    if tiered:
-        out = {
-            "pairs": compact_epochs_tiered(spark, os.path.join(state_dir, "pairs")),
-            "hashes": compact_epochs_tiered(
-                spark, os.path.join(state_dir, "hashes")
-            ),
-        }
-    else:
-        out = {
-            "pairs": compact_epochs(spark, os.path.join(state_dir, "pairs")),
-            "hashes": compact_epochs(spark, os.path.join(state_dir, "hashes")),
-        }
-    prune_stale_markers(state_dir)
-    return out
+    media_stream.py; :data:`MEDIA_LAYOUTS`), then prune stale commit
+    markers."""
+    return compact_state(spark, state_dir, MEDIA_LAYOUTS, tiered)
 
 
 def compact_ivf_state(
     spark: SparkSession, state_dir: str, tiered: bool = False
 ) -> dict:
     """Compact the IVF cell index, preserving the cell partitioning
-    (the probe's partition pruning must keep working on the base —
-    and, tiered, on the L1 runs, which carry the same cell= layout)."""
-    if tiered:
-        return {
-            "cells": compact_epochs_tiered(
-                spark, os.path.join(state_dir, "cells"), partition_by=["cell"]
-            )
-        }
-    return {
-        "cells": compact_epochs(
-            spark, os.path.join(state_dir, "cells"), partition_by=["cell"]
-        )
-    }
+    (:data:`IVF_LAYOUTS`)."""
+    return compact_state(spark, state_dir, IVF_LAYOUTS, tiered)
 
 
 def compact_search_state(
     spark: SparkSession, state_dir: str, tiered: bool = False
 ) -> dict:
     """Compact the incremental search index's tables (tf-bearing
-    postings + doc lengths, streaming/search_stream.py). The postings
-    base is WORD-hash-bucketed so a BM25 serving read prunes to the
-    query words' directories (persisted_postings ``words=``); doclen
-    stays flat — corpus stats (N, avgdl) need every row anyway.
-    ``tiered=True``: the O(delta) leveled maintenance tick
-    (:func:`compact_epochs_tiered`)."""
-    if tiered:
-        return {
-            "postings": compact_epochs_tiered(
-                spark, os.path.join(state_dir, "postings"), key_col="word"
-            ),
-            "doclen": compact_epochs_tiered(spark, os.path.join(state_dir, "doclen")),
-        }
-    return {
-        "postings": compact_hashed_epochs(
-            spark, os.path.join(state_dir, "postings"), "word"
-        ),
-        "doclen": compact_epochs(spark, os.path.join(state_dir, "doclen")),
-    }
+    postings + doc lengths, streaming/search_stream.py;
+    :data:`SEARCH_LAYOUTS`)."""
+    return compact_state(spark, state_dir, SEARCH_LAYOUTS, tiered)

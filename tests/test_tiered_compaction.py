@@ -206,20 +206,20 @@ def test_l1_interrupted_cleanup_excluded_from_reads_then_healed(spark, tmp_path)
         fh.write("0\n1\n2")
     assert pending_folded(table) == {0, 1, 2}
     # a frontier-filtered read drops the resurrected duplicates
-    from hydraide_spark.streaming.search_stream import _epoch_filtered
+    from hydraide_spark.streaming.state_compact import committed_filter
 
     df = spark.read.schema("id long, v string, epoch long").option(
         "basePath", table
     ).parquet(table)
     got = sorted(
         (r["id"], r["v"])
-        for r in _epoch_filtered(df, None, table).collect()
+        for r in committed_filter(df, table).collect()
     )
     assert got == before
     # ... and with an explicit frontier list too (runs always kept)
     got2 = sorted(
         (r["id"], r["v"])
-        for r in _epoch_filtered(df, [0, 1, 2, 3, BASE_EPOCH], table).collect()
+        for r in committed_filter(df, table, [0, 1, 2, 3, BASE_EPOCH]).collect()
     )
     assert got2 == before
     # the next entry replays the cleanup
