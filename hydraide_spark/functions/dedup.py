@@ -21,8 +21,15 @@ from fractions import Fraction
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from ..query.filters import cosine_similarity
+from ..session import local_frame
 from ._cache import pin_latest
 from .text import shingles, tokenize
+
+#: Distinct-edge cap of the default driver fold in
+#: :func:`neardup_clusters` and :func:`star_contraction_clusters`; a
+#: graph above it runs the distributed loop, and ``driver_cap=0``
+#: forces that loop at any size.
+DRIVER_FOLD_CAP = 200_000
 
 
 def exact_dedup(
@@ -1134,8 +1141,8 @@ def embedding_neardup_pairs(
             row = df.select(F.size(F.col(vec_col))).first()
             if row is None:  # empty corpus: no pairs — keep the id type
                 idt = df.schema[id_col].dataType.simpleString()
-                return df.sparkSession.createDataFrame(
-                    [], f"id_a {idt}, id_b {idt}, score double"
+                return local_frame(
+                    df.sparkSession, [], f"id_a {idt}, id_b {idt}, score double"
                 )
             dim = row[0]
         n_bits = auto_lsh_bits(df.count(), target_bucket=auto_bucket_target)
@@ -1264,8 +1271,8 @@ def embedding_neardup_pairs_int8(
             row = df.select(F.size(F.col(vec_col))).first()
             if row is None:
                 idt = df.schema[id_col].dataType.simpleString()
-                return df.sparkSession.createDataFrame(
-                    [], f"id_a {idt}, id_b {idt}, est_cos double"
+                return local_frame(
+                    df.sparkSession, [], f"id_a {idt}, id_b {idt}, est_cos double"
                 )
             dim = row[0]
         n_bits = auto_lsh_bits(df.count(), target_bucket=auto_bucket_target)
@@ -1307,77 +1314,95 @@ def embedding_neardup_pairs_int8(
     )
 
 
+def _driver_components(edge_set: DataFrame, cap: int) -> "DataFrame | None":
+    """The bounded driver fold behind both connected-components
+    operators: one ``limit(cap+1)`` collect probes the canonical edge
+    set (``x``, ``y``), and at most ``cap`` edges fold through a
+    union-find to the component-min labeling the distributed loops
+    compute. The labels come back as a LocalRelation
+    (:func:`~hydraide_spark.session.local_frame`), so a later scan of
+    them starts no Python workers. Returns None above the cap (the
+    probe is discarded) or when ``cap <= 0``."""
+    if cap <= 0:
+        return None
+    head = edge_set.limit(cap + 1).collect()
+    if len(head) > cap:
+        return None
+    parent: dict = {}
+
+    def find(a):
+        while parent.setdefault(a, a) != a:
+            parent[a] = parent[parent[a]]
+            a = parent[a]
+        return a
+
+    for x, y in head:
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    from pyspark.sql.types import StructField, StructType
+
+    # typed from the COERCED edge column (ADVICE r15): when id_a and
+    # id_b differ in width, greatest/least already widened x/y to the
+    # common type, which typing from id_a alone would reject
+    dtype = edge_set.schema["x"].dataType
+    schema = StructType(
+        [
+            StructField("doc_id", dtype, False),
+            StructField("cluster_id", dtype, False),
+        ]
+    )
+    return local_frame(
+        edge_set.sparkSession, [(x, find(x)) for x in parent], schema
+    )
+
+
 def neardup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 25,
-    driver_cap: int = 0,
+    driver_cap: int = DRIVER_FOLD_CAP,
 ) -> DataFrame:
     """Connected components over near-dup pairs: every document that is
     transitively linked shares a cluster, labeled by the minimum doc id
     in the component (the canonical survivor). Returns
     (doc_id, cluster_id) for every id appearing in ``pairs``.
 
-    Algorithm: min-label propagation — each round every node takes the
-    minimum label among itself and its neighbors; rounds are one
-    groupBy + one join each, and the loop stops when no label changed
-    (checked with a 1-row aggregate, no row collect). Round count is
-    bounded by the component diameter, which for duplicate graphs is
-    small (near-cliques). A graph whose diameter exceeds
+    By default a graph of at most ``driver_cap``
+    (:data:`DRIVER_FOLD_CAP`, 200,000) distinct edges folds on the
+    driver (:func:`_driver_components`): one probe job collects the
+    edges, a union-find labels them, and the labels return as a
+    LocalRelation. The loop below costs ~3 Spark jobs per round —
+    all stage overhead on duplicate graphs, whose components are
+    near-cliques. A larger graph, or ``driver_cap=0``, runs the
+    distributed loop; both label identically (pinned in
+    tests/test_dedup.py).
+
+    The distributed loop is min-label propagation — each round every
+    node takes the minimum label among itself and its neighbors; rounds
+    are one groupBy + one join each, and the loop stops when no label
+    changed (checked with a 1-row aggregate, no row collect). Round
+    count is bounded by the component diameter, which for duplicate
+    graphs is small (near-cliques). A graph whose diameter exceeds
     ``max_iterations`` RAISES instead of silently returning
     half-propagated labels; use :func:`star_contraction_clusters`
     (O(log^2 n) rounds, same per-round shuffle shape) for graphs with
     adversarially long chains. Lineage is cut with localCheckpoint each
     round so the plan does not grow with iterations.
-
-    ``driver_cap > 0`` (r16) opts into the same BOUNDED driver
-    union-find as :func:`star_contraction_clusters`: one
-    ``limit(cap+1)`` collect probes the distinct-edge count, and a
-    small edge set folds in driver memory to the identical
-    component-min labeling (the iterative loop costs ~3 Spark jobs per
-    round on label-propagation too — all stage overhead on duplicate
-    graphs whose components are near-cliques). Above the cap the probe
-    is discarded and the distributed loop runs unchanged, including
-    the non-convergence RAISE; default 0 keeps the distributed
-    contract untouched. Bit-equality incl. the over-cap fall-through
-    is pinned in tests/test_dedup.py.
     """
-    if driver_cap and int(driver_cap) > 0:
-        # unlike star contraction this operator KEEPS ids that appear
-        # only in self-pairs (labeled themselves), so the probe must
-        # not filter x == y out
-        edge_set = pairs.select(
+    # unlike star contraction this operator KEEPS ids that appear only
+    # in self-pairs (labeled themselves), so the probe must not filter
+    # x == y out
+    folded = _driver_components(
+        pairs.select(
             F.greatest(F.col(id_a), F.col(id_b)).alias("x"),
             F.least(F.col(id_a), F.col(id_b)).alias("y"),
-        ).distinct()
-        head = edge_set.limit(int(driver_cap) + 1).collect()
-        if len(head) <= int(driver_cap):
-            parent: dict = {}
-
-            def _find(a):
-                while parent.setdefault(a, a) != a:
-                    parent[a] = parent[parent[a]]
-                    a = parent[a]
-                return a
-
-            for r in head:
-                ra, rb = _find(r["x"]), _find(r["y"])
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            from pyspark.sql.types import StructField, StructType
-
-            # schema from the COERCED edge column (the star-contraction
-            # ADVICE fix): greatest/least already widened x/y
-            dtype = edge_set.schema["x"].dataType
-            schema = StructType(
-                [
-                    StructField("doc_id", dtype, False),
-                    StructField("cluster_id", dtype, False),
-                ]
-            )
-            rows = [(x, _find(x)) for x in parent]
-            return pairs.sparkSession.createDataFrame(rows, schema)
+        ).distinct(),
+        int(driver_cap),
+    )
+    if folded is not None:
+        return folded
     a = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     edges = a.unionByName(
         pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
@@ -1428,13 +1453,24 @@ def star_contraction_clusters(
     id_b: str = "id_b",
     max_iterations: int = 30,
     stats: dict | None = None,
-    driver_cap: int = 0,
+    driver_cap: int = DRIVER_FOLD_CAP,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) — the O(log^2 n)-round variant of
     :func:`neardup_clusters` for graphs with adversarially long chains,
     where plain min-label propagation needs O(diameter) rounds.
+
+    By default a graph of at most ``driver_cap``
+    (:data:`DRIVER_FOLD_CAP`, 200,000) distinct edges folds on the
+    driver instead (:func:`_driver_components`: one probe job, a
+    union-find, labels returned as a LocalRelation;
+    ``stats['rounds']`` is then 0). The distributed loop costs ~3 Spark
+    jobs per round plus two checkpoint jobs — measured ~1.5 s of pure
+    job/plan overhead on a 100-edge graph at sf0.1. A larger graph, or
+    ``driver_cap=0``, runs the loop below, including its
+    non-convergence RAISE; both label identically (pinned in
+    tests/test_dedup.py).
 
     Per round (each step is one groupBy-min + one join — the same
     shuffle shape as a label-propagation round, never a collect_list
@@ -1452,19 +1488,6 @@ def star_contraction_clusters(
     overflow-free under ANSI mode) — no row collect. If
     ``stats`` is given, ``stats['rounds']`` records the rounds used.
     Returns (doc_id, cluster_id), identical to ``neardup_clusters``.
-
-    ``driver_cap > 0`` (r15 optimization) opts into a BOUNDED driver
-    union-find for small edge sets: one ``limit(cap+1)`` collect probes
-    the size, and at most ``cap`` distinct edges are folded in driver
-    memory to the identical component-min labeling (the same loud-cap
-    bounded-collect convention as the BPE trainer and the model
-    collects). The distributed log²-round loop costs ~3 Spark jobs per
-    round plus two checkpoint jobs — measured ~1.5 s of pure job/plan
-    overhead on a 100-edge graph at sf0.1 — where the driver fold is
-    one job. Above the cap the collected probe is discarded and the
-    distributed loop runs unchanged, so the cap can never make a big
-    graph a driver problem; default 0 keeps the distributed contract
-    (including the non-convergence RAISE) untouched.
     """
     # canonical undirected edges (x, y), x > y, no self-loops
     edge_set = (
@@ -1475,39 +1498,11 @@ def star_contraction_clusters(
         .filter(F.col("x") != F.col("y"))
         .distinct()
     )
-    if driver_cap and int(driver_cap) > 0:
-        head = edge_set.limit(int(driver_cap) + 1).collect()
-        if len(head) <= int(driver_cap):
-            parent: dict = {}
-
-            def _find(a):
-                while parent.setdefault(a, a) != a:
-                    parent[a] = parent[parent[a]]
-                    a = parent[a]
-                return a
-
-            for r in head:
-                ra, rb = _find(r["x"]), _find(r["y"])
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            if stats is not None:
-                stats["rounds"] = 0
-            from pyspark.sql.types import StructField, StructType
-
-            # schema from the COERCED edge column (ADVICE r15): when
-            # id_a and id_b have different widths, greatest/least
-            # already widened x/y to the common type — typing the
-            # output from id_a alone could reject collected wider
-            # values in createDataFrame
-            dtype = edge_set.schema["x"].dataType
-            schema = StructType(
-                [
-                    StructField("doc_id", dtype, False),
-                    StructField("cluster_id", dtype, False),
-                ]
-            )
-            rows = [(x, _find(x)) for x in parent]
-            return pairs.sparkSession.createDataFrame(rows, schema)
+    folded = _driver_components(edge_set, int(driver_cap))
+    if folded is not None:
+        if stats is not None:
+            stats["rounds"] = 0
+        return folded
     edges = edge_set.localCheckpoint()
     nodes = (
         edges.select(F.col("x").alias("id"))

@@ -26,6 +26,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 #: scale-18 quantum for the driver replay of the DECIMAL(38,18)
 #: contribution sums (r15 driver_cap paths)
 from decimal import Decimal as _Decimal
@@ -62,7 +64,7 @@ def _rank_frame(edges_like: DataFrame, rows, src: str):
             StructField("rank", DoubleType(), False),
         ]
     )
-    return edges_like.sparkSession.createDataFrame(rows, schema)
+    return local_frame(edges_like.sparkSession, rows, schema)
 
 
 def pagerank(
@@ -464,7 +466,7 @@ def personalized_pagerank(
                     for u in univ
                 }
             return _rank_frame(e, [(u, ranks[u]) for u in univ], "src")
-    seed_df = spark.createDataFrame([(s,) for s in seeds], ["node"]).distinct()
+    seed_df = local_frame(spark, [(s,) for s in seeds], ["node"]).distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))

@@ -30,6 +30,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
+from ..session import local_frame
 from ._cache import pin_latest
 
 
@@ -166,7 +167,8 @@ def bm25_terms_multi(
     )
     pin_latest("retrieval.bm25_terms_multi", dl, post_full)
     dfreq = post.groupBy("word").agg(F.count(F.lit(1)).alias("dfreq"))
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        spark,
         [(int(qid), w) for qid, ws in query_terms for w in ws],
         "query_id long, word string",
     )
@@ -295,7 +297,8 @@ def mmr_rerank(
     rels = {r[0]: float(r[1]) for r in rel_rows}
     sims = {(r["ia"], r["ib"]): float(r["s"]) for r in sim_rows}
     order = _mmr_greedy(sorted(rels), rels, sims, k, lam)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, rank + 1) for rank, i in enumerate(order)],
         _mmr_schema(candidates, [id_col]),
     )
@@ -325,8 +328,8 @@ def mmr_rerank_batch(
     for g in sorted(rels):
         order = _mmr_greedy(sorted(rels[g]), rels[g], sims.get(g, {}), k, lam)
         out_rows += [(g, i, rank + 1) for rank, i in enumerate(order)]
-    return spark.createDataFrame(
-        out_rows, _mmr_schema(candidates, [group_col, id_col])
+    return local_frame(
+        spark, out_rows, _mmr_schema(candidates, [group_col, id_col])
     )
 
 
@@ -685,8 +688,8 @@ def rrf_param_sweep(
     joined = joined.persist()
     pin_latest("retrieval.rrf_param_sweep", joined)
 
-    grid = spark.createDataFrame(
-        [(int(v),) for v in sorted(set(int(v) for v in k0_grid))], "k0 int"
+    grid = local_frame(
+        spark, [(int(v),) for v in sorted(set(int(v) for v in k0_grid))], "k0 int"
     )
     score = None
     for i in range(len(lists)):
@@ -833,8 +836,8 @@ def mmr_lambda_sweep(
                 (int(lam * 8), g, i, rank + 1)
                 for rank, i in enumerate(order)
             ]
-    return spark.createDataFrame(
-        out_rows, _mmr_schema(candidates, [group_col, id_col], "lam_num")
+    return local_frame(
+        spark, out_rows, _mmr_schema(candidates, [group_col, id_col], "lam_num")
     )
 
 
@@ -946,7 +949,8 @@ def prf_expansion_terms(
         .groupBy("query_id", "word")
         .agg(F.count(F.lit(1)).alias("fb_count"))
     )
-    orig = spark.createDataFrame(
+    orig = local_frame(
+        spark,
         [(int(qid), w) for qid, ws in query_terms for w in ws],
         "query_id long, word string",
     )

@@ -29,6 +29,8 @@ from typing import Mapping
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from ..session import local_frame
+
 _U32 = 1 << 32
 
 
@@ -304,7 +306,8 @@ def mixing_plan(
         .cast("long")
         .alias("available_tokens")
     )
-    tdim = spark.createDataFrame(
+    tdim = local_frame(
+        spark,
         [(k, float(v)) for k, v in sorted(targets.items())],
         f"{strata_col} string, target_share double",
     )
@@ -976,10 +979,11 @@ def _langid_nb_predict_broadcast(
         for i, lab in enumerate(labels)
         for b in range(B)
     ]
-    lp = spark.createDataFrame(
-        lp_rows, f"bucket int, li int, lp decimal(20,{dec})"
+    lp = local_frame(
+        spark, lp_rows, f"bucket int, li int, lp decimal(20,{dec})"
     )
-    pri = spark.createDataFrame(
+    pri = local_frame(
+        spark,
         [(int(i), lab, model["priors"][i]) for i, lab in enumerate(labels)],
         f"li int, lab string, prior decimal(20,{dec})",
     )

@@ -29,6 +29,7 @@ from ..functions.text import (
     quality_score,
     token_count,
 )
+from ..session import local_frame
 from . import golden
 from ._util import big, frame_memo, memo_golden, parallelize_small, t
 
@@ -385,7 +386,7 @@ def neardup_clusters_q(spark, sf_dir):
 
     corpus = _augmented_corpus(spark, sf_dir)
     pairs = ngram_jaccard_pairs(corpus, tau=0.6, n=3).persist()
-    out = star_contraction_clusters(pairs, driver_cap=200_000)
+    out = star_contraction_clusters(pairs)
     # the contraction localCheckpoints eagerly (lineage cut), so pairs
     # is fully consumed when it returns; LRU-pin instead of unpersist —
     # a repeat invocation (the bench's interleaved passes, a serving
@@ -406,7 +407,7 @@ def neardup_clusters_prop_q(spark, sf_dir):
 
     corpus = _augmented_corpus(spark, sf_dir)
     pairs = ngram_jaccard_pairs(corpus, tau=0.6, n=3).persist()
-    out = neardup_clusters(pairs, driver_cap=200_000)
+    out = neardup_clusters(pairs)
     from ..functions._cache import pin_latest
     pin_latest("golden.neardup_clusters_prop_q.pairs", pairs)  # LRU, stays warm
     return out.select(big("doc_id").alias("doc_id"), big("cluster_id").alias("cluster_id"))
@@ -1509,8 +1510,8 @@ def bpe_merge_rules(spark, sf_dir):
     rows = [
         (rank, a, b, freq) for rank, (a, b, freq) in enumerate(merges)
     ]
-    return spark.createDataFrame(
-        rows, "rank int, left string, right string, pair_freq long"
+    return local_frame(
+        spark, rows, "rank int, left string, right string, pair_freq long"
     )
 
 
@@ -1534,8 +1535,8 @@ def bpe_merge_rules_256(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     merges = bpe_train_merges_local(docs, n_merges=256, min_freq=2)
     rows = [(rank, a, b, freq) for rank, (a, b, freq) in enumerate(merges)]
-    return spark.createDataFrame(
-        rows, "rank int, left string, right string, pair_freq long"
+    return local_frame(
+        spark, rows, "rank int, left string, right string, pair_freq long"
     )
 
 
@@ -2379,7 +2380,7 @@ def neardup_keep_best(spark, sf_dir):
 
     corpus = _augmented_corpus(spark, sf_dir)
     pairs = ngram_jaccard_pairs(corpus, tau=0.6, n=3).persist()
-    clusters = star_contraction_clusters(pairs, driver_cap=200_000)
+    clusters = star_contraction_clusters(pairs)
     from ..functions._cache import pin_latest
     pin_latest("golden.neardup_keep_best.pairs", pairs)  # LRU, stays warm
     dl = corpus.select("doc_id", token_count(F.col("text")).alias("n_tok"))
@@ -2435,7 +2436,7 @@ def dedup_report_by_source(spark, sf_dir):
 
     corpus = _augmented_corpus(spark, sf_dir)
     pairs = ngram_jaccard_pairs(corpus, tau=0.6, n=3).persist()
-    clusters = star_contraction_clusters(pairs, driver_cap=200_000)
+    clusters = star_contraction_clusters(pairs)
     pin_latest("golden.dedup_report_by_source.pairs", pairs)
     src = parallelize_small(t(spark, sf_dir, "documents")).select(
         F.col("doc_id").alias("orig_id"), "source"
@@ -2468,7 +2469,7 @@ def dedup_cluster_histogram(spark, sf_dir):
 
     corpus = _augmented_corpus(spark, sf_dir)
     pairs = ngram_jaccard_pairs(corpus, tau=0.6, n=3).persist()
-    clusters = star_contraction_clusters(pairs, driver_cap=200_000)
+    clusters = star_contraction_clusters(pairs)
     pin_latest("golden.dedup_cluster_histogram.pairs", pairs)
     return cluster_size_histogram(clusters).select(
         big("cluster_size").alias("cluster_size"),

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.retrieval import ranked_list, rrf_fuse
+from ..session import local_frame
 from . import golden
 from ._util import big, frame_memo, memo_golden, t
 from .vectors import _cos_sql, _query_vec
@@ -451,7 +452,8 @@ def _eval_tf_frames(spark, sf_dir):
     words = docs.select(
         "doc_id", F.explode(tokenize(F.col("text"))).alias("word")
     )
-    qdim = spark.createDataFrame(
+    qdim = local_frame(
+        spark,
         [
             (k, q, w)
             for q, wr, wg in _EVAL_QUERIES

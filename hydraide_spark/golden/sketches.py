@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.sketches import hll_group_sketches, hll_rollup
+from ..session import local_frame
 from . import golden
 from ._util import big, memo_golden, t
 
@@ -139,7 +140,7 @@ def histogram_quantiles_events(spark, sf_dir):
 
     ev = t(spark, sf_dir, "events")
     pairs = histogram_quantiles(ev, "value", qs=[0.1, 0.5, 0.9, 0.99], bins=128)
-    return spark.createDataFrame(pairs, "q double, est double")
+    return local_frame(spark, pairs, "q double, est double")
 
 
 _BLOOM_POS = (

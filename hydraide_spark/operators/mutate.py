@@ -25,6 +25,7 @@ from typing import Any, Optional, Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..query.filters import Pred, translate
+from ..session import local_frame
 
 STATUS_NEW = "NEW"
 STATUS_UPDATED = "UPDATED"
@@ -185,7 +186,7 @@ def increment(
         # and, through the store path, duplicate persisted key rows)
         keys = list(dict.fromkeys(keys))
         spark = base.sparkSession
-        kdf = spark.createDataFrame([(k,) for k in keys], f"{key_col} string")
+        kdf = local_frame(spark, [(k,) for k in keys], f"{key_col} string")
         # Scale shape: the key list is a driver-side argument (small by
         # contract), so the probe is a broadcast semi-join and the
         # created-key set is resolved with ONE bounded collect
@@ -205,8 +206,8 @@ def increment(
         # Membership (not value-nullness) decides `created`: an
         # existing key whose value is NULL is not created, it just
         # can't be incremented (applied=False).
-        miss = spark.createDataFrame(
-            [(k,) for k in created_keys], f"{key_col} string"
+        miss = local_frame(
+            spark, [(k,) for k in created_keys], f"{key_col} string"
         )
         for c, t in base.dtypes:
             if c != key_col:
@@ -481,7 +482,8 @@ def patch_treasures_batch(
         import time as _time
 
         now_us = int(_time.time_ns() // 1_000)
-    kdf = spark.createDataFrame(
+    kdf = local_frame(
+        spark,
         [(k, i) for i, k in enumerate(keys)],
         f"{key_col} string, _req_idx int",
     )
@@ -528,7 +530,8 @@ def patch_treasures_batch(
     patched = patched0
     if create_if_not_exist and missing:
         body_type = base.schema[body_col].dataType
-        created_raw = spark.createDataFrame(
+        created_raw = local_frame(
+            spark,
             [(k, keys.index(k), seed_body) for k in missing],
             T.StructType(
                 [
@@ -590,7 +593,8 @@ def patch_treasures_batch(
     results = patched.select(key_col, status.alias("patch_status"))
     if missing and not create_if_not_exist:
         results = results.unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(k, "KEY_NOT_FOUND") for k in missing],
                 f"{key_col} string, patch_status string",
             )
@@ -713,8 +717,8 @@ def patch_each_batch(
     now = int(now_us if now_us is not None else _time.time_ns() // 1_000)
 
     if not patches:
-        empty = spark.createDataFrame(
-            [], f"patch_index int, {key_col} string, patch_status string"
+        empty = local_frame(
+            spark, [], f"patch_index int, {key_col} string, patch_status string"
         )
         return PatchEachBatch(empty, base, base.limit(0), base.limit(0))
 
@@ -986,7 +990,8 @@ def patch_each_batch(
     ]
     if nf:
         results = results.unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(idx, k, "KEY_NOT_FOUND") for idx, k in nf],
                 f"patch_index int, {key_col} string, patch_status string",
             )

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..query.filters import Pred, translate
 from ..query.index import Index
+from ..session import local_frame
 
 # Above this many keys an IN-list stops pushing down usefully; switch to
 # a broadcast semi-join (the relational form of "batch keyed read").
@@ -33,7 +34,7 @@ def _keys_predicate(df: DataFrame, keys: Sequence[str], key_column: str) -> Data
     if len(keys) <= ISIN_THRESHOLD:
         return df.filter(F.col(key_column).isin(list(keys)))
     spark = df.sparkSession
-    kdf = spark.createDataFrame([(k,) for k in keys], [key_column])
+    kdf = local_frame(spark, [(k,) for k in keys], [key_column])
     return df.join(F.broadcast(kdf), key_column, "left_semi")
 
 
@@ -211,7 +212,7 @@ def keys_exist(df: DataFrame, keys: Sequence[str], key_column: str = "key") -> D
     """Per-key existence map (reference ``AreKeysExist``, proto:299-340):
     returns every requested key with an ``exists`` boolean."""
     spark = df.sparkSession
-    kdf = spark.createDataFrame([(k,) for k in keys], [key_column])
+    kdf = local_frame(spark, [(k,) for k in keys], [key_column])
     present = df.select(key_column).distinct().withColumn("exists", F.lit(True))
     return (
         kdf.join(present, key_column, "left")

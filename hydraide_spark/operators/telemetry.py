@@ -28,6 +28,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
+
 _SCAN_RE = re.compile(r"FileScan \w+ \S*\[?([^\[\]\n ]*)")
 _LOCATION_RE = re.compile(r"Location: \w+\([0-9]* paths\)?\[([^\]]*)\]")
 
@@ -151,7 +153,7 @@ class QueryStatsCollector:
         if self._table_marker is not None and self._table_marker in plan:
             return
         # Second self-traffic class (r8 VERDICT): rollup READS of the
-        # in-memory buffered frame (stats() → createDataFrame). Those
+        # in-memory buffered frame (stats() → local_frame). Those
         # plans scan only driver-local relations — no Location: entry,
         # a LocalTableScan/ExistingRDD leaf — and recording them makes
         # flush counts nondeterministic (their async onSuccess can land
@@ -202,7 +204,7 @@ class QueryStatsCollector:
         snapshot — the reference's rolling-window view)."""
         with self._mu:
             rows = list(self._rows)
-        return self._spark.createDataFrame(rows, self.SCHEMA)
+        return local_frame(self._spark, rows, self.SCHEMA)
 
     def clear(self) -> None:
         with self._mu:
@@ -226,7 +228,7 @@ class QueryStatsCollector:
             # the write doesn't record itself: _record drops any event
             # whose plan touches table_path (the async-safe marker)
             (
-                self._spark.createDataFrame(rows, self.SCHEMA)
+                local_frame(self._spark, rows, self.SCHEMA)
                 .coalesce(1)
                 .write.mode("overwrite")
                 .parquet(batch_dir)

@@ -63,6 +63,7 @@ import threading
 from ..operators import claims as claims_ops
 from ..operators import mutate as mutate_ops
 from ..query.filters import Pred
+from ..session import local_frame
 
 
 def _serialized(method):
@@ -434,8 +435,8 @@ class TreasureStore:
         sequence or a DataFrame carrying ``key_col``; the collect is
         bounded by min(|keys|, n_buckets)."""
         if not isinstance(keys, DataFrame):
-            keys = self.spark.createDataFrame(
-                [(str(k),) for k in keys], f"{self.key_col} string"
+            keys = local_frame(
+                self.spark, [(str(k),) for k in keys], f"{self.key_col} string"
             )
         rows = (
             keys.select(self._bucket_expr().alias("_b")).distinct().collect()
@@ -1351,8 +1352,8 @@ class TreasureStore:
         # the proto shape allows an empty Patches list — no-op: no new
         # version, no events, an empty result frame
         if not patches:
-            return self.spark.createDataFrame(
-                [], f"patch_index int, {self.key_col} string, patch_status string"
+            return local_frame(
+                self.spark, [], f"patch_index int, {self.key_col} string, patch_status string"
             )
         if cap is None:
             # a capped request pre-counts the WHOLE swamp (proto:3023)

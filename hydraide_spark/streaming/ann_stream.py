@@ -41,6 +41,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions.vector import ivf_cell_expr
 from ..query.filters import cosine_similarity
+from ..session import local_frame
 from .state_compact import read_committed
 
 
@@ -174,8 +175,8 @@ def ivf_query_persisted(
     )
     pruned = idx.filter(F.col("cell").isin(all_cells))
 
-    probed = spark.createDataFrame(
-        probe_pairs, f"{query_id_col} long, cell int"
+    probed = local_frame(
+        spark, probe_pairs, f"{query_id_col} long, cell int"
     )
     qv_df = queries.select(
         F.col(query_id_col),

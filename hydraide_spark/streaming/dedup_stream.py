@@ -61,6 +61,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.dedup import band_bucket_array, minhash_signature_array, shingles
+from ..session import local_frame
 from .state_compact import (
     adopt_unmarked_epochs,
     committed_frontier,
@@ -594,8 +595,8 @@ def neardup_lookup(
     idx = bands_probe_frame(
         spark, bands_dir, banded_q, epoch=None, id_col=id_col, epochs=frontier
     )
-    empty = spark.createDataFrame(
-        [], f"{id_col} long, match_id long, inter int, union int"
+    empty = local_frame(
+        spark, [], f"{id_col} long, match_id long, inter int, union int"
     )
     if idx is None:
         sh_q.unpersist()
@@ -654,4 +655,4 @@ def neardup_lookup(
     cand.unpersist()
     if not rows:
         return empty
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)

@@ -24,6 +24,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from ..sources.store import TreasureStore
+from ..session import local_frame
 
 SUM_DECIMAL = "decimal(28,6)"
 
@@ -283,7 +284,8 @@ def make_dsir_count_merge(
             .cast("long")
             .alias("n"),
         )
-        sentinel = batch_df.sparkSession.createDataFrame(
+        sentinel = local_frame(
+            batch_df.sparkSession,
             [(DSIR_EPOCH_KEY, -1, int(epoch))],
             "key string, bucket long, n long",
         )

@@ -42,6 +42,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.text import postings, token_count
+from ..session import local_frame
 from .state_compact import (
     BASE_EPOCH,
     COMMITS_NAME,
@@ -143,13 +144,13 @@ def persisted_postings(
     if words is not None:
         words = [str(w) for w in words]
         _record_workload(state_dir, "postings", "probe", len(words))
-        keys = spark.createDataFrame([(w,) for w in words], "word string")
+        keys = local_frame(spark, [(w,) for w in words], "word string")
     else:
         _record_workload(state_dir, "postings", "scan")
     out = read_bucketed(
         spark, os.path.join(state_dir, "postings"), schema, keys, "word", epochs
     )
-    return spark.createDataFrame([], schema) if out is None else out
+    return local_frame(spark, [], schema) if out is None else out
 
 
 def persisted_doclen(

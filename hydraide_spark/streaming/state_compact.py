@@ -47,7 +47,8 @@ base partition ``epoch=-1``:
   (has the fold manifest) with no live base is swapped into place; an
   incomplete one is rolled back to ``_old_base``. The swap order is
   write-tmp → move-base-aside → promote-tmp, so at every instant either
-  the base or a recoverable copy exists.
+  the base or a recoverable copy exists, and readers take the base from
+  ``_old_base`` while ``epoch=-1`` is missing (:func:`_base_dir`).
 
 Readers (``ingested_pairs``, ``persisted_cells``, the ingest probes)
 read the root with partition discovery and treat ``epoch`` as opaque
@@ -80,6 +81,8 @@ import shutil
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..session import local_frame
 
 BASE_EPOCH = -1
 
@@ -228,11 +231,41 @@ def read_committed(
     columns, ``epoch long``, and any inner partition column after it
     (``cell int`` for the cell-partitioned tables). An empty frame of
     the same columns before the table's first epoch lands."""
-    if not list_epochs(table_dir):
-        return spark.createDataFrame([], schema).drop("epoch")
-    return committed_filter(
-        spark.read.schema(schema).parquet(table_dir), table_dir, epochs, own_epoch
+    df = spark.read.schema(schema).parquet(table_dir) if list_epochs(table_dir) else None
+    df = _with_displaced_base(spark, df, table_dir, schema)
+    if df is None:
+        return local_frame(spark, [], schema).drop("epoch")
+    return committed_filter(df, table_dir, epochs, own_epoch)
+
+
+def _base_dir(table_dir: str) -> str:
+    """Where readers take the base rows from: ``epoch=-1``, or — after a
+    crash between a swap's move-aside and its promote, which leaves no
+    ``epoch=-1`` — the displaced ``_old_base``. That dir is the whole
+    previous base (moved by one rename), and every epoch dir the swap
+    folds is still in place until cleanup, so the old base plus the
+    live epochs is exactly the table before the swap. Readers never
+    repair; the next compaction entry (:func:`_recover`) promotes the
+    complete tmp."""
+    base = _epoch_dir(table_dir, BASE_EPOCH)
+    old = os.path.join(table_dir, _OLD_NAME)
+    return old if not os.path.isdir(base) and os.path.isdir(old) else base
+
+
+def _with_displaced_base(
+    spark: SparkSession, df: "DataFrame | None", table_dir: str, schema: str
+) -> "DataFrame | None":
+    """``df`` (a read with the ``epoch`` partition column, or None)
+    plus the displaced base (:func:`_base_dir`) read as ``epoch=-1``;
+    ``df`` unchanged when the base is in place. Partition discovery
+    skips the underscore dir, so it is read on its own."""
+    base = _base_dir(table_dir)
+    if base == _epoch_dir(table_dir, BASE_EPOCH):
+        return df
+    old = spark.read.schema(schema).parquet(base).withColumn(
+        "epoch", F.lit(BASE_EPOCH).cast("long")
     )
+    return old if df is None else df.unionByName(old)
 
 
 def _recover(table_dir: str) -> None:
@@ -365,8 +398,10 @@ def _swap(
     is promoted to ``epoch=<target>``, and the replayable cleanup
     (:func:`_finish_swap`) deletes what the manifest lists. Every crash
     window heals on the next entry (:func:`_recover` /
-    :func:`_recover_l1`), and :func:`pending_folded` keeps readers from
-    double-counting between promote and cleanup.
+    :func:`_recover_l1`); until then readers see the displaced base
+    between move-aside and promote (:func:`_base_dir`), and
+    :func:`pending_folded` keeps them from double-counting between
+    promote and cleanup.
 
     ``partition_by`` keeps an inner layout; otherwise ``n_files``
     coalesces the output. ``extra_manifest`` files land in the tmp next
@@ -769,7 +804,7 @@ def read_nbuckets(table_dir: str) -> "int | None":
     base is absent / pre-bucketing flat (probes then full-scan it, the
     legacy behavior)."""
     try:
-        with open(os.path.join(_epoch_dir(table_dir, BASE_EPOCH), _NBUCKETS_MANIFEST)) as fh:
+        with open(os.path.join(_base_dir(table_dir), _NBUCKETS_MANIFEST)) as fh:
             return int(fh.read().strip())
     except (OSError, ValueError):
         return None
@@ -790,6 +825,8 @@ def split_bucketed_table(spark: SparkSession, table_dir: str, schema: str):
       to ``bkt=`` subdirs) is exactly why the halves cannot share one
       read.
 
+    Both halves take the base from :func:`_base_dir`, so a crash
+    between a swap's move-aside and promote leaves it visible.
     :func:`read_bucketed` applies :func:`committed_filter` to
     ``flat_df`` and the ``bkt IN`` prune to ``base_df``. ``schema`` is
     the DATA schema (no epoch/bkt)."""
@@ -809,8 +846,10 @@ def split_bucketed_table(spark: SparkSession, table_dir: str, schema: str):
             .parquet(*flat_dirs)
         )
     base = None
-    base_dir = _epoch_dir(table_dir, BASE_EPOCH)
-    if nb is not None and os.path.isdir(base_dir):
+    base_dir = _base_dir(table_dir)
+    if nb is None:
+        flat = _with_displaced_base(spark, flat, table_dir, schema + ", epoch long")
+    elif os.path.isdir(base_dir):
         base = (
             spark.read.schema(schema + ", bkt int")
             .option("basePath", base_dir)

@@ -24,8 +24,10 @@ from hydraide_spark.sources.store import TreasureStore
 from hydraide_spark.streaming import state_compact as sc
 from hydraide_spark.streaming.state_compact import (
     BASE_EPOCH,
+    band_bucket_expr,
     compact_epochs,
     fold_to_l1,
+    read_bucketed,
     read_committed,
     replace_table,
 )
@@ -428,7 +430,11 @@ def test_crash_at_each_swap_step_heals(spark, tmp_path, monkeypatch, user, step)
 
     def committed_rows():
         df = read_committed(spark, table, "id long, v string, epoch long", frontier)
-        return sorted(tuple(r) for r in df.collect())
+        rows = sorted(tuple(r) for r in df.collect())
+        # the bucketed-table reader resolves the base the same way
+        flat = read_bucketed(spark, table, "id long, v string", epochs=frontier)
+        assert sorted(tuple(r) for r in flat.collect()) == rows
+        return rows
 
     before = committed_rows()
     src = spark.createDataFrame(before, "id long, v string")
@@ -442,12 +448,10 @@ def test_crash_at_each_swap_step_heals(spark, tmp_path, monkeypatch, user, step)
     with pytest.raises(_Crash):
         entry()
     monkeypatch.undo()
-    if step != "move_aside":
-        # readers never repair; the frontier filter and pending_folded
-        # alone keep them exact. Between move-aside and promote the base
-        # sits in _old_base, invisible until the next entry promotes
-        # the complete tmp — the one window a reader cannot see through.
-        assert committed_rows() == before
+    # readers never repair: the frontier filter, pending_folded and the
+    # displaced-base fallback (between move-aside and promote the base
+    # sits in _old_base) alone keep them exact
+    assert committed_rows() == before
     entry()
     assert committed_rows() == before
     leftovers = [
@@ -457,3 +461,48 @@ def test_crash_at_each_swap_step_heals(spark, tmp_path, monkeypatch, user, step)
         if n.startswith(("_compacting", "_old_base", "_FOLDED"))
     ]
     assert leftovers == []
+
+
+def test_bucketed_base_readable_between_move_aside_and_promote(spark, tmp_path):
+    """A bucket-partitioned base that a crashed swap moved aside is read
+    (and bucket-pruned) from ``_old_base`` exactly as it is from
+    ``epoch=-1`` once promoted."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "t")
+    keys = [f"k{i}" for i in range(12)]
+    bucket = {
+        r["key"]: r["b"]
+        for r in spark.createDataFrame([(k,) for k in keys], "key string")
+        .select("key", band_bucket_expr(F.col("key"), 4).alias("b"))
+        .collect()
+    }
+    old = os.path.join(table, "_old_base")
+    for i, k in enumerate(keys):
+        d = os.path.join(old, f"bkt={bucket[k]}")
+        os.makedirs(d, exist_ok=True)
+        pq.write_table(pa.table({"key": [k], "n": pa.array([i], pa.int64())}), os.path.join(d, f"part-{i}.parquet"))
+    with open(os.path.join(old, "_NBUCKETS"), "w") as fh:
+        fh.write("4")
+    os.makedirs(os.path.join(table, "epoch=0"))
+    pq.write_table(
+        pa.table({"key": ["k3"], "n": pa.array([99], pa.int64())}),
+        os.path.join(table, "epoch=0", "part-0.parquet"),
+    )
+
+    def probe():
+        out = read_bucketed(
+            spark,
+            table,
+            "key string, n long",
+            keys=spark.createDataFrame([("k3",)], "key string"),
+            key_col="key",
+            epochs=[BASE_EPOCH, 0],
+        )
+        return sorted(tuple(r) for r in out.filter(F.col("key") == "k3").collect())
+
+    displaced = probe()
+    assert displaced == [("k3", 3), ("k3", 99)]
+    os.rename(old, os.path.join(table, "epoch=-1"))
+    assert probe() == displaced

@@ -428,7 +428,7 @@ def test_star_contraction_path_graph_logarithmic_rounds(spark):
         [(i, i + 1) for i in range(999)], "id_a long, id_b long"
     )
     stats = {}
-    out = star_contraction_clusters(pairs, stats=stats)
+    out = star_contraction_clusters(pairs, stats=stats, driver_cap=0)
     labels = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
     assert len(labels) == 1000
     assert set(labels.values()) == {0}
@@ -468,7 +468,7 @@ def test_star_contraction_matches_union_find_on_random_graphs(spark):
         df = spark.createDataFrame(edges, "id_a long, id_b long")
         got = {
             r["doc_id"]: r["cluster_id"]
-            for r in star_contraction_clusters(df).collect()
+            for r in star_contraction_clusters(df, driver_cap=0).collect()
         }
         assert got == truth, f"seed {seed} mismatch"
 
@@ -487,10 +487,12 @@ def test_label_propagation_raises_instead_of_silently_underconverging(spark):
         [(i, i + 1) for i in range(60)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        neardup_clusters(pairs, max_iterations=5)
+        neardup_clusters(pairs, max_iterations=5, driver_cap=0)
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in star_contraction_clusters(pairs, max_iterations=10).collect()
+        for r in star_contraction_clusters(
+            pairs, max_iterations=10, driver_cap=0
+        ).collect()
     }
     assert set(got.values()) == {0}
 
@@ -665,9 +667,9 @@ def test_star_contraction_raises_on_iteration_exhaustion(spark):
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     with _pytest.raises(RuntimeError, match="fixpoint"):
-        star_contraction_clusters(pairs, max_iterations=1)
+        star_contraction_clusters(pairs, max_iterations=1, driver_cap=0)
     # with budget, the same graph converges to one cluster
-    out = star_contraction_clusters(pairs)
+    out = star_contraction_clusters(pairs, driver_cap=0)
     assert {r["cluster_id"] for r in out.collect()} == {0}
 
 
@@ -1051,7 +1053,8 @@ def test_neardup_clusters_driver_cap_matches_distributed(spark):
     ] + [(777, 777)]  # self-pair-only id: must survive as a singleton
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     dist = {
-        r["doc_id"]: r["cluster_id"] for r in neardup_clusters(df).collect()
+        r["doc_id"]: r["cluster_id"]
+        for r in neardup_clusters(df, driver_cap=0).collect()
     }
     assert dist[777] == 777
     drv = {
@@ -1084,7 +1087,7 @@ def test_star_contraction_driver_cap_matches_distributed(spark):
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     dist = {
         r["doc_id"]: r["cluster_id"]
-        for r in star_contraction_clusters(df).collect()
+        for r in star_contraction_clusters(df, driver_cap=0).collect()
     }
     stats = {}
     drv = {
