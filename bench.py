@@ -1,4 +1,5 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs every registry query (``golden.queries()``,
+in registry order) at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
@@ -37,259 +38,6 @@ sys.path.insert(0, _HERE)
 from hydraide_spark import golden  # noqa: E402
 from hydraide_spark.session import get_spark  # noqa: E402
 
-# Headline set: one per operator family; kept in sync as golden grows.
-HEADLINE = [
-    "get_point_read",
-    "get_by_keys_semijoin",
-    "get_by_index_paged",
-    "get_by_index_time_range",
-    "stream_filtered_ordered",
-    "stream_from_many",
-    "stream_from_many_single_scan",
-    "count_per_swamp",
-    "count_matching",
-    "swamp_pattern_routing",
-    "tpch_q1_pricing_summary",
-    "join_star_revenue",
-    "multiway_join_volume",
-    "salted_skew_join",
-    "semi_anti_join",
-    "asof_join_events",
-    "interval_join_incidents",
-    "geo_radius_pairs",
-    "topk_per_group",
-    "windowed_event_stats",
-    "sliding_window_event_stats",
-    "session_windows",
-    "funnel_conversion_events",
-    "retention_cohorts_events",
-    "events_props_json_stats",
-    "error_burst_islands",
-    "anomaly_outlier_events",
-    "grouping_rollup",
-    "hll_distinct_rollup",
-    "tpch_q6_revenue_delta",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q7_nation_volume",
-    "tpch_q18_large_orders",
-    "tpch_q4_order_priority_exists",
-    "tpch_q8_market_share",
-    "tpch_q10_returned_revenue",
-    "tpch_q13_order_count_distribution",
-    "tpch_q14_promo_revenue",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q22_idle_balance_by_nation",
-    "tpch_q12_priority_shipment_classes",
-    "tpch_q21_waiting_supplier_blame",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q16_supplier_relation",
-    "tpch_q20_excess_stock_suppliers",
-    "relational_set_ops",
-    "cube_pricing_matrix",
-    "unpivot_lineitem_measures",
-    "exact_quantiles_by_flag",
-    "validation_report_lineitem",
-    "profile_documents_table",
-    "zorder_layout_keys",
-    "event_interarrival_stats",
-    "moving_window_sum",
-    "quality_percentile_band",
-    "filter_scalar_tree",
-    "filter_in_ops",
-    "filter_has_key",
-    "filter_slice_ops",
-    "filter_len_and_wildcard",
-    "nested_slice_quantifiers",
-    "phrase_match",
-    "geo_inside",
-    "labeled_search_meta",
-    "vector_filter",
-    "ann_topk_exact",
-    "ann_topk_int8",
-    "ann_topk_int8_ivf_stable",
-    "ann_topk_lsh",
-    "ann_topk_ivf",
-    "pq_encode_codes",
-    "pq_ann_topk",
-    "ivfadc_topk",
-    "ann_topk_lsh_stable",
-    "ann_topk_ivf_stable",
-    "pq_ann_topk_stable",
-    "ivfadc_topk_stable",
-    "knn_self_join_stable",
-    "knn_self_join_auto_stable",
-    # r12: adaptive hot-bucket sub-split (oracle-replayed)
-    "knn_self_join_adaptive_stable",
-    "ann_topk_multiprobe_stable",
-    "embedding_neardup",
-    "embedding_neardup_auto_stable",
-    "embedding_neardup_int8",
-    "semantic_dedup_docs",
-    "label_centroid_sums",
-    "embedding_drift_report",
-    "kmeans_assign_exact",
-    "uint32slice_ops",
-    "set_upsert_status",
-    "increment_conditional",
-    "patch_struct_ops",
-    "patch_meta_stamped",
-    "patch_cap_budget",
-    "patch_each_cap",
-    "shift_expired_claim",
-    "shift_matching_cap",
-    "patch_expired_lease",
-    "dedup_exact",
-    "dedup_report_by_source",
-    "corpus_snapshot_diff",
-    "dedup_cluster_histogram",
-    "ngram_jaccard_neardup",
-    "ngram_jaccard_collapsed",
-    "ngram_jaccard_auto",
-    "ngram_jaccard_auto_collapsed",
-    "neardup_clusters",
-    "neardup_keep_best",
-    "neardup_clusters_prop",
-    "pagerank_citation_graph",
-    "minhash_lsh_neardup",
-    "minhash_lsh_neardup_stable",
-    "chunk_neardup_passages",
-    "chunk_neardup_collapsed",
-    "minhash_collapsed_stable",
-    "minhash_incremental_neardup",
-    "fuzzy_record_linkage",
-    "simhash_neardup",
-    "simhash_neardup_stable",
-    "simhash_collapsed_stable",
-    "reverse_index_search",
-    "bm25_ranked_search",
-    "hybrid_search_rrf",
-    "retrieval_eval_metrics",
-    "retrieval_run_compare",
-    "retrieval_run_sign_test",
-    "retrieval_param_sweep",
-    "mmr_diversified_rerank",
-    "mmr_diversified_rerank_batch",
-    "mmr_lambda_sweep",
-    "hybrid_search_rrf_batch",
-    "hard_negative_mining_docs",
-    "prf_expanded_search_docs",
-    "phrase_search_via_index",
-    "text_quality_tokens",
-    "quality_classifier_docs",
-    "quality_calibration_report",
-    "bpe_merge_rules",
-    "bpe_merge_rules_256",
-    "bpe_token_frequencies",
-    "lm_logprob_quality_docs",
-    "bigram_lm_quality_docs",
-    "telemetry_rolling_rates",
-    "telemetry_top_swamps",
-    "cms_user_frequencies",
-    "telemetry_history",
-    "telemetry_slow_queries",
-    "telemetry_top_errors",
-    "telemetry_stats_summary",
-    "triangle_counts_graph",
-    "histogram_quantiles_events",
-    "personalized_pagerank_seeds",
-    "weighted_pagerank_graph",
-    "corpus_quality_report",
-    "lang_id_heuristic",
-    "repetition_signals_docs",
-    "pii_scrub_docs",
-    "top_ngrams_corpus",
-    "decontaminate_docs",
-    "curation_pipeline_docs",
-    "boilerplate_stats_docs",
-    "repeated_span_dedup",
-    "tfidf_top_terms",
-    "vocab_encode_docs",
-    "chunk_documents_rag",
-    "stratified_sample_docs",
-    "temperature_mix_sample_docs",
-    "data_mixing_plan",
-    "mixing_plan_applied",
-    "weighted_sample_docs",
-    "train_test_split_docs",
-    "pack_token_shards_docs",
-    "multimodal_features",
-    "multimodal_real_decode",
-    # r14: HTML extraction, ANN recall QA, progressive-JPEG golden is
-    # the existing image_phash_neardup_jpeg entry
-    "html_extract_text",
-    "warc_parse_records",
-    "crawl_ingest_pipeline",
-    "warc_binary_parse_records",
-    "crawl_ingest_pipeline_files",
-    "robots_frontier_filter",
-    "robots_crawl_delay_sitemaps",
-    "polite_fetch_schedule_frontier",
-    "html_curation_pipeline",
-    "ann_recall_report_stable",
-    "ann_recall_report",
-    # r12: image perceptual-hash near-dup (planted-truth oracle)
-    "image_phash_neardup",
-    "image_phash_neardup_png",
-    "audio_fingerprint_neardup",
-    # r11: headline == full registry (r10 VERDICT #6 — 26 cheap parity
-    # reads had silently stayed out; tests/test_driver_contract.py now
-    # pins set equality so the headline can never shrink again)
-    "ann_topk_auto",
-    # r12: filtered ANN (scalar predicate × ANN route)
-    "ann_topk_filtered",
-    "approx_distinct_exact_oracle",
-    "delete_remaining_count",
-    "doc_fingerprint",
-    "filter_is_empty",
-    "filter_nested_path",
-    "filter_slice_substring",
-    "filter_string_ops",
-    "geo_band",
-    "get_all_scan",
-    "get_by_keys_batch",
-    "increment_stamped",
-    "index_null_timestamp_excluded",
-    "keys_exist",
-    "multimodal_frame_plan",
-    "patch_full_opset",
-    "patch_many",
-    "phrase_negated",
-    "profile_pivot",
-    "profile_read",
-    "reverse_index_build",
-    "reverse_index_semijoin",
-    "set_insert_only_counts",
-    "shift_by_keys_claim",
-    "text_normalize",
-    "uint64_decimal_fidelity",
-    "neardup_truth_eval",
-    "dsir_importance_topk",
-    "dsir_threshold_select_docs",
-    "cluster_balanced_sample_vecs",
-    "quality_trained_classifier_docs",
-    "image_phash_neardup_jpeg",
-    "image_phash_neardup_webp",
-    "image_phash_neardup_gif",
-    "bloom_membership_orders",
-    "url_canonical_dedup",
-    "chunk_neardup_production",
-    "langid_nb_predict_docs",
-    "langid_nb_predict_broadcast",
-    "sitemap_discovery_docs",
-    "line_corpus_dedup_docs",
-    "sitemap_recrawl_schedule",
-    "html_link_graph_docs",
-    "warc_legacy_charset_records",
-    "host_link_stats_docs",
-    "pdf_text_extract_docs",
-]
-
-
 _SLOW_CUTOFF_SEC = 5.0
 
 
@@ -321,7 +69,7 @@ def main() -> None:
 
     spark = get_spark("bench")
     qs = golden.queries()
-    names = [n for n in HEADLINE if n in qs]
+    names = list(qs)
 
     # warmup: smallest sf primes codegen/JIT paths
     warm_dir = "/root/testdata/sf0.001"

@@ -472,15 +472,16 @@ def patch_cap_budget(spark, sf_dir):
         ("cust_bal_ge_9000", sf_dir),
         lambda: base.filter(F.col("body.bal") >= 9000.0).count(),
     )
-    out = M.patch_treasures_batch(
+    keys = [str(i) for i in range(1, 11)] + ["xk-1", "xk-2"]
+    ops = [M.PatchOp(M.PatchKind.INC, "bal", 1500.0)]
+    cond = Cmp("body.bal", Op.LT, 9500.0)
+    out = M.patch_each_batch(
         spark,
         base,
-        [str(i) for i in range(1, 11)] + ["xk-1", "xk-2"],
-        [M.PatchOp(M.PatchKind.INC, "bal", 1500.0)],
-        condition=Cmp("body.bal", Op.LT, 9500.0),
+        [(k, ops, cond) for k in keys],
+        cap=C.Cap(Cmp("body.bal", Op.GE, 9000.0), pre + 2),
         create_if_not_exist=True,
         seed_body=(8000.0,),
-        cap=C.Cap(Cmp("body.bal", Op.GE, 9000.0), pre + 2),
     )
     state = out.new_state.select(
         "key", F.col("body.bal").alias("bal_after")

@@ -23,9 +23,11 @@ from enum import Enum
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
 
 from ..query.filters import Pred, translate
 from ..session import local_frame
+from .read import _keys_predicate
 
 STATUS_NEW = "NEW"
 STATUS_UPDATED = "UPDATED"
@@ -34,7 +36,10 @@ STATUS_NOT_CREATED = "NOT_CREATED"  # insert-only hit existing / update-only mis
 STATUS_DELETED = "DELETED"
 STATUS_PATCHED = "PATCHED"
 STATUS_CONDITION_NOT_MET = "CONDITION_NOT_MET"
-STATUS_NOT_FOUND = "NOT_FOUND"
+# the remaining PatchResult codes (proto:3192-3249)
+STATUS_CREATED = "CREATED"
+STATUS_CAP_EXCEEDED = "CAP_EXCEEDED"
+STATUS_KEY_NOT_FOUND = "KEY_NOT_FOUND"
 
 
 def set_treasures(
@@ -135,6 +140,12 @@ _META_FIELDS = (
 )
 
 
+def _now_us(now_us: Optional[int]) -> int:
+    import time as _time
+
+    return int(now_us if now_us is not None else _time.time_ns() // 1_000)
+
+
 def _meta_value(meta: Optional[IncrementMeta], attr: str, is_now: bool, now_us: int):
     if meta is None:
         return F.lit(None).cast("long" if is_now or attr == "expired_at" else "string")
@@ -230,9 +241,7 @@ def increment(
         created.alias("created"),
     ]
     if meta_if_not_exist is not None or meta_if_exist is not None:
-        import time as _time
-
-        now = int(now_us if now_us is not None else _time.time_ns() // 1_000)
+        now = _now_us(now_us)
         for out_name, attr, is_now in _META_FIELDS:
             cols.append(
                 F.when(
@@ -323,14 +332,49 @@ class PatchMeta:
     stamped on PATCHED rows. ``clear_expired_at`` takes precedence over
     ``set_expired_at`` (proto:3163). The proto's SetCreatedAt/
     SetCreatedBy fire only on treasures CREATED in the call and are
-    "ignored on existing treasures" (proto:3159-3161) — this operator
-    patches existing rows, so they are a reference-faithful no-op and
-    deliberately absent (creation is ``set_treasures``' job)."""
+    "ignored on existing treasures" (proto:3159-3161); they are absent
+    here, and a row created by CreateIfNotExist carries the same
+    updated_* stamps as a patched one."""
 
     updated_at: bool = False
     updated_by: Optional[str] = None
     set_expired_at: Optional[int] = None  # epoch µs TTL
     clear_expired_at: bool = False
+
+
+def _meta_stamps(
+    columns: Sequence[str], branches, now: int, expired_col: str
+) -> dict:
+    """The PatchMeta stamps (proto:3140-3165) as column expressions:
+    ``branches`` is a list of ``(applies, meta)``; a row where
+    ``applies`` holds takes that meta's stamps, every other row keeps
+    its value. Only the columns some meta stamps are returned, and a
+    stamped column missing from ``columns`` starts as a typed NULL."""
+    out: dict = {}
+    for applies, m in branches:
+        if m is None:
+            continue
+        stamps = []
+        if m.updated_at:
+            stamps.append(("updated_at_us", "long", F.lit(now)))
+        if m.updated_by is not None:
+            stamps.append(("updated_by", "string", F.lit(m.updated_by)))
+        if m.clear_expired_at:  # precedence over set (proto:3163)
+            stamps.append((expired_col, "timestamp", F.lit(None).cast("timestamp")))
+        elif m.set_expired_at is not None:
+            stamps.append(
+                (
+                    expired_col,
+                    "timestamp",
+                    F.timestamp_micros(F.lit(int(m.set_expired_at))),
+                )
+            )
+        for name, dtype, value in stamps:
+            prev = out.get(name)
+            if prev is None:
+                prev = F.col(name) if name in columns else F.lit(None).cast(dtype)
+            out[name] = F.when(applies, value).otherwise(prev)
+    return out
 
 
 def patch_treasures(
@@ -343,11 +387,11 @@ def patch_treasures(
     expired_col: str = "expired_at",
     now_us: Optional[int] = None,
 ) -> DataFrame:
-    """Reference ``PatchTreasures`` (proto:2988-3177, msgpackpatch pkg):
-    an ordered op-list applied atomically per row, gated by an optional
-    per-row PatchCondition. Untouched fields stay identical (the
-    reference's core invariant, property_test.go) — here structurally
-    guaranteed by withField.
+    """The ``PatchTreasures`` op algebra over every row of ``base``
+    (proto:2988-3177, msgpackpatch pkg): an ordered op-list applied
+    atomically per row, gated by an optional per-row PatchCondition.
+    Untouched fields stay identical (the reference's core invariant,
+    property_test.go) — here structurally guaranteed by withField.
 
     ``meta`` stamps PATCHED rows (proto:3140-3165): updated_at_us /
     updated_by top-level columns (added as typed nulls if absent), and
@@ -358,7 +402,9 @@ def patch_treasures(
     ``now_us`` pins the stamp clock for deterministic replays.
 
     Returns all rows with the (possibly) patched body and
-    ``patch_status`` ∈ PATCHED / CONDITION_NOT_MET."""
+    ``patch_status`` ∈ PATCHED / CONDITION_NOT_MET. The keyed request
+    (per-key entries, CreateIfNotExist, Cap) is
+    :func:`patch_each_batch`."""
     structural = condition is None
     patched = F.col(body_col)
     for op in ops:
@@ -376,269 +422,18 @@ def patch_treasures(
     # the condition boundary
     cols = {body_col: new_body, "patch_status": status}
     if meta is not None:
-        import time as _time
-
-        now = int(now_us if now_us is not None else _time.time_ns() // 1_000)
-
-        def keep(col_name: str, dtype: str):
-            return (
-                F.col(col_name)
-                if col_name in base.columns
-                else F.lit(None).cast(dtype)
-            )
-
-        if meta.updated_at:
-            cols["updated_at_us"] = F.when(cond, F.lit(now)).otherwise(
-                keep("updated_at_us", "long")
-            )
-        if meta.updated_by is not None:
-            cols["updated_by"] = F.when(cond, F.lit(meta.updated_by)).otherwise(
-                keep("updated_by", "string")
-            )
-        if meta.clear_expired_at:  # precedence over set (proto:3163)
-            cols[expired_col] = F.when(
-                cond, F.lit(None).cast("timestamp")
-            ).otherwise(keep(expired_col, "timestamp"))
-        elif meta.set_expired_at is not None:
-            cols[expired_col] = F.when(
-                cond, F.timestamp_micros(F.lit(int(meta.set_expired_at)))
-            ).otherwise(keep(expired_col, "timestamp"))
+        cols.update(
+            _meta_stamps(base.columns, [(cond, meta)], _now_us(now_us), expired_col)
+        )
     return base.withColumns(cols)
-
-
-@dataclass
-class PatchBatch:
-    """Result of :func:`patch_treasures_batch`: per-key status rows,
-    the full new state, and the accepted (patched/created) rows for
-    event emission. ``unpersist()`` releases the internal caches once
-    the caller has consumed all three frames."""
-
-    results: DataFrame
-    new_state: DataFrame
-    applied: DataFrame
-    _cached: DataFrame
-    _deps: tuple = ()
-
-    def unpersist(self) -> None:
-        self._cached.unpersist()
-        for d in self._deps:
-            d.unpersist()
-
-
-def patch_treasures_batch(
-    spark,
-    base: DataFrame,
-    keys: Sequence[str],
-    ops: Sequence[PatchOp],
-    condition: Optional[Pred] = None,
-    key_col: str = "key",
-    body_col: str = "body",
-    create_if_not_exist: bool = False,
-    seed_body=None,
-    meta: Optional[PatchMeta] = None,
-    now_us: Optional[int] = None,
-    cap=None,
-) -> PatchBatch:
-    """The ``PatchTreasuresRequest`` batch as a pure transformation
-    (proto:2988-3060): apply the op-list to the targeted keys (gated
-    by the per-row PatchCondition), optionally creating missing keys
-    from ``seed_body`` (CreateIfNotExist), with the reference's Cap
-    quota semantics (proto:3023-3040, gateway_patch.go capPreCount +
-    swamp_patch.go PatchFields):
-
-    - the rows of ``base`` currently matching ``cap.filter`` are
-      counted ONCE, giving a (no→yes) budget
-      ``max_matching - current`` (floored at 0);
-    - per key, IN REQUEST ORDER, only a patch that moves its row from
-      non-matching to matching consumes budget — (yes→yes), (yes→no)
-      and (no→no) patches always proceed;
-    - an over-budget (no→yes) key reports CAP_EXCEEDED and its row is
-      NOT mutated, while every accepted key still commits (per-key,
-      not whole-request, rejection);
-    - created rows never pre-match (swamp_patch.go:250-252 evaluates
-      preMatched only when !isCreate), so a matching created row is a
-      budget-consuming transition.
-
-    A created row whose condition fails — or that loses the cap race —
-    is rolled back out of ``new_state`` entirely, mirroring
-    swamp_patch.go's deferred ``creatingTreasures.Delete`` on the
-    unsaved path.
-
-    Scale: targeted rows are bounded by ``len(keys)`` (a request-sized
-    broadcast join against state), so the single-partition
-    request-order window and the bounded collect are both O(request),
-    never O(state); the cap pre-count is one scan-side aggregate.
-    """
-    from pyspark.sql import types as T
-    from pyspark.sql.window import Window
-
-    keys = list(dict.fromkeys(keys))
-    if cap is not None and cap.max_matching <= 0:
-        raise ValueError("Cap.max_matching must be > 0 (proto:3040)")
-    # resolve the meta timestamp ONCE: the targeted and created legs
-    # are patched by separate patch_treasures calls below and must
-    # stamp the same updated_at
-    if meta is not None and meta.updated_at and now_us is None:
-        import time as _time
-
-        now_us = int(_time.time_ns() // 1_000)
-    kdf = local_frame(
-        spark,
-        [(k, i) for i, k in enumerate(keys)],
-        f"{key_col} string, _req_idx int",
-    )
-    targeted = base.join(F.broadcast(kdf), key_col, "inner")
-
-    # stash the pre-patch row (for CAP_EXCEEDED revert) and the
-    # pre-patch cap membership; patch_treasures is a per-row
-    # projection, so patching the targeted and created legs separately
-    # and unioning is row-for-row identical to patching their union
-    orig_cols = [c for c in base.columns if c != key_col]
-
-    def _prep(frame):
-        w = frame.withColumn(
-            "_orig", F.struct(*[F.col(c) for c in orig_cols])
-        )
-        if cap is not None:
-            w = w.withColumn(
-                "_pre_match",
-                F.when(F.col("_created"), F.lit(False)).otherwise(
-                    F.coalesce(translate(cap.filter, w), F.lit(False))
-                ),
-            )
-        return patch_treasures(
-            w,
-            ops,
-            condition=condition,
-            key_col=key_col,
-            body_col=body_col,
-            meta=meta,
-            now_us=now_us,
-        )
-
-    # ONE state scan (r16, guide §1.2 fewer jobs): cache the patched
-    # TARGETED rows and collect the hit keys FROM that cache — the
-    # collect is itself the cache-fill action, where previously a
-    # separate hit_keys job scanned the state before the cache-fill
-    # scanned it again. Both frames are request-bounded (≤ len(keys)).
-    patched0 = _prep(targeted.withColumn("_created", F.lit(False))).cache()
-    hit_keys = {
-        r[0] for r in patched0.select(key_col).collect()
-    }  # bounded by len(keys)
-    missing = [k for k in keys if k not in hit_keys]
-
-    patched = patched0
-    if create_if_not_exist and missing:
-        body_type = base.schema[body_col].dataType
-        created_raw = local_frame(
-            spark,
-            [(k, keys.index(k), seed_body) for k in missing],
-            T.StructType(
-                [
-                    T.StructField(key_col, T.StringType(), False),
-                    T.StructField("_req_idx", T.IntegerType(), False),
-                    T.StructField(body_col, body_type, True),
-                ]
-            ),
-        )
-        for c, t in base.dtypes:
-            if c not in (key_col, body_col):
-                created_raw = created_raw.withColumn(c, F.lit(None).cast(t))
-        patched = patched.unionByName(
-            _prep(created_raw.withColumn("_created", F.lit(True)))
-        )
-
-    if cap is not None:
-        # capPreCount: whole-swamp, once, pre-mutation — as a broadcast
-        # 1-row aggregate folded into the same evaluation (the shift
-        # Cap design; no separate driver-side count job)
-        budget_df = base.agg(
-            F.greatest(
-                F.lit(0),
-                F.lit(int(cap.max_matching))
-                - F.count_if(
-                    F.coalesce(translate(cap.filter, base), F.lit(False))
-                ),
-            ).alias("_budget")
-        )
-        is_patched = F.col("patch_status") == STATUS_PATCHED
-        post_match = F.coalesce(translate(cap.filter, patched), F.lit(False))
-        trans = is_patched & ~F.col("_pre_match") & post_match
-        # running (no→yes) count in request order; the window is
-        # request-bounded (≤ len(keys) rows), so the single partition
-        # it implies is the same boundedness as the hit_keys collect
-        running = F.sum(F.when(trans, 1).otherwise(0)).over(
-            Window.orderBy("_req_idx").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        )
-        patched = patched.crossJoin(F.broadcast(budget_df)).withColumn(
-            "_capped", trans & (running > F.col("_budget"))
-        )
-    else:
-        patched = patched.withColumn("_capped", F.lit(False))
-    # the fill reads patched0's cache (plus the budget aggregate's one
-    # state scan under cap) — request-bounded rows, no second state scan
-    patched = patched.cache()
-    patched.count()
-
-    status = (
-        F.when(F.col("_capped"), F.lit("CAP_EXCEEDED"))
-        .when(
-            (F.col("patch_status") == STATUS_PATCHED) & F.col("_created"),
-            F.lit("CREATED"),
-        )
-        .otherwise(F.col("patch_status"))
-    )
-    results = patched.select(key_col, status.alias("patch_status"))
-    if missing and not create_if_not_exist:
-        results = results.unionByName(
-            local_frame(
-                spark,
-                [(k, "KEY_NOT_FOUND") for k in missing],
-                f"{key_col} string, patch_status string",
-            )
-        )
-
-    # new state: untargeted rows pass through; capped rows revert to
-    # their stashed original; unsaved created rows (condition failed
-    # or capped) are rolled back entirely
-    applied_pred = (
-        (F.col("patch_status") == STATUS_PATCHED) & ~F.col("_capped")
-    )
-    keep_row = ~F.col("_created") | applied_pred
-    out_types = dict(patched.dtypes)
-    aux = {key_col, "patch_status", "_created", "_orig", "_pre_match", "_capped", "_req_idx", "_budget"}
-    value_exprs = []
-    for c in patched.columns:
-        if c in aux:
-            continue
-        orig_val = (
-            F.col("_orig")[c] if c in orig_cols else F.lit(None).cast(out_types[c])
-        )
-        value_exprs.append(
-            F.when(F.col("_capped"), orig_val).otherwise(F.col(c)).alias(c)
-        )
-    new_rows = patched.filter(keep_row).select(F.col(key_col), *value_exprs)
-    untargeted = base.join(
-        F.broadcast(kdf.select(key_col)), key_col, "left_anti"
-    )
-    new_rows_types = dict(new_rows.dtypes)
-    for c in new_rows.columns:
-        if c not in untargeted.columns:
-            untargeted = untargeted.withColumn(c, F.lit(None).cast(new_rows_types[c]))
-    new_state = untargeted.unionByName(new_rows)
-
-    applied = patched.filter(applied_pred)
-    return PatchBatch(results, new_state, applied, patched, (patched0,))
 
 
 @dataclass
 class PatchEachBatch:
     """Result of :func:`patch_each_batch`: one status row per patch
-    ENTRY, the full new state, and the mutated rows for event emission.
-    ``unpersist()`` releases the internal cache once all three frames
-    are consumed."""
+    ENTRY, the full new state, and the mutated rows (with their
+    ``_created`` flag) for event emission. ``unpersist()`` releases the
+    request-sized cache once all three frames are consumed."""
 
     results: DataFrame
     new_state: DataFrame
@@ -659,27 +454,38 @@ def patch_each_batch(
     now_us: Optional[int] = None,
     expired_col: str = "expired_at",
     cap=None,
+    create_if_not_exist: bool = False,
+    seed_body=None,
 ) -> PatchEachBatch:
-    """The ``PatchTreasures`` request's EXACT shape (proto:2996-3010
-    ``TreasurePatch``) as a pure transformation: every patch entry
-    carries its own key, op-list, optional condition and optional
-    per-patch meta — ``patches`` is a sequence of ``(key, ops,
-    condition)`` or ``(key, ops, condition, meta)``.
+    """The ``PatchTreasuresRequest`` (proto:2988-3177) as a pure
+    transformation, in the request's exact shape (proto:2996-3010
+    ``TreasurePatch``): every patch entry carries its own key, op-list,
+    optional condition and optional per-patch meta — ``patches`` is a
+    sequence of ``(key, ops, condition)`` or ``(key, ops, condition,
+    meta)``. A request with one op-list for a key list is the entry
+    list ``[(k, ops, condition) for k in keys]``.
 
     Duplicate keys are allowed and run sequentially in declaration
     order (proto:2995-3001): a later patch on the same key observes
     the earlier patch's mutated body, so per-key conditions can
     implement the proto's partial-accept-counter pattern. A per-patch
     meta FULLY REPLACES the request-level ``meta`` for that patch
-    (proto:3063-3070, no merging).
+    (proto:3063-3070, no merging). A NULL condition is not met.
 
-    ``cap`` is the REQUEST-LEVEL quota (proto:3020-3040). Adjudicated
-    against the reference this round: ``TreasurePatch`` has NO per-patch
-    Cap field (proto:3045-3067 — Key/Ops/Condition/Meta only); the one
-    Cap on ``PatchTreasuresRequest`` spans the whole batch, and
-    gateway_patch.go:78-105 pre-counts matching records ONCE, then
-    threads one running ``budgetLeft`` through every sequential
-    ``PatchFields`` call (swamp_patch.go:244-261):
+    ``create_if_not_exist`` (request-level CreateIfNotExist): a missing
+    key gets a row seeded from ``seed_body`` (other columns NULL) that
+    entries patch like any row. Until one of its entries applies, the
+    seeded row never pre-matches the cap (swamp_patch.go:250-252
+    evaluates preMatched only when !isCreate), and if none applies it
+    is rolled back out of ``new_state`` (swamp_patch.go's deferred
+    ``creatingTreasures.Delete`` on the unsaved path). The entry that
+    first applies reports CREATED; later ones report PATCHED.
+
+    ``cap`` is the REQUEST-LEVEL quota (proto:3020-3040; ``TreasurePatch``
+    has no Cap field, proto:3045-3067). gateway_patch.go:78-105
+    pre-counts the rows of ``base`` matching ``cap.filter`` ONCE, then
+    threads one running budget ``max_matching - current`` through every
+    sequential ``PatchFields`` call (swamp_patch.go:244-261):
 
     - only an accepted (non-matching → matching) patch decrements the
       budget; (yes→yes), (yes→no) and (no→no) always proceed, and a
@@ -687,40 +493,40 @@ def patch_each_batch(
       budget write is the decrement);
     - a (no→yes) patch with no budget left reports CAP_EXCEEDED and its
       entry mutates nothing — a LATER entry on the same key then
-      observes the unchanged body (sequential feedback, which is why
-      the duplicate-key path cannot reuse the request-order window of
-      :func:`patch_treasures_batch`);
+      observes the unchanged body, and every accepted entry still
+      commits (per-entry, not whole-request, rejection);
     - pre/post matching is evaluated on the key's LIVE body at that
       entry's turn — i.e. after every earlier accepted entry.
 
-    Plan shape: entries split into rounds (round r = every key's r-th
+    Plan shape: only the targeted rows (``read._keys_predicate``:
+    ``isin`` or, above ``ISIN_THRESHOLD``, a broadcast semi-join) plus
+    the seeded rows are worked on and cached — O(request), never
+    O(state). Entries split into rounds (round r = every key's r-th
     patch); within a round, keys sharing an identical (ops, condition,
     meta) spec compile into one chained-CASE branch, and each round is
-    a single projection over the running frame — no join anywhere (key
-    membership is a request-bounded ``isin``). With ``cap`` set, each
-    round additionally runs ONE bounded probe (the round's keys only —
-    a scan-side isin filter, output ≤ len(entries) rows) to collect the
-    (cond, pre-match, post-match) bits, and the budget walk happens
-    driver-side in entry order — O(request) work, never O(state); the
-    pre-count is one scan-side aggregate, exactly like
-    :func:`patch_treasures_batch`.
+    a single projection over the running frame. With ``cap`` set, ONE
+    bounded probe job collects every round's (cond, pre-match,
+    post-match) bits plus the budget, and the budget walk happens
+    driver-side in entry order. ``new_state`` is the untargeted rows ∪
+    the kept targeted rows.
 
     Returns one result row PER PATCH ENTRY: ``(patch_index, key,
-    patch_status)`` with statuses PATCHED / CONDITION_NOT_MET /
-    CAP_EXCEEDED / KEY_NOT_FOUND (creation belongs to
-    :func:`patch_treasures_batch`'s CreateIfNotExist)."""
-    import time as _time
-
+    patch_status)`` with the PatchResult codes (proto:3192-3249)
+    PATCHED / CREATED / CONDITION_NOT_MET / CAP_EXCEEDED /
+    KEY_NOT_FOUND (missing key without CreateIfNotExist). The
+    type-error codes (TYPE_MISMATCH, PATH_INVALID, …) cannot occur
+    relationally — Catalyst rejects them at plan time."""
     if cap is not None and cap.max_matching <= 0:
         raise ValueError("Cap.max_matching must be > 0 (proto:3040)")
 
-    now = int(now_us if now_us is not None else _time.time_ns() // 1_000)
+    now = _now_us(now_us)
 
     if not patches:
         empty = local_frame(
             spark, [], f"patch_index int, {key_col} string, patch_status string"
         )
-        return PatchEachBatch(empty, base, base.limit(0), base.limit(0))
+        none = base.limit(0).withColumn("_created", F.lit(False))
+        return PatchEachBatch(empty, base, none, none)
 
     # split entries into rounds: round r holds each key's r-th patch
     rounds: list[list[tuple]] = []  # [(idx, key, ops, cond, meta)]
@@ -738,12 +544,31 @@ def patch_each_batch(
         if r == 0:
             all_keys.append(k)
 
-    def _keep(df, col_name: str, dtype: str):
-        return (
-            F.col(col_name) if col_name in df.columns else F.lit(None).cast(dtype)
-        )
+    # the request-sized working set: the targeted rows, plus one seeded
+    # row per missing key under CreateIfNotExist. ``_applied`` records
+    # whether any entry has applied to the row so far.
+    targeted = _keys_predicate(base, all_keys, key_col)
+    work = targeted.withColumn("_created", F.lit(False))
+    if create_if_not_exist:
+        seeds = local_frame(
+            spark,
+            [(k, seed_body) for k in all_keys],
+            T.StructType(
+                [
+                    T.StructField(key_col, T.StringType(), False),
+                    T.StructField(body_col, base.schema[body_col].dataType, True),
+                ]
+            ),
+        ).join(F.broadcast(targeted.select(key_col)), key_col, "left_anti")
+        for c, t in base.dtypes:
+            if c not in (key_col, body_col):
+                seeds = seeds.withColumn(c, F.lit(None).cast(t))
+        work = work.unionByName(seeds.withColumn("_created", F.lit(True)))
+    work = work.withColumn("_applied", F.lit(False))
 
     key_c = F.col(key_col)
+    # a seeded row none of whose entries has applied yet
+    pending = F.col("_created") & ~F.col("_applied")
 
     def _group(entries):
         # keys sharing an identical (ops, cond, meta) spec compile into
@@ -769,61 +594,46 @@ def patch_each_batch(
         body_expr = F.col(body_col)
         status_expr = F.lit(None).cast("string")
         hit = F.lit(False)
-        ua = _keep(out, "updated_at_us", "long")
-        ub = _keep(out, "updated_by", "string")
-        ex = _keep(out, expired_col, "timestamp")
-        stamps_meta = False
+        branches = []
         for (ops, cond, m), ks in groups_by_round[r]:
             member = key_c.isin(ks)
             patched = F.col(body_col)
             for op in ops:
                 # row-gated: schema must stay uniform across rows
                 patched = _apply_patch_op(patched, op, structural=False)
-            c = translate(cond, out) if cond is not None else F.lit(True)
+            c = (
+                F.coalesce(translate(cond, out), F.lit(False))
+                if cond is not None
+                else F.lit(True)
+            )
             applies = member & c & ~capped_c
             body_expr = F.when(applies, patched).otherwise(body_expr)
             status_expr = F.when(
                 member,
                 F.when(~c, F.lit(STATUS_CONDITION_NOT_MET))
-                .when(capped_c, F.lit("CAP_EXCEEDED"))
+                .when(capped_c, F.lit(STATUS_CAP_EXCEEDED))
+                .when(pending, F.lit(STATUS_CREATED))
                 .otherwise(F.lit(STATUS_PATCHED)),
             ).otherwise(status_expr)
             hit = hit | applies
-            if m is not None:
-                stamps_meta = True
-                if m.updated_at:
-                    ua = F.when(applies, F.lit(now)).otherwise(ua)
-                if m.updated_by is not None:
-                    ub = F.when(applies, F.lit(m.updated_by)).otherwise(ub)
-                if m.clear_expired_at:  # precedence (proto:3163)
-                    ex = F.when(
-                        applies, F.lit(None).cast("timestamp")
-                    ).otherwise(ex)
-                elif m.set_expired_at is not None:
-                    ex = F.when(
-                        applies,
-                        F.timestamp_micros(F.lit(int(m.set_expired_at))),
-                    ).otherwise(ex)
-        return body_expr, status_expr, hit, ua, ub, ex, stamps_meta
+            branches.append((applies, m))
+        stamps = _meta_stamps(out.columns, branches, now, expired_col)
+        return body_expr, status_expr, hit, stamps
 
     def _apply_round(out, r, capped_keys):
-        body_expr, status_expr, hit, ua, ub, ex, stamps_meta = _round_exprs(
-            out, r, capped_keys
-        )
+        body_expr, status_expr, hit, stamps = _round_exprs(out, r, capped_keys)
         idx_pairs = []
         for idx, k, _, _, _ in rounds[r]:
             idx_pairs += [F.lit(k), F.lit(idx)]
-        cols = {
-            body_col: body_expr,
-            f"_status_{r}": status_expr,
-            f"_idx_{r}": F.create_map(*idx_pairs)[key_c],
-            f"_hit_{r}": hit,
-        }
-        if stamps_meta:
-            cols["updated_at_us"] = ua
-            cols["updated_by"] = ub
-            cols[expired_col] = ex
-        return out.withColumns(cols)
+        return out.withColumns(
+            {
+                body_col: body_expr,
+                f"_status_{r}": status_expr,
+                f"_idx_{r}": F.create_map(*idx_pairs)[key_c],
+                "_applied": F.col("_applied") | hit,
+                **stamps,
+            }
+        )
 
     capped: list[set] = [set() for _ in rounds]
     found: "set | None" = None
@@ -843,7 +653,7 @@ def patch_each_batch(
         )
 
         def _chain(upto):
-            out = base
+            out = work
             for rr in range(upto):
                 out = _apply_round(out, rr, capped[rr])
             return out
@@ -851,26 +661,22 @@ def patch_each_batch(
         def _probe_frame(r):
             """The (cond, pre, post) bits of round r's keys as a lazy
             frame, post-match on the candidate-patched row (meta stamps
-            included, matching patch_treasures_batch). The isin filter
-            rides the untouched key column down to the scan; output is
-            <= len(rounds[r]) rows."""
+            included). Output is <= len(rounds[r]) rows."""
             out_r = _chain(r)
-            body_expr, status_expr, _, ua, ub, ex, stamps_meta = _round_exprs(
-                out_r, r, ()
-            )
+            body_expr, status_expr, _, stamps = _round_exprs(out_r, r, ())
             round_keys = [k for _, k, _, _, _ in rounds[r]]
-            probe_cols = {
-                "_cond_ok": F.coalesce(
-                    status_expr == F.lit(STATUS_PATCHED), F.lit(False)
-                ),
-                "_pre": F.coalesce(translate(cap.filter, out_r), F.lit(False)),
-                body_col: body_expr,
-            }
-            if stamps_meta:
-                probe_cols["updated_at_us"] = ua
-                probe_cols["updated_by"] = ub
-                probe_cols[expired_col] = ex
-            probe = out_r.filter(key_c.isin(round_keys)).withColumns(probe_cols)
+            probe = out_r.filter(key_c.isin(round_keys)).withColumns(
+                {
+                    "_cond_ok": F.coalesce(
+                        status_expr.isin(STATUS_PATCHED, STATUS_CREATED),
+                        F.lit(False),
+                    ),
+                    "_pre": ~pending
+                    & F.coalesce(translate(cap.filter, out_r), F.lit(False)),
+                    body_col: body_expr,
+                    **stamps,
+                }
+            )
             return probe.select(
                 key_c.alias("_k"),
                 "_cond_ok",
@@ -886,13 +692,11 @@ def patch_each_batch(
                 for row in _probe_frame(r).collect()
             }
 
-        # ONE upfront job for EVERY round's bits plus the budget (r16,
-        # guide §1.2 fewer jobs; previously one pre-count job + one job
-        # per round): the union is computed optimistically with NO
-        # capped keys — valid because a probe row is only wrong for a
-        # key one of whose EARLIER entries got capped, which is exactly
-        # the staleness the walk below already tracks and lazily
-        # re-probes.
+        # ONE upfront job for EVERY round's bits plus the budget: the
+        # union is computed optimistically with NO capped keys — valid
+        # because a probe row is only wrong for a key one of whose
+        # EARLIER entries got capped, which is exactly the staleness
+        # the walk below tracks and lazily re-probes.
         union = None
         for r in range(len(rounds)):
             pf = _probe_frame(r).withColumn("_round", F.lit(r))
@@ -900,18 +704,12 @@ def patch_each_batch(
         probe_rows = union.crossJoin(F.broadcast(budget_df)).collect()
         probes: dict[int, dict] = {r: {} for r in range(len(rounds))}
         stale: dict[int, set] = {r: set() for r in range(len(rounds))}
-        budget = None
+        budget = 0  # stays 0 when no key is present: nothing can spend
         for row in probe_rows:
             probes[row["_round"]][row["_k"]] = (
                 row["_cond_ok"], row["_pre"], row["_post"],
             )
-            budget = row["_budget"]
-        if budget is None:
-            # every requested key is missing: no probe row carried the
-            # broadcast budget — irrelevant to the walk (nothing can
-            # spend), but keep the variable an int
-            budget = 0
-        budget = int(budget)
+            budget = int(row["_budget"])
         # round-0 probes cover every key's first occurrence, so the
         # request's present-key set falls out of the same job
         found = set(probes[0])
@@ -947,27 +745,14 @@ def patch_each_batch(
                         if r2 > r:
                             stale[r2].add(k)
 
-    out = base
+    out = work
     for r in range(len(rounds)):
         out = _apply_round(out, r, capped[r])
-    any_patched_cols = [f"_hit_{r}" for r in range(len(rounds))]
-
-    aux = [
-        c
-        for r in range(len(rounds))
-        for c in (f"_status_{r}", f"_idx_{r}", f"_hit_{r}")
-    ]
     out = out.cache()
-    if found is None:
+    if found is None and not create_if_not_exist:
         # the present-key collect IS the cache-fill action (one job;
-        # bounded by len(patches)) — the cap path already knows the
-        # set from its probe job and only needs the fill
-        found = {
-            row[0]
-            for row in out.filter(key_c.isin(all_keys))
-            .select(key_col)
-            .collect()
-        }
+        # bounded by len(patches))
+        found = {row[0] for row in out.select(key_col).collect()}
     else:
         out.count()
 
@@ -982,26 +767,30 @@ def patch_each_batch(
     results = per_round[0]
     for p in per_round[1:]:
         results = results.unionByName(p)
-    nf = [
-        (idx, k)
-        for r_entries in rounds
-        for idx, k, _, _, _ in r_entries
-        if k not in found
-    ]
-    if nf:
-        results = results.unionByName(
-            local_frame(
-                spark,
-                [(idx, k, "KEY_NOT_FOUND") for idx, k in nf],
-                f"patch_index int, {key_col} string, patch_status string",
+    if not create_if_not_exist:
+        nf = [
+            (idx, k)
+            for r_entries in rounds
+            for idx, k, _, _, _ in r_entries
+            if k not in found
+        ]
+        if nf:
+            results = results.unionByName(
+                local_frame(
+                    spark,
+                    [(idx, k, STATUS_KEY_NOT_FOUND) for idx, k in nf],
+                    f"patch_index int, {key_col} string, patch_status string",
+                )
             )
-        )
 
-    new_state = out.drop(*aux)
-    hit_any = F.lit(False)
-    for c in any_patched_cols:
-        hit_any = hit_any | F.col(c)
-    changed = out.filter(hit_any)
+    aux = ["_created", "_applied"] + [
+        c for r in range(len(rounds)) for c in (f"_status_{r}", f"_idx_{r}")
+    ]
+    # a seeded row no entry applied to is rolled back
+    kept = out.filter(~F.col("_created") | F.col("_applied")).drop(*aux)
+    untargeted = _keys_predicate(base, all_keys, key_col, negate=True)
+    new_state = untargeted.unionByName(kept, allowMissingColumns=True)
+    changed = out.filter(F.col("_applied"))
     return PatchEachBatch(results, new_state, changed, out)
 
 

@@ -30,12 +30,21 @@ from ..session import local_frame
 ISIN_THRESHOLD = 256
 
 
-def _keys_predicate(df: DataFrame, keys: Sequence[str], key_column: str) -> DataFrame:
+def _keys_predicate(
+    df: DataFrame, keys: Sequence[str], key_column: str, negate: bool = False
+) -> DataFrame:
+    """The rows of ``df`` whose key is in ``keys`` — or, with
+    ``negate``, every other row (a NULL key counts as not listed)."""
     if len(keys) <= ISIN_THRESHOLD:
-        return df.filter(F.col(key_column).isin(list(keys)))
+        listed = F.col(key_column).isin(list(keys))
+        if negate:
+            return df.filter(~F.coalesce(listed, F.lit(False)))
+        return df.filter(listed)
     spark = df.sparkSession
     kdf = local_frame(spark, [(k,) for k in keys], [key_column])
-    return df.join(F.broadcast(kdf), key_column, "left_semi")
+    return df.join(
+        F.broadcast(kdf), key_column, "left_anti" if negate else "left_semi"
+    )
 
 
 def get(df: DataFrame, keys: Sequence[str], key_column: str = "key") -> DataFrame:

@@ -1244,72 +1244,21 @@ class TreasureStore:
         now_us: Optional[int] = None,
         cap: Optional[claims_ops.Cap] = None,
     ) -> DataFrame:
-        """Reference ``PatchTreasures`` (proto:2988-3177) as one
-        serialized transaction: apply the op-list to the targeted keys
-        (gated by the per-row PatchCondition), optionally CREATE
-        missing keys from ``seed_body`` first (CreateIfNotExist —
-        created rows are persisted with the seed, then the ops/
-        condition run over them like any row), stamp ``PatchMeta``,
-        persist, and emit UPDATED events for patched rows / NEW for
-        created ones.
-
-        ``cap`` is the patch quota (proto:3023-3040, gateway_patch.go
-        capPreCount + swamp_patch.go PatchFields): the rows of ``base``
-        currently matching ``cap.filter`` are counted ONCE, giving a
-        (no→yes) budget ``max_matching - current``; then per key, in
-        request order, only a patch that moves its row from
-        non-matching to matching consumes budget — (yes→yes),
-        (yes→no) and (no→no) patches always proceed. An over-budget
-        (no→yes) key reports CAP_EXCEEDED and its row is NOT mutated,
-        while every accepted key still commits (per-key, not
-        whole-request, rejection).
-
-        Returns per-key statuses using the proto's PatchResult codes
-        (proto:3192-3249): PATCHED, CREATED (created and patched),
-        CONDITION_NOT_MET, KEY_NOT_FOUND (missing and
-        create_if_not_exist=False), CAP_EXCEEDED. A created row whose
-        condition fails (or that loses the cap race) is ROLLED BACK —
-        not persisted, no event — mirroring swamp_patch.go's deferred
-        creatingTreasures.Delete on the unsaved path. The type-error
-        codes (TYPE_MISMATCH, PATH_INVALID, …) cannot occur
-        relationally — Catalyst rejects them at plan time.
-
-        The pure transformation lives in
-        :func:`operators.mutate.patch_treasures_batch` (oracle-gated by
-        the ``patch_cap_budget`` golden query); this wrapper adds the
-        serialized persist + event emission."""
-        if cap is None:
-            # a capped patch pre-counts the WHOLE swamp (proto:3023) —
-            # its base read must stay unscoped; without a cap the
-            # transaction touches only the listed keys' buckets
-            self._scope_to(keys)
-        batch_out = mutate_ops.patch_treasures_batch(
-            self.spark,
-            self.current(),
-            keys,
-            ops,
-            condition=condition,
-            key_col=self.key_col,
-            body_col=body_col,
-            create_if_not_exist=create_if_not_exist,
-            seed_body=seed_body,
-            meta=meta,
-            now_us=now_us,
-            cap=cap,
-        )
-        batch = self._write_version(batch_out.new_state)
-
-        value_cols = [c for c in batch_out.new_state.columns if c != self.key_col]
-        changed = batch_out.applied
-        events = changed.select(
-            F.col(self.key_col),
-            F.when(F.col("_created"), "NEW").otherwise("UPDATED").alias("op"),
-            self._payload(changed, value_cols).alias("new"),
-            F.lit(None).cast("string").alias("old"),
-        )
-        self._emit(events, batch)
-        batch_out.unpersist()
-        return batch_out.results
+        """Reference ``PatchTreasures`` (proto:2988-3177) with ONE
+        op-list and condition for every key: the entry list
+        ``[(k, ops, condition) for k in keys]`` (keys deduplicated in
+        order) run as :meth:`patch_each`'s transaction, plus the
+        request-level CreateIfNotExist from ``seed_body``. Returns
+        ``(key, patch_status)`` rows with the PatchResult codes
+        PATCHED / CREATED / CONDITION_NOT_MET / KEY_NOT_FOUND /
+        CAP_EXCEEDED; create, rollback and ``cap`` semantics are
+        :func:`operators.mutate.patch_each_batch`'s (oracle-gated by
+        the ``patch_cap_budget`` golden query)."""
+        entries = [(k, ops, condition) for k in dict.fromkeys(keys)]
+        return self._patch_txn(
+            entries, body_col, meta, now_us, "expired_at", cap,
+            create_if_not_exist, seed_body,
+        ).drop("patch_index")
 
     @_serialized
     def patch_each(
@@ -1322,33 +1271,36 @@ class TreasureStore:
         cap: Optional[claims_ops.Cap] = None,
     ) -> DataFrame:
         """The ``PatchTreasures`` request's EXACT shape (proto:2996-3010
-        ``TreasurePatch``): every patch entry carries its own key,
-        op-list, optional condition and optional per-patch meta —
-        ``patches`` is a sequence of ``(key, ops, condition)`` or
-        ``(key, ops, condition, meta)`` — applied in ONE serialized
-        transaction and one version write.
-
-        Duplicate keys are allowed and run sequentially in declaration
-        order (proto:2995-3001); a per-patch meta FULLY REPLACES the
-        request-level ``meta`` for that patch (proto:3063-3070).
-        ``cap`` is the REQUEST-LEVEL quota of proto:3020-3040 — the
-        reference has NO per-patch Cap (``TreasurePatch`` carries only
-        Key/Ops/Condition/Meta, proto:3045-3067); one budget threads
-        through the whole batch in entry order, and a capped entry
-        leaves its key's body unchanged for any LATER entry on the same
-        key to observe (gateway_patch.go:78-105 +
-        swamp_patch.go:244-261).
+        ``TreasurePatch``) as ONE serialized transaction and one version
+        write: every patch entry carries its own key, op-list, optional
+        condition and optional per-patch meta — ``patches`` is a
+        sequence of ``(key, ops, condition)`` or ``(key, ops,
+        condition, meta)``; duplicate keys run sequentially in
+        declaration order, and ``cap`` is the request-level quota.
 
         Returns one row PER PATCH ENTRY: ``(patch_index, key,
         patch_status)`` with patch_index the entry's position in
         ``patches`` (the proto preserves request order in the
-        response); statuses PATCHED / CONDITION_NOT_MET / CAP_EXCEEDED
-        / KEY_NOT_FOUND (creation belongs to :meth:`patch`'s
-        CreateIfNotExist).
+        response). The pure transformation (sequential and cap
+        semantics, plan shape) is
+        :func:`operators.mutate.patch_each_batch`; this wrapper adds the
+        serialized persist + UPDATED events."""
+        return self._patch_txn(patches, body_col, meta, now_us, expired_col, cap)
 
-        The pure transformation (plan shape, cap probes, scale notes)
-        lives in :func:`operators.mutate.patch_each_batch`; this
-        wrapper adds the serialized persist + event emission."""
+    def _patch_txn(
+        self,
+        patches: Sequence[tuple],
+        body_col: str,
+        meta: Optional["mutate_ops.PatchMeta"],
+        now_us: Optional[int],
+        expired_col: str,
+        cap: Optional[claims_ops.Cap],
+        create_if_not_exist: bool = False,
+        seed_body=None,
+    ) -> DataFrame:
+        """The body of :meth:`patch` and :meth:`patch_each` (run under
+        their transaction guard): persist the new state and emit NEW
+        events for created rows, UPDATED for patched ones."""
         # the proto shape allows an empty Patches list — no-op: no new
         # version, no events, an empty result frame
         if not patches:
@@ -1360,11 +1312,9 @@ class TreasureStore:
             # — its base read must stay unscoped; otherwise the
             # transaction touches only the entries' keys' buckets
             self._scope_to([p[0] for p in patches])
-        base = self.current()
-
         batch_out = mutate_ops.patch_each_batch(
             self.spark,
-            base,
+            self.current(),
             patches,
             key_col=self.key_col,
             body_col=body_col,
@@ -1372,6 +1322,8 @@ class TreasureStore:
             now_us=now_us,
             expired_col=expired_col,
             cap=cap,
+            create_if_not_exist=create_if_not_exist,
+            seed_body=seed_body,
         )
         batch = self._write_version(batch_out.new_state)
         value_cols = [c for c in batch_out.new_state.columns if c != self.key_col]
@@ -1379,7 +1331,7 @@ class TreasureStore:
         self._emit(
             changed.select(
                 F.col(self.key_col),
-                F.lit("UPDATED").alias("op"),
+                F.when(F.col("_created"), "NEW").otherwise("UPDATED").alias("op"),
                 self._payload(changed, value_cols).alias("new"),
                 F.lit(None).cast("string").alias("old"),
             ),
@@ -1387,7 +1339,6 @@ class TreasureStore:
         )
         batch_out.unpersist()
         return batch_out.results
-
 
     @_serialized
     def patch_expired(

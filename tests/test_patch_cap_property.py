@@ -2,7 +2,8 @@
 model of the reference contract (proto:3023-3040; gateway_patch.go
 capPreCount + swamp_patch.go PatchFields:247-261): for random base
 states, request key lists (with missing keys), INC deltas, conditions,
-create-mode and cap thresholds, `patch_treasures_batch` must agree
+create-mode and cap thresholds, `patch_each_batch` over the entry list
+`[(k, ops, condition) for k in keys]` must agree
 per key AND in the resulting state with the obvious sequential
 interpretation:
 
@@ -27,7 +28,7 @@ from hydraide_spark.operators.claims import Cap
 from hydraide_spark.operators.mutate import (
     PatchKind,
     PatchOp,
-    patch_treasures_batch,
+    patch_each_batch,
 )
 from hydraide_spark.query import Cmp, Op
 
@@ -93,12 +94,12 @@ def test_patch_cap_budget_matches_model(spark, scenario):
         [Row(key=k, body={"n": v}) for k, v in base.items()],
         "key string, body struct<n:bigint>",
     )
-    out = patch_treasures_batch(
+    ops = [PatchOp(PatchKind.INC, "n", delta)]
+    cond = Cmp("body.n", Op.LT, cond_thr) if cond_thr is not None else None
+    out = patch_each_batch(
         spark,
         df,
-        req,
-        [PatchOp(PatchKind.INC, "n", delta)],
-        condition=Cmp("body.n", Op.LT, cond_thr) if cond_thr is not None else None,
+        [(k, ops, cond) for k in req],
         create_if_not_exist=create,
         seed_body=(seed_n,),
         cap=Cap(Cmp("body.n", Op.GE, cap_thr), max_matching),

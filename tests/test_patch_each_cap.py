@@ -11,6 +11,10 @@
   (yes→no) never refunds, and pre/post matching is evaluated on the
   key's LIVE body at that entry's turn (after earlier accepted entries,
   including an earlier CAPPED entry leaving the body unchanged).
+- With CreateIfNotExist a missing key is seeded; the seeded row never
+  pre-matches (swamp_patch.go:250-252 checks preMatched only when
+  !isCreate) until one of its entries applies, that entry reports
+  CREATED, and a seeded row no entry applies to is rolled back.
 
 The fuzz model below is that loop verbatim.
 """
@@ -32,7 +36,7 @@ from hydraide_spark.query import Cmp, Op
 SCHEMA = "key string, body struct<n:bigint>"
 
 
-def _run(spark, base, entries, cap_thr, max_matching):
+def _run(spark, base, entries, cap_thr, max_matching, create=False, seed=0):
     df = spark.createDataFrame(
         [Row(key=k, body={"n": v}) for k, v in base.items()], SCHEMA
     )
@@ -49,6 +53,8 @@ def _run(spark, base, entries, cap_thr, max_matching):
         df,
         patches,
         cap=Cap(Cmp("body.n", Op.GE, cap_thr), max_matching),
+        create_if_not_exist=create,
+        seed_body=(seed,),
     )
     statuses = {
         r["patch_index"]: r["patch_status"] for r in out.results.collect()
@@ -58,21 +64,24 @@ def _run(spark, base, entries, cap_thr, max_matching):
     return statuses, state
 
 
-def _model(base, entries, cap_thr, max_matching):
-    """gateway_patch.go's loop: one budget, entry order, live bodies."""
+def _model(base, entries, cap_thr, max_matching, create=False, seed=0):
+    """gateway_patch.go's loop: one budget, entry order, live bodies;
+    a missing key is (re)seeded at each of its entries until one
+    applies."""
     state = dict(base)
     budget = max(0, max_matching - sum(1 for v in base.values() if v >= cap_thr))
     statuses = {}
     for i, (k, delta, cond_thr) in enumerate(entries):
-        if k not in state:
+        is_create = k not in state
+        if is_create and not create:
             statuses[i] = "KEY_NOT_FOUND"
             continue
-        old = state[k]
+        old = seed if is_create else state[k]
         if cond_thr is not None and not (old < cond_thr):
             statuses[i] = "CONDITION_NOT_MET"
-            continue
+            continue  # a seeded row stays unsaved
         new = old + delta
-        pre = old >= cap_thr
+        pre = (not is_create) and old >= cap_thr
         post = new >= cap_thr
         if not pre and post:
             if budget <= 0:
@@ -80,7 +89,7 @@ def _model(base, entries, cap_thr, max_matching):
                 continue  # un-mutated: the next entry on k sees old
             budget -= 1
         state[k] = new
-        statuses[i] = "PATCHED"
+        statuses[i] = "CREATED" if is_create else "PATCHED"
     return statuses, state
 
 
@@ -136,6 +145,44 @@ def test_yes_to_no_does_not_refund_budget(spark):
     assert state == {"a": 5, "b": 0, "c": 0}
 
 
+def test_duplicate_entries_on_created_key(spark):
+    # "miss" is seeded at 0. m@0 fails its condition (seed 0 is not
+    # < 0), so the row stays unsaved; m@1 applies and reports CREATED;
+    # m@2 patches the now-live row (PATCHED). Budget 1: m@1 (0→10,
+    # a seeded row never pre-matches) spends it; m@2 (10→12) is
+    # (yes→yes), free; b@3 (0→10) caps.
+    base = {"b": 0}
+    entries = [("miss", 5, 0), ("miss", 10, None), ("miss", 2, None), ("b", 10, None)]
+    statuses, state = _run(
+        spark, base, entries, cap_thr=10, max_matching=1, create=True, seed=0
+    )
+    assert statuses == {
+        0: "CONDITION_NOT_MET", 1: "CREATED", 2: "PATCHED", 3: "CAP_EXCEEDED",
+    }
+    assert state == {"b": 0, "miss": 12}
+    assert (statuses, state) == _model(
+        base, entries, 10, 1, create=True, seed=0
+    )
+
+    # every entry on a created key capped or failed: rolled back. z
+    # pre-matches, so the budget is 0 and m@0 (0→10) caps; m@1 sees
+    # the unchanged seed and fails its condition.
+    entries = [("miss", 10, None), ("miss", 20, 0)]
+    statuses, state = _run(
+        spark, {"z": 50}, entries, cap_thr=10, max_matching=1, create=True, seed=0
+    )
+    assert statuses == {0: "CAP_EXCEEDED", 1: "CONDITION_NOT_MET"}
+    assert state == {"z": 50}
+
+
+def test_null_condition_is_not_met(spark):
+    # a condition that evaluates to NULL (here on a NULL field) is not
+    # met: the entry reports CONDITION_NOT_MET and leaves the row as is
+    statuses, state = _run(spark, {"a": None}, [("a", 1, 5)], 10, 1)
+    assert statuses == {0: "CONDITION_NOT_MET"}
+    assert state == {"a": None}
+
+
 def test_cap_requires_positive_max_matching(spark):
     df = spark.createDataFrame([Row(key="a", body={"n": 1})], SCHEMA)
     with pytest.raises(ValueError):
@@ -167,7 +214,9 @@ def scenarios(draw):
     ]
     cap_thr = draw(st.integers(min_value=5, max_value=25))
     max_matching = draw(st.integers(min_value=1, max_value=4))
-    return base, entries, cap_thr, max_matching
+    create = draw(st.booleans())
+    seed = draw(st.integers(min_value=0, max_value=20))
+    return base, entries, cap_thr, max_matching, create, seed
 
 
 @settings(
@@ -177,8 +226,12 @@ def scenarios(draw):
 )
 @given(scenarios())
 def test_patch_each_cap_matches_sequential_model(spark, scenario):
-    base, entries, cap_thr, max_matching = scenario
-    got_status, got_state = _run(spark, base, entries, cap_thr, max_matching)
-    want_status, want_state = _model(base, entries, cap_thr, max_matching)
+    base, entries, cap_thr, max_matching, create, seed = scenario
+    got_status, got_state = _run(
+        spark, base, entries, cap_thr, max_matching, create, seed
+    )
+    want_status, want_state = _model(
+        base, entries, cap_thr, max_matching, create, seed
+    )
     assert got_status == want_status, scenario
     assert got_state == want_state, scenario

@@ -597,6 +597,31 @@ def test_store_patch_cap_budget_order_and_create_rollback(spark, tmp_path):
     assert "cbig3" in keys_now and "cbig4" not in keys_now  # capped create rolled back
 
 
+@pytest.mark.parametrize("n_buckets", [None, 8], ids=["flat", "bucketed8"])
+def test_store_patch_delete_without_condition(spark, tmp_path, n_buckets):
+    """An unconditional DELETE through ``TreasureStore.patch`` nulls the
+    field on every listed row, exactly like the same op through
+    ``patch_each`` (the body schema stays uniform across rows, so the
+    untouched rows keep their value)."""
+    store = TreasureStore(spark, str(tmp_path / "delstore"), n_buckets=n_buckets)
+    store.init(
+        spark.createDataFrame(
+            [("a", (1, "x")), ("b", (2, "y")), ("c", (3, "z"))],
+            "key string, body struct<n:bigint,tag:string>",
+        )
+    )
+    res = store.patch(["a", "b"], [PatchOp(PatchKind.DELETE, "tag")])
+    assert {r["key"]: r["patch_status"] for r in res.collect()} == {
+        "a": "PATCHED", "b": "PATCHED",
+    }
+    state = {r["key"]: r["body"] for r in store.current().collect()}
+    assert state["a"]["tag"] is None and state["a"]["n"] == 1
+    assert state["b"]["tag"] is None and state["b"]["n"] == 2
+    assert state["c"]["tag"] == "z" and state["c"]["n"] == 3
+    ev = sorted((r["key"], r["op"]) for r in store.changes().collect())
+    assert ev == [("a", "UPDATED"), ("b", "UPDATED")]
+
+
 def test_store_patch_each_per_key_oplists(spark, tmp_path):
     """patch_each: the RPC's exact per-key TreasurePatch shape — every
     key with its own op-list + condition, one transaction, one version

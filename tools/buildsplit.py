@@ -6,7 +6,7 @@ returned frame (optimize + codegen + run).  Run SOLO (CLAUDE.md) —
 ambient Spark work invalidates the split.
 
 Usage: python tools/buildsplit.py [name1 name2 ...]
-  No names = the full HEADLINE registry.  REPS via BUILDSPLIT_REPS
+  No names = the full registry.  REPS via BUILDSPLIT_REPS
   (default 3; per-query median of each phase).  Prints one JSON line
   sorted by build-time descending.
 """
@@ -30,10 +30,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("buildsplit")
     qs = golden.queries()
-    if not names:
-        from bench import HEADLINE  # noqa: E402
-
-        names = [n for n in HEADLINE if n in qs]
+    names = names or list(qs)
     builds: dict[str, list[float]] = {n: [] for n in names}
     execs: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(reps):
