@@ -33,13 +33,70 @@ For callers that know they are done, ``release_pinned(site)`` /
 ``release_all_pinned()`` free everything deterministically (the
 PatchEachBatch.unpersist discipline) — e.g. at the end of a request, or in
 tests asserting no cached RDDs remain.
+
+The one memo
+------------
+``memo(key, build)`` is the only value memo in the package. One rule
+decides what may enter it: plans, models and input constants may
+memo; query OUTPUTS may not. Every action on a memoized value's
+consumer still computes its output from the inputs. ``key[0]`` names
+the kind of entry:
+
+- ``"model"``: a deterministic training that is a pure function of
+  its key — hash-bounded samples, fixed seeds and iterations, exact
+  decimal sums (IVF/PQ codebooks, label means, the langid and DSIR
+  tables, the quality classifier). Siblings and repeat calls share
+  ONE training per application; the queries measure serving.
+- ``"input"``: a constant that is a pure function of immutable
+  inputs — a table's reader metadata (path, schema, nanosecond
+  columns; every read still issues a FRESH
+  ``spark.read.schema(...).parquet(path)``, so each frame has its own
+  expression IDs — memoizing the table FRAME breaks self-joins with
+  AMBIGUOUS_SELF_JOIN), a row count feeding a synthetic modulus, a
+  point-lookup query vector, a statistic feeding a request's cap.
+  One bounded job per key, never a query result.
+- ``"plan"``: a lazy result DataFrame whose build is pure plan
+  construction. A DataFrame is a PLAN, never data, so this memoizes
+  strictly less than a model memo; it saves the per-call py4j round
+  trips and the JVM re-analysis of large literal subtrees (every
+  classic-API op re-analyzes the whole tree below it: ~1-3 s per call
+  on langid's 5x2048-decimal model). A build may memo its plan ONLY
+  if it runs no action whose effect or result feeds the plan as
+  anything but a memoized model or input constant: training that IS
+  the output (BPE merge rules), PRF's round-1 collect, patch walks,
+  MMR's greedy, driver-replay cluster/rank collects, increment's
+  hit-key set and scratch-file writers may not — skipping those on a
+  repeat call would memoize the OUTPUT. An engine call that counts or
+  collects its input to pick a parameter (auto LSH bits, auto shingle
+  length, min/max binning) or checkpoints it is such an action too.
+  ``tests/test_frame_memo.py`` rebuilds every plan golden under a job
+  group with its models and inputs warm and fails on any job.
+- ``"column"``: an UNRESOLVED Column expression tree (the WARC
+  grammar, the HTML extractor). Columns carry no analyzed exprIds, so
+  one tree is safe to embed in any number of plans; rebuilding costs
+  only py4j round trips (0.2-0.5 s). ``build`` must be a pure
+  function of the key; callers that return mutable containers copy
+  before mutating.
+
+Every key is prefixed with the active applicationId, so a restarted
+context rebuilds instead of handing out dead JVM references. Every
+build runs under a pin capture and every hit replays the captured
+``pin_latest`` calls, so a memoized value rotates its call sites
+exactly like a rebuild would — the ``_same_plan`` eviction guard then
+keeps its deps warm as if the caller still re-pinned per call, and
+shared sites need no exclusion. ``build()`` runs outside the lock
+(it may run Spark jobs, and nested ``memo`` calls take the lock);
+when two threads build one key, the first stored value wins and the
+loser gets it, with its pins replayed.
 """
 
 from __future__ import annotations
 
+import contextlib
 import threading
-from typing import Dict, List, Tuple
+from typing import Callable, Dict, List, Tuple, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 #: generations kept per call site — sized to the largest query-variant
@@ -61,32 +118,11 @@ _PINNED: Dict[str, List[Tuple[DataFrame, ...]]] = {}
 #: uses an RLock)
 _LOCK = threading.Lock()
 
+#: the one memo store: (applicationId, kind, ...) -> (value, pins)
+_MEMO: dict = {}
+_KINDS = ("plan", "model", "input", "column")
 
-#: per-SparkContext memo of UNRESOLVED Column expression trees (r16)
-_COLUMN_MEMO: dict = {}
-
-
-def column_memo(key: tuple, build):
-    """Memo of UNRESOLVED Column expression trees, keyed per active
-    SparkContext. Columns (unlike DataFrames) carry no analyzed
-    exprIds — they are immutable unresolved trees safe to embed in any
-    number of plans — so rebuilding one per call costs only py4j round
-    trips (measured 0.2-0.5 s for the WARC grammar / HTML extractor).
-    The applicationId in the key drops stale JVM references after a
-    context restart. ``build`` must be a pure function of ``key``;
-    callers that return mutable containers must copy before mutating."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    app = sc.applicationId if sc is not None else None
-    k = (app,) + tuple(key)
-    with _LOCK:
-        if k in _COLUMN_MEMO:
-            return _COLUMN_MEMO[k]
-    val = build()
-    with _LOCK:
-        _COLUMN_MEMO.setdefault(k, val)
-        return _COLUMN_MEMO[k]
+T = TypeVar("T")
 
 
 def _unpersist_all(deps: Tuple[DataFrame, ...]) -> None:
@@ -109,32 +145,24 @@ def _same_plan(a: DataFrame, b: DataFrame) -> bool:
         return False
 
 
-#: thread-local capture of pin_latest calls (r16): frame_memo records
-#: the pins its build made so memo HITS can re-pin them — a memoized
-#: caller is then indistinguishable from a rebuild for site rotation,
-#: and the _same_plan eviction guard protects its deps exactly as if
-#: it still re-pinned per call.
+#: thread-local stack of pin captures: memo records the pins its build
+#: made (nested builds all see each pin) so a hit can replay them
 _PIN_CAPTURE = threading.local()
 
 
-def capture_pins():
-    """Context manager collecting (site, deps, max_generations) for
-    every pin_latest issued inside the block (this thread only)."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _cm():
-        stack = getattr(_PIN_CAPTURE, "stack", None)
-        if stack is None:
-            stack = _PIN_CAPTURE.stack = []
-        rec: list = []
-        stack.append(rec)
-        try:
-            yield rec
-        finally:
-            stack.pop()
-
-    return _cm()
+@contextlib.contextmanager
+def _capture_pins():
+    """Collect (site, deps, max_generations) for every pin_latest
+    issued inside the block (this thread only)."""
+    stack = getattr(_PIN_CAPTURE, "stack", None)
+    if stack is None:
+        stack = _PIN_CAPTURE.stack = []
+    rec: list = []
+    stack.append(rec)
+    try:
+        yield rec
+    finally:
+        stack.pop()
 
 
 def pin_latest(site: str, *deps: DataFrame, max_generations: int | None = None) -> None:
@@ -181,3 +209,27 @@ def release_all_pinned() -> None:
     for _site, gens in drained:
         for gen in gens:
             _unpersist_all(gen)
+
+
+def memo(key: tuple, build: Callable[[], T]) -> T:
+    """Return the value memoized under ``key`` in the active
+    application, building it with ``build()`` on a miss. ``key[0]`` is
+    the kind (``"plan"``, ``"model"``, ``"input"`` or ``"column"``; see
+    the module docstring for what each may hold). A hit replays the
+    ``pin_latest`` calls the build made."""
+    if key[0] not in _KINDS:
+        raise ValueError(f"memo kind must be one of {_KINDS}, got {key[0]!r}")
+    sc = SparkContext._active_spark_context
+    k = (sc.applicationId if sc is not None else None,) + tuple(key)
+    with _LOCK:
+        hit = _MEMO.get(k)
+    if hit is None:
+        with _capture_pins() as pins:
+            mine = (build(), tuple(pins))
+        with _LOCK:
+            hit = _MEMO.setdefault(k, mine)
+        if hit is mine:
+            return hit[0]
+    for site, deps, mg in hit[1]:
+        pin_latest(site, *deps, max_generations=mg)
+    return hit[0]

@@ -108,11 +108,11 @@ def warc_fields(record: Column) -> "dict[str, Column]":
        corpora; real archives go through :func:`warc_fields_binary`
        (byte-exact, charset-resolving). tests pin the failure mode.
     """
-    from ._cache import column_memo
+    from ._cache import memo
 
     return dict(
-        column_memo(
-            ("warc_fields", str(record)), lambda: _warc_grammar(record)
+        memo(
+            ("column", "warc_fields", str(record)), lambda: _warc_grammar(record)
         )
     )
 
@@ -198,7 +198,7 @@ def warc_fields_binary(record: Column) -> "dict[str, Column]":
 
     Still zero UDFs: projection, slicing, charset choice and decode
     are all column expressions — map-only at any corpus size."""
-    from ._cache import column_memo
+    from ._cache import memo
 
     def _build() -> "dict[str, Column]":
         f = _warc_grammar(F.decode(record, "ISO-8859-1"))
@@ -212,7 +212,7 @@ def warc_fields_binary(record: Column) -> "dict[str, Column]":
     # the grammar is a pure (large) expression tree over `record` —
     # memo it per context/input expression; copy so callers may pop
     return dict(
-        column_memo(("warc_fields_binary", str(record)), _build)
+        memo(("column", "warc_fields_binary", str(record)), _build)
     )
 
 

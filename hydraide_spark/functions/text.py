@@ -1636,10 +1636,10 @@ def html_main_text(
 
     Entity decode happens after tag stripping, so escaped markup in
     text can never be re-parsed as markup."""
-    from ._cache import column_memo
+    from ._cache import memo
 
-    return column_memo(
-        ("html_main_text", str(html), int(min_words)),
+    return memo(
+        ("column", "html_main_text", str(html), int(min_words)),
         lambda: _html_main_text_build(html, min_words),
     )
 

@@ -2,29 +2,12 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-
-#: per-process memo of the reader METADATA for the immutable sf_dir
-#: fixture tables (r16, guide §1.2/§7.3 driver-side planning cost):
-#: ``load_table`` costs ~0.10-0.15 s PER CALL, ~2/3 of it footer schema
-#: inference + the pyarrow timestamp classification — and the bench's
-#: 240 goldens load ~2 tables each, so tens of seconds of pure
-#: plan-build per pass re-derive byte-identical metadata. The memo
-#: holds (path, schema, nanos-columns) ONLY — pure-Python values, no
-#: JVM refs — and every ``t()`` call still issues a FRESH
-#: ``spark.read.schema(...).parquet(path)`` (~0.03-0.07 s), so each
-#: returned frame has its own expression IDs. (Memoizing the FRAME
-#: itself broke self-join disambiguation: a query that loads one table
-#: twice — directly or via a derived frame like partsupp — then shares
-#: expression IDs across both join sides and Catalyst raises
-#: AMBIGUOUS_SELF_JOIN; tpch_q2_min_cost_supplier caught it.) Every
-#: action still lists and scans the parquet inputs — this is the
-#: n_rows_memo/input-constant convention, not result caching.
 from weakref import WeakKeyDictionary
 
-from ..sources.tables import _ensure_nanos_conf, _timestamp_columns
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-_TABLE_META_MEMO: dict = {}
+from ..functions._cache import memo
+from ..sources.tables import _ensure_nanos_conf, _timestamp_columns
 
 #: sessions whose nanosAsLong/inferTimestampNTZ confs are already set
 #: (keyed weakly — a stopped driver session must not mask its
@@ -33,109 +16,45 @@ _CONF_SESSIONS: "WeakKeyDictionary" = WeakKeyDictionary()
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load fixture table ``name`` as a FRESH frame. Its reader
+    metadata is an input memo: ``load_table`` derives it in ~0.1 s per
+    call (footer schema inference and the pyarrow timestamp
+    classification), about two tables per golden."""
     import os
 
     if spark not in _CONF_SESSIONS:
         _ensure_nanos_conf(spark)
         _CONF_SESSIONS[spark] = True
-    key = (sf_dir, name)
-    meta = _TABLE_META_MEMO.get(key)
-    if meta is None:
+
+    def _meta():
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             path = os.path.join(sf_dir, name)
-        raw = spark.read.parquet(path)
         nanos, _ = _timestamp_columns(path)
-        meta = (path, raw.schema, tuple(nanos))
-        _TABLE_META_MEMO[key] = meta
-    path, schema, nanos = meta
+        return path, spark.read.parquet(path).schema, tuple(nanos)
+
+    path, schema, nanos = memo(("input", "table_meta", sf_dir, name), _meta)
     df = spark.read.schema(schema).parquet(path)
     for col in nanos:
         df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
     return df
 
 
-#: per-process memo of INPUT CONSTANTS that are pure functions of the
-#: immutable sf_dir fixtures (row counts feeding synthetic-graph
-#: moduli, the point-lookup query vector) — the vectors._model_memo
-#: convention. These cache one bounded scalar job per (sf_dir, args),
-#: never any query RESULT: every invocation still computes its output
-#: from the parquet inputs.
-_STAT_MEMO: dict = {}
-
-
 def n_rows_memo(spark: SparkSession, sf_dir: str, name: str) -> int:
-    key = ("n_rows", sf_dir, name)
-    if key not in _STAT_MEMO:
-        _STAT_MEMO[key] = t(spark, sf_dir, name).count()
-    return _STAT_MEMO[key]
-
-
-def stat_memo(key: tuple, compute):
-    """Memo an INPUT CONSTANT that is a pure function of the immutable
-    sf_dir fixtures (same convention and same line as
-    :func:`n_rows_memo`: corpus statistics feeding request parameters
-    may memo; anything that IS a query's output may not)."""
-    if key not in _STAT_MEMO:
-        _STAT_MEMO[key] = compute()
-    return _STAT_MEMO[key]
-
-
-#: per-process memo of RESULT-FRAME PLANS for goldens whose build phase
-#: is pure DataFrame construction (r16 — VERDICT item 1, guide §7.3
-#: "very large plans can spend minutes in planning"). A lazy DataFrame
-#: is a PLAN, never data: every action on the memoized frame still
-#: computes the query's output from the parquet inputs (through the
-#: same pin_latest cache boundaries a fresh build would create), so the
-#: models-may-memo/results-may-not line is untouched — this memoizes
-#: strictly LESS than a model memo does (zero values, only an analyzed
-#: operator tree). What it saves is the per-call py4j round trips AND
-#: the JVM re-analysis of large literal subtrees (langid's 5x2048
-#: decimal model re-analyzed by every op stacked above it: ~1-3 s per
-#: call on the worst builders).
-#:
-#: Opt-in is deliberately NARROW. A golden may use frame_memo ONLY if
-#: its build phase runs no action whose effect or result feeds the
-#: returned plan as anything but a memoized MODEL/INPUT CONSTANT
-#: (bpe_merge_rules' training, PRF's round-1 collect, the patch walks,
-#: mmr's greedy, driver-replay cluster/rank collects, increment's
-#: hit-key set, and scratch-file writers are all excluded — skipping
-#: those on repeat calls would memoize the OUTPUT).
-#: Shared pin sites are safe: the build's pin_latest calls are
-#: CAPTURED (functions/_cache.capture_pins) and RE-PINNED on every
-#: memo hit, so a memoized golden is indistinguishable from a rebuild
-#: for site rotation — the _same_plan eviction guard keeps its deps
-#: warm exactly as if it still re-pinned per call.
-#: Keyed per applicationId so a restarted session rebuilds cleanly.
-_FRAME_MEMO: dict = {}
-
-
-def frame_memo(spark: SparkSession, key: tuple, build) -> DataFrame:
-    from ..functions._cache import capture_pins, pin_latest
-
-    k = (spark.sparkContext.applicationId,) + tuple(key)
-    hit = _FRAME_MEMO.get(k)
-    if hit is None:
-        with capture_pins() as pins:
-            frame = build()
-        hit = _FRAME_MEMO[k] = (frame, pins)
-    else:
-        for site, deps, mg in hit[1]:
-            pin_latest(site, *deps, max_generations=mg)
-    return hit[0]
+    """Row count of a fixture table, as an input memo."""
+    return memo(("input", "n_rows", sf_dir, name), lambda: t(spark, sf_dir, name).count())
 
 
 def memo_golden(name: str):
-    """Decorator form of :func:`frame_memo` for goldens whose whole
-    body is pure plan construction (see the opt-in rules above).
-    Stacks UNDER ``@golden`` so the registry holds the memoizing
-    wrapper."""
+    """Plan-memo a golden whose whole body is pure plan construction
+    (the ``"plan"`` rules in functions/_cache.py). Stacks UNDER
+    ``@golden`` so the registry holds the memoizing wrapper."""
     import functools
 
     def deco(fn):
         @functools.wraps(fn)
         def wrapped(spark, sf_dir):
-            return frame_memo(spark, (name, sf_dir), lambda: fn(spark, sf_dir))
+            return memo(("plan", name, sf_dir), lambda: fn(spark, sf_dir))
 
         return wrapped
 

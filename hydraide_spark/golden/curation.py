@@ -11,8 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions._cache import memo
 from . import golden
-from ._util import big, frame_memo, memo_golden, parallelize_small, t
+from ._util import big, memo_golden, parallelize_small, t
 
 # Engine-stable md5 bucket of a gram, as DuckDB SQL (mirrors
 # functions/sampling.py::sample_bucket md5 mode + dsir_bucket).
@@ -85,15 +86,14 @@ def dsir_importance_topk(spark, sf_dir):
     so Spark's decimal addition never overflows 38 and silently drops
     the last scale digit), TakeOrdered selection with id tiebreak."""
     from ..functions.sampling import dsir_logratios_tagged, dsir_topk
-    from .vectors import _model_memo
 
     def _build():
         docs = parallelize_small(t(spark, sf_dir, "documents"))
         # deterministic model (exact integer counts -> driver libm) —
         # memoized per process like the langid/quality trainings;
         # shared with dsir_threshold_select_docs (same predicate/params)
-        lr = _model_memo(
-            ("dsir_lr_de", sf_dir, 64, "dsir_v1"),
+        lr = memo(
+            ("model", "dsir_lr_de", sf_dir, 64, "dsir_v1"),
             lambda: dsir_logratios_tagged(
                 docs, F.col("lang") == "de", "text", n_buckets=64, salt="dsir_v1"
             ),
@@ -109,8 +109,8 @@ def dsir_importance_topk(spark, sf_dir):
             F.round(F.col("dsir_score").cast("double"), 10).alias("dsir_score"),
         )
 
-    # frame_memo (r16): pure plan over the memoized model, no pins
-    return frame_memo(spark, ("dsir_importance_topk", sf_dir), _build)
+    # plan memo (r16): pure plan over the memoized model, no pins
+    return memo(("plan", "dsir_importance_topk", sf_dir), _build)
 
 
 def _cos_sql(a: str, b: str) -> str:
@@ -642,12 +642,11 @@ def dsir_threshold_select_docs(spark, sf_dir):
     DECIMAL-exact on both sides; only the reported score rounds
     through double."""
     from ..functions.sampling import dsir_logratios_tagged, dsir_threshold_select
-    from .vectors import _model_memo
 
     def _build():
         docs = parallelize_small(t(spark, sf_dir, "documents"))
-        lr = _model_memo(
-            ("dsir_lr_de", sf_dir, 64, "dsir_v1"),
+        lr = memo(
+            ("model", "dsir_lr_de", sf_dir, 64, "dsir_v1"),
             lambda: dsir_logratios_tagged(
                 docs, F.col("lang") == "de", "text", n_buckets=64, salt="dsir_v1"
             ),
@@ -660,8 +659,8 @@ def dsir_threshold_select_docs(spark, sf_dir):
             F.round(F.col("dsir_score").cast("double"), 10).alias("dsir_score"),
         )
 
-    # frame_memo (r16): pure plan over the memoized model, no pins
-    return frame_memo(spark, ("dsir_threshold_select_docs", sf_dir), _build)
+    # plan memo (r16): pure plan over the memoized model, no pins
+    return memo(("plan", "dsir_threshold_select_docs", sf_dir), _build)
 
 
 _BM25_TERM_SQL = """
@@ -949,34 +948,30 @@ def langid_nb_predict_docs(spark, sf_dir):
     return _langid_pred_golden(spark, sf_dir, strategy=None)
 
 
-#: trained-model memo: training is deterministic (exact integer counts
-#: -> driver-quantized decimals), so the literal and broadcast goldens
-#: share ONE training per (sf_dir, params) within a process — the twin
-#: measures the SCORING strategy, not a redundant second training
-_LANGID_MODEL_MEMO: dict = {}
-
-
 def _langid_model(spark, sf_dir):
+    """Model memo: training is deterministic (exact integer counts ->
+    driver-quantized decimals), so the literal and broadcast goldens
+    share ONE training per (sf_dir, params) — the twin measures the
+    SCORING strategy, not a redundant second training."""
     from ..functions.sampling import langid_nb_train
 
-    key = (sf_dir, 2048, "lid_v1", 0.1)
-    if key not in _LANGID_MODEL_MEMO:
-        docs = t(spark, sf_dir, "documents")
-        _LANGID_MODEL_MEMO[key] = langid_nb_train(
-            docs, "lang", "text", n_buckets=2048, salt="lid_v1", smoothing=0.1
-        )
-    return _LANGID_MODEL_MEMO[key]
+    return memo(
+        ("model", "langid_nb", sf_dir, 2048, "lid_v1", 0.1),
+        lambda: langid_nb_train(
+            t(spark, sf_dir, "documents"), "lang", "text",
+            n_buckets=2048, salt="lid_v1", smoothing=0.1,
+        ),
+    )
 
 
 def _langid_pred_golden(spark, sf_dir, strategy):
-    # frame_memo (r16): build is pure plan once the model memo is warm,
+    # plan memo (r16): build is pure plan once the model memo is warm,
     # and the JVM re-ANALYZES the 5x2048-decimal literal subtree on
     # every op stacked above it (~0.9 s/call measured) — the worst
     # builder in the registry. Both strategies memoize, so the shared
     # buckets pin site never rotates a memoized dep out.
-    return frame_memo(
-        spark,
-        ("langid_pred", sf_dir, strategy),
+    return memo(
+        ("plan", "langid_pred", sf_dir, strategy),
         lambda: _langid_pred_build(spark, sf_dir, strategy),
     )
 
@@ -2535,9 +2530,9 @@ def sitemap_recrawl_schedule(spark, sf_dir):
             F.col("fetch_offset_sec").cast("double").alias("fetch_offset_sec"),
         )
 
-    # frame_memo (r16): pure plan — the four-operator composition costs
+    # plan memo (r16): pure plan — the four-operator composition costs
     # ~0.8 s of DataFrame construction per call, no actions, no pins
-    return frame_memo(spark, ("sitemap_recrawl_schedule", sf_dir), _build)
+    return memo(("plan", "sitemap_recrawl_schedule", sf_dir), _build)
 
 
 # --- HTML link-graph extraction (r15) ------------------------------------------

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window as W, functions as F
 
+from ..functions._cache import memo
 from ..functions.dedup import (
     minhash_incremental_pairs,
     exact_dedup,
@@ -31,7 +32,7 @@ from ..functions.text import (
 )
 from ..session import local_frame
 from . import golden
-from ._util import big, frame_memo, memo_golden, parallelize_small, t
+from ._util import big, memo_golden, parallelize_small, t
 
 
 def _augmented_corpus(spark, sf_dir):
@@ -1295,10 +1296,8 @@ def quality_trained_classifier_docs(spark, sf_dir):
         # deterministic training (exact integer counts, fixed lr/iters)
         # — one train per process, the langid/IVF memo convention; every
         # invocation still SCORES the corpus from parquet
-        from .vectors import _model_memo
-
-        model = _model_memo(
-            ("quality_gd", sf_dir),
+        model = memo(
+            ("model", "quality_gd", sf_dir),
             lambda: quality_train_weights_local(
                 labeled, "label", lr=2.0, iterations=200
             ),
@@ -1310,9 +1309,9 @@ def quality_trained_classifier_docs(spark, sf_dir):
             F.when(z >= 0.0, F.lit(1)).otherwise(F.lit(0)).alias("keep"),
         )
 
-    # frame_memo (r16): pure plan over the memoized training, no pins
-    return frame_memo(
-        spark, ("quality_trained_classifier_docs", sf_dir), _build
+    # plan memo (r16): pure plan over the memoized training, no pins
+    return memo(
+        ("plan", "quality_trained_classifier_docs", sf_dir), _build
     )
 
 
@@ -1473,7 +1472,6 @@ def bpe_token_frequencies(spark, sf_dir):
     bounded vocab (bit-identical to the Spark rounds — pinned in
     tests/test_text_signals.py)."""
     from ..functions.text import bpe_encode_token_counts, bpe_train_merges_local
-    from .vectors import _model_memo
 
     docs = parallelize_small(t(spark, sf_dir, "documents"))
     # the 12-merge table is the MODEL feeding the encode (the query's
@@ -1481,8 +1479,8 @@ def bpe_token_frequencies(spark, sf_dir):
     # every call) — memoized per process like the langid/quality/IVF
     # trainings; bpe_merge_rules, whose merges ARE the output, stays
     # unmemoized
-    merges = _model_memo(
-        ("bpe_merges", sf_dir, 12, 2),
+    merges = memo(
+        ("model", "bpe_merges", sf_dir, 12, 2),
         lambda: bpe_train_merges_local(docs, n_merges=12, min_freq=2),
     )
     out = bpe_encode_token_counts(docs, merges)
@@ -1836,7 +1834,6 @@ def minhash_lsh_neardup_stable(spark, sf_dir):
     WHERE 5 * inter >= 3 * (sa.n_sh + sb.n_sh - inter)
     """,
 )
-@memo_golden("ngram_jaccard_auto")
 def ngram_jaccard_auto(spark, sf_dir):
     """The corpus-scaled AUTO shingle length in the exact-Jaccard
     pipeline (functions/dedup.py::auto_shingle_n — the r6 scale fix
@@ -1915,7 +1912,6 @@ def ngram_jaccard_auto(spark, sf_dir):
     SELECT * FROM pairs UNION ALL SELECT * FROM star
     """,
 )
-@memo_golden("ngram_jaccard_auto_collapsed")
 def ngram_jaccard_auto_collapsed(spark, sf_dir):
     """The FULL production call of text near-dup — corpus-scaled auto
     shingle length AND exact-duplicate family collapse together (the

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..functions.graph import pagerank, triangle_count
 from . import golden
-from ._util import big, memo_golden, n_rows_memo, t
+from ._util import big, n_rows_memo, t
 
 _D = "'0.85'::DOUBLE"  # string-cast: exact strtod, same double as Python 0.85
 _ITERS = 4
@@ -128,7 +128,6 @@ def pagerank_citation_graph(spark, sf_dir):
     FROM members GROUP BY node
     """,
 )
-@memo_golden("triangle_counts_graph")
 def triangle_counts_graph(spark, sf_dir):
     """Per-node triangle participation over a deterministic chord graph
     on the documents ids (i—i+50, i—i+100: every i with i+100 in range

@@ -13,11 +13,12 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
+from ..functions._cache import memo
 from ..operators import claims as C
 from ..operators import mutate as M
 from ..query import And, Cmp, Index, IndexOrder, IndexType, Op
 from . import golden
-from ._util import ORDERS_SWAMP_SQL, big, orders_as_swamp, stat_memo, t
+from ._util import ORDERS_SWAMP_SQL, big, orders_as_swamp, t
 
 
 def _customer_kv(spark, sf_dir):
@@ -468,8 +469,8 @@ def patch_cap_budget(spark, sf_dir):
     )
     # input constant (fixture statistic -> the request's cap literal);
     # memoized per process like n_rows_memo
-    pre = stat_memo(
-        ("cust_bal_ge_9000", sf_dir),
+    pre = memo(
+        ("input", "cust_bal_ge_9000", sf_dir),
         lambda: base.filter(F.col("body.bal") >= 9000.0).count(),
     )
     keys = [str(i) for i in range(1, 11)] + ["xk-1", "xk-2"]
@@ -606,8 +607,8 @@ def patch_each_cap(spark, sf_dir):
     )
     # input constant (fixture statistic -> the request's cap literal);
     # memoized per process like n_rows_memo
-    pre = stat_memo(
-        ("cust_bal_ge_9000", sf_dir),
+    pre = memo(
+        ("input", "cust_bal_ge_9000", sf_dir),
         lambda: base.filter(F.col("body.bal") >= 9000.0).count(),
     )
     cond = Cmp("body.bal", Op.LT, 9500.0)

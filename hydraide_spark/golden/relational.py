@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from . import golden
-from ._util import big, dbl, dec, memo_golden, t
+from ._util import big, dbl, dec, t
 
 
 @golden(
@@ -278,7 +278,6 @@ _Z_SQL = _zsql(["pz", "sz"], bits=_Z_BITS)
     FROM b
     """,
 )
-@memo_golden("zorder_layout_keys")
 def zorder_layout_keys(spark, sf_dir):
     """Z-order (Morton) clustering key over (l_partkey, l_suppkey) —
     the multi-dimension generalization of the reference's single-beacon

@@ -13,10 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions._cache import memo
 from ..functions.retrieval import ranked_list, rrf_fuse
 from ..session import local_frame
 from . import golden
-from ._util import big, frame_memo, memo_golden, t
+from ._util import big, memo_golden, t
 from .vectors import _cos_sql, _query_vec
 
 _BM25_LEX_SQL = """
@@ -603,9 +604,9 @@ def retrieval_eval_metrics(spark, sf_dir):
             "ndcg_at_k",
         )
 
-    # frame_memo (r16): pure plan; all four eval goldens memoize, so
+    # plan memo (r16): pure plan; all four eval goldens memoize, so
     # the shared hits pin site never rotates
-    return frame_memo(spark, ("retrieval_eval_metrics", sf_dir), _build)
+    return memo(("plan", "retrieval_eval_metrics", sf_dir), _build)
 
 
 def _metrics_block(s: str, qcte: str) -> str:
@@ -745,9 +746,9 @@ def retrieval_run_compare(spark, sf_dir):
             run_of(tf_rank), run_of(tf_grade), labels, k=_EVAL_K
         )
 
-    # frame_memo (r16): pure plan; the shared hits dep pins one plan
+    # plan memo (r16): pure plan; the shared hits dep pins one plan
     # used by all four memoizing eval goldens — the site never rotates
-    return frame_memo(spark, ("retrieval_run_compare", sf_dir), _build)
+    return memo(("plan", "retrieval_run_compare", sf_dir), _build)
 
 
 def _sign_p_values_sql() -> str:
@@ -828,9 +829,9 @@ def retrieval_run_sign_test(spark, sf_dir):
             max_n=len(_EVAL_QUERIES),
         )
 
-    # frame_memo (r16): pure plan (p-table literals are a pure function
+    # plan memo (r16): pure plan (p-table literals are a pure function
     # of max_n — an input constant, never data)
-    return frame_memo(spark, ("retrieval_run_sign_test", sf_dir), _build)
+    return memo(("plan", "retrieval_run_sign_test", sf_dir), _build)
 
 
 _SWEEP_K0S = [5, 20, 60, 240]
@@ -997,9 +998,9 @@ def retrieval_param_sweep(spark, sf_dir):
             [run_of(tf_rank), run_of(tf_grade)], labels, _SWEEP_K0S, k=_EVAL_K
         )
 
-    # frame_memo (r16): pure plan; the sweep's joined persist pins at
+    # plan memo (r16): pure plan; the sweep's joined persist pins at
     # its own single-variant site
-    return frame_memo(spark, ("retrieval_param_sweep", sf_dir), _build)
+    return memo(("plan", "retrieval_param_sweep", sf_dir), _build)
 
 
 def _mmr_pick_cte(tag: str, lam_sql: str, one_minus_sql: str) -> str:

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ..functions.sketches import hll_group_sketches, hll_rollup
 from ..session import local_frame
 from . import golden
-from ._util import big, memo_golden, t
+from ._util import big, t
 
 
 @golden(
@@ -126,7 +126,6 @@ def cms_user_frequencies(spark, sf_dir):
     FROM pick, mm
     """,
 )
-@memo_golden("histogram_quantiles_events")
 def histogram_quantiles_events(spark, sf_dir):
     """Mergeable equi-width histogram quantiles over events.value
     (functions/sketches.py::histogram_quantiles): 128 bins, error ≤ one

@@ -7,26 +7,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions._cache import memo
 from ..functions.vector import cosine_topk, ivf_topk, lsh_topk, train_ivf_centroids
 from ..functions.dedup import embedding_neardup_pairs
 from ..query import VectorSim, translate
 from ..query.filters import cosine_similarity
 from . import golden
-from ._util import big, frame_memo, memo_golden, parallelize_small, t
-
-
-#: deterministic-model memo (the langid_nb convention): every trainer
-#: here is a pure function of (sf_dir, params) — hash-bounded samples,
-#: fixed seeds/iterations, exact decimal sums — so sibling goldens and
-#: repeat bench passes share ONE training per process; the queries
-#: measure SERVING, not a redundant re-train
-_MODEL_MEMO: dict = {}
-
-
-def _model_memo(key, fn):
-    if key not in _MODEL_MEMO:
-        _MODEL_MEMO[key] = fn()
-    return _MODEL_MEMO[key]
+from ._util import big, memo_golden, parallelize_small, t
 
 
 def _cos_sql(a: str, b: str) -> str:
@@ -51,7 +38,7 @@ def _query_vec(spark, sf_dir, vec_id: int = 0) -> list[float]:
         )
         return [float(x) for x in row["embedding"]]
 
-    return _model_memo(("query_vec", sf_dir, vec_id), _fetch)
+    return memo(("input", "query_vec", sf_dir, vec_id), _fetch)
 
 
 @golden(
@@ -290,7 +277,7 @@ def ann_topk_ivf(spark, sf_dir):
     candidates. Probabilistic recall — rows-only; the recall floor vs
     exact top-k is asserted in tests/test_dedup.py."""
     emb = parallelize_small(t(spark, sf_dir, "embeddings"))
-    centroids = _model_memo(("ivf8", sf_dir), lambda: train_ivf_centroids(emb, n_centroids=8))
+    centroids = memo(("model", "ivf8", sf_dir), lambda: train_ivf_centroids(emb, n_centroids=8))
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -386,8 +373,8 @@ def pq_encode_codes(spark, sf_dir):
     # deterministic model (exact decimal per-label means) — memoized
     # per process like the IVF/langid trainings; shared with the two
     # stable ADC goldens
-    books = _model_memo(
-        ("label_books", sf_dir, 8), lambda: label_pq_codebooks(emb, m=8)
+    books = memo(
+        ("model", "label_books", sf_dir, 8), lambda: label_pq_codebooks(emb, m=8)
     )
     out = pq_encode(emb, books, dim=64)
     return out.select(
@@ -412,7 +399,7 @@ def pq_ann_topk(spark, sf_dir):
     from ..functions.vector import pq_adc_topk, train_pq_codebooks
 
     emb = parallelize_small(t(spark, sf_dir, "embeddings"))
-    books = _model_memo(("pq816", sf_dir), lambda: train_pq_codebooks(emb, m=8, k=16))
+    books = memo(("model", "pq816", sf_dir), lambda: train_pq_codebooks(emb, m=8, k=16))
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -483,8 +470,8 @@ def semantic_dedup_docs(spark, sf_dir):
     from ._util import parallelize_small
 
     emb = parallelize_small(t(spark, sf_dir, "embeddings"))
-    cents = _model_memo(
-        ("label_means", sf_dir),
+    cents = memo(
+        ("model", "label_means", sf_dir),
         lambda: centroid_means(
             group_centroid_sums(emb, "label", "embedding").collect()
         ),
@@ -531,8 +518,8 @@ def kmeans_assign_exact(spark, sf_dir):
     from ..functions.vector import centroid_means, group_centroid_sums, kmeans_assign
 
     emb = parallelize_small(t(spark, sf_dir, "embeddings"))
-    cents = _model_memo(
-        ("label_means", sf_dir),
+    cents = memo(
+        ("model", "label_means", sf_dir),
         lambda: centroid_means(
             group_centroid_sums(emb, "label", "embedding").collect()
         ),
@@ -558,11 +545,11 @@ def ivfadc_topk_q(spark, sf_dir):
 
     def _build():
         emb = parallelize_small(t(spark, sf_dir, "embeddings"))
-        cells = _model_memo(
-            ("ivf8", sf_dir), lambda: train_ivf_centroids(emb, n_centroids=8)
+        cells = memo(
+            ("model", "ivf8", sf_dir), lambda: train_ivf_centroids(emb, n_centroids=8)
         )
-        books = _model_memo(
-            ("pq816", sf_dir), lambda: train_pq_codebooks(emb, m=8, k=16)
+        books = memo(
+            ("model", "pq816", sf_dir), lambda: train_pq_codebooks(emb, m=8, k=16)
         )
         queries = emb.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"),
@@ -577,8 +564,8 @@ def ivfadc_topk_q(spark, sf_dir):
             F.round("adist", 4).alias("adist"),
         )
 
-    # frame_memo (r16): pure plan over memoized models, no persists
-    return frame_memo(spark, ("ivfadc_topk", sf_dir), _build)
+    # plan memo (r16): pure plan over memoized models, no persists
+    return memo(("plan", "ivfadc_topk", sf_dir), _build)
 
 
 def _fold_dot(a: str, b: str) -> str:
@@ -745,8 +732,8 @@ def ann_recall_report(spark, sf_dir):
         from ._util import n_rows_memo
 
         n_rows = n_rows_memo(spark, sf_dir, "embeddings")
-        cents = _model_memo(
-            ("ivf_auto", sf_dir),
+        cents = memo(
+            ("model", "ivf_auto", sf_dir),
             lambda: train_ivf_centroids(emb, n_centroids=auto_ivf_k(n_rows)),
         )
         out = _rep(
@@ -763,7 +750,7 @@ def ann_recall_report(spark, sf_dir):
             F.col("recall"),
         )
 
-    # frame_memo (r16): ~5,300 py4j round trips per build (three router
+    # plan memo (r16): ~5,300 py4j round trips per build (three router
     # probes through ann_topk_auto); models are memoized, deps pin at
     # this golden's own sites only
-    return frame_memo(spark, ("ann_recall_report", sf_dir), _build)
+    return memo(("plan", "ann_recall_report", sf_dir), _build)

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions._cache import memo
 from ..functions.vector import (
     centroid_means,
     lsh_knn_self_join,
@@ -48,8 +49,7 @@ from ..functions.vector import (
     pq_adc_topk,
 )
 from . import golden
-from ._util import big, frame_memo, memo_golden, parallelize_small, t
-from .vectors import _model_memo
+from ._util import big, memo_golden, parallelize_small, t
 
 # ---------------------------------------------------------------- SQL
 
@@ -203,23 +203,21 @@ _LSH_BITS = 6
 _PLANES = make_planes(dim=64, n_bits=_LSH_BITS, seed=42)
 
 
-#: deterministic-model memo (the langid_nb convention): exact-decimal
-#: label means are a pure function of sf_dir, so the four stable
-#: goldens and repeat bench passes share one training per process
-_CENTROID_MEMO: dict = {}
-
-
 def _label_centroid_list(spark, sf_dir) -> list[list[float]]:
     """Per-label mean centroids ordered so index j == label j (labels
-    are contiguous from 0 in the embeddings table; asserted)."""
-    if sf_dir not in _CENTROID_MEMO:
+    are contiguous from 0 in the embeddings table; asserted). A model
+    memo: exact-decimal label means are a pure function of sf_dir, so
+    the four stable goldens share one training."""
+
+    def _train():
         emb = t(spark, sf_dir, "embeddings")
         cents = centroid_means(
             group_centroid_sums(emb, "label", "embedding").collect()
         )
         assert [lab for lab, _ in cents] == list(range(len(cents)))
-        _CENTROID_MEMO[sf_dir] = [vec for _, vec in cents]
-    return _CENTROID_MEMO[sf_dir]
+        return [vec for _, vec in cents]
+
+    return memo(("model", "label_centroids", sf_dir), _train)
 
 
 def _queries_df(emb):
@@ -355,8 +353,8 @@ def pq_ann_topk_stable(spark, sf_dir):
     contract of `pq_adc_topk`); only the codebook SOURCE differs from
     the trained rows-only variant."""
     emb = parallelize_small(t(spark, sf_dir, "embeddings"))
-    books = _model_memo(
-        ("label_books", sf_dir, 8), lambda: label_pq_codebooks(emb, m=8)
+    books = memo(
+        ("model", "label_books", sf_dir, 8), lambda: label_pq_codebooks(emb, m=8)
     )
     out = pq_adc_topk(emb, _queries_df(emb), books, dim=64, k=10, rerank_factor=10)
     return out.select(
@@ -400,8 +398,8 @@ def ivfadc_topk_stable(spark, sf_dir):
     def _build():
         emb = parallelize_small(t(spark, sf_dir, "embeddings"))
         cents = _label_centroid_list(spark, sf_dir)
-        books = _model_memo(
-            ("label_books", sf_dir, 8), lambda: label_pq_codebooks(emb, m=8)
+        books = memo(
+            ("model", "label_books", sf_dir, 8), lambda: label_pq_codebooks(emb, m=8)
         )
         out = ivfadc_topk(
             emb, _queries_df(emb), cents, books,
@@ -413,8 +411,8 @@ def ivfadc_topk_stable(spark, sf_dir):
             F.round("adist", 4).alias("adist"),
         )
 
-    # frame_memo (r16): pure plan over memoized models, no persists
-    return frame_memo(spark, ("ivfadc_topk_stable", sf_dir), _build)
+    # plan memo (r16): pure plan over memoized models, no persists
+    return memo(("plan", "ivfadc_topk_stable", sf_dir), _build)
 
 
 @golden(
@@ -618,7 +616,6 @@ _AUTO_CORPUS = """
     FROM cand WHERE score >= '0.95'::DOUBLE
     """,
 )
-@memo_golden("embedding_neardup_auto_stable")
 def embedding_neardup_auto_stable(spark, sf_dir):
     """Embedding near-dup with the CORPUS-SCALED blocking the 30x scale
     stress made necessary (fixed-cardinality label blocking measured
@@ -697,7 +694,6 @@ def embedding_neardup_auto_stable(spark, sf_dir):
     FROM cand WHERE est >= '0.95'::DOUBLE
     """,
 )
-@memo_golden("embedding_neardup_int8")
 def embedding_neardup_int8(spark, sf_dir):
     """Embedding near-dup with int8 codes as the VERIFY representation
     (r10): blocking identical to embedding_neardup_auto_stable (label ×
@@ -767,7 +763,6 @@ def embedding_neardup_int8(spark, sf_dir):
     FROM ranked WHERE rn <= 5
     """,
 )
-@memo_golden("knn_self_join_auto_stable")
 def knn_self_join_auto_stable(spark, sf_dir):
     """kNN-graph via the PRODUCTION auto-sized path (n_bits=None →
     auto_lsh_bits, target occupancy 32): the bucket-bit count the
@@ -914,7 +909,6 @@ def ann_topk_int8_ivf_stable(spark, sf_dir):
     FROM agg
     """,
 )
-@memo_golden("neardup_truth_eval")
 def neardup_truth_eval(spark, sf_dir):
     """r11 #200: planted-duplicate evaluation of a near-dup pipeline
     (functions/dedup.py::dedup_pair_truth_eval) — the threshold/
@@ -1012,7 +1006,6 @@ _SUB_BUCKET = "concat(" + ", ".join(
     FROM ranked WHERE rn <= 5
     """,
 )
-@memo_golden("knn_self_join_adaptive_stable")
 def knn_self_join_adaptive_stable(spark, sf_dir):
     """r12: the adaptive hot-bucket sub-split (×30 stress: auto bits
     pin MEAN occupancy but real embeddings cluster — max bucket 131 vs
@@ -1154,5 +1147,5 @@ def ann_recall_report_stable(spark, sf_dir):
             F.col("recall"),
         )
 
-    # frame_memo (r16): pure plan (stable models memoized), own-site pin
-    return frame_memo(spark, ("ann_recall_report_stable", sf_dir), _build)
+    # plan memo (r16): pure plan (stable models memoized), own-site pin
+    return memo(("plan", "ann_recall_report_stable", sf_dir), _build)

@@ -1307,14 +1307,19 @@ class TreasureStore:
             return local_frame(
                 self.spark, [], f"patch_index int, {self.key_col} string, patch_status string"
             )
+        # the transaction writes only the entries' keys' buckets; a
+        # capped request pre-counts the WHOLE swamp (proto:3023), so its
+        # base read stays unscoped and the scope is set after it, as on
+        # the claim paths
+        keys = [p[0] for p in patches]
         if cap is None:
-            # a capped request pre-counts the WHOLE swamp (proto:3023)
-            # — its base read must stay unscoped; otherwise the
-            # transaction touches only the entries' keys' buckets
-            self._scope_to([p[0] for p in patches])
+            self._scope_to(keys)
+        base = self.current()
+        if cap is not None:
+            self._scope_to(keys)
         batch_out = mutate_ops.patch_each_batch(
             self.spark,
-            self.current(),
+            base,
             patches,
             key_col=self.key_col,
             body_col=body_col,

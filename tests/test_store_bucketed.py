@@ -152,6 +152,39 @@ def test_bucketed_claim_write_prunes(spark, tmp_path):
     ]
 
 
+def test_bucketed_capped_patch_write_prunes(spark, tmp_path):
+    """A capped patch pre-counts the WHOLE store, yet its write is
+    scoped to the patched keys' buckets, as on the claim paths: the new
+    version owns only those buckets and the state equals the flat
+    layout's."""
+    from hydraide_spark.operators.claims import Cap
+    from hydraide_spark.operators.mutate import PatchKind, PatchOp
+    from hydraide_spark.query import Cmp, Op
+
+    schema = "key string, body struct<n:bigint>"
+    rows = [(f"k{i}", (i,)) for i in range(60)]
+    plain = TreasureStore(spark, str(tmp_path / "plain"))
+    buck = TreasureStore(spark, str(tmp_path / "buck"), n_buckets=8)
+    ops = [PatchOp(PatchKind.INC, "n", 100)]
+    # 10 rows pre-match (k50..k59); the budget admits both transitions
+    cap = Cap(Cmp("body.n", Op.GE, 50), 20)
+    statuses = []
+    for store in (plain, buck):
+        store.init(spark.createDataFrame(rows, schema))
+        out = store.patch(["k1", "k2"], ops, cap=cap)
+        statuses.append(sorted(map(tuple, out.collect())))
+    assert statuses[0] == statuses[1] == [("k1", "PATCHED"), ("k2", "PATCHED")]
+    v = buck.version
+    touched = set(buck._touched_buckets(["k1", "k2"]))
+    owners = buck._read_manifest(v)
+    assert len(owners) == 8 and len(touched) <= 2
+    assert {b for b, o in owners.items() if o == v} == touched
+    state = lambda s: sorted(  # noqa: E731
+        (r["key"], r["body"]["n"]) for r in s.current().collect()
+    )
+    assert state(buck) == state(plain)
+
+
 def test_bucketed_delete_retires_empty_bucket(spark, tmp_path):
     rows = [(f"k{i}", i, None) for i in range(30)]
     store = _mk(spark, tmp_path / "s", n_buckets=4, rows=rows)
