@@ -15,6 +15,21 @@ from typing import Iterable, Sequence, Union
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` when set, else 24g capped at three
+    quarters of physical RAM (in MiB), so a default JVM never asks for
+    more heap than a small host has."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem is not None:
+        return mem
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "24g"
+    return f"{max(1, min(24 * 1024, total * 3 // 4 // 2**20))}m"
+
+
 ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -35,7 +50,7 @@ ENGINE_CONF: dict[str, str] = {
     # AQE-chosen broadcast build inside it while the machine had 100+
     # GiB free). Only effective before the JVM starts; clusters size
     # driver/executor memory in deploy conf instead.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    "spark.driver.memory": _driver_memory(),
 }
 
 

@@ -29,7 +29,6 @@ pipeline runs — one admission stream, mixed modalities.
 from __future__ import annotations
 
 import os
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -173,7 +172,9 @@ def make_admission_ingest(
     tests). Batch rows carry (id, text[, payload]); a NULL payload
     means text-only (most pages), a NULL/empty text with a payload
     means media-only. All sides write epoch-keyed overwrites; the
-    single marker after all of them is the atomic publish point.
+    single marker after all of them is the atomic publish point. Same
+    loop contract as the single-modality ingests (each id delivered
+    once, ``state_compact.start_loop`` with ``state_dir/_checkpoint``).
 
     Besides the near-dup tables, each epoch writes an ``exact_bloom``
     word frame of the batch's raw texts (sketches.bloom_build): the
@@ -240,31 +241,6 @@ def make_admission_ingest(
         publish_epoch_marker(state_dir, epoch)
 
     return ingest
-
-
-def run_admission_ingest_loop(
-    spark: SparkSession,
-    items_stream: DataFrame,
-    state_dir: str,
-    tau: float,
-    queue_name: str = "admission_ingest",
-    checkpoint_dir: Optional[str] = None,
-    **kwargs,
-):
-    """Start the unified admission stream; same contracts as the
-    single-modality loops (each id delivered once, stable checkpoint
-    across restarts)."""
-    ingest = make_admission_ingest(spark, state_dir, tau, **kwargs)
-    return (
-        items_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_checkpoint"),
-        )
-        .foreachBatch(ingest)
-        .start()
-    )
 
 
 def admission_exact_seen(

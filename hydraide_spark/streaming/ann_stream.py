@@ -34,7 +34,7 @@ per-ingest shape an embedding pipeline actually runs.
 from __future__ import annotations
 
 import os
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
@@ -53,7 +53,9 @@ def make_ivf_ingest(
     vec_col: str = "embedding",
 ):
     """Build the per-micro-batch ingest function (exposed so tests can
-    replay an epoch and assert the overwrite-idempotence contract)."""
+    replay an epoch and assert the overwrite-idempotence contract).
+    Run it with ``state_compact.start_loop`` and a stable checkpoint
+    (``state_dir/_checkpoint``); the stream must deliver each id once."""
     cells_dir = os.path.join(state_dir, "cells")
 
     def ingest(batch_df: DataFrame, epoch: int) -> None:
@@ -72,36 +74,6 @@ def make_ivf_ingest(
         )
 
     return ingest
-
-
-def run_ivf_ingest_loop(
-    spark: SparkSession,
-    vec_stream: DataFrame,
-    state_dir: str,
-    centroids: Sequence[Sequence[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    queue_name: str = "ivf_ingest",
-    checkpoint_dir: Optional[str] = None,
-):
-    """Start the per-ingest IVF index stream; returns the
-    StreamingQuery. ``vec_stream`` must deliver each id once.
-    ``checkpoint_dir`` defaults to ``state_dir/_checkpoint`` — keep it
-    stable across restarts so retried epochs keep their ids and the
-    epoch-keyed overwrites stay idempotent."""
-    ingest = make_ivf_ingest(
-        spark, state_dir, centroids, id_col=id_col, vec_col=vec_col
-    )
-    return (
-        vec_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_checkpoint"),
-        )
-        .foreachBatch(ingest)
-        .start()
-    )
 
 
 def persisted_cells(

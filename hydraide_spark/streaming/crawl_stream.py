@@ -27,13 +27,16 @@ listing; no new shuffle, no new state beyond the admission tables.
 
 from __future__ import annotations
 
+import os
+import shutil
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.crawl import crawl_ingest_report
-from ..sources.warc import read_warc_files_stream
-from .admission_stream import make_admission_ingest, run_admission_ingest_loop
+from ..sources.warc import read_warc_files_stream, write_wet_files
+from .admission_stream import make_admission_ingest
+from .state_compact import start_loop
 
 
 def crawl_admission_items(
@@ -93,45 +96,23 @@ def run_crawl_ingest_loop(
         spark, path, glob=glob, max_files_per_trigger=max_files_per_trigger
     )
     items = crawl_admission_items(records, min_words=min_words)
-    if wet_dir is None:
-        return run_admission_ingest_loop(
-            spark,
-            items,
-            state_dir,
-            tau,
-            queue_name=queue_name,
-            checkpoint_dir=checkpoint_dir,
-            **kwargs,
-        )
-
-    import os
-    import shutil
-
-    from ..sources.warc import write_wet_files
-
     ingest = make_admission_ingest(spark, state_dir, tau, **kwargs)
 
-    def batch_fn(batch_df: DataFrame, epoch: int) -> None:
+    def ingest_with_wet(batch_df: DataFrame, epoch: int) -> None:
         if batch_df.isEmpty():
             return
         batch = batch_df.persist()
         try:
             epoch_dir = os.path.join(wet_dir, f"epoch={int(epoch)}")
             shutil.rmtree(epoch_dir, ignore_errors=True)
-            write_wet_files(
-                batch.select("canonical_uri", "text"), epoch_dir
-            )
+            write_wet_files(batch.select("canonical_uri", "text"), epoch_dir)
             ingest(batch, epoch)  # publishes the marker LAST
         finally:
             batch.unpersist()
 
-    return (
-        items.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_checkpoint"),
-        )
-        .foreachBatch(batch_fn)
-        .start()
+    return start_loop(
+        items,
+        ingest if wet_dir is None else ingest_with_wet,
+        queue_name,
+        checkpoint_dir or os.path.join(state_dir, "_checkpoint"),
     )

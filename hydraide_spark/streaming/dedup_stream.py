@@ -27,8 +27,9 @@ so a micro-batch that fails partway and is retried overwrites its own
 partial output instead of appending duplicates; the probe explicitly
 excludes the current epoch's partitions from the persisted index so a
 retry after the bands write still sees the same "old" index. Epoch ids
-are stable across restarts only with a checkpoint — the loop sets
-``checkpointLocation`` to ``state_dir/_checkpoint`` by default.
+are stable across restarts only with a stable checkpoint — start the
+loop as ``state_compact.start_loop(stream, make_ingest(...), name,
+os.path.join(state_dir, "_checkpoint"))``.
 
 **Commit-marker frontier (r13)**: the three tables form ONE logical
 epoch, published atomically by a ``_commits/epoch=N`` marker written
@@ -172,6 +173,9 @@ def make_ingest(
     directly). ``publish=False`` suppresses the commit marker — for a
     COMBINED ingest (the r13 unified admission state) that writes more
     tables under the same epoch and publishes once after all of them.
+    Run it with ``state_compact.start_loop`` and a stable checkpoint
+    (``state_dir/_checkpoint``); the stream must deliver each doc_id
+    once (a re-ingested id would re-pair against itself).
 
     ``timings``: pass a list and every ingest call appends
     ``{"epoch", "probe_bands", "candidates", "verify_write",
@@ -320,49 +324,6 @@ def make_ingest(
     return ingest
 
 
-def run_neardup_ingest_loop(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    state_dir: str,
-    tau: float,
-    n: int = 3,
-    k: int = 16,
-    bands: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    engine_stable: bool = False,
-    queue_name: str = "neardup_ingest",
-    checkpoint_dir: Optional[str] = None,
-):
-    """Start the per-ingest near-dup stream; returns the
-    StreamingQuery. ``docs_stream`` must deliver each doc_id once
-    (re-ingested ids would re-pair against themselves).
-    ``checkpoint_dir`` defaults to ``state_dir/_checkpoint`` — pass
-    the same one across restarts so retried epochs keep their ids and
-    the epoch-keyed overwrites stay idempotent."""
-    ingest = make_ingest(
-        spark,
-        state_dir,
-        tau,
-        n=n,
-        k=k,
-        bands=bands,
-        id_col=id_col,
-        text_col=text_col,
-        engine_stable=engine_stable,
-    )
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_checkpoint"),
-        )
-        .foreachBatch(ingest)
-        .start()
-    )
-
-
 def make_chunk_ingest(
     spark: SparkSession,
     state_dir: str,
@@ -386,7 +347,8 @@ def make_chunk_ingest(
     the packed key as the id. The crawl admission check at passage
     granularity: a page sharing one boilerplate paragraph with an
     earlier page pairs on arrival even when whole-doc Jaccard dilutes
-    the overlap away (the Lee et al. case)."""
+    the overlap away (the Lee et al. case). Same loop contract as
+    :func:`make_ingest`."""
     from ..functions.dedup import packed_chunk_frame
 
     inner = make_ingest(
@@ -409,43 +371,6 @@ def make_chunk_ingest(
         )
 
     return ingest
-
-
-def run_chunk_neardup_ingest_loop(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    state_dir: str,
-    tau: float,
-    chunk_size: int,
-    overlap: int = 0,
-    n: int = 3,
-    k: int = 16,
-    bands: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    engine_stable: bool = False,
-    queue_name: str = "chunk_neardup_ingest",
-    checkpoint_dir: Optional[str] = None,
-):
-    """Start the chunk-granularity near-dup stream; same contracts as
-    :func:`run_neardup_ingest_loop` (each doc_id delivered once, stable
-    checkpoint across restarts, epoch-keyed overwrites + the r13
-    commit-marker frontier)."""
-    ingest = make_chunk_ingest(
-        spark, state_dir, tau, chunk_size, overlap=overlap,
-        n=n, k=k, bands=bands, id_col=id_col, text_col=text_col,
-        engine_stable=engine_stable,
-    )
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_checkpoint"),
-        )
-        .foreachBatch(ingest)
-        .start()
-    )
 
 
 def chunk_ingested_pairs(

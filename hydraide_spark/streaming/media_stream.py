@@ -22,7 +22,6 @@ blocking key exactly as in batch mode.
 from __future__ import annotations
 
 import os
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -72,7 +71,8 @@ def make_media_ingest(
     relocate the state tables (the r13 unified admission state shares
     one dir with the text near-dup tables under prefixed names);
     ``publish=False`` suppresses the marker for a combined ingest that
-    publishes once after all its tables."""
+    publishes once after all its tables. Same loop contract as the text
+    ingest (dedup_stream.make_ingest): each media_id delivered once."""
     hashes_dir = os.path.join(state_dir, hashes_table)
     pairs_dir = os.path.join(state_dir, pairs_table)
 
@@ -118,38 +118,6 @@ def make_media_ingest(
         sigs_new.unpersist()
 
     return ingest
-
-
-def run_media_neardup_ingest_loop(
-    spark: SparkSession,
-    media_stream: DataFrame,
-    state_dir: str,
-    kind: str = "image",
-    algo: str = "dhash",
-    max_hamming: int = 3,
-    n_blocks: int = 4,
-    queue_name: str = "media_neardup_ingest",
-    checkpoint_dir: Optional[str] = None,
-):
-    """Start the media near-dup stream (``media_stream`` columns:
-    media_id, payload [, ...]; each media_id delivered once). Same
-    restart contract as the text loop: keep ``checkpoint_dir`` stable
-    so retried epochs keep their ids and the overwrites stay
-    idempotent."""
-    ingest = make_media_ingest(
-        spark, state_dir, kind=kind, algo=algo,
-        max_hamming=max_hamming, n_blocks=n_blocks,
-    )
-    return (
-        media_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_checkpoint"),
-        )
-        .foreachBatch(ingest)
-        .start()
-    )
 
 
 def media_pairs(

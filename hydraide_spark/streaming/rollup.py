@@ -1,32 +1,104 @@
-"""Continuous aggregate (hypertable-style rollup) maintenance: a
-time-bucketed aggregate table kept incrementally up to date as events
-stream in.
+"""Store-merge maintenance loops: summaries kept incrementally up to
+date in a :class:`TreasureStore` as events stream in — the
+time-bucketed rollup, the Count-Min, histogram and Bloom sketches, the
+DSIR bucket counts and the id-list reverse index.
 
 The reference keeps only a wall-clock rolling telemetry buffer
 (proto:2393-2458); a time-series store's continuous aggregate — the
 thing dashboards and training-data curricula read instead of raw
 events — is the standard scale upgrade. The design rule at 100 TB:
-NEVER recompute the rollup from the event history. Each micro-batch is
-partially aggregated (map-side combine inside the batch), then merged
-into the rollup store keyed by (window_start, group keys) — counts and
-decimal sums are associative, so batch-partial + stored-total is exact
-regardless of how events were batched. Per-batch work scales with the
-batch's distinct windows, not with history length; windows untouched by
-a batch are never read or rewritten, and subscribers get UPDATED change
-events only for the windows a batch actually moved (the store's
-no-op-suppression contract).
+NEVER recompute a summary from the event history. Each micro-batch is
+reduced to a partial frame (map-side combine inside the batch), then
+merged into the store keyed by its summary key through one merge
+(:func:`_merge`): a left join against the stored rows ON THE BATCH'S
+KEYS ONLY and a per-column combine — add for counts and decimal sums,
+``bitwiseOR`` for Bloom words, a sorted ``array_union`` for posting
+lists. Each combine is associative, so batch-partial + stored-total is
+exact regardless of how events were batched. Per-batch work scales
+with the batch's distinct keys, not with history length; keys
+untouched by a batch are never read or rewritten, and subscribers get
+UPDATED change events only for the keys a batch actually moved (the
+store's no-op-suppression contract).
+
+Every loop checkpoints at ``store.root/_checkpoint``
+(state_compact.start_loop): a restart resumes after the last committed
+batch instead of replaying the source into the store, and one
+checkpoint per store keeps one writer per store.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+import os
+from functools import reduce
+from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from ..sources.store import TreasureStore
 from ..session import local_frame
+from ..sources.store import TreasureStore
+from .state_compact import start_loop
+from .subscribe import trigger_for
 
 SUM_DECIMAL = "decimal(28,6)"
+
+Combine = Callable[[Column, Column], Column]
+
+
+def _add(stored: Column, batch: Column) -> Column:
+    return stored + batch
+
+
+def _merge(
+    store: TreasureStore,
+    part: DataFrame,
+    combine: "dict[str, Combine]",
+    *extra: DataFrame,
+) -> None:
+    """``store.set`` the batch's partial frame ``part`` (keyed by
+    ``key``) folded into the stored rows: a left join against
+    ``store.current()`` on the batch's keys only; each column named in
+    ``combine`` becomes ``combine[c](stored, batch)`` — the batch value
+    where the key is new — cast to the partial's type; the other
+    columns come from the batch. ``extra`` frames ride in the same
+    ``store.set``: one snapshot commit."""
+    cur = store.current().select(
+        F.col(store.key_col).alias("key"),
+        *[F.col(c).alias(f"_cur_{c}") for c in combine],
+    )
+    types = dict(part.dtypes)
+    merged = part.join(cur, "key", "left").select(
+        *[
+            F.coalesce(
+                combine[c](F.col(f"_cur_{c}"), F.col(c)).cast(types[c]), F.col(c)
+            ).alias(c)
+            if c in combine
+            else c
+            for c in part.columns
+        ]
+    )
+    store.set(reduce(DataFrame.unionByName, extra, merged))
+
+
+def _merge_loop(
+    store: TreasureStore,
+    stream: DataFrame,
+    queue_name: str,
+    partial: Callable[[DataFrame], DataFrame],
+    combine: "dict[str, Combine]",
+    trigger: "dict | None" = None,
+):
+    """Start a loop that merges each non-empty micro-batch's
+    ``partial(batch)`` into ``store`` (:func:`_merge`), checkpointed
+    at ``store.root/_checkpoint``."""
+
+    def merge(batch_df: DataFrame, _epoch: int) -> None:
+        if batch_df.isEmpty():
+            return
+        _merge(store, partial(batch_df), combine)
+
+    return start_loop(
+        stream, merge, queue_name, os.path.join(store.root, "_checkpoint"), trigger
+    )
 
 
 def rollup_batch(
@@ -64,42 +136,22 @@ def run_rollup_maintenance_loop(
     foreachBatch merge: partial-aggregate the batch, left-join the
     store's current rows ON THE BATCH'S KEYS ONLY, add counts/sums
     (associative — exact under any batching), ``store.set`` the merged
-    rows. Crash between snapshot write and checkpoint commit replays
-    the batch; the store's versioned snapshots make the re-merge
-    idempotent per epoch at-least-once — production tables would use a
-    Delta MERGE keyed by (window, epoch) for exactly-once."""
-
-    def merge(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        part = rollup_batch(batch_df, ts_col, window, key_cols, value_col)
-        cur = store.current().select(
-            "key",
-            F.col("n_events").alias("_cur_n"),
-            F.col("total").alias("_cur_total"),
-        )
-        updates = (
-            part.join(cur, "key", "left")
-            .select(
-                "key",
-                "window_start",
-                *key_cols,
-                (F.coalesce(F.col("_cur_n"), F.lit(0)) + F.col("n_events")).alias(
-                    "n_events"
-                ),
-                (
-                    F.coalesce(F.col("_cur_total"), F.lit(0).cast(SUM_DECIMAL))
-                    + F.col("total")
-                ).cast(SUM_DECIMAL).alias("total"),
-            )
-        )
-        store.set(updates)
-
-    return (
-        events_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .foreachBatch(merge)
-        .start()
+    rows. The loop checkpoints at ``store.root/_checkpoint``, so a
+    restart on the same store resumes after the last committed batch
+    instead of replaying the source. The add is NOT idempotent: a
+    batch whose ``store.set`` committed but whose checkpoint commit did
+    not (a crash between the two) is merged again on retry and counted
+    twice — at-least-once. The DSIR loop closes that window with an
+    epoch sentinel; production tables would use a Delta MERGE keyed by
+    (window, epoch) for exactly-once."""
+    return _merge_loop(
+        store,
+        events_stream,
+        queue_name,
+        lambda b: rollup_batch(b, ts_col, window, key_cols, value_col).withColumn(
+            "total", F.col("total").cast(SUM_DECIMAL)
+        ),
+        {"n_events": _add, "total": _add},
     )
 
 
@@ -121,29 +173,17 @@ def run_cms_maintenance_loop(
     depth×256 rows FOREVER, the reason to sketch the stream at all."""
     from ..functions.sketches import cms_build
 
-    def merge(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        part = cms_build(batch_df, value_col, depth).select(
+    return _merge_loop(
+        store,
+        events_stream,
+        queue_name,
+        lambda b: cms_build(b, value_col, depth).select(
             F.concat_ws("|", F.col("d").cast("string"), F.col("bucket")).alias("key"),
             "d",
             "bucket",
             "cnt",
-        )
-        cur = store.current().select("key", F.col("cnt").alias("_cur"))
-        updates = part.join(cur, "key", "left").select(
-            "key",
-            "d",
-            "bucket",
-            (F.coalesce(F.col("_cur"), F.lit(0)) + F.col("cnt")).alias("cnt"),
-        )
-        store.set(updates)
-
-    return (
-        events_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .foreachBatch(merge)
-        .start()
+        ),
+        {"cnt": _add},
     )
 
 
@@ -164,25 +204,14 @@ def run_histogram_maintenance_loop(
     and quantile reads walk the stored cells without touching events."""
     from ..functions.sketches import histogram_bins_fixed
 
-    def merge(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        part = histogram_bins_fixed(batch_df, value_col, lo, hi, bins).select(
+    return _merge_loop(
+        store,
+        events_stream,
+        queue_name,
+        lambda b: histogram_bins_fixed(b, value_col, lo, hi, bins).select(
             F.col("bin").cast("string").alias("key"), "bin", "cnt"
-        )
-        cur = store.current().select("key", F.col("cnt").alias("_cur"))
-        updates = part.join(cur, "key", "left").select(
-            "key",
-            "bin",
-            (F.coalesce(F.col("_cur"), F.lit(0)) + F.col("cnt")).alias("cnt"),
-        )
-        store.set(updates)
-
-    return (
-        events_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .foreachBatch(merge)
-        .start()
+        ),
+        {"cnt": _add},
     )
 
 
@@ -209,27 +238,54 @@ def run_bloom_maintenance_loop(
     history."""
     from ..functions.sketches import bloom_build
 
-    def merge(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        part = bloom_build(batch_df, value_col, n_bits=n_bits, k=k).select(
+    return _merge_loop(
+        store,
+        events_stream,
+        queue_name,
+        lambda b: bloom_build(b, value_col, n_bits=n_bits, k=k).select(
             F.col("word").cast("string").alias("key"), "word", "bits"
-        )
-        cur = store.current().select("key", F.col("bits").alias("_cur"))
-        updates = part.join(cur, "key", "left").select(
-            "key",
-            "word",
-            F.coalesce(F.col("_cur"), F.lit(0))
-            .bitwiseOR(F.col("bits"))
-            .alias("bits"),
-        )
-        store.set(updates)
+        ),
+        {"bits": lambda stored, batch: stored.bitwiseOR(batch)},
+    )
 
-    return (
-        events_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .foreachBatch(merge)
-        .start()
+
+def run_index_maintenance_loop(
+    store: TreasureStore,
+    docs_stream: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    ids_col: str = "ids",
+    queue_name: str = "index_maintenance",
+):
+    """Incremental reverse-index maintenance: every micro-batch of new
+    documents merges its (word -> doc ids) postings into the store —
+    the streaming form of the reference's production write path
+    (Trendizz crawls feed word->domain ``Uint32SlicePush`` swamps;
+    proto:378-396 auto-dedups the set). Returns the StreamingQuery.
+
+    Per batch: one explode+groupBy over ONLY the new documents, a
+    left join against the current posting snapshot, and a set-union
+    merge through ``store.set`` — so words untouched by the batch emit
+    nothing, re-added ids are NOTHING_CHANGED (no event, exactly the
+    reference's push semantics), and grown lists emit UPDATED change
+    events to subscribers. Work per batch scales with batch size, not
+    index size (the join is keyed on the batch's words only)."""
+    from ..functions.text import tokenize
+
+    return _merge_loop(
+        store,
+        docs_stream,
+        queue_name,
+        lambda b: b.select(
+            F.col(id_col).cast("long").alias("_id"),
+            F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("key"),
+        )
+        .groupBy("key")
+        .agg(F.array_sort(F.collect_set("_id")).alias(ids_col)),
+        {ids_col: lambda stored, batch: F.array_sort(F.array_union(stored, batch))},
+        # WriteInterval from the store's registered swamp pattern
+        # governs how often postings move to the durable index
+        trigger=trigger_for(store),
     )
 
 
@@ -259,9 +315,9 @@ def make_dsir_count_merge(
     def merge(batch_df: DataFrame, epoch: int) -> None:
         if batch_df.isEmpty():
             return
-        cur_all = store.current()
         last = (
-            cur_all.filter(F.col("key") == DSIR_EPOCH_KEY)
+            store.current()
+            .filter(F.col("key") == DSIR_EPOCH_KEY)
             .select("n")
             .head()
         )
@@ -271,25 +327,15 @@ def make_dsir_count_merge(
             batch_df, text_col, n_buckets, salt, method
         ).select(
             F.col("bucket").cast("string").alias("key"),
-            "bucket",
-            F.col("count").alias("n"),
-        )
-        cur = cur_all.filter(F.col("key") != DSIR_EPOCH_KEY).select(
-            "key", F.col("n").alias("_cur")
-        )
-        updates = part.join(cur, "key", "left").select(
-            "key",
             F.col("bucket").cast("long").alias("bucket"),
-            (F.coalesce(F.col("_cur"), F.lit(0)) + F.col("n"))
-            .cast("long")
-            .alias("n"),
+            F.col("count").cast("long").alias("n"),
         )
         sentinel = local_frame(
             batch_df.sparkSession,
             [(DSIR_EPOCH_KEY, -1, int(epoch))],
             "key string, bucket long, n long",
         )
-        store.set(updates.unionByName(sentinel))
+        _merge(store, part, {"n": _add}, sentinel)
 
     return merge
 
@@ -316,10 +362,9 @@ def run_dsir_count_maintenance_loop(
     bounded at B + 1 rows forever (the +1: the last-applied-epoch
     sentinel row that makes retried micro-batches no-ops — see
     :func:`make_dsir_count_merge`)."""
-    merge = make_dsir_count_merge(store, text_col, n_buckets, salt, method)
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .foreachBatch(merge)
-        .start()
+    return start_loop(
+        docs_stream,
+        make_dsir_count_merge(store, text_col, n_buckets, salt, method),
+        queue_name,
+        os.path.join(store.root, "_checkpoint"),
     )

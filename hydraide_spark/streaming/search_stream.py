@@ -3,12 +3,12 @@ postings layer that lets the whole hybrid-retrieval stack
 (functions/retrieval.py) run against PERSISTED, incrementally-built
 state instead of a batch corpus scan:
 
-- :func:`run_postings_ingest_loop` maintains two tables under
+- :func:`make_postings_ingest` maintains two tables under
   ``state_dir``: ``postings/`` (word, doc_id, tf) and ``doclen/``
   (doc_id, dl), written per micro-batch as epoch-keyed overwrites
   (the r8 exactly-once sink contract shared with dedup_stream /
   ann_stream — retried epochs replace their own partial output).
-  Unlike the id-list reverse index (streaming/subscribe.py
+  Unlike the id-list reverse index (streaming/rollup.py
   run_index_maintenance_loop — the reference's Uint32Slice posting
   swamps), these postings carry TERM FREQUENCY, which ranked
   retrieval (BM25) needs.
@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -68,7 +68,8 @@ def make_postings_ingest(
     text_col: str = "text",
 ):
     """Build the per-micro-batch ingest function (exposed for tests to
-    replay an epoch and assert overwrite idempotence)."""
+    replay an epoch and assert overwrite idempotence). Same loop
+    contract as :func:`make_search_ingest`."""
     post_dir = os.path.join(state_dir, "postings")
     dl_dir = os.path.join(state_dir, "doclen")
 
@@ -90,32 +91,6 @@ def make_postings_ingest(
         batch.unpersist()
 
     return ingest
-
-
-def run_postings_ingest_loop(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    state_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    queue_name: str = "postings_ingest",
-    checkpoint_dir: Optional[str] = None,
-):
-    """Start the incremental postings stream; returns the
-    StreamingQuery. ``docs_stream`` must deliver each doc once."""
-    ingest = make_postings_ingest(
-        spark, state_dir, id_col=id_col, text_col=text_col
-    )
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_checkpoint"),
-        )
-        .foreachBatch(ingest)
-        .start()
-    )
 
 
 def persisted_postings(
@@ -259,11 +234,12 @@ def hybrid_search_from_state(
 
 # --- unified one-epoch search state (r9) ------------------------------------
 #
-# The r8 design ran run_postings_ingest_loop and run_ivf_ingest_loop as
-# two independent streams, so hybrid_search_from_state could fuse a BM25
-# ranking and a dense ranking reflecting DIFFERENT ingest frontiers
-# (RRF degrades gracefully, but the semantics were unstated — r8 VERDICT
-# "what's missing" #1). The unified loop below maintains postings, doc
+# The r8 design ran the postings and IVF ingests (make_postings_ingest,
+# ann_stream.make_ivf_ingest) as two independent streams, so
+# hybrid_search_from_state could fuse a BM25 ranking and a dense ranking
+# reflecting DIFFERENT ingest frontiers (RRF degrades gracefully, but
+# the semantics were unstated — r8 VERDICT "what's missing" #1). The
+# unified ingest below (make_search_ingest) maintains postings, doc
 # lengths AND IVF cells in ONE foreachBatch under ONE epoch sequence,
 # and publishes each epoch with a commit marker written AFTER all three
 # tables' writes: readers take the marker set as the frontier, so a
@@ -272,7 +248,7 @@ def hybrid_search_from_state(
 # every query sees one consistent frontier (the reference analogue:
 # per-swamp FIFO commit order, hydra.go:950-1019).
 #
-# The r6 id-list run_index_maintenance_loop (streaming/subscribe.py)
+# The r6 id-list run_index_maintenance_loop (streaming/rollup.py)
 # remains the Uint32SlicePush-parity path (membership/AND-search only);
 # this tf-bearing loop subsumes it for ranked search.
 
@@ -499,7 +475,9 @@ def make_search_ingest(
     IVFADC serving form) — all written under the same epoch, then the
     commit marker. Each table write is the r8 epoch-keyed overwrite
     (retry-idempotent); the marker is the atomic publish point.
-    Exposed for tests to replay an epoch.
+    Exposed for tests to replay an epoch. Run it with
+    ``state_compact.start_loop`` and a stable checkpoint
+    (``state_dir/_checkpoint``); the stream must deliver each doc once.
 
     ``pq_codebooks``: explicit codebooks, else the stored ``_PQMODEL``
     (``store_pq_model``/``refresh_pq_model``); with neither, the
@@ -579,41 +557,6 @@ def make_search_ingest(
         )
 
     return ingest
-
-
-def run_search_ingest_loop(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    state_dir: str,
-    centroids=None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vec_col: str = "embedding",
-    queue_name: str = "search_ingest",
-    checkpoint_dir: Optional[str] = None,
-):
-    """Start the unified search-index stream (lexical + dense under one
-    epoch). ``docs_stream`` rows carry (id, text, embedding); keep
-    ``checkpoint_dir`` stable across restarts so retried epochs keep
-    their ids and the overwrites stay idempotent."""
-    ingest = make_search_ingest(
-        spark,
-        state_dir,
-        centroids,
-        id_col=id_col,
-        text_col=text_col,
-        vec_col=vec_col,
-    )
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_checkpoint"),
-        )
-        .foreachBatch(ingest)
-        .start()
-    )
 
 
 def hybrid_search_from_unified_state(

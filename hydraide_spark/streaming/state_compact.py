@@ -18,6 +18,10 @@ is its only implementation:
    per family through one call (:func:`compact_state` over declared
    :class:`Layout`\\ s), then prunes stale markers (one pruner).
 
+Every loop, stateful or not, starts through one call,
+:func:`start_loop` (``foreachBatch`` under the checkpoint its caller
+names).
+
 A long-running ingest leaves one directory per micro-batch, and a
 million tiny epoch dirs is the classic small-files problem (listing
 cost, open-per-file overhead, tiny row groups).
@@ -432,6 +436,34 @@ def _swap(
         os.rename(dst, os.path.join(table_dir, _OLD_NAME))
     os.rename(tmp, dst)
     _finish_swap(table_dir, dst)
+
+
+def start_loop(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    queue_name: str,
+    checkpoint_dir: "str | None" = None,
+    trigger: "dict | None" = None,
+):
+    """Start ``fn(batch_df, epoch)`` as a ``foreachBatch`` micro-batch
+    loop over ``stream``; returns the StreamingQuery. Every streaming
+    loop of the engine starts here.
+
+    ``checkpoint_dir`` is where Spark records the source offsets and
+    epoch ids. Keep it stable across restarts: a restart then resumes
+    after the last committed batch, and a retried batch keeps its epoch
+    id, so epoch-keyed overwrites and epoch sentinels stay idempotent.
+    The epoch-state ingests use ``state_dir/_checkpoint``; the store
+    merge loops use ``store.root/_checkpoint``. ``None`` gives Spark's
+    temporary checkpoint, which every start replays from the source's
+    beginning — only for loops whose progress lives in driver memory.
+    ``trigger``: ``DataStreamWriter.trigger`` kwargs."""
+    w = stream.writeStream.outputMode("append").queryName(queue_name)
+    if checkpoint_dir is not None:
+        w = w.option("checkpointLocation", checkpoint_dir)
+    if trigger is not None:
+        w = w.trigger(**trigger)
+    return w.foreachBatch(fn).start()
 
 
 def publish_epoch_marker(state_dir: str, epoch: int, payload=None) -> None:

@@ -33,6 +33,7 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.store import CHANGE_SCHEMA, TreasureStore
+from .state_compact import start_loop
 
 
 def trigger_for(store: TreasureStore) -> dict:
@@ -221,12 +222,7 @@ def subscribe_strict_fifo(
         .option("maxFilesPerTrigger", int(max_files_per_trigger))
         .parquet(store.changes_dir)
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        .foreachBatch(deliver)
-        .start()
-    )
+    q = start_loop(stream, deliver, queue_name)
     q.strict_drain = strict_drain
     return q
 
@@ -422,67 +418,6 @@ def streaming_exact_dedup(
     )
 
 
-def run_index_maintenance_loop(
-    store: TreasureStore,
-    docs_stream: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ids_col: str = "ids",
-    queue_name: str = "index_maintenance",
-):
-    """Incremental reverse-index maintenance: every micro-batch of new
-    documents merges its (word -> doc ids) postings into the store —
-    the streaming form of the reference's production write path
-    (Trendizz crawls feed word->domain ``Uint32SlicePush`` swamps;
-    proto:378-396 auto-dedups the set). Returns the StreamingQuery.
-
-    Per batch: one explode+groupBy over ONLY the new documents, a
-    left join against the current posting snapshot, and a set-union
-    merge through ``store.set`` — so words untouched by the batch emit
-    nothing, re-added ids are NOTHING_CHANGED (no event, exactly the
-    reference's push semantics), and grown lists emit UPDATED change
-    events to subscribers. Work per batch scales with batch size, not
-    index size (the join is keyed on the batch's words only)."""
-
-    def merge(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from ..functions.text import tokenize
-
-        new_post = (
-            batch_df.select(
-                F.col(id_col).cast("long").alias("_id"),
-                F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("key"),
-            )
-            .groupBy("key")
-            .agg(F.collect_set("_id").alias("_new_ids"))
-        )
-        cur = store.current().select(F.col(store.key_col).alias("key"), F.col(ids_col))
-        updates = (
-            new_post.join(cur, "key", "left")
-            .select(
-                "key",
-                F.array_sort(
-                    F.array_union(
-                        F.coalesce(F.col(ids_col), F.array().cast("array<bigint>")),
-                        F.col("_new_ids").cast("array<bigint>"),
-                    )
-                ).alias(ids_col),
-            )
-        )
-        store.set(updates)
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .queryName(queue_name)
-        # WriteInterval from the store's registered swamp pattern
-        # governs how often postings move to the durable index
-        .trigger(**trigger_for(store))
-        .foreachBatch(merge)
-        .start()
-    )
-
-
 def run_ttl_claim_loop(
     spark: SparkSession,
     store: TreasureStore,
@@ -513,10 +448,4 @@ def run_ttl_claim_loop(
         else trigger_for(store)
     )
     rate = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-    return (
-        rate.writeStream.trigger(**trig)
-        .outputMode("append")
-        .queryName(queue_name)
-        .foreachBatch(tick)
-        .start()
-    )
+    return start_loop(rate, tick, queue_name, trigger=trig)

@@ -102,10 +102,10 @@ def test_chunk_streaming_equals_batch_restriction(spark, tmp_path):
     over the full corpus once every doc has streamed — passages shared
     ACROSS micro-batches are the case that matters (the boilerplate
     paragraph arrived epochs earlier)."""
-    from hydraide_spark.streaming import (
-        chunk_ingested_pairs,
-        run_chunk_neardup_ingest_loop,
-    )
+    import os
+
+    from hydraide_spark.streaming import chunk_ingested_pairs, start_loop
+    from hydraide_spark.streaming.dedup_stream import make_chunk_ingest
 
     batches = _passage_corpus()
     schema = "doc_id long, text string"
@@ -121,8 +121,11 @@ def test_chunk_streaming_equals_batch_restriction(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     state = str(tmp_path / "chunk_state")
-    q = run_chunk_neardup_ingest_loop(
-        spark, stream, state, tau=0.6, chunk_size=16
+    q = start_loop(
+        stream,
+        make_chunk_ingest(spark, state, tau=0.6, chunk_size=16),
+        "chunk_neardup_ingest",
+        os.path.join(state, "_checkpoint"),
     )
     try:
         q.processAllAvailable()

@@ -1,9 +1,14 @@
-"""Driver-rows lint (no Spark): no module under ``hydraide_spark/`` calls
-``.createDataFrame(`` except inside ``session.local_frame``. A list
-``createDataFrame`` is a ``parallelize`` re-serialized through a
-``PythonRDD``, so every job that scans the frame starts Python workers;
-``local_frame`` builds the same schema as an Arrow-backed LocalRelation
-instead."""
+"""Spark-free lints over ``hydraide_spark/``: each attribute below is
+used only inside the one helper that owns it.
+
+- ``.createDataFrame`` only inside ``session.local_frame``. A list
+  ``createDataFrame`` is a ``parallelize`` re-serialized through a
+  ``PythonRDD``, so every job that scans the frame starts Python
+  workers; ``local_frame`` builds the same schema as an Arrow-backed
+  LocalRelation instead.
+- ``.writeStream`` only inside ``streaming/state_compact.start_loop``,
+  so every micro-batch loop starts one way, with the checkpoint its
+  caller chose."""
 
 from __future__ import annotations
 
@@ -12,18 +17,19 @@ import os
 
 _PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "hydraide_spark")
 
-#: (module path relative to the package, enclosing function) pairs
-#: allowed to call ``createDataFrame``. The one entry is the helper
-#: itself. A caller whose input is a real RDD (not Python rows) would
-#: go here, with a comment saying why.
+#: attribute -> (module path relative to the package, enclosing
+#: function) pairs allowed to use it. Each entry is the owning helper
+#: itself; a caller whose input is a real RDD (not Python rows) would
+#: go under ``createDataFrame``, with a comment saying why.
 ALLOWED = {
-    ("session.py", "local_frame"),
+    "createDataFrame": {("session.py", "local_frame")},
+    "writeStream": {(os.path.join("streaming", "state_compact.py"), "start_loop")},
 }
 
 
-def create_data_frame_calls(source: str, path: str) -> "list[tuple[str, int]]":
-    """(enclosing function, line) of every ``.createDataFrame(`` call
-    in ``source``; module-level calls report ``<module>``."""
+def attribute_uses(source: str, path: str, attr: str) -> "list[tuple[str, int]]":
+    """(enclosing function, line) of every ``.<attr>`` use in
+    ``source``; module-level uses report ``<module>``."""
     out = []
 
     def visit(node, fn):
@@ -31,11 +37,7 @@ def create_data_frame_calls(source: str, path: str) -> "list[tuple[str, int]]":
             name = fn
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 name = child.name
-            if (
-                isinstance(child, ast.Call)
-                and isinstance(child.func, ast.Attribute)
-                and child.func.attr == "createDataFrame"
-            ):
+            if isinstance(child, ast.Attribute) and child.attr == attr:
                 out.append((fn, child.lineno))
             visit(child, name)
 
@@ -43,27 +45,32 @@ def create_data_frame_calls(source: str, path: str) -> "list[tuple[str, int]]":
     return out
 
 
-def unrouted_calls() -> "list[str]":
+def unrouted_uses(attr: str, pkg: str = _PKG) -> "list[str]":
     out = []
-    for root, _dirs, files in os.walk(_PKG):
+    for root, _dirs, files in os.walk(pkg):
         for f in files:
             if not f.endswith(".py"):
                 continue
             path = os.path.join(root, f)
-            rel = os.path.relpath(path, _PKG)
+            rel = os.path.relpath(path, pkg)
             with open(path) as fh:
-                calls = create_data_frame_calls(fh.read(), path)
-            out += [f"{rel}:{line} in {fn}" for fn, line in calls if (rel, fn) not in ALLOWED]
+                uses = attribute_uses(fh.read(), path, attr)
+            out += [f"{rel}:{line} in {fn}" for fn, line in uses if (rel, fn) not in ALLOWED[attr]]
     return sorted(out)
 
 
 def test_driver_rows_go_through_local_frame():
-    assert unrouted_calls() == []
+    assert unrouted_uses("createDataFrame") == []
+
+
+def test_loops_start_through_start_loop():
+    assert unrouted_uses("writeStream") == []
 
 
 def test_lint_sees_calls_in_any_position():
-    """Nested functions, methods, keyword arguments and module level
-    are all seen, or the lint passes vacuously."""
+    """Nested functions, methods, keyword arguments, module level and
+    builder chains are all seen, or the lint passes vacuously; a
+    docstring naming the attribute is not a use."""
     src = (
         "x = spark.createDataFrame([], 's string')\n"
         "class S:\n"
@@ -73,9 +80,13 @@ def test_lint_sees_calls_in_any_position():
         "        return inner\n"
         "def local_frame(spark, rows, schema):\n"
         "    return spark.createDataFrame(rows, schema)\n"
+        "def run(stream):\n"
+        "    'stream.writeStream in prose'\n"
+        "    return stream.writeStream.outputMode('append').foreachBatch(f).start()\n"
     )
-    assert create_data_frame_calls(src, "<t>") == [
+    assert attribute_uses(src, "<t>", "createDataFrame") == [
         ("<module>", 1),
         ("inner", 5),
         ("local_frame", 8),
     ]
+    assert attribute_uses(src, "<t>", "writeStream") == [("run", 11)]

@@ -128,3 +128,26 @@ def test_default_neardup_clusters_folds_in_two_jobs(spark):
     )
     assert got == dist
     assert dist_jobs > jobs
+
+
+@pytest.mark.parametrize(
+    "ram_gib, env, want",
+    [
+        (16, None, "12288m"),  # three quarters of a 16 GiB host
+        (64, None, "24576m"),  # 24g on a large host
+        (1, None, "768m"),
+        (16, "30g", "30g"),  # the environment always wins
+    ],
+)
+def test_driver_memory_default_fits_the_host(monkeypatch, ram_gib, env, want):
+    """No Spark: the default driver heap is min(24g, 3/4 of physical
+    RAM) and ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    from hydraide_spark import session
+
+    sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": ram_gib * 2**30 // 4096}
+    monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+    if env is None:
+        monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", env)
+    assert session._driver_memory() == want

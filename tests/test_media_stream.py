@@ -4,14 +4,13 @@ finds, under any batching, with retry-idempotent epoch sinks."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 
 from hydraide_spark.functions.multimodal import encode_bmp, encode_wav, image_neardup_pairs
-from hydraide_spark.streaming.media_stream import (
-    make_media_ingest,
-    media_pairs,
-    run_media_neardup_ingest_loop,
-)
+from hydraide_spark.streaming.media_stream import make_media_ingest, media_pairs
+from hydraide_spark.streaming.state_compact import start_loop
 
 
 def _image_rows(n, twin_every=4):
@@ -48,7 +47,12 @@ def test_incremental_media_pairs_equal_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    q = run_media_neardup_ingest_loop(spark, stream, state, kind="image")
+    q = start_loop(
+        stream,
+        make_media_ingest(spark, state, kind="image"),
+        "media_neardup_ingest",
+        os.path.join(state, "_checkpoint"),
+    )
     try:
         q.processAllAvailable()
     finally:

@@ -7,6 +7,7 @@ counts, and the TTL claim transaction's disjointness.
 from __future__ import annotations
 
 import json
+import os
 from datetime import datetime, timedelta
 
 import pytest
@@ -875,7 +876,8 @@ def test_neardup_ingest_loop_converges_to_batch(spark, tmp_path):
     state boundary. Docs arrive in 3 micro-batches with near-dup pairs
     WITHIN a batch, ACROSS adjacent batches, and across the full span."""
     from hydraide_spark.functions.dedup import minhash_neardup_pairs
-    from hydraide_spark.streaming import ingested_pairs, run_neardup_ingest_loop
+    from hydraide_spark.streaming import ingested_pairs, start_loop
+    from hydraide_spark.streaming.dedup_stream import make_ingest
 
     base_a = "the quick brown fox jumps over the lazy dog again and again"
     base_b = "completely different words live in this other document body"
@@ -897,7 +899,12 @@ def test_neardup_ingest_loop_converges_to_batch(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     state = str(tmp_path / "neardup_state")
-    q = run_neardup_ingest_loop(spark, stream, state, tau=0.6)
+    q = start_loop(
+        stream,
+        make_ingest(spark, state, tau=0.6),
+        "neardup_ingest",
+        os.path.join(state, "_checkpoint"),
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -1017,6 +1024,67 @@ def test_index_maintenance_loop_incremental_postings(spark, tmp_path):
     assert ("NEW", "rewrite") in ev
     assert ("UPDATED", "engine") in ev and ("UPDATED", "query") in ev
     assert ("UPDATED", "spark") not in ev and ev.count(("NEW", "spark")) == 1
+
+
+@pytest.mark.parametrize("loop", ["rollup", "dsir"])
+def test_merge_loop_restart_leaves_store_unchanged(spark, tmp_path, loop):
+    """A store-merge loop restarted on the same store and source with
+    no new files changes nothing: it resumes from its checkpoint at
+    ``store.root/_checkpoint`` instead of replaying the source into
+    the store (a replay doubles every additive rollup window)."""
+    from hydraide_spark.streaming.rollup import (
+        run_dsir_count_maintenance_loop,
+        run_rollup_maintenance_loop,
+    )
+
+    store = TreasureStore(spark, str(tmp_path / loop))
+    if loop == "rollup":
+        store.init(
+            spark.createDataFrame(
+                [],
+                "key string, window_start timestamp, event_type string,"
+                " n_events bigint, total decimal(28,6)",
+            )
+        )
+        schema = "event_id long, ts timestamp, event_type string, value double"
+        h0 = datetime(2024, 3, 1, 10, 0, 0)
+        batches = [
+            [(1, h0, "click", 1.5), (2, h0.replace(minute=30), "click", 2.5)],
+            [(3, h0.replace(hour=11), "view", 1.0)],
+        ]
+
+        def start(stream):
+            return run_rollup_maintenance_loop(store, stream)
+
+    else:
+        store.init(spark.createDataFrame([], "key string, bucket bigint, n bigint"))
+        schema = "doc_id long, text string"
+        batches = [[(1, "alpha beta gamma alpha")], [(2, "zig zag beta")]]
+
+        def start(stream):
+            return run_dsir_count_maintenance_loop(store, stream, n_buckets=16, salt="s")
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src / f"b{i}"))
+
+    def run():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "*"))
+        )
+        q = start(stream)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return sorted(tuple(r) for r in store.current().collect())
+
+    first = run()
+    assert len(first) >= 2
+    assert run() == first
 
 
 def test_rollup_maintenance_converges_to_batch_recompute(spark, tmp_path):
@@ -1494,9 +1562,10 @@ def test_ivf_ingest_loop_converges_to_batch(spark, tmp_path):
     from hydraide_spark.functions.vector import ivf_topk, train_ivf_centroids
     from hydraide_spark.plans.inspect import physical_plan
     from hydraide_spark.sources.tables import load_table
+    from hydraide_spark.streaming import start_loop
     from hydraide_spark.streaming.ann_stream import (
         ivf_query_persisted,
-        run_ivf_ingest_loop,
+        make_ivf_ingest,
     )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
@@ -1516,7 +1585,12 @@ def test_ivf_ingest_loop_converges_to_batch(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     state = str(tmp_path / "ivf_state")
-    q = run_ivf_ingest_loop(spark, stream, state, cents)
+    q = start_loop(
+        stream,
+        make_ivf_ingest(spark, state, cents),
+        "ivf_ingest",
+        os.path.join(state, "_checkpoint"),
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -1699,8 +1773,8 @@ def test_streaming_postings_bm25_converges_to_batch(spark, tmp_path):
     from hydraide_spark.streaming.search_stream import (
         bm25_from_state,
         make_postings_ingest,
-        run_postings_ingest_loop,
     )
+    from hydraide_spark.streaming.state_compact import start_loop
 
     SF = "/root/testdata/sf0.001"
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
@@ -1716,7 +1790,12 @@ def test_streaming_postings_bm25_converges_to_batch(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     state = str(tmp_path / "search_state")
-    q = run_postings_ingest_loop(spark, stream, state)
+    q = start_loop(
+        stream,
+        make_postings_ingest(spark, state),
+        "postings_ingest",
+        os.path.join(state, "_checkpoint"),
+    )
     try:
         q.processAllAvailable()
     finally:

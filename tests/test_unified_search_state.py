@@ -22,8 +22,8 @@ from hydraide_spark.streaming.search_stream import (
     compact_unified_search_state,
     hybrid_search_from_unified_state,
     make_search_ingest,
-    run_search_ingest_loop,
 )
+from hydraide_spark.streaming.state_compact import start_loop
 
 SF = "/root/testdata/sf0.001"
 WORDS = ["stream", "data", "query"]
@@ -195,7 +195,12 @@ def test_run_search_ingest_loop_end_to_end(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     state = str(tmp_path / "ustate")
-    q = run_search_ingest_loop(spark, stream, state, cents)
+    q = start_loop(
+        stream,
+        make_search_ingest(spark, state, cents),
+        "search_ingest",
+        os.path.join(state, "_checkpoint"),
+    )
     try:
         q.processAllAvailable()
     finally:
