@@ -22,6 +22,14 @@ Queries at or above _SLOW_CUTOFF_SEC skip the last pass and record
 min-of-2 (work-dominated; bounds total bench wall). Per-query spread
 (max-min across passes) lands in the full JSON so a drifted entry can
 be adjudicated against its own noise floor.
+
+Per-query coverage (carried over from round 16): the final compact line
+inlines only the slowest ~24 queries that fit the 2000-char tail window
+the bench line is parsed from. A round-over-round per-query comparison
+built from that line therefore covers only the slow-tail intersection
+of the two rounds; the complete map is in ``queries_file``
+(bench/latest_full.json), and a comparison that reads it covers every
+query.
 """
 
 from __future__ import annotations

@@ -14,6 +14,13 @@ Maps the reference's per-swamp storage + reactivity model (SURVEY.md
   a monotonically increasing batch id. Unchanged writes emit NO event
   (reference StatusSame, swamp.go:2233-2234). Structured Streaming
   tails this directory (streaming.subscribe).
+- **one commit**: every mutation ends in ``_commit``, which writes the
+  new version and then its events under that version's batch id, with
+  one payload rule — ``new`` is the written row's value columns,
+  ``old`` the base row's. So the newest ``history()`` value of a live
+  key is its ``current()`` row, for every mutation (pinned per op by
+  ``test_events_replay_to_state``; a Spark-free lint keeps the version
+  write and the event log private to ``_commit``).
 - **serialization**: all mutations for a store go through this single
   applier object — the engine's analogue of the reference's per-swamp
   guard ("two concurrent callers never observe overlapping sets",
@@ -80,11 +87,9 @@ def _serialized(method):
     def wrapper(self, *args, **kwargs):
         with self._txn:
             self._scope = None  # never inherit a failed txn's scope
-            self._txn_depth += 1
             try:
                 return method(self, *args, **kwargs)
             finally:
-                self._txn_depth -= 1
                 # a mutation that RAISES after scoping must not leave
                 # current() returning a partial (touched-buckets-only)
                 # view to its caller's error handling
@@ -114,7 +119,6 @@ class TreasureStore:
         name: Optional[str] = None,
         registry=None,
         n_buckets: Optional[int] = None,
-        track_workload: bool = False,
     ):
         """``partition_by``: namespace columns (e.g. sanctuary/realm/
         swamp) that shard every snapshot on disk — per-swamp reads
@@ -160,13 +164,6 @@ class TreasureStore:
         self._cached: Optional[tuple[int, DataFrame]] = None
         self._last_access: float = 0.0
         self._txn = threading.RLock()
-        self._txn_depth = 0
-        # opt-in workload telemetry for the layout advisor (r12): write
-        # batch sizes + external scan count. Off by default — recording
-        # a set() batch size costs one count job on the (batch-sized)
-        # updates frame
-        self.track_workload = bool(track_workload)
-        self.workload: dict = {"write_batches": [], "scans": 0}
         self._recover_changes()
         os.makedirs(self.changes_dir, exist_ok=True)
 
@@ -455,11 +452,6 @@ class TreasureStore:
         DataFrames built from a scoped ``current()`` keep their
         resolved paths, so post-write event projections stay valid
         after the scope clears."""
-        if self.track_workload:
-            # one count job per DataFrame-keyed batch — the documented
-            # cost of opting into workload telemetry (layout advisor)
-            n = keys.count() if isinstance(keys, DataFrame) else len(keys)
-            self.workload["write_batches"].append(int(n))
         if self.n_buckets is not None:
             self._scope = self._touched_buckets(keys)
 
@@ -477,10 +469,6 @@ class TreasureStore:
         return self.version >= 0
 
     def current(self) -> DataFrame:
-        if self.track_workload and self._txn_depth == 0:
-            # external scan (mutations' internal base reads run inside
-            # the transaction guard and are part of the write cost)
-            self.workload["scans"] += 1
         v = self.version
         if v < 0:
             raise FileNotFoundError(f"store {self.root} has no snapshot")
@@ -817,59 +805,6 @@ class TreasureStore:
             json.dump(df.schema.jsonValue(), fh)
         self._publish_manifest(v, {}, flat=(v, files))
 
-    def advise_layout(self) -> dict:
-        """Layout recommendation from the RECORDED workload
-        (``track_workload=True``): the prune-factor formula over the
-        write-batch history vs the measured bucketed-scan penalty
-        (sources/layout_advisor.py). One count job for the store size;
-        the decision itself is pure arithmetic. Includes the concrete
-        migration call to run."""
-        from .layout_advisor import recommend_layout
-
-        out = recommend_layout(
-            self.workload["write_batches"],
-            self.workload["scans"],
-            self.current().count(),
-        )
-        out["current_layout"] = "bucketed" if self.n_buckets else "flat"
-        out["already_optimal"] = (
-            out["recommendation"] == out["current_layout"]
-        )
-        return out
-
-    @_serialized
-    def migrate_layout(self, n_buckets: "Optional[int]" = None) -> bool:
-        """Rewrite the store into the other layout (the advisor's
-        migration call): one full-state write in the target layout,
-        then compaction to a single version — mixed-layout TIME TRAVEL
-        is not supported, so pre-migration snapshots are dropped
-        (archive the change log first if history matters; ``history()``
-        replays it regardless of layout). Returns False when the store
-        is already in the requested layout."""
-        target = int(n_buckets) if n_buckets else None
-        if target == self.n_buckets:
-            return False
-        df = self.current()
-        v = self.version + 1
-        if target is not None:
-            self.n_buckets = target
-            with open(os.path.join(self.root, "_LAYOUT"), "w") as fh:
-                json.dump({"n_buckets": target}, fh)
-            df.limit(0).write.mode("overwrite").parquet(
-                os.path.join(self.root, "_schema")
-            )
-            self._scope = None
-            self._write_bucketed(df, v, {}, None)
-        else:
-            # write the plain snapshot FIRST (the read plan still
-            # resolves the bucketed dirs), then flip the layout
-            self._writer(df).parquet(self._snapshot_path(v))
-            self.n_buckets = None
-            with open(os.path.join(self.root, "_LAYOUT"), "w") as fh:
-                json.dump({"n_buckets": 0}, fh)
-        self.compact(keep_versions=1)
-        return True
-
     @_serialized
     def settle(self) -> bool:
         """Re-bucket a store whose current version still carries a flat
@@ -929,9 +864,53 @@ class TreasureStore:
             )
         shutil.rmtree(staging, ignore_errors=True)
 
-    @staticmethod
-    def _payload(df: DataFrame, cols: Sequence[str]) -> F.Column:
-        return F.to_json(F.struct(*[F.col(c) for c in cols]))
+    def _commit(
+        self,
+        new_state: DataFrame,
+        changed: DataFrame,
+        op,
+        base: Optional[DataFrame] = None,
+    ) -> None:
+        """The one commit of every mutation: write ``new_state`` as the
+        next version, then log one change event per row of ``changed``
+        under that version's batch id — the reference's guarded Save +
+        change event (proto:755-784). Rows absent from ``changed`` emit
+        nothing (reference StatusSame, swamp.go:2233-2234).
+
+        One payload rule over ``new_state``'s value columns: ``new`` is
+        the written row, ``old`` the base row. ``op`` is a literal or a
+        Column yielding NEW/UPDATED per row:
+
+        - ``"DELETED"``: ``changed`` holds the removed base rows; they
+          are ``old`` and ``new`` is NULL.
+        - NEW/UPDATED: ``changed`` holds the written rows; they are
+          ``new``. ``old`` is the ``base`` row, joined by key for
+          UPDATED rows, when ``base`` is given (``set``) and NULL
+          otherwise — the other writers' events carry the new row
+          only, and the old payload would cost each of them one more
+          join over the base."""
+        batch = self._write_version(new_state)
+        key = F.col(self.key_col)
+        cols = [c for c in new_state.columns if c != self.key_col]
+        payload = F.to_json(F.struct(*[F.col(c) for c in cols]))
+        null = F.lit(None).cast("string")
+        if isinstance(op, str) and op == "DELETED":
+            events = changed.select(
+                key, F.lit(op).alias("op"), null.alias("new"), payload.alias("old")
+            )
+        else:
+            op = F.lit(op) if isinstance(op, str) else op
+            events = changed.select(key, op.alias("op"), payload.alias("new"))
+            if base is None:
+                events = events.withColumn("old", null)
+            else:
+                events = events.join(
+                    base.select(key, payload.alias("old")), self.key_col, "left"
+                ).withColumn(
+                    "old",
+                    F.when(F.col("op") == mutate_ops.STATUS_UPDATED, F.col("old")),
+                )
+        self._emit(events, batch)
 
     # -- mutations (each is one serialized transaction) ---------------------
 
@@ -954,34 +933,16 @@ class TreasureStore:
         too)."""
         self._scope_to(updates)
         base = self.current()
-        value_cols = [c for c in updates.columns if c != self.key_col]
         merged = mutate_ops.set_treasures(
             base, updates, self.key_col, create_if_not_exist, overwrite
         ).cache()
         new_state = merged.filter(
             F.col("set_status") != mutate_ops.STATUS_NOT_CREATED
         ).drop("set_status")
-        batch = self._write_version(new_state)
-
-        old = base.select(
-            F.col(self.key_col), self._payload(base, value_cols).alias("old")
+        changed = merged.filter(
+            F.col("set_status").isin(mutate_ops.STATUS_NEW, mutate_ops.STATUS_UPDATED)
         )
-        events = (
-            merged.filter(
-                F.col("set_status").isin(
-                    mutate_ops.STATUS_NEW, mutate_ops.STATUS_UPDATED
-                )
-            )
-            .withColumn("op", F.col("set_status"))
-            .withColumn("new", self._payload(merged, value_cols))
-            .join(old, self.key_col, "left")
-            .withColumn(
-                "old",
-                F.when(F.col("op") == mutate_ops.STATUS_UPDATED, F.col("old")),
-            )
-            .withColumn("op", F.when(F.col("op") == "UPDATED", "UPDATED").otherwise("NEW"))
-        )
-        self._emit(events, batch)
+        self._commit(new_state, changed, F.col("set_status"), base)
         statuses = merged.select(self.key_col, "set_status")
         merged.unpersist()
         return statuses
@@ -989,18 +950,11 @@ class TreasureStore:
     @_serialized
     def delete(self, keys: Sequence[str]) -> DataFrame:
         self._scope_to(keys)
-        base = self.current()
-        value_cols = [c for c in base.columns if c != self.key_col]
-        remaining, deleted = mutate_ops.delete_treasures(base, keys, self.key_col)
-        deleted = deleted.cache()
-        batch = self._write_version(remaining)
-        events = deleted.select(
-            F.col(self.key_col),
-            F.lit("DELETED").alias("op"),
-            F.lit(None).cast("string").alias("new"),
-            self._payload(deleted, value_cols).alias("old"),
+        remaining, deleted = mutate_ops.delete_treasures(
+            self.current(), keys, self.key_col
         )
-        self._emit(events, batch)
+        deleted = deleted.cache()
+        self._commit(remaining, deleted, "DELETED")
         out = deleted.select(self.key_col).withColumn("deleted", F.lit(True))
         deleted.unpersist()
         return out
@@ -1033,17 +987,16 @@ class TreasureStore:
         swamp.go:1219) stamp created_at_us/created_by/updated_at_us/
         updated_by/expired_at_us. Stamps persist into the store state
         for rows that are WRITTEN (created rows, and existing rows whose
-        increment applied); the returned results always carry the
-        response-metadata columns. This split IS the reference's: the
-        stamp happens inside the guard before the condition check and
-        the response metadata is read from the in-memory treasure, but
-        ``Save(guardID)`` is skipped when the condition fails
-        (swamp.go:1345-1349) — so an unapplied existing key's stamp is
-        visible in the response yet absent from subsequent reads, there
-        as here."""
+        increment applied) and ride in those rows' events; the returned
+        results always carry the response-metadata columns. This split
+        IS the reference's: the stamp happens inside the guard before
+        the condition check and the response metadata is read from the
+        in-memory treasure, but ``Save(guardID)`` is skipped when the
+        condition fails (swamp.go:1345-1349) — so an unapplied existing
+        key's stamp is visible in the response yet absent from
+        subsequent reads, there as here."""
         self._scope_to(keys)
         base = self.current()
-        value_cols = [c for c in base.columns if c != self.key_col]
         has_meta = meta_if_not_exist is not None or meta_if_exist is not None
         results = mutate_ops.increment(
             base,
@@ -1099,25 +1052,14 @@ class TreasureStore:
             )
             new_state = new_state.unionByName(created_rows)
 
-        batch = self._write_version(new_state)
-        applied_keys = applied_existing.select(self.key_col)
-        updated = new_state.join(applied_keys, self.key_col)
-        events = updated.select(
-            F.col(self.key_col),
-            F.lit("UPDATED").alias("op"),
-            self._payload(updated, value_cols).alias("new"),
-            F.lit(None).cast("string").alias("old"),
-        )
+        changed = new_state.join(
+            applied_existing.select(self.key_col), self.key_col
+        ).withColumn("_op", F.lit(mutate_ops.STATUS_UPDATED))
         if created_rows is not None:
-            events = events.unionByName(
-                created_rows.select(
-                    F.col(self.key_col),
-                    F.lit("NEW").alias("op"),
-                    self._payload(created_rows, value_cols).alias("new"),
-                    F.lit(None).cast("string").alias("old"),
-                )
+            changed = changed.unionByName(
+                created_rows.withColumn("_op", F.lit(mutate_ops.STATUS_NEW))
             )
-        self._emit(events, batch)
+        self._commit(new_state, changed, F.col("_op"))
         if not create_if_not_exist:
             return results.filter(~F.col("created"))
         return results
@@ -1138,63 +1080,48 @@ class TreasureStore:
         self, keys: Sequence[str], values: Sequence[int], ids_col: str, push: bool
     ) -> DataFrame:
         self._scope_to(keys)
-        base = self.current()
-        value_cols = [c for c in base.columns if c != self.key_col]
-        lits = F.array(*[F.lit(int(v)) for v in values]).cast("array<bigint>")
-        targeted = F.col(self.key_col).isin(list(keys))
-        new_ids = (
-            F.array_distinct(F.concat(F.col(ids_col), lits))
-            if push
-            else F.array_except(F.col(ids_col), lits)
-        )
-        # array_distinct keeps first-seen order, array_except preserves
-        # order too — a changed set always differs element-wise
-        merged = base.withColumn(
-            "_new_ids", F.when(targeted, new_ids).otherwise(F.col(ids_col))
-        ).withColumn("_changed", ~(F.col("_new_ids") == F.col(ids_col)))
-        new_state = merged.withColumn(ids_col, F.col("_new_ids")).drop(
-            "_new_ids", "_changed"
-        )
-        changed = merged.filter(F.col("_changed")).cache()
-        changed.count()
-        batch = self._write_version(new_state)
-        ev_rows = new_state.join(changed.select(self.key_col), self.key_col)
-        self._emit(
-            ev_rows.select(
-                F.col(self.key_col),
-                F.lit("UPDATED").alias("op"),
-                self._payload(ev_rows, value_cols).alias("new"),
-                F.lit(None).cast("string").alias("old"),
+        apply = mutate_ops.uint32slice_push if push else mutate_ops.uint32slice_delete
+        # the operator's expression, kept on the targeted keys only;
+        # array_distinct and array_except both keep first-seen order,
+        # so a changed set always differs element-wise
+        merged = apply(
+            self.current().withColumn("_prev", F.col(ids_col)), values, ids_col
+        ).withColumn(
+            ids_col,
+            F.when(F.col(self.key_col).isin(list(keys)), F.col(ids_col)).otherwise(
+                F.col("_prev")
             ),
-            batch,
         )
+        changed = (
+            merged.filter(~(F.col(ids_col) == F.col("_prev"))).drop("_prev").cache()
+        )
+        changed.count()
+        self._commit(merged.drop("_prev"), changed, mutate_ops.STATUS_UPDATED)
         out = changed.select(self.key_col).withColumn("changed", F.lit(True))
         changed.unpersist()
         return out
+
+    def _claim(self, claim) -> DataFrame:
+        """The body of :meth:`shift_expired` and :meth:`shift_matching`
+        (run under their transaction guard): ``claim(base)`` returns
+        ``(claimed, remaining)``; the claim set is pinned, the state
+        persists without it, and its rows are logged DELETED."""
+        claimed, remaining = claim(self.current())
+        claimed = claimed.cache()
+        claimed.count()  # pin the claim set before the snapshot swaps
+        self._scope_to(claimed)  # write-prune: only claimed buckets
+        self._commit(remaining, claimed, "DELETED")
+        return claimed
 
     @_serialized
     def shift_expired(self, now: datetime, how_many: int) -> DataFrame:
         """TTL-queue pop as one serialized transaction: claim, persist
         state without claimed rows, emit DELETED events, return claimed."""
-        base = self.current()
-        value_cols = [c for c in base.columns if c != self.key_col]
-        claimed, remaining = claims_ops.shift_expired(
-            base, now, how_many, key_col=self.key_col
+        return self._claim(
+            lambda base: claims_ops.shift_expired(
+                base, now, how_many, key_col=self.key_col
+            )
         )
-        claimed = claimed.cache()
-        claimed.count()  # pin the claim set before the snapshot swaps
-        self._scope_to(claimed)  # write-prune: only claimed buckets
-        batch = self._write_version(remaining)
-        self._emit(
-            claimed.select(
-                F.col(self.key_col),
-                F.lit("DELETED").alias("op"),
-                F.lit(None).cast("string").alias("new"),
-                self._payload(claimed, value_cols).alias("old"),
-            ),
-            batch,
-        )
-        return claimed
 
     @_serialized
     def shift_matching(
@@ -1211,25 +1138,11 @@ class TreasureStore:
         what delivers proto:194-196 — two concurrent claimants never
         observe overlapping sets (tested with interleaved threads in
         test_store_streaming)."""
-        base = self.current()
-        value_cols = [c for c in base.columns if c != self.key_col]
-        claimed, remaining = claims_ops.shift_matching(
-            base, index, filt, how_many, cap, key_col=self.key_col
+        return self._claim(
+            lambda base: claims_ops.shift_matching(
+                base, index, filt, how_many, cap, key_col=self.key_col
+            )
         )
-        claimed = claimed.cache()
-        claimed.count()  # pin the claim set before the snapshot swaps
-        self._scope_to(claimed)  # write-prune: only claimed buckets
-        batch = self._write_version(remaining)
-        self._emit(
-            claimed.select(
-                F.col(self.key_col),
-                F.lit("DELETED").alias("op"),
-                F.lit(None).cast("string").alias("new"),
-                self._payload(claimed, value_cols).alias("old"),
-            ),
-            batch,
-        )
-        return claimed
 
     @_serialized
     def patch(
@@ -1330,17 +1243,12 @@ class TreasureStore:
             create_if_not_exist=create_if_not_exist,
             seed_body=seed_body,
         )
-        batch = self._write_version(batch_out.new_state)
-        value_cols = [c for c in batch_out.new_state.columns if c != self.key_col]
-        changed = batch_out.changed
-        self._emit(
-            changed.select(
-                F.col(self.key_col),
-                F.when(F.col("_created"), "NEW").otherwise("UPDATED").alias("op"),
-                self._payload(changed, value_cols).alias("new"),
-                F.lit(None).cast("string").alias("old"),
+        self._commit(
+            batch_out.new_state,
+            batch_out.changed,
+            F.when(F.col("_created"), mutate_ops.STATUS_NEW).otherwise(
+                mutate_ops.STATUS_UPDATED
             ),
-            batch,
         )
         batch_out.unpersist()
         return batch_out.results
@@ -1355,25 +1263,15 @@ class TreasureStore:
         condition: Optional[Pred] = None,
         cap: Optional[claims_ops.Cap] = None,
     ) -> DataFrame:
-        base = self.current()
-        value_cols = [c for c in base.columns if c != self.key_col]
         results, new_state = claims_ops.patch_expired(
-            base, now, how_many, lease, ops, condition, cap, key_col=self.key_col
+            self.current(), now, how_many, lease, ops, condition, cap,
+            key_col=self.key_col,
         )
         results = results.cache()
         results.count()
         patched = results.filter(F.col("patch_status") == mutate_ops.STATUS_PATCHED)
         self._scope_to(patched)  # write-prune: only re-leased buckets
-        batch = self._write_version(new_state)
-        self._emit(
-            patched.select(
-                F.col(self.key_col),
-                F.lit("UPDATED").alias("op"),
-                self._payload(patched, value_cols).alias("new"),
-                F.lit(None).cast("string").alias("old"),
-            ),
-            batch,
-        )
+        self._commit(new_state, patched, mutate_ops.STATUS_UPDATED)
         return results
 
 
@@ -1388,7 +1286,12 @@ class TreasureStore:
 # null-filled. how_many/caps apply PER SWAMP, as in the proto.
 
 
-def _union_tagged(frames: "list[DataFrame]") -> DataFrame:
+def _fan_out(stores: "dict[str, TreasureStore]", op) -> DataFrame:
+    """Run ``op(store)`` on every store, each under its own
+    transaction, and union the results tagged with their swamp name."""
+    frames = [
+        op(store).withColumn("swamp", F.lit(name)) for name, store in stores.items()
+    ]
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
@@ -1400,12 +1303,7 @@ def shift_expired_many(
 ) -> DataFrame:
     """``ShiftExpiredTreasuresMany``: per-store TTL-queue pop; claimed
     rows tagged with their swamp name."""
-    return _union_tagged(
-        [
-            store.shift_expired(now, how_many).withColumn("swamp", F.lit(name))
-            for name, store in stores.items()
-        ]
-    )
+    return _fan_out(stores, lambda store: store.shift_expired(now, how_many))
 
 
 def shift_matching_many(
@@ -1416,13 +1314,8 @@ def shift_matching_many(
     cap: Optional[claims_ops.Cap] = None,
 ) -> DataFrame:
     """``ShiftMatchingTreasuresMany``: per-store parametric claim."""
-    return _union_tagged(
-        [
-            store.shift_matching(index, filt, how_many, cap).withColumn(
-                "swamp", F.lit(name)
-            )
-            for name, store in stores.items()
-        ]
+    return _fan_out(
+        stores, lambda store: store.shift_matching(index, filt, how_many, cap)
     )
 
 
@@ -1436,11 +1329,7 @@ def patch_expired_many(
     cap: Optional[claims_ops.Cap] = None,
 ) -> DataFrame:
     """``PatchExpiredTreasuresMany``: per-store lease-claim + patch."""
-    return _union_tagged(
-        [
-            store.patch_expired(
-                now, how_many, lease, ops, condition, cap
-            ).withColumn("swamp", F.lit(name))
-            for name, store in stores.items()
-        ]
+    return _fan_out(
+        stores,
+        lambda store: store.patch_expired(now, how_many, lease, ops, condition, cap),
     )

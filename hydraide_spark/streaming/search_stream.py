@@ -113,15 +113,9 @@ def persisted_postings(
     (``pending_folded``) exclusions apply to the delta epochs either
     way; the base partition (-1) is part of every frontier."""
     schema = f"word string, {id_col} long, tf long"
-    # layout-advisor history (r13): a words-pruned read is a probe
-    # touching ~len(words) key-buckets; a full read is a scan
     keys = None
     if words is not None:
-        words = [str(w) for w in words]
-        _record_workload(state_dir, "postings", "probe", len(words))
-        keys = local_frame(spark, [(w,) for w in words], "word string")
-    else:
-        _record_workload(state_dir, "postings", "scan")
+        keys = local_frame(spark, [(str(w),) for w in words], "word string")
     out = read_bucketed(
         spark, os.path.join(state_dir, "postings"), schema, keys, "word", epochs
     )
@@ -336,120 +330,6 @@ def _absorb_marker_stats(state_dir: str, markers, stale) -> None:
             os.path.join(state_dir, _STATS_FILE),
             {"base_rows": int(base_rows), "dim": dim, "absorbed": sorted(kept)},
         )
-
-
-_WORKLOAD_FILE = "_WORKLOAD.json"  # legacy r13 snapshot — read-only now
-_WORKLOAD_LOG = "_WORKLOAD.jsonl"  # per-event append log (r14 ADVICE)
-_WORKLOAD_LOG_MAX_BYTES = 4 << 20
-
-
-def _record_workload(state_dir: str, table: str, kind: str, n_keys: int = 0) -> None:
-    """Best-effort per-table access events for the layout advisor:
-    probes (pruned reads — how many key-buckets they touch) and full
-    scans. ONE O_APPEND line per event (r14 ADVICE — the r13
-    read-modify-replace of a whole JSON paid two disk I/Os on every
-    hot serving-path probe and lost concurrent updates last-writer-
-    wins on the entire history); small appends are atomic, so
-    concurrent queries/streams never clobber each other. Aggregation
-    happens at advise time (:func:`advise_state_layout`). The log
-    rotates to ``.old`` at ~4 MB so it stays bounded; failures are
-    swallowed (a read-only state dir must never break serving — the
-    advisor just sees less history)."""
-    try:
-        if not os.path.isdir(state_dir):
-            return
-        path = os.path.join(state_dir, _WORKLOAD_LOG)
-        try:
-            if os.path.getsize(path) > _WORKLOAD_LOG_MAX_BYTES:
-                os.replace(path, path + ".old")
-        except OSError:
-            pass
-        with open(path, "a") as fh:
-            fh.write(json.dumps({"t": table, "k": kind, "n": int(n_keys)}) + "\n")
-    except OSError:
-        pass
-
-
-def _workload_history(state_dir: str, table: str) -> dict:
-    """Aggregate one table's access history: the legacy r13 snapshot
-    (if present) plus the rotated and current append logs. A torn tail
-    line (crash mid-append) is skipped, not fatal. probe_keys is
-    capped at the most recent 1000 — the advisor needs the batch-size
-    DISTRIBUTION, not an unbounded list."""
-    wl = {"probes": 0, "probe_keys": [], "scans": 0}
-    try:
-        with open(os.path.join(state_dir, _WORKLOAD_FILE)) as fh:
-            legacy = json.load(fh).get(table, {})
-        wl["probes"] = int(legacy.get("probes", 0))
-        wl["probe_keys"] = [int(x) for x in legacy.get("probe_keys", [])]
-        wl["scans"] = int(legacy.get("scans", 0))
-    except (OSError, ValueError):
-        pass
-    for name in (_WORKLOAD_LOG + ".old", _WORKLOAD_LOG):
-        try:
-            with open(os.path.join(state_dir, name)) as fh:
-                for line in fh:
-                    try:
-                        ev = json.loads(line)
-                    except ValueError:
-                        continue
-                    if ev.get("t") != table:
-                        continue
-                    if ev.get("k") == "probe":
-                        wl["probes"] += 1
-                        wl["probe_keys"].append(int(ev.get("n", 0)))
-                    else:
-                        wl["scans"] += 1
-        except OSError:
-            pass
-    wl["probe_keys"] = wl["probe_keys"][-1000:]
-    return wl
-
-
-def advise_state_layout(state_dir: str, table: str = "postings") -> dict:
-    """Layout advisor for the LSM state tables (r12 VERDICT #7 — the
-    TreasureStore advisor generalized): flat base vs hash-bucketed base
-    for a unified-state table, decided from the RECORDED access history
-    (``_WORKLOAD.json`` — pruned probes with their key counts, full
-    scans) and the corpus size from the commit-marker stats catalog
-    (:func:`state_stats` — zero Spark jobs). Same measured cost model
-    as sources/layout_advisor.py: a probe of k keys costs
-    ``min(1, k / n_buckets)`` of a flat full read under the bucketed
-    layout; a full scan costs ``1 + penalty · n_buckets`` (listing +
-    small-file overhead). Probe-heavy histories recommend bucketing;
-    scan-heavy ones flat. Returns the recommendation plus the concrete
-    compaction call to apply it."""
-    from ..sources.layout_advisor import recommend_layout
-
-    wl = _workload_history(state_dir, table)
-    st = state_stats(state_dir)
-    n_rows = int(st["rows"]) if st and st.get("rows") else 0
-    rec = recommend_layout(
-        write_batches=[int(k) for k in wl.get("probe_keys", [])],
-        n_scans=int(wl.get("scans", 0)),
-        n_rows=n_rows,
-    )
-    rec["table"] = table
-    if table in ("cells", "codes", "pqcodes"):
-        # the dense-index tables are CELL-partitioned — their probe
-        # pruning comes from the cell= layout, which compaction must
-        # PRESERVE; hash-bucketing them would destroy it. The flat-vs-
-        # bucketed tradeoff doesn't apply: always fold cell-partitioned.
-        rec["recommendation"] = "cell-partitioned"
-        rec["n_buckets"] = None
-        rec["migration"] = (
-            f"compact_epochs(spark, '{os.path.join(state_dir, table)}', "
-            f"partition_by=['cell'])"
-        )
-        return rec
-    key_col = {"postings": "word", "bands": "bucket"}.get(table, "doc_id")
-    rec["migration"] = (
-        f"compact_hashed_epochs(spark, '{os.path.join(state_dir, table)}', "
-        f"{key_col!r}, n_buckets={rec['n_buckets']})"
-        if rec["recommendation"] == "bucketed"
-        else f"compact_epochs(spark, '{os.path.join(state_dir, table)}')"
-    )
-    return rec
 
 
 def committed_epochs(state_dir: str) -> list[int]:

@@ -8,7 +8,11 @@ used only inside the one helper that owns it.
   LocalRelation instead.
 - ``.writeStream`` only inside ``streaming/state_compact.start_loop``,
   so every micro-batch loop starts one way, with the checkpoint its
-  caller chose."""
+  caller chose.
+- ``._write_version`` and ``._emit`` only inside
+  ``sources/store.TreasureStore._commit``, so every store mutation
+  writes its version and its change events through one commit with one
+  payload rule, and ``history()`` replays to ``current()``."""
 
 from __future__ import annotations
 
@@ -24,6 +28,8 @@ _PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 ALLOWED = {
     "createDataFrame": {("session.py", "local_frame")},
     "writeStream": {(os.path.join("streaming", "state_compact.py"), "start_loop")},
+    "_write_version": {(os.path.join("sources", "store.py"), "_commit")},
+    "_emit": {(os.path.join("sources", "store.py"), "_commit")},
 }
 
 
@@ -65,6 +71,11 @@ def test_driver_rows_go_through_local_frame():
 
 def test_loops_start_through_start_loop():
     assert unrouted_uses("writeStream") == []
+
+
+def test_store_mutations_commit_through_commit():
+    assert unrouted_uses("_write_version") == []
+    assert unrouted_uses("_emit") == []
 
 
 def test_lint_sees_calls_in_any_position():

@@ -1373,6 +1373,124 @@ def test_time_travel_and_scd2_history_consistent_with_snapshots(spark, tmp_path)
     assert {r["key"] for r in open_rows} == {"a", "c"}
 
 
+REPLAY_SCHEMA = (
+    "key string, val long, expired_at timestamp, ids array<bigint>, "
+    "body struct<n:bigint,tag:string>"
+)
+REPLAY_ROWS = [
+    ("a", 1, datetime(2020, 1, 1), [1, 2], (1, "x")),
+    ("b", 2, datetime(2020, 1, 2), [3], (2, "y")),
+    ("c", 3, None, [], (3, "z")),
+    ("d", 4, datetime(2020, 1, 3), [5], (4, None)),
+]
+NOW_US = 1_700_000_000_000_000
+
+
+def _replay_ops():
+    from hydraide_spark.operators.mutate import IncrementMeta, PatchMeta
+    from hydraide_spark.query.index import Index, IndexOrder, IndexType
+
+    inc = PatchOp(PatchKind.INC, "n", 1)
+    return {
+        "set": lambda s, spark: s.set(
+            spark.createDataFrame(
+                [("a", 10, None, [1], (1, "x")), ("b", *REPLAY_ROWS[1][1:]),
+                 ("e", 5, None, [9], (5, "new"))],
+                REPLAY_SCHEMA,
+            )
+        ),
+        "delete": lambda s, spark: s.delete(["a", "zz"]),
+        "increment_meta": lambda s, spark: s.increment(
+            ["a", "b", "x"], "val", 10, condition=Cmp("val", Op.LT, 2),
+            create_if_not_exist=True,
+            meta_if_not_exist=IncrementMeta(created_at=True, created_by="mk"),
+            meta_if_exist=IncrementMeta(updated_at=True, updated_by="up"),
+            now_us=NOW_US,
+        ),
+        "uint32slice_push": lambda s, spark: s.uint32slice_push(["a", "c"], [2, 4]),
+        "uint32slice_delete": lambda s, spark: s.uint32slice_delete(["a", "b"], [1, 3]),
+        "shift_expired": lambda s, spark: s.shift_expired(datetime(2021, 1, 1), 2),
+        "shift_matching": lambda s, spark: s.shift_matching(
+            Index(index_type=IndexType.KEY, order=IndexOrder.DESC),
+            Cmp("val", Op.GE, 2), how_many=2,
+        ),
+        "patch": lambda s, spark: s.patch(
+            ["a", "x"], [inc], create_if_not_exist=True, seed_body=(0, "seed"),
+            meta=PatchMeta(updated_at=True, updated_by="p"), now_us=NOW_US,
+        ),
+        "patch_each": lambda s, spark: s.patch_each(
+            [("a", [inc], None), ("c", [PatchOp(PatchKind.SET, "tag", "q")], None),
+             ("a", [inc], None)]
+        ),
+        "patch_expired": lambda s, spark: s.patch_expired(
+            datetime(2021, 1, 1), 2, timedelta(minutes=5), [inc]
+        ),
+    }
+
+
+def _assert_history_replays_to_current(store, batch):
+    cols = [c for c in store.current().columns if c != "key"]
+    cur = {
+        r["key"]: json.loads(r["j"])
+        for r in store.current()
+        .select("key", F.to_json(F.struct(*cols)).alias("j"))
+        .collect()
+    }
+    hist = sorted(store.history().collect(), key=lambda r: r["valid_from_batch"])
+    assert any(r["valid_from_batch"] == batch for r in hist)  # the op logged events
+    newest = {r["key"]: r for r in hist}
+    replayed = {
+        k: json.loads(r["value"]) for k, r in newest.items() if r["op"] != "DELETED"
+    }
+    assert replayed == cur
+    open_keys = {
+        k for k, r in newest.items() if r["valid_to_batch"] is None and r["op"] != "DELETED"
+    }
+    assert open_keys == set(cur)
+
+
+@pytest.mark.parametrize("n_buckets", [None, 8], ids=["flat", "bucketed8"])
+@pytest.mark.parametrize("op", list(_replay_ops()))
+def test_events_replay_to_state(spark, tmp_path, op, n_buckets):
+    """Every store mutation commits its version and its events through
+    one commit, so the newest ``history()`` value of every live key
+    parses to exactly its ``current()`` row, and a deleted key has no
+    open interval. The store is seeded through ``set`` (``init`` logs
+    no events), so every live key has a history."""
+    store = TreasureStore(spark, str(tmp_path / "replay"), n_buckets=n_buckets)
+    store.init(spark.createDataFrame([], REPLAY_SCHEMA))
+    store.set(spark.createDataFrame(REPLAY_ROWS, REPLAY_SCHEMA))
+    v = store.version
+    _replay_ops()[op](store, spark).collect()
+    assert store.version == v + 1
+    _assert_history_replays_to_current(store, v + 1)
+
+
+@pytest.mark.parametrize("n_buckets", [None, 8], ids=["flat", "bucketed8"])
+def test_increment_events_carry_meta_stamps(spark, tmp_path, n_buckets):
+    """A meta-stamped increment persists its stamps and logs them: the
+    UPDATED event of an applied existing key carries ``updated_by``,
+    the NEW event of a created key ``created_by`` — on a store whose
+    schema had no meta columns before."""
+    from hydraide_spark.operators.mutate import IncrementMeta
+
+    store = TreasureStore(spark, str(tmp_path / "incmeta"), n_buckets=n_buckets)
+    store.init(spark.createDataFrame(BASE, "key string, val long, expired_at timestamp"))
+    store.increment(
+        ["a", "x"], "val", 10, create_if_not_exist=True,
+        meta_if_not_exist=IncrementMeta(created_by="mk"),
+        meta_if_exist=IncrementMeta(updated_by="up"),
+        now_us=NOW_US,
+    ).collect()
+    ev = {r["key"]: (r["op"], json.loads(r["new"])) for r in store.changes().collect()}
+    assert ev["a"][0] == "UPDATED" and ev["a"][1]["val"] == 11
+    assert ev["a"][1]["updated_by"] == "up"
+    assert ev["x"][0] == "NEW" and ev["x"][1]["val"] == 10
+    assert ev["x"][1]["created_by"] == "mk"
+    state = {r["key"]: r for r in store.current().collect()}
+    assert state["a"]["updated_by"] == "up" and state["x"]["created_by"] == "mk"
+
+
 def test_stream_stream_attribution_join(spark, tmp_path):
     """Stream-STREAM interval join: clicks attribute to the same user's
     view within 10 minutes; out-of-window and cross-user clicks drop.
