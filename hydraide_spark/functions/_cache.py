@@ -31,7 +31,7 @@ the oldest is released. Two properties matter:
 
 For callers that know they are done, ``release_pinned(site)`` /
 ``release_all_pinned()`` free everything deterministically (the
-PatchEachBatch.unpersist discipline) — e.g. at the end of a request, or in
+KeyedBatch.unpersist discipline) — e.g. at the end of a request, or in
 tests asserting no cached RDDs remain.
 
 The one memo

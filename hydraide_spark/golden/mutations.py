@@ -313,7 +313,7 @@ def shift_expired_claim(spark, sf_dir):
     swamp = orders_as_swamp(t(spark, sf_dir, "orders")).withColumnRenamed(
         "created_at", "expired_at"
     )
-    claimed, _remaining = C.shift_expired(swamp, _NOW, how_many=100)
+    claimed = C.shift_expired(swamp, _NOW, how_many=100)
     return claimed.select("key", "expired_at")
 
 
@@ -349,7 +349,7 @@ def shift_matching_cap(spark, sf_dir):
         ),
         max_matching=1250,
     )
-    claimed, _remaining = C.shift_matching(
+    claimed = C.shift_matching(
         swamp, idx, Cmp("status", Op.EQ, "O"), how_many=50, cap=cap
     )
     return claimed.select("key", "totalprice")

@@ -98,10 +98,11 @@ def shift_expired(
     how_many: int,
     key_col: str = "key",
     expired_col: str = "expired_at",
-) -> tuple[DataFrame, DataFrame]:
-    """Reference ``ShiftExpiredTreasures`` (proto:159-177): atomically
-    select rows with expired_at < now — oldest first — delete them, and
-    return them (TTL-queue pop). Returns (claimed, remaining).
+) -> DataFrame:
+    """Reference ``ShiftExpiredTreasures`` (proto:159-177): select rows
+    with expired_at < now — oldest first — and return them (TTL-queue
+    pop). Returns the claim; removing it from the state is the storage
+    layer's commit (``TreasureStore.shift_expired``).
 
     The §1.4 rule applies: rows with NULL expired_at are not in the
     expiration index, hence never claimable (encoded in Index bounds)."""
@@ -111,9 +112,7 @@ def shift_expired(
         to_time=now,
         key_column=key_col,
     )
-    claimed = _bounded_candidates(df, idx, None, how_many, None)
-    remaining = df.join(claimed.select(key_col), key_col, "left_anti")
-    return claimed, remaining
+    return _bounded_candidates(df, idx, None, how_many, None)
 
 
 def shift_matching(
@@ -122,14 +121,12 @@ def shift_matching(
     filt: Optional[Pred],
     how_many: int,
     cap: Optional[Cap] = None,
-    key_col: str = "key",
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Reference ``ShiftMatchingTreasures`` (proto:191-216): parametric
-    claim — any index + order + FilterGroup + HowMany + Cap. Returns
-    (claimed, remaining); claimed is empty when the cap budget is 0."""
-    claimed = _bounded_candidates(df, index, filt, how_many, cap)
-    remaining = df.join(claimed.select(key_col), key_col, "left_anti")
-    return claimed, remaining
+    claim — any index + order + FilterGroup + HowMany + Cap. Returns the
+    claim, empty when the cap budget is 0; removing it from the state is
+    the storage layer's commit (``TreasureStore.shift_matching``)."""
+    return _bounded_candidates(df, index, filt, how_many, cap)
 
 
 def patch_expired(

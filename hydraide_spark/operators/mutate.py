@@ -53,14 +53,15 @@ def set_treasures(
     update-only via the CreateIfNotExist x Overwrite flags (proto:916-931),
     with per-key status NEW / UPDATED / NOTHING_CHANGED / NOT_CREATED.
 
-    Returns one row per key in (base ∪ updates) with the post-set value
-    columns plus ``set_status``. Value columns = all shared non-key
+    Returns one row per key in (base ∪ updates) with every base column,
+    post-set, plus ``set_status``. Value columns = all shared non-key
     columns of the two frames; unchanged detection is a null-safe
-    column-wise comparison (the reference's changed-field detection,
-    swamp.go:2174-2176).
+    column-wise comparison of them (the reference's changed-field
+    detection, swamp.go:2174-2176). A base column the updates lack
+    keeps its value on existing rows and is NULL on new ones.
     """
     value_cols = [c for c in updates.columns if c != key_col and c in base.columns]
-    b = base.select(key_col, *value_cols).alias("b")
+    b = base.alias("b")
     u = updates.select(key_col, *value_cols).alias("u")
     j = b.join(u, F.col(f"b.{key_col}") == F.col(f"u.{key_col}"), "full_outer")
 
@@ -86,10 +87,15 @@ def set_treasures(
     out_cols = [
         F.coalesce(F.col(f"b.{key_col}"), F.col(f"u.{key_col}")).alias(key_col)
     ]
-    for c in value_cols:
-        out_cols.append(
-            F.when(take_update, F.col(f"u.{c}")).otherwise(F.col(f"b.{c}")).alias(c)
-        )
+    for c in base.columns:
+        if c in value_cols:
+            out_cols.append(
+                F.when(take_update, F.col(f"u.{c}"))
+                .otherwise(F.col(f"b.{c}"))
+                .alias(c)
+            )
+        elif c != key_col:
+            out_cols.append(F.col(f"b.{c}"))
     out_cols.append(status.alias("set_status"))
     return j.select(*out_cols)
 
@@ -157,6 +163,39 @@ def _meta_value(meta: Optional[IncrementMeta], attr: str, is_now: bool, now_us: 
     return F.lit(v).cast("string")
 
 
+def _increment_result(
+    work: DataFrame,
+    value_col: str,
+    delta: float,
+    condition: Optional[Pred],
+    created: Column,
+    meta_if_not_exist: Optional[IncrementMeta],
+    meta_if_exist: Optional[IncrementMeta],
+    now_us: Optional[int],
+) -> Column:
+    """The conditional add over ``work``'s rows as ONE struct column:
+    (old_value, new_value, applied, created[, the five meta stamps])."""
+    cond = translate(condition, work) if condition is not None else F.lit(True)
+    old = F.col(value_col)
+    fields = [
+        old.alias("old_value"),
+        F.when(cond, old + F.lit(delta)).otherwise(old).alias("new_value"),
+        (cond & old.isNotNull()).alias("applied"),
+        created.alias("created"),
+    ]
+    if meta_if_not_exist is not None or meta_if_exist is not None:
+        now = _now_us(now_us)
+        for out_name, attr, is_now in _META_FIELDS:
+            fields.append(
+                F.when(
+                    created, _meta_value(meta_if_not_exist, attr, is_now, now)
+                )
+                .otherwise(_meta_value(meta_if_exist, attr, is_now, now))
+                .alias(out_name)
+            )
+    return F.struct(*fields)
+
+
 def increment(
     base: DataFrame,
     value_col: str,
@@ -172,14 +211,15 @@ def increment(
     (reference burns ~900 LoC on per-type copies, swamp.go:1274-2017;
     Spark's numeric tower needs a single expression).
 
-    Returns key, old_value, new_value, applied — applied=False rows keep
-    their value (condition failed), matching the reference's
+    Returns key, old_value, new_value, applied, created — applied=False
+    rows keep their value (condition failed), matching the reference's
     returns-new-value + applied flag contract (proto:420-455).
 
     ``keys`` switches to the reference's get-or-create mode
     (swamp.go:1277-1280: ``beaconKey.Get`` → ``CreateTreasure``):
-    missing keys are created with value 0 before the conditional add,
-    and the output gains a ``created`` flag.
+    missing keys are created with value 0 before the conditional add.
+    It returns the results of :func:`increment_batch` — the same
+    request-sized transformation ``TreasureStore.increment`` commits.
 
     ``meta_if_not_exist`` / ``meta_if_exist`` stamp per-key metadata
     (proto:1591; swamp.go:1219 ``setMetaForIncrement``) — created keys
@@ -190,67 +230,99 @@ def increment(
     expired_at_us (the ``IncrementResponseMetadata`` analogue,
     proto:1599). ``now_us`` pins the stamp clock (deterministic
     replays); defaults to wall-clock."""
-    work = base
-    created = F.lit(False)
     if keys is not None:
-        # requested keys are a SET (duplicates would double result rows
-        # and, through the store path, duplicate persisted key rows)
-        keys = list(dict.fromkeys(keys))
-        spark = base.sparkSession
-        kdf = local_frame(spark, [(k,) for k in keys], f"{key_col} string")
-        # Scale shape: the key list is a driver-side argument (small by
-        # contract), so the probe is a broadcast semi-join and the
-        # created-key set is resolved with ONE bounded collect
-        # (<= len(keys) rows) — a keys-left outer join would instead
-        # shuffle the full base on the key, and caching the hit frame
-        # would pin an entry in the CacheManager for the driver's
-        # lifetime. Cost: the key column is scanned twice (probe +
-        # action), both times with the key filter pushed down.
-        hits = base.join(F.broadcast(kdf), key_col, "left_semi")
-        hit_keys = {
-            r[0] for r in hits.select(key_col).collect()
-        }  # bounded by len(keys)
-        created_keys = [k for k in keys if k not in hit_keys]
-        # created rows carry the FULL base schema (typed nulls except
-        # the value, which starts at 0 — swamp.go:1292 Void -> 0), so
-        # conditions referencing any base column still resolve.
-        # Membership (not value-nullness) decides `created`: an
-        # existing key whose value is NULL is not created, it just
-        # can't be incremented (applied=False).
-        miss = local_frame(
-            spark, [(k,) for k in created_keys], f"{key_col} string"
+        batch = increment_batch(
+            base.sparkSession, base, keys, value_col, delta, condition,
+            key_col=key_col, meta_if_not_exist=meta_if_not_exist,
+            meta_if_exist=meta_if_exist, now_us=now_us,
         )
+        batch.unpersist()  # the results are driver-side rows
+        return batch.results
+    res = _increment_result(
+        base, value_col, delta, condition, F.lit(False),
+        meta_if_not_exist, meta_if_exist, now_us,
+    )
+    return base.select(F.col(key_col), res.alias("_res")).select(key_col, "_res.*")
+
+
+def increment_batch(
+    spark,
+    base: DataFrame,
+    keys: Sequence[str],
+    value_col: str,
+    delta: float,
+    condition: Optional[Pred] = None,
+    key_col: str = "key",
+    create_if_not_exist: bool = True,
+    meta_if_not_exist: Optional[IncrementMeta] = None,
+    meta_if_exist: Optional[IncrementMeta] = None,
+    now_us: Optional[int] = None,
+) -> "KeyedBatch":
+    """The keyed ``Increment<T>`` request as a pure transformation on
+    the plan shape of :func:`patch_each_batch`: only the targeted rows
+    (``read._keys_predicate``) plus, under ``create_if_not_exist``, one
+    seed row per requested key (value 0, other columns typed NULL — so
+    conditions on any base column resolve) are worked on and cached.
+    ONE collect fills that cache and yields both the present keys and
+    the result rows; a seed whose key turned out present is dropped
+    after it, so the plan has no join, no broadcast and no second key
+    scan. Membership (not value-nullness) decides ``created``: an
+    existing key whose value is NULL is not created, it just can't be
+    incremented (applied=False).
+
+    Returns a :class:`KeyedBatch`: ``results`` (one row per distinct
+    requested key present or created, a driver-side frame),
+    ``new_state`` = untargeted rows ∪ rewritten targeted rows ∪ created
+    rows, and ``changed`` = the WRITTEN rows (applied existing ones and
+    every created one) with ``_op`` UPDATED/NEW. Meta stamps persist on
+    written rows only: an unapplied existing key's stamp is in its
+    result row, not in the state (swamp.go:1345-1349 skips the Save)."""
+    # requested keys are a SET (duplicates would double result rows
+    # and duplicate persisted key rows)
+    keys = list(dict.fromkeys(keys))
+    work = _keys_predicate(base, keys, key_col).withColumn("_created", F.lit(False))
+    if create_if_not_exist:
+        seeds = local_frame(spark, [(k,) for k in keys], f"{key_col} string")
         for c, t in base.dtypes:
             if c != key_col:
-                miss = miss.withColumn(
-                    c,
-                    F.lit(0).cast(t) if c == value_col else F.lit(None).cast(t),
+                seeds = seeds.withColumn(
+                    c, F.lit(0).cast(t) if c == value_col else F.lit(None).cast(t)
                 )
-        work = hits.withColumn("_created", F.lit(False)).unionByName(
-            miss.withColumn("_created", F.lit(True))
-        )
-        created = F.col("_created")
-    cond = translate(condition, work) if condition is not None else F.lit(True)
-    old = F.col(value_col)
-    new = F.when(cond, old + F.lit(delta)).otherwise(old)
-    cols = [
-        F.col(key_col),
-        old.alias("old_value"),
-        new.alias("new_value"),
-        (cond & old.isNotNull()).alias("applied"),
-        created.alias("created"),
-    ]
-    if meta_if_not_exist is not None or meta_if_exist is not None:
-        now = _now_us(now_us)
-        for out_name, attr, is_now in _META_FIELDS:
-            cols.append(
-                F.when(
-                    created, _meta_value(meta_if_not_exist, attr, is_now, now)
-                )
-                .otherwise(_meta_value(meta_if_exist, attr, is_now, now))
-                .alias(out_name)
-            )
-    return work.select(*cols)
+        work = work.unionByName(seeds.withColumn("_created", F.lit(True)))
+    res = _increment_result(
+        work, value_col, delta, condition, F.col("_created"),
+        meta_if_not_exist, meta_if_exist, now_us,
+    )
+    out = work.withColumn("_res", res).cache()
+    # the cache-fill action, bounded by 2 * len(keys) rows
+    rows = out.select(key_col, "_res").collect()
+    present = {r[0] for r in rows if not r[1]["created"]}
+    created_keys = [k for k in keys if k not in present]
+    res_type = out.schema["_res"].dataType
+    results = local_frame(
+        spark,
+        [(r[0], *r[1]) for r in rows if not r[1]["created"] or r[0] not in present],
+        T.StructType([base.schema[key_col], *res_type.fields]),
+    )
+
+    written = F.col("_res.created") | F.col("_res.applied")
+    cols = {value_col: F.col("_res.new_value")}
+    for m in (f.name for f in res_type.fields[4:]):
+        stamp = F.col(f"_res.{m}")
+        prev = F.col(m) if m in base.columns else F.lit(None).cast(res_type[m].dataType)
+        cols[m] = F.when(written, F.coalesce(stamp, prev)).otherwise(prev)
+    kept = out.filter(~F.col("_created") | F.col(key_col).isin(created_keys))
+    rewritten = kept.withColumns(cols).withColumn(
+        "_op",
+        F.when(F.col("_created"), F.lit(STATUS_NEW))
+        .when(written, F.lit(STATUS_UPDATED)),
+    )
+    aux = ["_created", "_res", "_op"]
+    new_state = _keys_predicate(base, keys, key_col, negate=True).unionByName(
+        rewritten.drop(*aux), allowMissingColumns=True
+    )
+    changed = rewritten.filter(F.col("_op").isNotNull()).drop("_created", "_res")
+    return KeyedBatch(results, new_state, changed, out)
 
 
 # ---------------------------------------------------------------------------
@@ -429,11 +501,12 @@ def patch_treasures(
 
 
 @dataclass
-class PatchEachBatch:
-    """Result of :func:`patch_each_batch`: one status row per patch
-    ENTRY, the full new state, and the mutated rows (with their
-    ``_created`` flag) for event emission. ``unpersist()`` releases the
-    request-sized cache once all three frames are consumed."""
+class KeyedBatch:
+    """Result of a keyed request (:func:`patch_each_batch`,
+    :func:`increment_batch`): the per-request result rows, the full new
+    state, and the mutated rows for event emission. ``unpersist()``
+    releases the request-sized cache once all three frames are
+    consumed."""
 
     results: DataFrame
     new_state: DataFrame
@@ -456,7 +529,7 @@ def patch_each_batch(
     cap=None,
     create_if_not_exist: bool = False,
     seed_body=None,
-) -> PatchEachBatch:
+) -> KeyedBatch:
     """The ``PatchTreasuresRequest`` (proto:2988-3177) as a pure
     transformation, in the request's exact shape (proto:2996-3010
     ``TreasurePatch``): every patch entry carries its own key, op-list,
@@ -526,7 +599,7 @@ def patch_each_batch(
             spark, [], f"patch_index int, {key_col} string, patch_status string"
         )
         none = base.limit(0).withColumn("_created", F.lit(False))
-        return PatchEachBatch(empty, base, none, none)
+        return KeyedBatch(empty, base, none, none)
 
     # split entries into rounds: round r holds each key's r-th patch
     rounds: list[list[tuple]] = []  # [(idx, key, ops, cond, meta)]
@@ -636,7 +709,6 @@ def patch_each_batch(
         )
 
     capped: list[set] = [set() for _ in rounds]
-    found: "set | None" = None
 
     if cap is not None:
         # capPreCount (gateway_patch.go:98-105): whole-swamp, once,
@@ -710,10 +782,6 @@ def patch_each_batch(
                 row["_cond_ok"], row["_pre"], row["_post"],
             )
             budget = int(row["_budget"])
-        # round-0 probes cover every key's first occurrence, so the
-        # request's present-key set falls out of the same job
-        found = set(probes[0])
-
         # Budget walk in GLOBAL entry order (gateway_patch.go threads
         # one budgetLeft through the patches loop) — NOT round order:
         # round r of one key can precede round r-1 entries of another
@@ -749,39 +817,30 @@ def patch_each_batch(
     for r in range(len(rounds)):
         out = _apply_round(out, r, capped[r])
     out = out.cache()
-    if found is None and not create_if_not_exist:
-        # the present-key collect IS the cache-fill action (one job;
-        # bounded by len(patches))
-        found = {row[0] for row in out.select(key_col).collect()}
-    else:
-        out.count()
-
-    per_round = [
-        out.filter(F.col(f"_status_{r}").isNotNull()).select(
-            F.col(f"_idx_{r}").alias("patch_index"),
-            key_c,
-            F.col(f"_status_{r}").alias("patch_status"),
-        )
+    # the cache-fill action (one job, bounded by len(patches) rows)
+    # yields every entry's status, so the results are driver-side rows
+    status_rows = out.select(
+        key_c, *[c for r in range(len(rounds)) for c in (f"_idx_{r}", f"_status_{r}")]
+    ).collect()
+    found = {row[0] for row in status_rows}
+    result_rows = [
+        (row[1 + 2 * r], row[0], row[2 + 2 * r])
+        for row in status_rows
         for r in range(len(rounds))
+        if row[2 + 2 * r] is not None
     ]
-    results = per_round[0]
-    for p in per_round[1:]:
-        results = results.unionByName(p)
     if not create_if_not_exist:
-        nf = [
-            (idx, k)
+        result_rows += [
+            (idx, k, STATUS_KEY_NOT_FOUND)
             for r_entries in rounds
             for idx, k, _, _, _ in r_entries
             if k not in found
         ]
-        if nf:
-            results = results.unionByName(
-                local_frame(
-                    spark,
-                    [(idx, k, STATUS_KEY_NOT_FOUND) for idx, k in nf],
-                    f"patch_index int, {key_col} string, patch_status string",
-                )
-            )
+    results = local_frame(
+        spark,
+        sorted(result_rows),
+        f"patch_index int, {key_col} string, patch_status string",
+    )
 
     aux = ["_created", "_applied"] + [
         c for r in range(len(rounds)) for c in (f"_status_{r}", f"_idx_{r}")
@@ -791,7 +850,7 @@ def patch_each_batch(
     untargeted = _keys_predicate(base, all_keys, key_col, negate=True)
     new_state = untargeted.unionByName(kept, allowMissingColumns=True)
     changed = out.filter(F.col("_applied"))
-    return PatchEachBatch(results, new_state, changed, out)
+    return KeyedBatch(results, new_state, changed, out)
 
 
 # ---------------------------------------------------------------------------

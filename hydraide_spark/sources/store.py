@@ -7,7 +7,13 @@ Maps the reference's per-swamp storage + reactivity model (SURVEY.md
 
 - **state** lives in versioned parquet snapshots ``root/v=N/``; a write
   produces v=N+1 (the Spark reading of the reference's append-only
-  chronicle + compaction: every snapshot is already compact).
+  chronicle + compaction: every snapshot is already compact). Each
+  write records its version's schema in memory, so reading a version
+  this object wrote runs no footer-inference job (``_read_flat``).
+- **request-sized keyed writes**: increment, patch, uint32slice and
+  the claims work on their targeted rows only, collect them once, and
+  commit the untargeted rows ∪ the rewritten ones; their results are
+  driver-side frames, so no write leaves a cache entry behind.
 - **changes** append to ``root/changes/`` as parquet batches with the
   reference's event shape (proto:755-784): op NEW/UPDATED/DELETED, key,
   old/new row payloads (JSON-encoded, schema-agnostic), event_time, and
@@ -69,6 +75,7 @@ import threading
 
 from ..operators import claims as claims_ops
 from ..operators import mutate as mutate_ops
+from ..operators.read import _keys_predicate
 from ..query.filters import Pred
 from ..session import local_frame
 
@@ -162,6 +169,9 @@ class TreasureStore:
         # thread while serving threads read)
         self._scope_tl = threading.local()
         self._cached: Optional[tuple[int, DataFrame]] = None
+        # version -> data schema: recorded by every version write, so a
+        # read needs no footer-inference job (see _version_schema)
+        self._schema_cache: "dict[int, T.StructType]" = {}
         self._last_access: float = 0.0
         self._txn = threading.RLock()
         self._recover_changes()
@@ -364,21 +374,44 @@ class TreasureStore:
         fill the added columns with NULL — the unionByName
         (allowMissingColumns) semantics the layout needs. Falls back
         to the init seed for pre-schema versions."""
-        from pyspark.sql import types as _T
-
-        cache = getattr(self, "_schema_cache", None)
-        if cache is None:
-            cache = self._schema_cache = {}
+        cache = self._schema_cache
         if v not in cache:
             sp = os.path.join(self._snapshot_path(v), "_SCHEMA")
             try:
                 with open(sp) as fh:
-                    cache[v] = _T.StructType.fromJson(json.load(fh))
+                    cache[v] = T.StructType.fromJson(json.load(fh))
             except (OSError, ValueError, KeyError):
                 cache[v] = self.spark.read.parquet(
                     os.path.join(self.root, "_schema")
                 ).schema
         return cache[v]
+
+    def _read_flat(self, v: int) -> DataFrame:
+        """Read flat version ``v`` with its known schema — the one its
+        write recorded — so the read runs no footer-inference job (the
+        bucketed layout's ``_version_schema`` idiom, held in memory:
+        no file is added to the version dir). A version this object
+        neither wrote nor read before (a reopened store) is inferred
+        once, on its first read. A user-given schema reads back
+        nullable, equal to the inferred one."""
+        path = self._snapshot_path(v)
+        schema = self._schema_cache.get(v)
+        if schema is None:
+            df = self.spark.read.parquet(path)
+            self._schema_cache[v] = df.schema
+            return df
+        return self.spark.read.schema(schema).parquet(path)
+
+    def _write_flat_version(self, df: DataFrame, v: int) -> None:
+        """Write flat version ``v`` and record its schema, overwriting
+        any entry a compacted or destroyed ``v`` left. A partitioned
+        layout records nothing: its partition column types come from
+        partition-value inference, so its first read infers them."""
+        self._writer(df).parquet(self._snapshot_path(v))
+        if self.partition_by:
+            self._schema_cache.pop(v, None)
+        else:
+            self._schema_cache[v] = df.schema
 
     def _bucketed_read(self, v: int, buckets=None) -> DataFrame:
         """Resolve version ``v``'s manifest and read the referenced
@@ -429,16 +462,17 @@ class TreasureStore:
 
     def _touched_buckets(self, keys) -> list[int]:
         """Bucket ids a key set hashes into. ``keys`` is a python
-        sequence or a DataFrame carrying ``key_col``; the collect is
-        bounded by min(|keys|, n_buckets)."""
-        if not isinstance(keys, DataFrame):
+        sequence — hashed by a projection over its local frame, which
+        Catalyst folds on the driver (no job) — or a DataFrame carrying
+        ``key_col``, whose collect is bounded by min(|keys|,
+        n_buckets)."""
+        if isinstance(keys, DataFrame):
+            keys = keys.select(self._bucket_expr().alias("_b")).distinct()
+        else:
             keys = local_frame(
                 self.spark, [(str(k),) for k in keys], f"{self.key_col} string"
-            )
-        rows = (
-            keys.select(self._bucket_expr().alias("_b")).distinct().collect()
-        )
-        return sorted(r["_b"] for r in rows)
+            ).select(self._bucket_expr().alias("_b"))
+        return sorted({r["_b"] for r in keys.collect()})
 
     def _scope_to(self, keys) -> None:
         """Scope the CURRENT transaction to the buckets ``keys`` hash
@@ -483,10 +517,10 @@ class TreasureStore:
             if self._cached is None or self._cached[0] != v:
                 if self._cached is not None:
                     self._cached[1].unpersist()
-                self._cached = (v, self.spark.read.parquet(self._snapshot_path(v)).cache())
+                self._cached = (v, self._read_flat(v).cache())
             self._last_access = time.monotonic()
             return self._cached[1]
-        return self.spark.read.parquet(self._snapshot_path(v))
+        return self._read_flat(v)
 
     def close_if_idle(self, now: Optional[float] = None) -> bool:
         """Reference CloseAfterIdle (proto:810-815): release the pinned
@@ -515,7 +549,7 @@ class TreasureStore:
             raise FileNotFoundError(f"store {self.root} has no snapshot v={v}")
         if self.n_buckets is not None:
             return self._bucketed_read(v)
-        return self.spark.read.parquet(self._snapshot_path(v))
+        return self._read_flat(v)
 
     def history(self) -> DataFrame:
         """SCD2 history from the change log: one row per key VERSION
@@ -556,7 +590,7 @@ class TreasureStore:
             )
             self._write_bucketed(df, self.version + 1, base_mapping={})
             return
-        self._writer(df).parquet(self._snapshot_path(self.version + 1))
+        self._write_flat_version(df, self.version + 1)
 
     def _writer(self, df: DataFrame):
         w = df.write.mode("overwrite")
@@ -623,8 +657,7 @@ class TreasureStore:
                 flat = None  # every bucket re-owned: the buffer is dead
         # the schema AS OF this commit, BEFORE the manifest (the
         # publish point) — reads resolve evolved columns through it
-        with open(os.path.join(path, "_SCHEMA"), "w") as fh:
-            json.dump(df.schema.jsonValue(), fh)
+        self._record_schema(v, df.schema)
         self._publish_manifest(v, mapping, flat)
 
     def changes(self) -> DataFrame:
@@ -640,6 +673,7 @@ class TreasureStore:
         import shutil
 
         shutil.rmtree(self.root, ignore_errors=True)
+        self._schema_cache.clear()
 
     def compact(self, keep_versions: int = 1) -> int:
         """Reference ``CompactSwamp`` (proto:2967-2977; compactor.go):
@@ -700,6 +734,7 @@ class TreasureStore:
                     pass
         for v in drop:
             shutil.rmtree(self._snapshot_path(v), ignore_errors=True)
+            self._schema_cache.pop(v, None)
         return len(drop) + demoted
 
     @_serialized
@@ -785,7 +820,7 @@ class TreasureStore:
                 self._write_bucketed(df, v, base_mapping, base_flat)
             self._scope = None
             return v
-        self._writer(df).parquet(self._snapshot_path(v))
+        self._write_flat_version(df, v)
         return v
 
     def _write_flat(self, df: DataFrame, v: int) -> None:
@@ -801,9 +836,15 @@ class TreasureStore:
             for f in os.listdir(path)
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         )
-        with open(os.path.join(path, "_SCHEMA"), "w") as fh:
-            json.dump(df.schema.jsonValue(), fh)
+        self._record_schema(v, df.schema)
         self._publish_manifest(v, {}, flat=(v, files))
+
+    def _record_schema(self, v: int, schema: T.StructType) -> None:
+        """A bucketed commit's ``_SCHEMA`` file, written before its
+        manifest (the publish point), and its in-memory entry."""
+        with open(os.path.join(self._snapshot_path(v), "_SCHEMA"), "w") as fh:
+            json.dump(schema.jsonValue(), fh)
+        self._schema_cache[v] = schema
 
     @_serialized
     def settle(self) -> bool:
@@ -996,73 +1037,22 @@ class TreasureStore:
         key's stamp is visible in the response yet absent from
         subsequent reads, there as here."""
         self._scope_to(keys)
-        base = self.current()
-        has_meta = meta_if_not_exist is not None or meta_if_exist is not None
-        results = mutate_ops.increment(
-            base,
+        batch = mutate_ops.increment_batch(
+            self.spark,
+            self.current(),
+            keys,
             value_col,
             delta,
             condition,
             key_col=self.key_col,
-            keys=list(keys),
+            create_if_not_exist=create_if_not_exist,
             meta_if_not_exist=meta_if_not_exist,
             meta_if_exist=meta_if_exist,
             now_us=now_us,
-        ).cache()
-        results.count()
-        meta_cols = [f[0] for f in mutate_ops._META_FIELDS] if has_meta else []
-
-        applied_existing = results.filter(F.col("applied") & ~F.col("created"))
-        upd = applied_existing.select(
-            self.key_col,
-            "new_value",
-            *[F.col(m).alias(f"_{m}_stamp") for m in meta_cols],
         )
-        new_state = (
-            base.join(upd, self.key_col, "left")
-            .withColumn(
-                value_col, F.coalesce(F.col("new_value"), F.col(value_col))
-            )
-            .drop("new_value")
-        )
-        for m in meta_cols:
-            stamped = F.col(f"_{m}_stamp")
-            new_state = new_state.withColumn(
-                m,
-                F.coalesce(stamped, F.col(m)) if m in base.columns else stamped,
-            ).drop(f"_{m}_stamp")
-
-        created_rows = None
-        if create_if_not_exist:
-            created = results.filter(F.col("created"))
-            state_types = dict(new_state.dtypes)
-            created_rows = created.select(
-                F.col(self.key_col),
-                *[
-                    F.col("new_value").cast(state_types[c]).alias(c)
-                    if c == value_col
-                    else (
-                        F.col(c).alias(c)
-                        if c in meta_cols
-                        else F.lit(None).cast(state_types[c]).alias(c)
-                    )
-                    for c in new_state.columns
-                    if c != self.key_col
-                ],
-            )
-            new_state = new_state.unionByName(created_rows)
-
-        changed = new_state.join(
-            applied_existing.select(self.key_col), self.key_col
-        ).withColumn("_op", F.lit(mutate_ops.STATUS_UPDATED))
-        if created_rows is not None:
-            changed = changed.unionByName(
-                created_rows.withColumn("_op", F.lit(mutate_ops.STATUS_NEW))
-            )
-        self._commit(new_state, changed, F.col("_op"))
-        if not create_if_not_exist:
-            return results.filter(~F.col("created"))
-        return results
+        self._commit(batch.new_state, batch.changed, F.col("_op"))
+        batch.unpersist()
+        return batch.results
 
     def uint32slice_push(self, keys: Sequence[str], values: Sequence[int], ids_col: str = "ids") -> DataFrame:
         """Reference ``Uint32SlicePush`` (proto:378-396) as one
@@ -1080,37 +1070,53 @@ class TreasureStore:
         self, keys: Sequence[str], values: Sequence[int], ids_col: str, push: bool
     ) -> DataFrame:
         self._scope_to(keys)
+        base = self.current()
         apply = mutate_ops.uint32slice_push if push else mutate_ops.uint32slice_delete
-        # the operator's expression, kept on the targeted keys only;
+        # the operator's expression over the targeted rows only;
         # array_distinct and array_except both keep first-seen order,
         # so a changed set always differs element-wise
-        merged = apply(
-            self.current().withColumn("_prev", F.col(ids_col)), values, ids_col
-        ).withColumn(
-            ids_col,
-            F.when(F.col(self.key_col).isin(list(keys)), F.col(ids_col)).otherwise(
-                F.col("_prev")
+        work = apply(
+            _keys_predicate(base, keys, self.key_col).withColumn(
+                "_prev", F.col(ids_col)
             ),
+            values,
+            ids_col,
         )
-        changed = (
-            merged.filter(~(F.col(ids_col) == F.col("_prev"))).drop("_prev").cache()
+        work = work.withColumn(
+            "_changed", F.coalesce(F.col(ids_col) != F.col("_prev"), F.lit(False))
+        ).drop("_prev").cache()
+        changed = work.filter(F.col("_changed")).drop("_changed")
+        # the cache-fill action, bounded by len(keys) rows
+        changed_keys = [r[0] for r in changed.select(self.key_col).collect()]
+        new_state = _keys_predicate(base, keys, self.key_col, negate=True).unionByName(
+            work.drop("_changed")
         )
-        changed.count()
-        self._commit(merged.drop("_prev"), changed, mutate_ops.STATUS_UPDATED)
-        out = changed.select(self.key_col).withColumn("changed", F.lit(True))
-        changed.unpersist()
-        return out
+        self._commit(new_state, changed, mutate_ops.STATUS_UPDATED)
+        work.unpersist()
+        return local_frame(
+            self.spark,
+            [(k, True) for k in changed_keys],
+            f"{self.key_col} string, changed boolean",
+        )
 
     def _claim(self, claim) -> DataFrame:
         """The body of :meth:`shift_expired` and :meth:`shift_matching`
-        (run under their transaction guard): ``claim(base)`` returns
-        ``(claimed, remaining)``; the claim set is pinned, the state
-        persists without it, and its rows are logged DELETED."""
-        claimed, remaining = claim(self.current())
-        claimed = claimed.cache()
-        claimed.count()  # pin the claim set before the snapshot swaps
-        self._scope_to(claimed)  # write-prune: only claimed buckets
-        self._commit(remaining, claimed, "DELETED")
+        (run under their transaction guard): ``claim(base)`` returns the
+        claim, at most ``how_many`` rows. Collecting them pins the claim
+        before the snapshot swaps; the state persists without their
+        keys, and they are logged DELETED and returned as a driver-side
+        frame."""
+        base = self.current()
+        claimed = claim(base)
+        rows = claimed.collect()
+        claimed = local_frame(self.spark, rows, claimed.schema)
+        keys = [r[self.key_col] for r in rows]
+        self._scope_to(keys)  # write-prune: only claimed buckets
+        self._commit(
+            _keys_predicate(base, keys, self.key_col, negate=True),
+            claimed,
+            "DELETED",
+        )
         return claimed
 
     @_serialized
@@ -1139,9 +1145,7 @@ class TreasureStore:
         observe overlapping sets (tested with interleaved threads in
         test_store_streaming)."""
         return self._claim(
-            lambda base: claims_ops.shift_matching(
-                base, index, filt, how_many, cap, key_col=self.key_col
-            )
+            lambda base: claims_ops.shift_matching(base, index, filt, how_many, cap)
         )
 
     @_serialized
@@ -1268,11 +1272,18 @@ class TreasureStore:
             key_col=self.key_col,
         )
         results = results.cache()
-        results.count()
-        patched = results.filter(F.col("patch_status") == mutate_ops.STATUS_PATCHED)
-        self._scope_to(patched)  # write-prune: only re-leased buckets
-        self._commit(new_state, patched, mutate_ops.STATUS_UPDATED)
-        return results
+        rows = results.collect()  # the cache-fill action, <= how_many rows
+        self._scope_to(  # write-prune: only re-leased buckets
+            [r[self.key_col] for r in rows
+             if r["patch_status"] == mutate_ops.STATUS_PATCHED]
+        )
+        self._commit(
+            new_state,
+            results.filter(F.col("patch_status") == mutate_ops.STATUS_PATCHED),
+            mutate_ops.STATUS_UPDATED,
+        )
+        results.unpersist()
+        return local_frame(self.spark, rows, results.schema)
 
 
 # ---------------------------------------------------------------------------

@@ -220,7 +220,7 @@ def test_patch_meta_clear_precedence_and_claims_interop(spark):
     assert rows["k2"]["expired_at"] == datetime(2020, 1, 2)  # untouched
     assert rows["k2"]["updated_at_us"] is None
     # claims interop: the cleared row is no longer claimable
-    claimed, _rem = shift_expired(
+    claimed = shift_expired(
         out.drop("patch_status"), datetime(2024, 1, 1), how_many=10
     )
     assert [r["key"] for r in claimed.collect()] == ["k2"]

@@ -110,7 +110,7 @@ def test_set_carries_per_key_metadata_columns(spark, tmp_path):
     assert state["a"]["created_by"] == "loader"
     assert state["a"]["expired_at"] == datetime(2020, 1, 1)
     # the Set-supplied TTL drives claimability directly
-    claimed, _ = shift_expired(store.current(), datetime(2021, 1, 1), 10)
+    claimed = shift_expired(store.current(), datetime(2021, 1, 1), 10)
     assert [r["key"] for r in claimed.collect()] == ["a"]
 
 
