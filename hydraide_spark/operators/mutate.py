@@ -105,9 +105,12 @@ def delete_treasures(
 ) -> tuple[DataFrame, DataFrame]:
     """Reference ``Delete`` (gateway.go:1326-1395): returns
     (remaining, deleted). Deleted rows double as the shadow-delete
-    tombstones for subscribers (swamp.go:2551-2575)."""
-    cond = F.col(key_col).isin(list(keys))
-    return base.filter(~cond), base.filter(cond)
+    tombstones for subscribers (swamp.go:2551-2575). A NULL-key row
+    is never listed, so it always remains."""
+    return (
+        _keys_predicate(base, keys, key_col, negate=True),
+        _keys_predicate(base, keys, key_col),
+    )
 
 
 def shift_by_keys(

@@ -191,38 +191,25 @@ class TreasureStore:
     def changes_dir(self) -> str:
         return os.path.join(self.root, "changes")
 
-    def logged_in_range(self, lo: int, hi: int) -> "Optional[bool]":
+    def logged_in_range(self, lo: int, hi: int) -> bool:
         """Does the change log still contain any batch id in
-        ``[lo, hi)``? Answered from the log's FILE NAMES alone
-        (r11 VERDICT #6: the strict-FIFO gap probe was a full
-        change-log scan per stalled trigger). Since r12 every log file
-        carries its batch-id range in its name (``b<lo>-<hi>-…``:
-        ``_emit`` writes one single-batch file; ``prune_changes`` names
-        its compacted file with the kept range), so the probe is one
-        directory listing — filesystem metadata, no Spark job, and the
-        index can never go STALE because it lives on the data files
-        themselves (a lost/deleted commit file drops out of the
-        listing, unlike any side-index marker).
-
-        Returns True (a named file intersects — conclusively logged),
-        False (every file is name-indexed and none intersects —
-        conclusively gone), or None (legacy unnamed files present and
-        no named file matched — inconclusive; caller falls back to one
-        scan)."""
+        ``[lo, hi)``? Answered from the log's FILE NAMES alone: every
+        log file carries its batch-id range in its name
+        (``b<lo>-<hi>-…``: ``_emit`` writes one single-batch file;
+        ``prune_changes`` names its compacted file with the kept
+        range), so the probe is one directory listing — filesystem
+        metadata, no Spark job, and the index can never go STALE
+        because it lives on the data files themselves (a lost/deleted
+        commit file drops out of the listing, unlike any side-index
+        marker)."""
         lo, hi = int(lo), int(hi)
-        has_unnamed = False
         if not os.path.isdir(self.changes_dir):
             return False
         for n in os.listdir(self.changes_dir):
-            if not n.endswith(".parquet") or n.startswith("."):
-                continue
-            m = re.match(r"^b(\d+)-(\d+)-", n)
-            if m is None:
-                has_unnamed = True
-                continue
-            if int(m.group(1)) < hi and int(m.group(2)) >= lo:
+            m = re.match(r"^b(\d+)-(\d+)-.*\.parquet$", n)
+            if m and int(m.group(1)) < hi and int(m.group(2)) >= lo:
                 return True
-        return None if has_unnamed else False
+        return False
 
     def _recover_changes(self) -> None:
         """Finish or roll back an interrupted :meth:`prune_changes`
@@ -296,9 +283,9 @@ class TreasureStore:
 
     def _manifest_layout(
         self, v: int
-    ) -> "tuple[dict[int, tuple[int, list[str] | None]], tuple[int, list[str]] | None]":
+    ) -> "tuple[dict[int, tuple[int, list[str]]], tuple[int, list[str]] | None]":
         """(mapping, flat): ``mapping`` = bucket -> (owner version, file
-        names or None — v1 manifests fall back to dir paths); ``flat``
+        names); ``flat``
         = (owner version, file names) of a whole-store WRITE-BUFFER
         version (r12: a full-coverage bulk write lands as one flat dir
         — no bucket shuffle, no n_buckets output dirs) that owns every
@@ -308,18 +295,13 @@ class TreasureStore:
         list."""
         with open(self._manifest_path(v)) as fh:
             raw = json.load(fh)
-        if isinstance(raw, dict) and "buckets" in raw:
-            mapping = {
-                int(b): (int(entry[0]), entry[1])
-                for b, entry in raw["buckets"].items()
-            }
-            flat = raw.get("flat")
-            return mapping, ((int(flat[0]), flat[1]) if flat else None)
-        return {int(k): (int(x), None) for k, x in raw.items()}, None
+        mapping = {
+            int(b): (int(entry[0]), entry[1]) for b, entry in raw["buckets"].items()
+        }
+        flat = raw.get("flat")
+        return mapping, ((int(flat[0]), flat[1]) if flat else None)
 
-    def _read_manifest_full(
-        self, v: int
-    ) -> "dict[int, tuple[int, list[str] | None]]":
+    def _read_manifest_full(self, v: int) -> "dict[int, tuple[int, list[str]]]":
         return self._manifest_layout(v)[0]
 
     def _read_manifest(self, v: int) -> "dict[int, int]":
@@ -328,7 +310,7 @@ class TreasureStore:
     def _publish_manifest(
         self,
         v: int,
-        full: "dict[int, tuple[int, list[str] | None]]",
+        full: "dict[int, tuple[int, list[str]]]",
         flat: "tuple[int, list[str]] | None" = None,
     ) -> None:
         path = self._manifest_path(v)
@@ -346,7 +328,7 @@ class TreasureStore:
 
     def _bucket_paths(
         self,
-        full: "dict[int, tuple[int, list[str] | None]]",
+        full: "dict[int, tuple[int, list[str]]]",
         buckets=None,
     ) -> list[str]:
         want = full if buckets is None else {
@@ -354,14 +336,11 @@ class TreasureStore:
         }
         out: list[str] = []
         for b, (o, files) in sorted(want.items()):
+            # an EMPTY list is a tombstone (bucket emptied after a flat
+            # write-buffer — it must shadow the flat copy, so it
+            # contributes no paths rather than falling through)
             d = os.path.join(self._snapshot_path(o), f"b={b}")
-            if files is None:
-                out.append(d)  # legacy v1 manifest: dir path
-            else:
-                # an EMPTY list is a tombstone (bucket emptied after a
-                # flat write-buffer — it must shadow the flat copy, so
-                # it contributes no paths rather than falling through)
-                out.extend(os.path.join(d, f) for f in files)
+            out.extend(os.path.join(d, f) for f in files)
         return out
 
     def _version_schema(self, v: int):
@@ -372,18 +351,12 @@ class TreasureStore:
         (the init seed) or drop rows' nulls inconsistently (a random
         footer). Reading with the version's own schema makes old files
         fill the added columns with NULL — the unionByName
-        (allowMissingColumns) semantics the layout needs. Falls back
-        to the init seed for pre-schema versions."""
+        (allowMissingColumns) semantics the layout needs. Every
+        bucketed commit writes ``_SCHEMA`` before its manifest."""
         cache = self._schema_cache
         if v not in cache:
-            sp = os.path.join(self._snapshot_path(v), "_SCHEMA")
-            try:
-                with open(sp) as fh:
-                    cache[v] = T.StructType.fromJson(json.load(fh))
-            except (OSError, ValueError, KeyError):
-                cache[v] = self.spark.read.parquet(
-                    os.path.join(self.root, "_schema")
-                ).schema
+            with open(os.path.join(self._snapshot_path(v), "_SCHEMA")) as fh:
+                cache[v] = T.StructType.fromJson(json.load(fh))
         return cache[v]
 
     def _read_flat(self, v: int) -> DataFrame:
@@ -600,7 +573,7 @@ class TreasureStore:
         self,
         df: DataFrame,
         v: int,
-        base_mapping: "dict[int, tuple[int, list[str] | None]]",
+        base_mapping: "dict[int, tuple[int, list[str]]]",
         base_flat: "tuple[int, list[str]] | None" = None,
     ) -> None:
         """One bucketed version commit: write ``df``'s rows partitioned
@@ -759,39 +732,40 @@ class TreasureStore:
         import shutil
 
         self._recover_changes()
-        ev = self.changes().cache()
-        total = ev.count()
-        keep = ev.filter(F.col("batch_id") >= int(before_batch))
-        n_keep = keep.count()
-        if n_keep == total:
-            ev.unpersist()
+        ev = self.changes()
+        kept = F.col("batch_id") >= int(before_batch)
+        st = ev.agg(
+            F.count(F.lit(1)).alias("total"),
+            F.count(F.when(kept, 1)).alias("n_keep"),
+            F.min(F.when(kept, F.col("batch_id"))).alias("lo"),
+            F.max("batch_id").alias("hi"),
+        ).first()
+        if st["n_keep"] == st["total"]:
             return 0
         # crash-safe swap: the live dir is only moved aside once the
         # replacement is fully written (_SUCCESS landed); at every
         # instant either the live log or a recoverable copy exists, and
         # _recover_changes completes/rolls back an interrupted swap
         tmp = self.changes_dir + ".compacting"
-        keep.coalesce(1).write.parquet(tmp)
+        ev.filter(kept).coalesce(1).write.parquet(tmp)
         # range-name the compacted file BEFORE the swap so the gap
         # probe's name index (logged_in_range) stays exact across
-        # prunes: the one file carries every kept batch id
-        bounds = keep.agg(
-            F.min("batch_id").alias("lo"), F.max("batch_id").alias("hi")
-        ).first()
+        # prunes: the one file carries every kept batch id. A prune
+        # that keeps nothing leaves an empty log, not an unnamed file.
         for n in os.listdir(tmp):
             if n.endswith(".parquet") and not n.startswith("."):
-                os.rename(
-                    os.path.join(tmp, n),
-                    os.path.join(
-                        tmp, f"b{int(bounds['lo'])}-{int(bounds['hi'])}-{n}"
-                    ),
-                )
-        ev.unpersist()
+                part = os.path.join(tmp, n)
+                if st["n_keep"]:
+                    os.rename(
+                        part, os.path.join(tmp, f"b{st['lo']}-{st['hi']}-{n}")
+                    )
+                else:
+                    os.remove(part)
         old = self.changes_dir + ".old"
         os.rename(self.changes_dir, old)
         os.rename(tmp, self.changes_dir)
         shutil.rmtree(old, ignore_errors=True)
-        return total - n_keep
+        return st["total"] - st["n_keep"]
 
     # -- internals ---------------------------------------------------------
 

@@ -133,7 +133,8 @@ def _resolve_bloom_geometry(
 ) -> "tuple[int, int]":
     """Reader-side resolution: manifest wins; explicit caller values
     must MATCH it (None = "use the stored geometry"); with no manifest
-    (legacy state) explicit values or the module defaults apply."""
+    (no ingest yet — every epoch writes it before its bloom words)
+    explicit values or the module defaults apply."""
     stored = read_bloom_geometry(state_dir)
     if stored is not None:
         for name, want, have in (("n_bits", n_bits, stored[0]), ("k", k, stored[1])):

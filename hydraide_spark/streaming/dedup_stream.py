@@ -39,8 +39,8 @@ pattern as the unified search state). Every reader — ``ingested_pairs``,
 committed frontier, so a crash between the pairs write and the
 shingles write leaves NO window where pairs are visible without their
 verify rows; the epoch surfaces only when the retry re-marks it.
-Pre-marker states are adopted on first post-upgrade ingest
-(state_compact.adopt_unmarked_epochs) and read-everything until then.
+The ingest creates ``_commits`` before its first epoch's tables, so a
+crashed first epoch is as invisible as any later one.
 
 Scale: per-batch work is bounded by the delta; the index grows by the
 delta; the bucket join is an equi-join whose key cardinality scales
@@ -64,15 +64,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.dedup import band_bucket_array, minhash_signature_array, shingles
 from ..session import local_frame
 from .state_compact import (
-    adopt_unmarked_epochs,
+    COMMITS_NAME,
     committed_frontier,
-    migrate_flat_state,
     publish_epoch_marker,
     read_bucketed,
     read_committed,
 )
-
-_TABLES = ("pairs", "bands", "shingles")
 
 
 def band_buckets(
@@ -201,17 +198,7 @@ def make_ingest(
     def ingest(batch_df: DataFrame, epoch: int) -> None:
         if batch_df.isEmpty():
             return
-        # pre-r8 state dirs are flat (append mode): fold their root-
-        # level files into the epoch=-1 base BEFORE this epoch's subdir
-        # lands — Spark partition discovery silently drops root files
-        # in a mixed layout, which would vanish the whole legacy index
-        # from probes. Per-batch cost is one listdir per table.
-        for d in (bands_dir, sh_dir, pairs_dir):
-            migrate_flat_state(d)
-        # pre-r13 states published epochs by the table writes alone:
-        # mark those epochs committed ONCE so the marker frontier below
-        # doesn't vanish them (no-op when _commits already exists)
-        adopt_unmarked_epochs(state_dir, _TABLES)
+        os.makedirs(os.path.join(state_dir, COMMITS_NAME), exist_ok=True)
         frontier = committed_frontier(state_dir)
         _t0 = _time.perf_counter()
         _rec = {"epoch": int(epoch)}
@@ -457,10 +444,9 @@ def ingested_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     output-sized, not corpus-sized)."""
     schema = "id_a long, id_b long, inter int, union int"
     path = os.path.join(state_dir, "pairs")
-    migrate_flat_state(path)  # pre-r8 flat layout → epoch=-1 base
     # committed-marker frontier (r13): an epoch whose pairs landed but
     # whose marker didn't (crash mid-batch) stays invisible until the
-    # retry re-marks it; None = pre-marker legacy state, read all
+    # retry re-marks it
     return read_committed(
         spark, path, schema + ", epoch long", committed_frontier(state_dir)
     ).distinct()

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.dedup import hamming_block_pairs_delta
 from ..functions.multimodal import audio_fingerprints, image_hashes
 from .state_compact import (
-    adopt_unmarked_epochs,
+    COMMITS_NAME,
     committed_frontier,
     publish_epoch_marker,
     read_committed,
@@ -36,7 +36,6 @@ from .state_compact import (
 
 HASH_SCHEMA = "media_id long, h long"
 PAIR_SCHEMA = "id_a long, id_b long, hamming int"
-_TABLES = ("pairs", "hashes")
 
 
 def _fingerprints(batch_df: DataFrame, kind: str, algo: str) -> DataFrame:
@@ -79,9 +78,7 @@ def make_media_ingest(
     def ingest(batch_df: DataFrame, epoch: int) -> None:
         if batch_df.isEmpty():
             return
-        # pre-r13 states published epochs by the table writes alone:
-        # adopt them into the marker frontier once (no-op afterwards)
-        adopt_unmarked_epochs(state_dir, (pairs_table, hashes_table))
+        os.makedirs(os.path.join(state_dir, COMMITS_NAME), exist_ok=True)
         frontier = committed_frontier(state_dir)
         sigs_new = (
             _fingerprints(batch_df, kind, algo)

@@ -44,7 +44,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.text import postings, token_count
 from ..session import local_frame
 from .state_compact import (
-    BASE_EPOCH,
     COMMITS_NAME,
     IVF_LAYOUTS,
     SEARCH_LAYOUTS,
@@ -251,8 +250,9 @@ _STATS_FILE = "_STATS"
 
 
 def _marker_stats(path: str) -> "dict | None":
-    """Parse one commit marker's stats payload (r12: markers carry
-    {'rows': N, 'dim': D}); pre-r12 markers are empty files -> None."""
+    """Parse one commit marker's stats payload (the search ingest's
+    markers carry {'rows': N, 'dim': D}); None for a marker without a
+    payload (``publish_epoch_marker``'s default) or one already gone."""
     try:
         with open(path) as fh:
             txt = fh.read().strip()
@@ -283,9 +283,9 @@ def state_stats(state_dir: str) -> "dict | None":
     :func:`compact_unified_search_state`) plus every live commit
     marker's per-epoch row count (written by the ingest under the same
     atomic publish as the epoch itself, so the stats frontier IS the
-    commit frontier). Returns ``{"rows": int, "dim": int | None}`` or
-    None when the state predates r12 entirely (no stats anywhere) —
-    callers fall back to one count."""
+    commit frontier). Returns ``{"rows": int, "dim": int | None}``, or
+    None when no stats exist yet (no ``_STATS`` base, no payload
+    marker) — callers fall back to one count."""
     base_rows, dim, absorbed, found = _base_stats(state_dir)
     commits = os.path.join(state_dir, COMMITS_NAME)
     for ep in list_epochs(commits):
@@ -293,8 +293,9 @@ def state_stats(state_dir: str) -> "dict | None":
             continue
         ms = _marker_stats(os.path.join(commits, f"epoch={ep}"))
         if ms is None:
-            # pre-r12 marker with no payload: rows unknown — the
-            # whole figure would undercount, so report no stats
+            # a marker without a stats payload, or one a concurrent
+            # compaction pruned after the listing above: rows unknown
+            # — the whole figure would undercount, so report no stats
             return None if not found else {"rows": None, "dim": dim}
         found = True
         base_rows += int(ms.get("rows", 0))
@@ -334,8 +335,8 @@ def _absorb_marker_stats(state_dir: str, markers, stale) -> None:
 
 def committed_epochs(state_dir: str) -> list[int]:
     """The readable frontier (state_compact.committed_frontier); a state
-    with no ``_commits`` dir yet reads the base alone, ``[-1]``."""
-    return committed_frontier(state_dir) or [BASE_EPOCH]
+    with no marker yet reads the base alone, ``[-1]``."""
+    return committed_frontier(state_dir)
 
 
 def make_search_ingest(

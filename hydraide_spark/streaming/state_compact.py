@@ -45,8 +45,7 @@ base partition ``epoch=-1``:
   compactor running on swamp close — compactor.go).
 - **Crash safety**: both the temp dir (``_compacting``) and the
   displaced old base (``_old_base``) are underscore-prefixed, so Spark
-  partition discovery ignores them if a crash leaves them behind (a
-  bare ``epoch=-1.old`` dir would mis-parse as a partition value).
+  partition discovery ignores them if a crash leaves them behind.
   Every swap user self-recovers on entry: a complete ``_compacting``
   (has the fold manifest) with no live base is swapped into place; an
   incomplete one is rolled back to ``_old_base``. The swap order is
@@ -101,8 +100,8 @@ def list_epochs(d: str) -> "list[int]":
     """Sorted ids of the ``epoch=N`` entries under ``d`` — a table's
     epoch dirs (deltas, the base, L1 runs) or a state's commit markers;
     ``[]`` when ``d`` does not exist. The one parser of the dir-name
-    convention: a value that is not an integer (the legacy
-    ``epoch=-1.old``) is skipped, never mis-parsed."""
+    convention: a value that is not an integer (a name this module
+    did not write) is skipped, never mis-parsed."""
     if not os.path.isdir(d):
         return []
     out = []
@@ -193,8 +192,7 @@ def committed_filter(df: DataFrame, table_dir: str, epochs=None, own_epoch=None)
     carries the ``epoch`` partition column) to what a reader may see,
     and drop ``epoch``. The conditions are literal lists, so the
     filter is a partition-directory prune (PartitionFilters on
-    ``epoch``), not a row scan. NULL epochs — pre-r8 flat legacy rows
-    — count as the base (``coalesce(epoch, -1)``).
+    ``epoch``), not a row scan.
 
     - ``epochs``: the committed-marker frontier
       (:func:`committed_frontier`). NEGATIVE epochs — the compaction
@@ -203,8 +201,8 @@ def committed_filter(df: DataFrame, table_dir: str, epochs=None, own_epoch=None)
       frontier, so a frontier recorded before a minor fold keeps
       resolving after it; of the rest only listed epochs pass, so an
       epoch whose tables landed but whose marker didn't stays invisible
-      until the retry re-marks it. ``None`` keeps the legacy
-      read-everything behavior (pre-marker states).
+      until the retry re-marks it. ``None`` reads every epoch — the
+      single-table states, which publish an epoch by its one write.
     - Either way, epochs a crashed compaction already folded into a
       surviving target but did not clean up (:func:`pending_folded`)
       are EXCLUDED: their rows live in the target too, and reading both
@@ -215,7 +213,7 @@ def committed_filter(df: DataFrame, table_dir: str, epochs=None, own_epoch=None)
       index the first attempt saw, whether or not its marker landed (a
       crash can fall between the marker write and the checkpoint
       commit). ``None`` = a read-only caller, nothing to exclude."""
-    e = F.coalesce(F.col("epoch"), F.lit(BASE_EPOCH))
+    e = F.col("epoch")
     if own_epoch is not None:
         df = df.filter(e != F.lit(int(own_epoch)))
     if epochs is not None:
@@ -283,27 +281,22 @@ def _recover(table_dir: str) -> None:
     - base absent, tmp complete → crash between move-aside and promote:
       promote tmp, then replay cleanup from its manifest.
     - base absent, tmp incomplete/missing → roll back (restore the
-      displaced old base, or the legacy ``epoch=-1.old`` a pre-fix
-      version may have left).
+      displaced old base).
     - any other leftover tmp/old is stale and discarded.
     """
     tmp = os.path.join(table_dir, _TMP_NAME)
     old = os.path.join(table_dir, _OLD_NAME)
     base = _epoch_dir(table_dir, BASE_EPOCH)
-    legacy_old = base + ".old"
     if not os.path.exists(base):
         if os.path.exists(tmp) and _is_complete(tmp):
             os.rename(tmp, base)
         elif os.path.exists(old):
             os.rename(old, base)
-        elif os.path.exists(legacy_old):
-            os.rename(legacy_old, base)
     if os.path.isfile(os.path.join(base, _MANIFEST)):
         _finish_swap(table_dir, base)
     # whatever remains is stale state from a finished or abandoned swap
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(legacy_old, ignore_errors=True)
     _recover_l1(table_dir)
 
 
@@ -340,48 +333,10 @@ def _recover_l1(table_dir: str) -> None:
             _finish_swap(table_dir, d)
 
 
-def migrate_flat_state(table_dir: str) -> int:
-    """One-time layout migration for pre-epoch (append-mode) state
-    tables. Legacy dirs hold their part files at the table ROOT; the
-    moment a new ingest writes an ``epoch=N`` subdir next to them,
-    Spark's partition discovery silently ignores the root-level files —
-    the whole legacy index vanishes from reads with no error. (A
-    schema-supplied ``epoch`` column reads NULL on a purely-flat dir,
-    which ``coalesce(epoch, -1)`` probes handle, but the MIXED layout
-    is unreadable, so migration on entry is the only safe upgrade.)
-
-    Moves every root-level data file into the compaction base partition
-    ``epoch=-1``, where all readers (partition discovery, the
-    own-epoch probe exclusion, :func:`compact_epochs`) treat the rows
-    exactly like compacted history. Pure renames, idempotent,
-    single-writer (same contract as compaction). Returns the number of
-    files moved."""
-    if not os.path.isdir(table_dir):
-        return 0
-    flat = [
-        n
-        for n in os.listdir(table_dir)
-        if os.path.isfile(os.path.join(table_dir, n))
-        and not n.startswith(("_", "."))
-        and not n.endswith(".crc")
-    ]
-    if not flat:
-        return 0
-    base = _epoch_dir(table_dir, BASE_EPOCH)
-    os.makedirs(base, exist_ok=True)
-    for n in flat:
-        # "legacy-" prefix: cannot collide with a part file an earlier
-        # compaction already placed in the base
-        os.rename(os.path.join(table_dir, n), os.path.join(base, f"legacy-{n}"))
-    return len(flat)
-
-
 def _enter(table_dir: str) -> "list[int]":
     """Every swap user's entry: heal an interrupted swap
-    (:func:`_recover`), move a pre-epoch flat layout into the base
-    (:func:`migrate_flat_state`), then list the live epochs."""
+    (:func:`_recover`), then list the live epochs."""
     _recover(table_dir)
-    migrate_flat_state(table_dir)
     return list_epochs(table_dir)
 
 
@@ -482,49 +437,15 @@ def publish_epoch_marker(state_dir: str, epoch: int, payload=None) -> None:
     atomic_write_json(_epoch_dir(commits, epoch), payload)
 
 
-def committed_frontier(state_dir: str) -> "list[int] | None":
+def committed_frontier(state_dir: str) -> "list[int]":
     """The readable epoch frontier of a marker-published state:
     the always-committed negative compaction epochs are implied (every
     reader keeps them); the returned list is ``[-1]`` + every epoch
-    whose commit marker landed. One listdir — O(live epochs), and
-    compaction keeps that bounded.
-
-    Returns ``None`` for a state that has never written markers (no
-    ``_commits`` dir) — the pre-r13 dedup/media states published
-    epochs by the table writes themselves, so "no frontier" must mean
-    read-everything, not read-nothing. The first post-upgrade ingest
-    adopts those legacy epochs (:func:`adopt_unmarked_epochs`) and the
-    state becomes marker-published from then on."""
-    commits = os.path.join(state_dir, COMMITS_NAME)
-    if not os.path.isdir(commits):
-        return None
-    return sorted([BASE_EPOCH, *list_epochs(commits)])
-
-
-def adopt_unmarked_epochs(state_dir: str, tables) -> "list[int]":
-    """First-upgrade migration to the marker frontier: when the
-    ``_commits`` dir does not exist yet but epoch dirs do (a state
-    built by a pre-marker ingest loop), mark every existing
-    non-negative epoch committed — under the old semantics those
-    epochs were already visible to every reader, so adopting them
-    changes nothing; NOT adopting them would vanish the whole legacy
-    state the moment the first marker lands. A partial crash epoch
-    from before the upgrade gets adopted too, exactly as visible as it
-    was — the stream's retry of that epoch overwrites and re-marks it.
-    Idempotent; returns the adopted epoch ids."""
-    commits = os.path.join(state_dir, COMMITS_NAME)
-    if os.path.isdir(commits):
-        return []
-    eps = sorted(
-        {e for t in tables for e in list_epochs(os.path.join(state_dir, t)) if e >= 0}
-    )
-    for e in eps:
-        publish_epoch_marker(state_dir, e)
-    if not eps:
-        # state exists but holds only flat/legacy or base rows: still
-        # create the dir so the state is marker-published from now on
-        os.makedirs(commits, exist_ok=True)
-    return eps
+    whose commit marker landed — just ``[-1]`` before the first marker,
+    so a crashed first epoch (tables landed, no marker) stays
+    invisible. One listdir — O(live epochs), and compaction keeps that
+    bounded."""
+    return [BASE_EPOCH, *list_epochs(os.path.join(state_dir, COMMITS_NAME))]
 
 
 def _prune_markers(state_dir: str, tables=None, absorb=None) -> int:
@@ -833,8 +754,7 @@ def band_bucket_expr(bucket_col, n_buckets: int):
 
 def read_nbuckets(table_dir: str) -> "int | None":
     """The bucket count of the table's compacted base, or None when the
-    base is absent / pre-bucketing flat (probes then full-scan it, the
-    legacy behavior)."""
+    base is absent or folded flat (probes then full-scan it)."""
     try:
         with open(os.path.join(_base_dir(table_dir), _NBUCKETS_MANIFEST)) as fh:
             return int(fh.read().strip())
@@ -919,9 +839,8 @@ def read_bucketed(
       BENCH_stream_scale minhash ingest b=0.10). Callers still filter
       rows: a bucket holds other keys too.
 
-    A pre-bucketing flat base (no ``_NBUCKETS`` manifest) is read in
-    full like a delta dir — legacy behavior until the next compaction
-    rewrites it. Returns None when the table holds no epoch dir yet.
+    A base with no ``_NBUCKETS`` manifest is read in full like a
+    delta dir. Returns None when the table holds no epoch dir yet.
     ``schema`` is the table's DATA schema (no epoch/bkt columns)."""
     nb, flat, base = split_bucketed_table(spark, table_dir, schema)
     frames = []

@@ -173,23 +173,9 @@ def subscribe_strict_fifo(
                 # listing (store.logged_in_range) — filesystem
                 # metadata, no Spark job, and it cannot go stale
                 # because the index IS the data file (a lost commit
-                # file drops out of the listing). Only a log holding
-                # legacy unnamed files (inconclusive None) falls back
-                # to the old scan.
+                # file drops out of the listing).
                 gap_hi = min(buf)
-                still_logged = store.logged_in_range(state["expected"], gap_hi)
-                if still_logged is None:
-                    still_logged = (
-                        store.changes()
-                        .filter(
-                            (F.col("batch_id") >= state["expected"])
-                            & (F.col("batch_id") < gap_hi)
-                        )
-                        .limit(1)
-                        .count()
-                        > 0
-                    )
-                if still_logged:
+                if store.logged_in_range(state["expected"], gap_hi):
                     # real commit in flight — keep waiting (re-verify
                     # after every further gap_patience stalled triggers)
                     state["stall"] = 0

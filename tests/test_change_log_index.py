@@ -7,9 +7,8 @@ Pins:
 - _emit names single-batch files b<id>-<id>-…; logged_in_range answers
   presence/absence conclusively from the listing,
 - prune_changes range-names its compacted file and the pruned ids
-  resolve as conclusively gone,
-- legacy unnamed files make the probe inconclusive (None) -> the
-  subscriber falls back to one scan, never silently skips,
+  resolve as conclusively gone (a prune that keeps nothing leaves an
+  empty log),
 - a crashed _emit staging is finished (complete) or discarded
   (incomplete) at store init,
 - the strict-FIFO wait path runs ZERO change-log scans when the log is
@@ -93,27 +92,21 @@ def test_prune_names_compacted_file_and_probe_sees_gone(spark, tmp_path):
     assert bids == [3, 4]
 
 
-def test_legacy_unnamed_file_is_inconclusive(spark, tmp_path):
+def test_prune_all_leaves_empty_log(spark, tmp_path):
+    """A prune above every logged batch drops the whole log: the call
+    returns the dropped count, the log is empty (no swap leftover, no
+    unnamed file) and every pruned id resolves as conclusively gone."""
     store = make_store(spark, tmp_path)
-    _set(store, spark, "k", 1)
-    _set(store, spark, "k", 2)
-    # strip the range prefix from batch 2's file — the pre-r12 form
-    names = [
-        n
-        for n in os.listdir(store.changes_dir)
-        if n.startswith("b2-2-")
-    ]
-    assert names
-    legacy = names[0].split("-", 2)[2]
-    os.rename(
-        os.path.join(store.changes_dir, names[0]),
-        os.path.join(store.changes_dir, legacy),
-    )
-    # named batch 1 still conclusive-present; the unnamed file poisons
-    # only ranges no named file answers
-    assert store.logged_in_range(1, 2) is True
-    assert store.logged_in_range(2, 3) is None
-    assert store.logged_in_range(7, 9) is None
+    _set(store, spark, "k0", 0)
+    _set(store, spark, "k1", 1)
+    assert store.prune_changes(10**6) == 2
+    assert store.changes().count() == 0
+    assert not os.path.exists(store.changes_dir + ".compacting")
+    assert not [n for n in os.listdir(store.changes_dir) if n.endswith(".parquet")]
+    assert store.logged_in_range(0, 10) is False
+    # the emptied log keeps taking commits
+    _set(store, spark, "k2", 2)
+    assert store.logged_in_range(3, 4) is True
 
 
 def test_crashed_staging_recovery(spark, tmp_path):

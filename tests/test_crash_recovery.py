@@ -5,9 +5,7 @@ crash window by hand-arranging the on-disk state the interrupted
 process would have left, then asserts the next entry self-recovers —
 no data lost, no unparseable partition dirs, no duplicated rows.
 
-Also covers the pre-r8 legacy flat near-dup state layout (null-epoch
-rows must survive the own-epoch probe exclusion) and the empty-patches
-short-circuit in patch_each. The state-table swap is additionally
+Also covers the empty-patches short-circuit in patch_each. The state-table swap is additionally
 crashed for real, at each of its steps, by fault injection
 (test_crash_at_each_swap_step_heals).
 """
@@ -95,7 +93,7 @@ def test_compact_recovers_crash_between_move_aside_and_promote(spark, tmp_path):
     assert _all_rows(spark, table) == before
     names = sorted(os.listdir(table))
     assert all(n.startswith("epoch=") for n in names), names
-    # every remaining partition value parses (the .old bug is gone)
+    # every remaining partition value parses
     for n in names:
         int(n.split("=", 1)[1])
 
@@ -146,22 +144,6 @@ def test_compact_replays_interrupted_cleanup_without_duplication(spark, tmp_path
     names = sorted(os.listdir(table))
     assert f"epoch={BASE_EPOCH}" in names and "epoch=2" in names
     assert "epoch=0" not in names and "epoch=1" not in names
-
-
-def test_compact_recovers_legacy_dot_old_dir(spark, tmp_path):
-    """A pre-fix crash left 'epoch=-1.old' (unparseable partition
-    value) and no base: entry restores it instead of raising at
-    int('-1.old')."""
-    table = str(tmp_path / "t")
-    _write_epochs(spark, table, 2)
-    assert compact_epochs(spark, table) == 1
-    base = os.path.join(table, f"epoch={BASE_EPOCH}")
-    before = _all_rows(spark, table)
-    os.rename(base, base + ".old")
-
-    assert compact_epochs(spark, table) in (0, 1)
-    assert _all_rows(spark, table) == before
-    assert not os.path.exists(base + ".old")
 
 
 def test_prune_changes_recovers_from_lost_live_dir(spark, tmp_path):
@@ -224,46 +206,6 @@ def test_patch_each_empty_patches_is_a_noop(spark, tmp_path):
     assert out.count() == 0
     assert store.version == v_before
     assert store.changes().count() == ev_before
-
-
-def test_streaming_neardup_legacy_flat_state_still_pairs(spark, tmp_path):
-    """Pre-r8 state dirs were flat (append mode, no epoch= partition):
-    read through the '+ epoch long' schema those rows are epoch=NULL,
-    and a bare `epoch != current` silently dropped the whole legacy
-    index. coalesce(epoch, -1) must keep them pairable."""
-    from hydraide_spark.streaming import ingested_pairs
-    from hydraide_spark.streaming.dedup_stream import make_ingest
-
-    schema = "doc_id long, text string"
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    state = str(tmp_path / "nd")
-    ingest = make_ingest(spark, state, tau=0.6)
-
-    # build state the modern way, then FLATTEN it to the legacy layout:
-    # move epoch=0's files up into the table root
-    ingest(spark.createDataFrame([(1, base)], schema), 0)
-    for t in ("bands", "shingles"):
-        tdir = os.path.join(state, t)
-        edir = os.path.join(tdir, "epoch=0")
-        for name in os.listdir(edir):
-            os.rename(os.path.join(edir, name), os.path.join(tdir, name))
-        os.rmdir(edir)
-
-    # a new epoch ingests a near-duplicate of the LEGACY doc: the pair
-    # (1, 2) can only come from the flattened (epoch=NULL) index
-    ingest(spark.createDataFrame([(2, base + " ok")], schema), 1)
-    pairs = {
-        (r["id_a"], r["id_b"]) for r in ingested_pairs(spark, state).collect()
-    }
-    assert (1, 2) in pairs
-
-    # the MIXED layout (flat legacy files + epoch=1 subdir) must also
-    # read: a further epoch pairs against both generations
-    ingest(spark.createDataFrame([(3, base)], schema), 2)
-    pairs = {
-        (r["id_a"], r["id_b"]) for r in ingested_pairs(spark, state).collect()
-    }
-    assert (1, 3) in pairs and (2, 3) in pairs
 
 
 def test_readers_exclude_pending_folded_epochs(spark, tmp_path):

@@ -4,8 +4,7 @@ near-dup media_stream.py) — the repo's r11 invariant ("multi-table
 streaming state needs a commit-marker frontier", first implemented for
 the unified search state) now holds everywhere: an epoch whose tables
 landed but whose ``_commits/epoch=N`` marker didn't stays invisible to
-every reader until the retry re-marks it, and pre-marker legacy states
-are adopted losslessly on the first post-upgrade ingest."""
+every reader until the retry re-marks it."""
 
 from __future__ import annotations
 
@@ -78,28 +77,6 @@ def test_dedup_partial_epoch_invisible_then_published(spark, tmp_path):
         spark, state, _docs(spark, [(99, BASE + " okay")]), tau=0.6
     )
     assert {r.match_id for r in hits.collect()} == {1, 2}
-
-
-def test_dedup_legacy_state_adopted_not_vanished(spark, tmp_path):
-    """A pre-r13 state (epoch dirs, no _commits) must stay fully
-    readable (frontier None = read-everything), and the first
-    post-upgrade ingest must ADOPT the legacy epochs — not vanish them
-    the moment its own marker lands."""
-    state = str(tmp_path / "nd")
-    ingest = make_ingest(spark, state, tau=0.6)
-    ingest(_docs(spark, [(1, BASE)]), 0)
-    ingest(_docs(spark, [(2, BASE + " ok")]), 1)
-    shutil.rmtree(os.path.join(state, "_commits"))  # pre-r13 layout
-
-    assert committed_frontier(state) is None
-    assert _pairs(spark, state) == {(1, 2)}  # legacy read-all
-
-    # upgrade moment: the next ingest adopts epochs 0 and 1, then
-    # publishes its own — the legacy pairs keep resolving and the new
-    # doc pairs against the LEGACY index
-    ingest(_docs(spark, [(3, BASE)]), 2)
-    assert committed_frontier(state) == [-1, 0, 1, 2]
-    assert _pairs(spark, state) == {(1, 2), (1, 3), (2, 3)}
 
 
 def test_dedup_compaction_prunes_stale_markers(spark, tmp_path):

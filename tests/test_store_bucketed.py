@@ -238,27 +238,6 @@ def test_compact_demotes_donor_versions_from_time_travel(spark, tmp_path):
     assert store.current().count() == 100
 
 
-def test_legacy_v1_manifest_still_reads(spark, tmp_path):
-    """Manifest v2 (r11 late) records per-bucket FILE lists so reads
-    skip directory listing; a v1 manifest (bucket -> version only)
-    from an earlier store must keep reading via dir paths."""
-    import json
-
-    store = _mk(spark, tmp_path / "s", n_buckets=8)
-    before = _state(store)
-    v = store.version
-    # rewrite the manifest in the legacy flat format
-    full = store._read_manifest(v)
-    with open(store._manifest_path(v), "w") as fh:
-        json.dump({str(b): o for b, o in full.items()}, fh)
-    assert _state(store) == before
-    # the next commit publishes v2 again (with file lists)
-    store.set(spark.createDataFrame([("k1", 5, None)], SCHEMA))
-    full2 = store._read_manifest_full(store.version)
-    assert any(files for _o, files in full2.values())
-    assert store.current().filter(F.col("key") == "k1").head()["val"] == 5
-
-
 def test_schema_evolution_survives_bucketed_reads(spark, tmp_path):
     """r11 review #2: a mutation that ADDS columns (increment meta
     stamps) must stay readable — reads resolve through the committing

@@ -123,6 +123,21 @@ def test_delete_emits_tombstones(spark, tmp_path):
     assert json.loads(ev[0]["old"])["val"] == 1  # shadow-delete payload
 
 
+@pytest.mark.parametrize("n_absent", [0, 300])
+def test_delete_keeps_null_key_row(spark, tmp_path, n_absent):
+    """Delete removes only listed keys: a NULL-key row is never listed,
+    below ISIN_THRESHOLD (isin filter) and above it (broadcast
+    anti-join) alike — as increment leaves it in place."""
+    rows = [("a", 1), (None, 2), ("c", 3)]
+    store = TreasureStore(spark, str(tmp_path / "s"))
+    store.init(spark.createDataFrame(rows, "key string, val long"))
+    keys = ["a"] + [f"absent{i}" for i in range(n_absent)]
+    assert [r["key"] for r in store.delete(keys).collect()] == ["a"]
+    assert sorted(
+        (r["val"], r["key"]) for r in store.current().collect()
+    ) == [(2, None), (3, "c")]
+
+
 def test_shift_expired_transaction(spark, tmp_path):
     store = make_store(spark, tmp_path, BASE)
     claimed = store.shift_expired(datetime(2021, 1, 1), how_many=1)
